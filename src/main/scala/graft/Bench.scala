@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}.
@@ -34,7 +35,10 @@ object Bench {
       "q_text_quality", "q_vec_norm_stats")
     warmups.foreach { n =>
       SparkEntry.registry.find(_.name == n).foreach { q =>
-        try q.run(spark, sfDir).count() catch { case _: Throwable => () }
+        try q.run(spark, sfDir).count() catch { case NonFatal(e) =>
+          System.err.println(
+            s"BENCH WARMUP FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}")
+        }
       }
     }
     // Measured per-query FIXED-COST FLOOR, published in bench.json: the
@@ -124,7 +128,7 @@ object Bench {
       // live during the timed run either.
       q.prepare.foreach { p =>
         try p(spark, sfDir)
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           System.err.println(
             s"BENCH PREPARE FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}" +
             " — artifact build will land in the timed cold run")
@@ -145,7 +149,11 @@ object Bench {
         val t0 = System.nanoTime()
         val retry =
           try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => Double.MaxValue }
+          catch { case NonFatal(e) =>
+            System.err.println(
+              s"BENCH RETRY FAIL ${q.name} $side: ${e.getClass.getName}: ${e.getMessage}")
+            Double.MaxValue
+          }
         scrub(if (retry == Double.MaxValue) base else math.max(base, retry))
         val v = math.min(base, retry)
         if (v < base) System.err.println(
@@ -230,7 +238,9 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(new java.io.File("bench.json"), "UTF-8")
       try w.println(full) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"BENCH could not write bench.json: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // ARCHIVE every full-suite run (VERDICT r18 #5): bench.json is
     // overwritten in place, so per-query cold/warm maps were lost between
     // rounds and regressions could only be diffed from prose. One JSONL
@@ -241,7 +251,10 @@ object Bench {
     if (wanted.isEmpty) try {
       val fw = new java.io.FileWriter("bench_history.jsonl", true)
       try fw.write(full + "\n") finally fw.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(
+        s"BENCH could not append bench_history.jsonl: ${e.getClass.getName}: ${e.getMessage}")
+    }
     println(contract)
     spark.stop()
   }

@@ -41,12 +41,7 @@ object CkptCycle {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 eq spark) {
-        val df = e.getValue
-        if (!spark.sparkContext.isStopped)
-          df.queryExecution.analyzed.foreach {
-            case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-            case _              => ()
-          }
+        if (!spark.sparkContext.isStopped) release(e.getValue)
         it.remove()
       }
     }
@@ -100,12 +95,26 @@ object CkptCycle {
     val prev = last.put((df.sparkSession, key), df)
     // A stopped context has already dropped all blocks — and unpersist
     // against it throws; skip rather than crash the successor query.
-    if (prev != null && (prev ne df) && !prev.sparkSession.sparkContext.isStopped) {
-      prev.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _              => ()
-      }
-    }
+    if (prev != null && (prev ne df) && !prev.sparkSession.sparkContext.isStopped)
+      release(prev)
     df
+  }
+
+  /** Free the executor blocks behind every local checkpoint in `df`'s plan
+    * except those that `keep`'s plans also reach (a caller's inputs). A
+    * checkpointed plan is a LogicalRDD leaf over cached blocks that are
+    * otherwise dropped only when the ContextCleaner notices the RDD is
+    * unreachable (whenever a driver GC happens to run). A released frame
+    * cannot recompute. Reliable-checkpoint RDDs are files, not blocks;
+    * unpersist on them is a harmless no-op.
+    */
+  def release(df: DataFrame, keep: DataFrame*): Unit = {
+    val kept = keep.flatMap(_.queryExecution.analyzed.collect {
+      case lr: LogicalRDD => lr.rdd.id
+    }).toSet
+    df.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD if !kept(lr.rdd.id) => lr.rdd.unpersist(blocking = false)
+      case _                                  => ()
+    }
   }
 }

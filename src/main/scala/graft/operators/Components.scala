@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -48,20 +47,6 @@ object Components {
   private[operators] def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
-
-  /** Free the executor storage behind a superseded round's local checkpoint.
-    * The checkpointed plan is a LogicalRDD leaf over cached blocks that are
-    * otherwise only dropped when the ContextCleaner notices the RDD is
-    * unreachable (i.e. whenever a driver GC happens to run) — deterministic
-    * release keeps the loop's storage footprint at one round, not
-    * O(rounds). Reliable-checkpoint RDDs are files, not blocks; unpersist
-    * on them is a harmless no-op.
-    */
-  private[operators] def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _              => ()
-    }
 
   /** Edge-count threshold below which closure runs as driver union-find
     * instead of the distributed loop — the broadcast-join pattern applied
@@ -201,7 +186,7 @@ object Components {
           (if (r == k) prop else round).select(col("node"), col("label"))
       }
       converged = obs.get("changed").asInstanceOf[Long] == 0L
-      free(prevRound)
+      graft.CkptCycle.release(prevRound)
       prevRound = prop
       iters += k
     }

@@ -81,7 +81,7 @@ object LinkGraph {
           // a newer checkpoint cuts every plan's lineage to it — the
           // previously checkpointed rank frame is unreachable, free it
           val t = Components.truncate(next)
-          lastCkpt.foreach(Components.free)
+          lastCkpt.foreach(graft.CkptCycle.release(_))
           lastCkpt = Some(t)
           t
         } else next
@@ -202,12 +202,12 @@ object LinkGraph {
         .join(dist.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hops"))
       dist = Components.truncate(dist.unionByName(discovered))
-      Components.free(prev)
+      graft.CkptCycle.release(prev)
       prev = dist
     }
     // the returned table is its own checkpoint — the edge blocks are no
     // longer reachable from it
-    Components.free(e)
+    graft.CkptCycle.release(e)
     dist
   }
 

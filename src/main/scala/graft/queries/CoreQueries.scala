@@ -1481,9 +1481,11 @@ object CoreQueries {
             count(when(col("variant") === 1 && col("conv") === 1, 1)).as("c"),
             count(when(col("variant") === 1 && col("conv") === 0, 1)).as("d"))
           .withColumn("n", expr("a + b + c + d"))
+          // try_divide: a zero margin gives a NULL statistic (as DuckDB's
+          // double division does) instead of an ANSI DIVIDE_BY_ZERO
           .withColumn("chi2", expr(
-            """CAST(CAST(n AS DECIMAL(38,0)) * (a*d - b*c) * (a*d - b*c) AS DOUBLE)
-               / CAST(CAST(a + b AS DECIMAL(38,0)) * (c + d) * (a + c) * (b + d) AS DOUBLE)"""))
+            """try_divide(CAST(CAST(n AS DECIMAL(38,0)) * (a*d - b*c) * (a*d - b*c) AS DOUBLE),
+               CAST(CAST(a + b AS DECIMAL(38,0)) * (c + d) * (a + c) * (b + d) AS DOUBLE))"""))
           .select(col("a"), col("b"), col("c"), col("d"), col("n"), col("chi2"))
           .orderBy(col("a")),
       Some("""

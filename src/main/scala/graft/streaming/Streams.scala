@@ -296,26 +296,69 @@ object Streams {
   // data movement; the marker check is one namenode round-trip per batch.
   // ---------------------------------------------------------------------
 
-  private def batchDir(outDir: String, batchId: Long) = new Path(outDir, f"batch-$batchId%09d")
+  // Every gate below shares one commit protocol: [[commitOnce]] skips a
+  // batch whose output marker exists, [[priorIndex]] shows the batch only
+  // index rows from strictly earlier batches, [[withCheckpoint]] frees the
+  // batch's checkpoint blocks on every exit, and [[startGate]] is the one
+  // foreachBatch driver.
+
+  /** The batch-keyed directory of `batchId` under `root` (sink output and
+    * every side output: rejects, quarantine, spend ledger). */
+  private def batchDir(root: String, batchId: Long) = new Path(root, f"batch-$batchId%09d")
+
+  /** Run `body` unless `batchId` already committed under `outDir`; a
+    * committed batch is a pure replay and returns false. */
+  private def commitOnce(spark: SparkSession, outDir: String, batchId: Long)
+                        (body: => Boolean): Boolean = {
+    val dir = batchDir(outDir, batchId)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    !fs.exists(new Path(dir, "_COMMITTED")) && body
+  }
+
+  /** The index rows batch `batchId` may see: those of strictly earlier
+    * batches. A replay that crashed after its own index merge then never
+    * collides with its own contribution (the self-collision guard). */
+  private def priorIndex(wh: graft.airbnb.Warehouse, table: String,
+      schema: StructType, batchId: Long): DataFrame =
+    wh.readOrEmpty(table, schema).filter(col("batch_id") < batchId)
+
+  /** Materialize `df` as a local checkpoint, run `body` over it and free
+    * the checkpoint's blocks however `body` exits. */
+  private def withCheckpoint[A](df: DataFrame)(body: DataFrame => A): A = {
+    val ckpt = df.localCheckpoint(true)
+    try body(ckpt) finally graft.CkptCycle.release(ckpt)
+  }
+
+  /** The one foreachBatch driver: every `start*` runs its batch body here.
+    * `checkpointDir` carries the source offsets. */
+  private def startGate(docs: DataFrame, checkpointDir: String, queryName: String)
+                       (body: (DataFrame, Long) => Boolean): StreamingQuery =
+    docs.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .queryName(queryName)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch.toDF(), batchId): Unit
+      }
+      .start()
 
   /** Write one micro-batch idempotently (the foreachBatch body, callable
     * directly in tests). Returns true if the batch was written, false if it
     * was a replay of an already-committed batchId.
     */
-  def writeBatchIdempotent(batch: Dataset[_], outDir: String, batchId: Long): Boolean = {
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-    val marker = new Path(dir, "_COMMITTED")
-    if (fs.exists(marker)) return false // replayed, already fully committed
-    val tmp = new Path(dir.toString + "__tmp")
-    fs.delete(tmp, true) // stray from a crash mid-write
-    batch.toDF().write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dir, true) // stray unmarked dir from a crash pre-marker
-    if (!fs.rename(tmp, dir))
-      throw new java.io.IOException(s"sink: promote failed for batch $batchId")
-    fs.create(marker).close()
-    true
-  }
+  def writeBatchIdempotent(batch: Dataset[_], outDir: String, batchId: Long): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      val dir = batchDir(outDir, batchId)
+      val fs = dir.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+      val tmp = new Path(dir.toString + "__tmp")
+      fs.delete(tmp, true) // stray from a crash mid-write
+      batch.toDF().write.mode("overwrite").parquet(tmp.toString)
+      fs.delete(dir, true) // stray unmarked dir from a crash pre-marker
+      if (!fs.rename(tmp, dir))
+        throw new java.io.IOException(s"sink: promote failed for batch $batchId")
+      fs.create(new Path(dir, "_COMMITTED")).close()
+      true
+    }
 
   /** Start the idempotent parquet sink on a streaming frame. `checkpointDir`
     * carries the source offsets — the pair (checkpoint, outDir) is the unit
@@ -323,14 +366,7 @@ object Streams {
     */
   def startParquetSink(df: DataFrame, outDir: String, checkpointDir: String,
                        queryName: String): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        writeBatchIdempotent(batch, outDir, batchId): Unit
-      }
-      .start()
+    startGate(df, checkpointDir, queryName)(writeBatchIdempotent(_, outDir, _))
 
   // ---------------------------------------------------------------------
   // Streaming near-dup gate: the daily-crawl dedup loop as a continuous
@@ -374,39 +410,29 @@ object Streams {
     */
   def nearDupGateBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
       indexTable: String, outDir: String, batchId: Long, idCol: String,
-      textCol: String, k: Int, bands: Int = 2): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    val idx = wh.readOrEmpty(indexTable, bandIndexSchema)
-    // exclude THIS batch's own contribution (present iff this is a replay
-    // that crashed after the index merge) — the self-collision guard
-    val tags = graft.operators.Dedup.tagAgainstBandIndex(
-      batch, idx.filter(col("batch_id") < batchId), idCol, textCol, k, bands)
-    // materialize survivors BEFORE the index swap: their lazy plan reads the
-    // index table, whose files the swap below replaces — a post-swap action
-    // on the un-checkpointed frame would FILE_NOT_EXIST. Micro-batch-sized,
-    // so the checkpoint is small; blocks are freed in the finally.
-    val survivors = batch.join(tags, Seq(idCol), "left")
-      .filter(!coalesce(col("is_near_dup"), lit(false)))
-      .drop("is_near_dup")
-      .localCheckpoint(true)
-    try {
-      // survivors' bands join the index under min-batch-id semantics; the
-      // groupBy also re-distincts, so replays cannot grow the table
-      val merged = idx.unionByName(
-          graft.operators.Dedup.bandIndex(survivors, idCol, textCol, k, bands)
-            .withColumn("batch_id", lit(batchId)))
-        .groupBy(col("band_idx"), col("band_key"))
-        .agg(min(col("batch_id")).as("batch_id"))
-      wh.write(indexTable, merged)
-      writeBatchIdempotent(survivors, outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      textCol: String, k: Int, bands: Int = 2): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      val tags = graft.operators.Dedup.tagAgainstBandIndex(batch,
+        priorIndex(wh, indexTable, bandIndexSchema, batchId), idCol, textCol, k, bands)
+      // materialize survivors BEFORE the index swap: their lazy plan reads
+      // the index table, whose files the swap below replaces — a post-swap
+      // action on the un-checkpointed frame would FILE_NOT_EXIST.
+      // Micro-batch-sized, so the checkpoint is small.
+      val kept = batch.join(tags, Seq(idCol), "left")
+        .filter(!coalesce(col("is_near_dup"), lit(false)))
+        .drop("is_near_dup")
+      withCheckpoint(kept) { survivors =>
+        // survivors' bands join the index under min-batch-id semantics; the
+        // groupBy also re-distincts, so replays cannot grow the table
+        val merged = wh.readOrEmpty(indexTable, bandIndexSchema).unionByName(
+            graft.operators.Dedup.bandIndex(survivors, idCol, textCol, k, bands)
+              .withColumn("batch_id", lit(batchId)))
+          .groupBy(col("band_idx"), col("band_key"))
+          .agg(min(col("batch_id")).as("batch_id"))
+        wh.write(indexTable, merged)
+        writeBatchIdempotent(survivors, outDir, batchId)
+      }
     }
-  }
 
   /** Start the streaming near-dup gate on a documents stream. The triple
     * (checkpointDir, outDir, index table) is the unit of exactly-once
@@ -416,15 +442,8 @@ object Streams {
       indexTable: String, outDir: String, checkpointDir: String, idCol: String,
       textCol: String, k: Int, bands: Int = 2,
       queryName: String = "near_dup_gate"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        nearDupGateBatch(batch.toDF(), wh, indexTable, outDir, batchId,
-          idCol, textCol, k, bands): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(nearDupGateBatch(_, wh, indexTable,
+      outDir, _, idCol, textCol, k, bands))
 
   // ---------------------------------------------------------------------
   // Streaming repeated-SUBSTRING gate: the operational form of the span
@@ -458,46 +477,38 @@ object Streams {
       indexTable: String, outDir: String, batchId: Long, idCol: String,
       textCol: String, k: Int, minSpanTokens: Int,
       maxOccurrences: Long = 0L,
-      maxBroadcastAnchors: Long = 4L << 20): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    val idx = wh.readOrEmpty(indexTable, anchorIndexSchema)
-    // maxBroadcastAnchors (r20): a micro-batch's anchors are bounded by
-    // the trigger, so the probe broadcasts the BATCH side over the index
-    // scan — the index is read, never exchanged, making per-batch shuffle
-    // O(batch + hits) instead of O(index). 4M anchors ≈ ~100 MB broadcast;
-    // a pathological replay batch above that falls back to the shuffle
-    // join via the tripwire.
-    val tags = graft.operators.Dedup.tagSpansAgainstIndex(batch,
-      idx.filter(col("batch_id") < batchId)
-        .select(col("doc_id").as(idCol), col("pos"), col("sh")),
-      idCol, textCol, k, minSpanTokens,
-      maxBroadcastAnchors = maxBroadcastAnchors)
-    // materialize survivors once: they feed the index append AND the sink
-    val survivors = batch.join(tags.select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    try {
-      // the index GROWS BY THE BATCH's anchors only, landed as an
-      // idempotent batch_id partition (r18): the r17 shape re-read and
-      // re-wrote the WHOLE index through a groupBy-dedupe + table swap
-      // every batch — O(index) per batch, the dominant term of the gate's
-      // ×10 soak growth. Cross-partition duplicates cannot arise (survivor
-      // doc ids are unique across the stream, anchorIndex rows are unique
-      // within a batch), and a replay overwrites its own partition. The
-      // per-batch occurrence cap still applies at build time;
-      // Dedup.compactAnchorIndex remains the periodic global re-cap.
-      wh.writePartition(indexTable, "batch_id", batchId,
-        graft.operators.Dedup.anchorIndex(survivors, idCol, textCol, k,
-            maxOccurrences)
-          .select(col(idCol).as("doc_id"), col("pos"), col("sh")))
-      writeBatchIdempotent(survivors, outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      maxBroadcastAnchors: Long = 4L << 20): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      // maxBroadcastAnchors (r20): a micro-batch's anchors are bounded by
+      // the trigger, so the probe broadcasts the BATCH side over the index
+      // scan — the index is read, never exchanged, making per-batch shuffle
+      // O(batch + hits) instead of O(index). 4M anchors ≈ ~100 MB
+      // broadcast; a pathological replay batch above that falls back to
+      // the shuffle join via the tripwire.
+      val tags = graft.operators.Dedup.tagSpansAgainstIndex(batch,
+        priorIndex(wh, indexTable, anchorIndexSchema, batchId)
+          .select(col("doc_id").as(idCol), col("pos"), col("sh")),
+        idCol, textCol, k, minSpanTokens,
+        maxBroadcastAnchors = maxBroadcastAnchors)
+      // materialize survivors once: they feed the index append AND the sink
+      val clean = batch.join(tags.select(col(idCol)), Seq(idCol), "left_anti")
+      try withCheckpoint(clean) { survivors =>
+        // the index GROWS BY THE BATCH's anchors only, landed as an
+        // idempotent batch_id partition (r18): the r17 shape re-read and
+        // re-wrote the WHOLE index through a groupBy-dedupe + table swap
+        // every batch — O(index) per batch, the dominant term of the gate's
+        // ×10 soak growth. Cross-partition duplicates cannot arise (survivor
+        // doc ids are unique across the stream, anchorIndex rows are unique
+        // within a batch), and a replay overwrites its own partition. The
+        // per-batch occurrence cap still applies at build time;
+        // Dedup.compactAnchorIndex remains the periodic global re-cap.
+        wh.writePartition(indexTable, "batch_id", batchId,
+          graft.operators.Dedup.anchorIndex(survivors, idCol, textCol, k,
+              maxOccurrences)
+            .select(col(idCol).as("doc_id"), col("pos"), col("sh")))
+        writeBatchIdempotent(survivors, outDir, batchId)
+      } finally graft.CkptCycle.release(tags, batch) // the probe's anchor checkpoint
     }
-  }
 
   /** Start the streaming substring gate on a documents stream. The triple
     * (checkpointDir, outDir, index table) is the unit of exactly-once
@@ -508,15 +519,8 @@ object Streams {
       textCol: String, k: Int, minSpanTokens: Int,
       maxOccurrences: Long = 0L,
       queryName: String = "substring_gate"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        substringGateBatch(batch.toDF(), wh, indexTable, outDir, batchId,
-          idCol, textCol, k, minSpanTokens, maxOccurrences): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(substringGateBatch(_, wh,
+      indexTable, outDir, _, idCol, textCol, k, minSpanTokens, maxOccurrences))
 
   // ---------------------------------------------------------------------
   // Streaming decontamination gate: the operational half of the
@@ -557,36 +561,29 @@ object Streams {
     */
   def decontaminateGateBatch(batch: DataFrame, idx: DataFrame,
       outDir: String, quarantineDir: String,
-      batchId: Long, idCol: String, textCol: String, k: Int): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    val hits = graft.operators.Dedup.shingleHashes(batch, idCol, textCol, k)
-      .join(broadcast(idx), "__sk")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_shared_shingles"))
-    // materialize the tagged batch ONCE (semDedupGateBatch's survivor
-    // pattern): the quarantine and clean writes are two actions over it,
-    // and uncached each would re-run the tokenize + ShingleHashes +
-    // broadcast-join pipeline per write; micro-batch-sized blocks
-    val tagged = batch.join(hits, Seq(idCol), "left").localCheckpoint(true)
-    try {
-      val contaminated = tagged.filter(col("n_shared_shingles").isNotNull)
-      val clean = tagged.filter(col("n_shared_shingles").isNull)
-        .drop("n_shared_shingles")
-      // quarantine first (evidence must exist before the sink marker says
-      // the batch is done), then the marker-bearing clean write; a crash
-      // between the two replays both — the quarantine write is a plain
-      // batch-keyed overwrite, so the replay converges
-      contaminated.write.mode("overwrite")
-        .parquet(new Path(quarantineDir, f"batch-$batchId%09d").toString)
-      writeBatchIdempotent(clean, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      batchId: Long, idCol: String, textCol: String, k: Int): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      val hits = graft.operators.Dedup.shingleHashes(batch, idCol, textCol, k)
+        .join(broadcast(idx), "__sk")
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_shared_shingles"))
+      // materialize the tagged batch ONCE (semDedupGateBatch's survivor
+      // pattern): the quarantine and clean writes are two actions over it,
+      // and uncached each would re-run the tokenize + ShingleHashes +
+      // broadcast-join pipeline per write; micro-batch-sized blocks
+      withCheckpoint(batch.join(hits, Seq(idCol), "left")) { tagged =>
+        val contaminated = tagged.filter(col("n_shared_shingles").isNotNull)
+        val clean = tagged.filter(col("n_shared_shingles").isNull)
+          .drop("n_shared_shingles")
+        // quarantine first (evidence must exist before the sink marker says
+        // the batch is done), then the marker-bearing clean write; a crash
+        // between the two replays both — the quarantine write is a plain
+        // batch-keyed overwrite, so the replay converges
+        contaminated.write.mode("overwrite")
+          .parquet(batchDir(quarantineDir, batchId).toString)
+        writeBatchIdempotent(clean, outDir, batchId)
+      }
     }
-  }
 
   /** Start the streaming decontamination gate on a documents stream. The
     * eval-shingle index is loaded and MATERIALIZED once at start
@@ -600,15 +597,8 @@ object Streams {
       queryName: String = "decontaminate_gate"): StreamingQuery = {
     val idx = wh.readOrEmpty(indexTable,
       StructType(Seq(StructField("__sk", LongType)))).localCheckpoint(true)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        decontaminateGateBatch(batch.toDF(), idx, outDir,
-          quarantineDir, batchId, idCol, textCol, k): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(decontaminateGateBatch(_, idx,
+      outDir, quarantineDir, _, idCol, textCol, k))
   }
 
   // ---------------------------------------------------------------------
@@ -644,39 +634,31 @@ object Streams {
     */
   def percentileGateBatch(batch: DataFrame, thr: DataFrame, outDir: String,
       rejectDir: String, batchId: Long, textCol: String, groupCol: String,
-      stopwords: Seq[String]): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    val scored = graft.operators.Curation.qualityScore(batch, textCol,
-      stopwords, keepThreshold = Long.MinValue).drop("keep")
-    // materialize the scored+tagged batch ONCE (the decontaminate-gate
-    // pattern): reject and clean writes are two actions over it
-    // null-safe on the group key (the Curation boundary-join contract): a
-    // CALIBRATED null group gates like any other; only a group with no
-    // threshold row rejects
-    val tagged = scored.join(
-        broadcast(thr.withColumnRenamed(groupCol, "__g")),
-        col(groupCol) <=> col("__g"), "left")
-      .drop("__g")
-      .localCheckpoint(true)
-    try {
-      val kept = tagged.filter(col("score_threshold").isNotNull &&
-        col("score") > col("score_threshold")).drop("score_threshold")
-      val rejected = tagged.filter(col("score_threshold").isNull ||
-        col("score") <= col("score_threshold"))
-      // reject evidence first, then the marker-bearing clean write; a
-      // crash between the two replays both and the batch-keyed overwrite
-      // converges
-      rejected.write.mode("overwrite")
-        .parquet(new Path(rejectDir, f"batch-$batchId%09d").toString)
-      writeBatchIdempotent(kept, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      stopwords: Seq[String]): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      val scored = graft.operators.Curation.qualityScore(batch, textCol,
+        stopwords, keepThreshold = Long.MinValue).drop("keep")
+      // materialize the scored+tagged batch ONCE (the decontaminate-gate
+      // pattern): reject and clean writes are two actions over it
+      // null-safe on the group key (the Curation boundary-join contract): a
+      // CALIBRATED null group gates like any other; only a group with no
+      // threshold row rejects
+      val withThr = scored.join(
+          broadcast(thr.withColumnRenamed(groupCol, "__g")),
+          col(groupCol) <=> col("__g"), "left")
+        .drop("__g")
+      withCheckpoint(withThr) { tagged =>
+        val kept = tagged.filter(col("score_threshold").isNotNull &&
+          col("score") > col("score_threshold")).drop("score_threshold")
+        val rejected = tagged.filter(col("score_threshold").isNull ||
+          col("score") <= col("score_threshold"))
+        // reject evidence first, then the marker-bearing clean write; a
+        // crash between the two replays both and the batch-keyed overwrite
+        // converges
+        rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
+        writeBatchIdempotent(kept, outDir, batchId)
+      }
     }
-  }
 
   /** Start the streaming percentile gate on a documents stream. Thresholds
     * load and MATERIALIZE once at start (the static-index twin of
@@ -689,15 +671,8 @@ object Streams {
       queryName: String = "percentile_gate"): StreamingQuery = {
     val thr = wh.readOrEmpty(thresholdTable, thresholdSchema(groupCol))
       .localCheckpoint(true)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        percentileGateBatch(batch.toDF(), thr, outDir, rejectDir, batchId,
-          textCol, groupCol, stopwords): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(percentileGateBatch(_, thr,
+      outDir, rejectDir, _, textCol, groupCol, stopwords))
   }
 
   // ---------------------------------------------------------------------
@@ -909,51 +884,42 @@ object Streams {
     */
   def budgetGateBatch(batch: DataFrame, budgets: DataFrame, outDir: String,
       rejectDir: String, ledgerDir: String, batchId: Long, idCol: String,
-      textCol: String, groupCol: String, stopwords: Seq[String]): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    // remaining budget = initial − spend of STRICTLY EARLIER batches (own
-    // entry excluded so a replay recomputes identical decisions); the
-    // fold-aware read in ledgerRows detects the no-ledger-yet case
-    // explicitly and lets real read failures propagate (retry, don't
-    // decide against a reset budget)
-    val spent = ledgerRows(spark, ledgerDir, groupCol, batchId)
-      .groupBy(col(groupCol))
-      .agg(sum(col("spent")).as("__spent"))
-    // null-safe: a BUDGETED null group's ledger rows must decrement its
-    // remaining budget — an equi-join would never match them back and the
-    // null group's budget would never deplete across batches
-    val remaining = budgets.join(
-        spent.withColumnRenamed(groupCol, "__g"),
-        col(groupCol) <=> col("__g"), "left")
-      .drop("__g")
-      .select(col(groupCol),
-        (col("budget_tokens") - coalesce(col("__spent"), lit(0L)))
-          .as("__remaining"))
-    val tagged = budgetSpendPlan(batch, remaining, idCol, textCol, groupCol,
-      stopwords).localCheckpoint(true)
-    try {
-      val kept = tagged.filter(col("__selected"))
-        .drop("__remaining", "__cum", "__selected")
-      val rejected = tagged.filter(!col("__selected"))
-        .drop("__remaining", "__cum", "__selected")
-      // ledger first (replay must see its own spend overwritten, never
-      // doubled), then reject evidence, then the marker-bearing clean
-      // write
-      kept.groupBy(col(groupCol)).agg(sum(col("__ntok")).as("spent"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .parquet(new Path(ledgerDir, f"batch-$batchId%09d").toString)
-      rejected.write.mode("overwrite")
-        .parquet(new Path(rejectDir, f"batch-$batchId%09d").toString)
-      writeBatchIdempotent(kept, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      textCol: String, groupCol: String, stopwords: Seq[String]): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      // remaining budget = initial − spend of STRICTLY EARLIER batches (own
+      // entry excluded so a replay recomputes identical decisions); the
+      // fold-aware read in ledgerRows detects the no-ledger-yet case
+      // explicitly and lets real read failures propagate (retry, don't
+      // decide against a reset budget)
+      val spent = ledgerRows(batch.sparkSession, ledgerDir, groupCol, batchId)
+        .groupBy(col(groupCol))
+        .agg(sum(col("spent")).as("__spent"))
+      // null-safe: a BUDGETED null group's ledger rows must decrement its
+      // remaining budget — an equi-join would never match them back and
+      // the null group's budget would never deplete across batches
+      val remaining = budgets.join(
+          spent.withColumnRenamed(groupCol, "__g"),
+          col(groupCol) <=> col("__g"), "left")
+        .drop("__g")
+        .select(col(groupCol),
+          (col("budget_tokens") - coalesce(col("__spent"), lit(0L)))
+            .as("__remaining"))
+      val decided = budgetSpendPlan(batch, remaining, idCol, textCol, groupCol, stopwords)
+      withCheckpoint(decided) { tagged =>
+        val kept = tagged.filter(col("__selected"))
+          .drop("__remaining", "__cum", "__selected")
+        val rejected = tagged.filter(!col("__selected"))
+          .drop("__remaining", "__cum", "__selected")
+        // ledger first (replay must see its own spend overwritten, never
+        // doubled), then reject evidence, then the marker-bearing clean
+        // write
+        kept.groupBy(col(groupCol)).agg(sum(col("__ntok")).as("spent"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(batchDir(ledgerDir, batchId).toString)
+        rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
+        writeBatchIdempotent(kept, outDir, batchId)
+      }
     }
-  }
 
   /** Fold the spend ledger's per-batch delta files into ONE committed
     * `fold-uptoBatchId` generation (the anchor-index-compaction shape
@@ -996,9 +962,7 @@ object Streams {
     }
     // idempotent cleanup — the fold is committed, so readers already
     // ignore everything deleted here
-    (0L until uptoBatchId).foreach { b =>
-      fs.delete(new Path(base, f"batch-$b%09d"), true)
-    }
+    (0L until uptoBatchId).foreach(b => fs.delete(batchDir(ledgerDir, b), true))
     Option(fs.globStatus(new Path(base, "fold-*"))).getOrElse(Array.empty)
       .map(_.getPath)
       .filter(_.getName.stripPrefix("fold-").toLong < uptoBatchId)
@@ -1015,15 +979,8 @@ object Streams {
       queryName: String = "budget_gate"): StreamingQuery = {
     val budgets = wh.readOrEmpty(budgetTable, budgetSchema(groupCol))
       .localCheckpoint(true)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        budgetGateBatch(batch.toDF(), budgets, outDir, rejectDir, ledgerDir,
-          batchId, idCol, textCol, groupCol, stopwords): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(budgetGateBatch(_, budgets,
+      outDir, rejectDir, ledgerDir, _, idCol, textCol, groupCol, stopwords))
   }
 
   // ---------------------------------------------------------------------
@@ -1073,49 +1030,39 @@ object Streams {
   def semDedupGateBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
       cents: Array[Array[Long]], cellTable: String, outDir: String,
       batchId: Long, idCol: String, embCol: String,
-      threshold: Double): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    import graft.functions.VectorFns
-    val assigned = graft.operators.KMeans.assignWith(batch, idCol, embCol, cents)
-      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-    // exclude THIS batch's own contribution (present iff this is a replay
-    // that crashed after the cell merge) — the self-collision guard
-    val idx = wh.readOrEmpty(cellTable, cellIndexSchema)
-      .filter(col("batch_id") < batchId)
-      .select(col("cluster"), col("u").as("__iu"))
-      .withColumn("__in", sqrt(VectorFns.dotQDouble(col("__iu"), col("__iu"))))
-    // cosine identical to Dedup.semDedup: exact quantized dot over
-    // correctly-rounded norms, thresholded after round-to-6 — so a batch
-    // oracle replays every drop decision bit-for-bit
-    val dropped = assigned.join(idx, Seq("cluster"))
-      .withColumn("cos",
-        VectorFns.dotQDouble(col("__u"), col("__iu")) / (col("__n") * col("__in")))
-      .filter(round(col("cos"), 6) >= threshold)
-      .select(col(idCol)).distinct()
-    // materialize survivors BEFORE the cell-table swap (same
-    // FILE_NOT_EXIST hazard as the band gate); micro-batch-sized
-    val survivors = batch.join(
+      threshold: Double): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      import graft.functions.VectorFns
+      val assigned = graft.operators.KMeans.assignWith(batch, idCol, embCol, cents)
+        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
+      val idx = priorIndex(wh, cellTable, cellIndexSchema, batchId)
+        .select(col("cluster"), col("u").as("__iu"))
+        .withColumn("__in", sqrt(VectorFns.dotQDouble(col("__iu"), col("__iu"))))
+      // cosine identical to Dedup.semDedup: exact quantized dot over
+      // correctly-rounded norms, thresholded after round-to-6 — so a batch
+      // oracle replays every drop decision bit-for-bit
+      val dropped = assigned.join(idx, Seq("cluster"))
+        .withColumn("cos",
+          VectorFns.dotQDouble(col("__u"), col("__iu")) / (col("__n") * col("__in")))
+        .filter(round(col("cos"), 6) >= threshold)
+        .select(col(idCol)).distinct()
+      // materialize survivors BEFORE the cell-table swap (same
+      // FILE_NOT_EXIST hazard as the band gate); micro-batch-sized
+      val kept = batch.join(
         assigned.join(dropped, Seq(idCol), "left_anti")
           .select(col(idCol), col("cluster"), col("__u")), Seq(idCol))
-      .localCheckpoint(true)
-    try {
-      // survivors' cells merge under min-batch-id semantics; the groupBy
-      // also re-distincts, so replays cannot grow the table
-      val merged = wh.readOrEmpty(cellTable, cellIndexSchema).unionByName(
-          survivors.select(col(idCol).cast(StringType).as("vec_id"),
-            col("cluster"), col("__u").as("u"), lit(batchId).as("batch_id")))
-        .groupBy(col("vec_id"), col("cluster"), col("u"))
-        .agg(min(col("batch_id")).as("batch_id"))
-      wh.write(cellTable, merged)
-      writeBatchIdempotent(survivors.drop("cluster", "__u"), outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      withCheckpoint(kept) { survivors =>
+        // survivors' cells merge under min-batch-id semantics; the groupBy
+        // also re-distincts, so replays cannot grow the table
+        val merged = wh.readOrEmpty(cellTable, cellIndexSchema).unionByName(
+            survivors.select(col(idCol).cast(StringType).as("vec_id"),
+              col("cluster"), col("__u").as("u"), lit(batchId).as("batch_id")))
+          .groupBy(col("vec_id"), col("cluster"), col("u"))
+          .agg(min(col("batch_id")).as("batch_id"))
+        wh.write(cellTable, merged)
+        writeBatchIdempotent(survivors.drop("cluster", "__u"), outDir, batchId)
+      }
     }
-  }
 
   /** Start the streaming SemDeDup gate on an embeddings stream. The fit is
     * loaded ONCE from `centroidTable` at start (the persisted-fit path);
@@ -1127,15 +1074,8 @@ object Streams {
       checkpointDir: String, idCol: String, embCol: String, threshold: Double,
       queryName: String = "semdedup_gate"): StreamingQuery = {
     val cents = graft.operators.KMeans.centroidsFromDf(wh.read(centroidTable))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        semDedupGateBatch(batch.toDF(), wh, cents, cellTable, outDir, batchId,
-          idCol, embCol, threshold): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(semDedupGateBatch(_, wh, cents,
+      cellTable, outDir, _, idCol, embCol, threshold))
   }
 
   // ---------------------------------------------------------------------
@@ -1185,120 +1125,105 @@ object Streams {
   def knnGraphGateBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
       cents: Array[Array[Long]], graphTable: String, vecTable: String,
       outDir: String, batchId: Long, idCol: String, embCol: String,
-      degree: Int): Boolean = {
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    val idT = batch.schema(idCol).dataType
-    // the vector table stores each vector's QUANTIZED form (`u` — the
-    // exact-lattice representation every graph computation uses) and its
-    // frozen-fit CELL, assigned once at ingest: per-batch history reads
-    // then filter by cell and never re-run the k-means distance kernel —
-    // the O(corpus·k·dim) map pass the r19 soak measured as the
-    // corpus-batch gate's dominant residue
-    val vecSchema = StructType(Seq(StructField(idCol, idT),
-      StructField("u", ArrayType(LongType, containsNull = false)),
-      StructField("cluster", LongType),
-      StructField("batch_id", LongType)))
-    val graphSchema = StructType(Seq(StructField("node", idT),
-      StructField("nbr", idT), StructField("sim", DoubleType),
-      StructField("batch_id", LongType),
-      StructField("cell", LongType)))
-    val vecIdx = wh.readOrEmpty(vecTable, vecSchema)
-    val g0 = wh.readOrEmpty(graphTable, graphSchema)
-    // assign the batch ONCE (batch-sized, checkpointed): it feeds the
-    // touched-cells collect, the vector-table append, and the merge.
-    // (isEmpty is itself a Spark job — evaluate it once per batch.)
-    val batchEmpty = batch.isEmpty
-    val bAssign =
-      if (batchEmpty) null
-      else graft.operators.KMeans.assignWith(
-          batch.select(col(idCol), col(embCol)), idCol, embCol, cents)
-        .select(col(idCol), col("cluster"), col("__u"))
-        .localCheckpoint(true)
-    // cells this batch lands in: one bounded collect (≤ k values — the
-    // centroid matrix is already driver-sized), needed driver-side to
-    // drive the partition-pruned read and the per-partition swap set
-    val touchedCells: Array[Long] =
-      if (batchEmpty) Array.empty
-      else bAssign.select(col("cluster")).distinct()
-        .collect().map(_.getLong(0))
-    // per-cell batch stamps, read from ONLY the touched partitions
-    // (partition-pruned): cells already stamped with this batch committed
-    // in a previous attempt's partial swap — skip them; re-merge the rest.
-    // An empty micro-batch touches nothing; the sink marker alone commits.
-    val doneCells: Set[Long] =
-      if (touchedCells.isEmpty) Set.empty
-      else g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
-        .groupBy(col("cell").cast(LongType).as("cell"))
-        .agg(max(col("batch_id")).as("stamp"))
-        .filter(col("stamp") >= batchId)
-        .collect().map(_.getLong(0)).toSet
-    val remainCells = touchedCells.filterNot(doneCells)
-    try {
-      if (remainCells.nonEmpty) {
-        // history pre-assigned from STORED columns — cell filter + stored
-        // quantized vectors, no distance kernel; at 100 TB the vector
-        // table partitions by cell too and this read partition-prunes
-        val histA = vecIdx.filter(col("batch_id") < batchId &&
-            col("cluster").isin(remainCells: _*))
-          .select(col(idCol), col("cluster"), col("u").as("__u"))
-        // restrict the merge to the cells still at an older stamp: on a
-        // first attempt that is every touched cell; on a partial-swap
-        // replay only the unswapped ones (their partitions are fully old —
-        // each partition swaps atomically, never mixes versions)
-        val batchA =
-          if (remainCells.length == touchedCells.length) bAssign
-          else bAssign.filter(col("cluster").isin(remainCells: _*))
-        val oldTouched = g0
-          .filter(col("cell").cast(LongType).isin(remainCells: _*))
-          .select(col("node"), col("nbr"), col("sim"),
-            col("cell").cast(LongType).as("cell"))
-        // materialize the merge BEFORE either table write (the band-gate
-        // rule): it reads graphTable AND vecTable
-        val merged = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
-            oldTouched, histA, batchA, idCol, degree,
-            batchMaterialized = true,
-            touchedCellsHint = Some(remainCells.toSeq))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        try {
-          // vectors APPEND as a batch_id partition — O(batch) bytes per
-          // batch; a replay overwrites the same partition, so idempotence
-          // needs no dedupe pass. Ids are unique across the stream (the
-          // vec_id contract), so cross-partition duplicates cannot arise.
-          // SORTED BY CLUSTER within the write: parquet row-group min/max
-          // stats on `cluster` then answer the history read's touched-cell
-          // filter — at production batch sizes (many row groups per file)
-          // the filter row-group-prunes instead of scanning every vector's
-          // cluster column, without the write amplification a fully
-          // cell-partitioned vector store would pay on corpus-scale batches
-          wh.writePartition(vecTable, "batch_id", batchId,
-            bAssign.select(col(idCol), col("__u").as("u"), col("cluster"))
-              .sortWithinPartitions(col("cluster")))
-          // graph: touched-cell partitions ONLY, each swapped atomically
-          // and stamped with this batch — untouched cells are never read
-          // or rewritten (the r19 touched-range shape). Hash-partition by
-          // cell first: a partitionBy write otherwise emits a file per
-          // (task × cell) — tasks × touched-cells small files per batch,
-          // whose open cost taxes every later read (the first soak of the
-          // store measured it); with the exchange each cell lands as one
-          // file (per-cell parallelism matters only when one cell exceeds
-          // a task — then drop this or re-split by a secondary key)
-          wh.writePartitions(graphTable, "cell",
-            merged.repartition(col("cell")))
-        } finally merged.queryExecution.analyzed.foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-          case _ => ()
+      degree: Int): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      val idT = batch.schema(idCol).dataType
+      // the vector table stores each vector's QUANTIZED form (`u` — the
+      // exact-lattice representation every graph computation uses) and its
+      // frozen-fit CELL, assigned once at ingest: per-batch history reads
+      // then filter by cell and never re-run the k-means distance kernel —
+      // the O(corpus·k·dim) map pass the r19 soak measured as the
+      // corpus-batch gate's dominant residue
+      val vecSchema = StructType(Seq(StructField(idCol, idT),
+        StructField("u", ArrayType(LongType, containsNull = false)),
+        StructField("cluster", LongType),
+        StructField("batch_id", LongType)))
+      val graphSchema = StructType(Seq(StructField("node", idT),
+        StructField("nbr", idT), StructField("sim", DoubleType),
+        StructField("batch_id", LongType),
+        StructField("cell", LongType)))
+      val vecHist = priorIndex(wh, vecTable, vecSchema, batchId)
+      val g0 = wh.readOrEmpty(graphTable, graphSchema)
+      // An empty micro-batch touches nothing; the sink marker alone commits.
+      // (isEmpty is itself a Spark job — evaluate it once per batch.)
+      if (!batch.isEmpty) {
+        // assign the batch ONCE (batch-sized, checkpointed): it feeds the
+        // touched-cells collect, the vector-table append, and the merge.
+        val assigned = graft.operators.KMeans.assignWith(
+            batch.select(col(idCol), col(embCol)), idCol, embCol, cents)
+          .select(col(idCol), col("cluster"), col("__u"))
+        withCheckpoint(assigned) { bAssign =>
+          // cells this batch lands in: one bounded collect (≤ k values — the
+          // centroid matrix is already driver-sized), needed driver-side to
+          // drive the partition-pruned read and the per-partition swap set
+          val touchedCells: Array[Long] = bAssign.select(col("cluster"))
+            .distinct().collect().map(_.getLong(0))
+          // per-cell batch stamps, read from ONLY the touched partitions
+          // (partition-pruned): cells already stamped with this batch committed
+          // in a previous attempt's partial swap — skip them; re-merge the rest.
+          val doneCells: Set[Long] =
+            if (touchedCells.isEmpty) Set.empty
+            else g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
+              .groupBy(col("cell").cast(LongType).as("cell"))
+              .agg(max(col("batch_id")).as("stamp"))
+              .filter(col("stamp") >= batchId)
+              .collect().map(_.getLong(0)).toSet
+          val remainCells = touchedCells.filterNot(doneCells)
+          if (remainCells.nonEmpty) {
+            // history pre-assigned from STORED columns — cell filter + stored
+            // quantized vectors, no distance kernel; at 100 TB the vector
+            // table partitions by cell too and this read partition-prunes
+            val histA = vecHist.filter(col("cluster").isin(remainCells: _*))
+              .select(col(idCol), col("cluster"), col("u").as("__u"))
+            // restrict the merge to the cells still at an older stamp: on a
+            // first attempt that is every touched cell; on a partial-swap
+            // replay only the unswapped ones (their partitions are fully old —
+            // each partition swaps atomically, never mixes versions)
+            val batchA =
+              if (remainCells.length == touchedCells.length) bAssign
+              else bAssign.filter(col("cluster").isin(remainCells: _*))
+            val oldTouched = g0
+              .filter(col("cell").cast(LongType).isin(remainCells: _*))
+              .select(col("node"), col("nbr"), col("sim"),
+                col("cell").cast(LongType).as("cell"))
+            // materialize the merge BEFORE either table write (the band-gate
+            // rule): it reads graphTable AND vecTable
+            val merge = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
+                oldTouched, histA, batchA, idCol, degree,
+                batchMaterialized = true,
+                touchedCellsHint = Some(remainCells.toSeq))
+              .withColumn("batch_id", lit(batchId))
+            try withCheckpoint(merge) { merged =>
+              // vectors APPEND as a batch_id partition — O(batch) bytes per
+              // batch; a replay overwrites the same partition, so idempotence
+              // needs no dedupe pass. Ids are unique across the stream (the
+              // vec_id contract), so cross-partition duplicates cannot arise.
+              // SORTED BY CLUSTER within the write: parquet row-group min/max
+              // stats on `cluster` then answer the history read's touched-cell
+              // filter — at production batch sizes (many row groups per file)
+              // the filter row-group-prunes instead of scanning every vector's
+              // cluster column, without the write amplification a fully
+              // cell-partitioned vector store would pay on corpus-scale batches
+              wh.writePartition(vecTable, "batch_id", batchId,
+                bAssign.select(col(idCol), col("__u").as("u"), col("cluster"))
+                  .sortWithinPartitions(col("cluster")))
+              // graph: touched-cell partitions ONLY, each swapped atomically
+              // and stamped with this batch — untouched cells are never read
+              // or rewritten (the r19 touched-range shape). Hash-partition by
+              // cell first: a partitionBy write otherwise emits a file per
+              // (task × cell) — tasks × touched-cells small files per batch,
+              // whose open cost taxes every later read (the first soak of the
+              // store measured it); with the exchange each cell lands as one
+              // file (per-cell parallelism matters only when one cell exceeds
+              // a task — then drop this or re-split by a secondary key)
+              wh.writePartitions(graphTable, "cell",
+                merged.repartition(col("cell")))
+            } finally graft.CkptCycle.release(merge) // the merge's own checkpoints
+          }
         }
       }
-    } finally if (bAssign != null) bAssign.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      writeBatchIdempotent(batch, outDir, batchId)
     }
-    writeBatchIdempotent(batch, outDir, batchId)
-  }
 
   /** Start the streaming kNN-graph gate on an embeddings stream. The fit
     * is loaded ONCE from `centroidTable` at start (the persisted-fit
@@ -1310,15 +1235,8 @@ object Streams {
       outDir: String, checkpointDir: String, idCol: String, embCol: String,
       degree: Int, queryName: String = "knn_graph_gate"): StreamingQuery = {
     val cents = graft.operators.KMeans.centroidsFromDf(wh.read(centroidTable))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        knnGraphGateBatch(batch.toDF(), wh, cents, graphTable, vecTable,
-          outDir, batchId, idCol, embCol, degree): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(knnGraphGateBatch(_, wh, cents,
+      graphTable, vecTable, outDir, _, idCol, embCol, degree))
   }
 
   // ---------------------------------------------------------------------
@@ -1346,54 +1264,45 @@ object Streams {
     */
   def corpusIngestBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
       outDir: String, batchId: Long, idCol: String, textCol: String,
-      minTokens: Int, shingleK: Int, bands: Int = 2): Boolean = {
-    import graft.functions.TextFns
-    val spark = batch.sparkSession
-    val dir = batchDir(outDir, batchId)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new Path(dir, "_COMMITTED"))) return false
-    // 1-2. quality gate (map-side token floor) + PII scrub
-    val gated = batch
-      .filter(TextFns.tokenCount(col(textCol)) >= minTokens)
-      .withColumn(textCol, TextFns.piiScrub(col(textCol)))
-    // 3. intra-batch exact dedup: min-id survivor per identical content
-    val survivorsIntra = gated.join(
-      graft.operators.Dedup.exact(gated, idCol, Seq(textCol)).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    // 4. cross-batch exact dedup against the fingerprint index
-    val fpIdx = wh.readOrEmpty("fp_index", fpIndexSchema)
-    val afterExact = graft.operators.Dedup.tagAgainstIndex(
-        survivorsIntra, fpIdx.filter(col("batch_id") < batchId), textCol)
-      .filter(col("is_novel")).drop("is_novel", "fp")
-    // 5. cross-batch near-dup gate against the band index
-    val bandIdx = wh.readOrEmpty("band_index", bandIndexSchema)
-    val tags = graft.operators.Dedup.tagAgainstBandIndex(
-      afterExact, bandIdx.filter(col("batch_id") < batchId), idCol, textCol,
-      shingleK, bands)
-    val accepted = afterExact.join(tags, Seq(idCol), "left")
-      .filter(!coalesce(col("is_near_dup"), lit(false)))
-      .drop("is_near_dup")
-      .localCheckpoint(true) // feeds both index appends and the sink
-    try {
-      // both indexes grow by the batch's SURVIVOR contribution only,
-      // landed as idempotent batch_id partitions (r18 — the r17 shape
-      // rewrote each whole index through a groupBy-dedupe + swap every
-      // batch). Cross-partition duplicates cannot arise by the gates' own
-      // acceptance rules: an fp matching history is rejected by the exact
-      // gate, and an accepted doc shares NO band key with history (a
-      // shared band key is exactly what is_near_dup flags); within-batch
-      // duplicates are deduped here (fp distinct; bandIndex is distinct by
-      // construction). Replays overwrite their own partitions.
-      wh.writePartition("fp_index", "batch_id", batchId,
-        accepted.select(md5(col(textCol)).as("fp")).distinct())
-      wh.writePartition("band_index", "batch_id", batchId,
-        graft.operators.Dedup.bandIndex(accepted, idCol, textCol, shingleK, bands))
-      writeBatchIdempotent(accepted, outDir, batchId)
-    } finally accepted.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+      minTokens: Int, shingleK: Int, bands: Int = 2): Boolean =
+    commitOnce(batch.sparkSession, outDir, batchId) {
+      import graft.functions.TextFns
+      // 1-2. quality gate (map-side token floor) + PII scrub
+      val gated = batch
+        .filter(TextFns.tokenCount(col(textCol)) >= minTokens)
+        .withColumn(textCol, TextFns.piiScrub(col(textCol)))
+      // 3. intra-batch exact dedup: min-id survivor per identical content
+      val survivorsIntra = gated.join(
+        graft.operators.Dedup.exact(gated, idCol, Seq(textCol)).select(col(idCol)),
+        Seq(idCol), "left_semi")
+      // 4. cross-batch exact dedup against the fingerprint index
+      val afterExact = graft.operators.Dedup.tagAgainstIndex(survivorsIntra,
+          priorIndex(wh, "fp_index", fpIndexSchema, batchId), textCol)
+        .filter(col("is_novel")).drop("is_novel", "fp")
+      // 5. cross-batch near-dup gate against the band index
+      val tags = graft.operators.Dedup.tagAgainstBandIndex(afterExact,
+        priorIndex(wh, "band_index", bandIndexSchema, batchId), idCol, textCol,
+        shingleK, bands)
+      val novel = afterExact.join(tags, Seq(idCol), "left")
+        .filter(!coalesce(col("is_near_dup"), lit(false)))
+        .drop("is_near_dup")
+      withCheckpoint(novel) { accepted => // feeds both index appends and the sink
+        // both indexes grow by the batch's SURVIVOR contribution only,
+        // landed as idempotent batch_id partitions (r18 — the r17 shape
+        // rewrote each whole index through a groupBy-dedupe + swap every
+        // batch). Cross-partition duplicates cannot arise by the gates' own
+        // acceptance rules: an fp matching history is rejected by the exact
+        // gate, and an accepted doc shares NO band key with history (a
+        // shared band key is exactly what is_near_dup flags); within-batch
+        // duplicates are deduped here (fp distinct; bandIndex is distinct by
+        // construction). Replays overwrite their own partitions.
+        wh.writePartition("fp_index", "batch_id", batchId,
+          accepted.select(md5(col(textCol)).as("fp")).distinct())
+        wh.writePartition("band_index", "batch_id", batchId,
+          graft.operators.Dedup.bandIndex(accepted, idCol, textCol, shingleK, bands))
+        writeBatchIdempotent(accepted, outDir, batchId)
+      }
     }
-  }
 
   // ---------------------------------------------------------------------
   // Streaming crawl intake: a WARC spool directory (crawlers drop
@@ -1426,8 +1335,8 @@ object Streams {
       .toDF()
   }
 
-  /** One crawl micro-batch. Rejects append to `outDir/rejects/batch-<id>`
-    * under their own _COMMITTED marker (replay-safe independently of the
+  /** One crawl micro-batch. Rejects land in `outDir/rejects/batch-<id>`
+    * through [[writeBatchIdempotent]] (replay-safe independently of the
     * docs half — a crash between the two writes must not double the
     * quarantine on replay). Valid 200-status HTML responses become
     * (doc_id, url, text) — doc_id the 64-bit hash of the WARC record id,
@@ -1437,21 +1346,14 @@ object Streams {
   def crawlIngestBatch(records: DataFrame, wh: graft.airbnb.Warehouse,
       outDir: String, batchId: Long, minTokens: Int = 5, shingleK: Int = 4,
       bands: Int = 2): Boolean = {
-    val spark = records.sparkSession
     // the rejects write and the ingest half each run actions over this
     // lineage — unpersisted, every action would re-read and re-parse the
     // whole spool batch (binaryFile read + gunzip + record codec)
     records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val rdir = new Path(s"$outDir/rejects", f"batch-$batchId%09d")
-      val fs = rdir.getFileSystem(spark.sessionState.newHadoopConf())
-      val marker = new Path(rdir, "_COMMITTED")
-      if (!fs.exists(marker)) {
-        records.filter(col("reject_reason").isNotNull)
-          .select(col("file"), col("offset"), col("reject_reason"))
-          .write.mode("overwrite").parquet(rdir.toString)
-        fs.create(marker).close()
-      }
+      writeBatchIdempotent(records.filter(col("reject_reason").isNotNull)
+        .select(col("file"), col("offset"), col("reject_reason")),
+        s"$outDir/rejects", batchId)
       val docs = records.filter(col("reject_reason").isNull &&
           col("warc_type") === "response" && col("http_status") === 200)
         .select(
@@ -1468,30 +1370,16 @@ object Streams {
       outDir: String, checkpointDir: String, minTokens: Int = 5,
       shingleK: Int = 4, bands: Int = 2,
       queryName: String = "crawl_ingest"): StreamingQuery =
-    records.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        crawlIngestBatch(batch.toDF(), wh, outDir, batchId,
-          minTokens, shingleK, bands): Unit
-      }
-      .start()
+    startGate(records, checkpointDir, queryName)(crawlIngestBatch(_, wh,
+      outDir, _, minTokens, shingleK, bands))
 
   /** Start the streaming corpus-ingest pipeline on a documents stream. */
   def startCorpusIngest(docs: DataFrame, wh: graft.airbnb.Warehouse,
       outDir: String, checkpointDir: String, idCol: String, textCol: String,
       minTokens: Int = 5, shingleK: Int = 4, bands: Int = 2,
       queryName: String = "corpus_ingest"): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        corpusIngestBatch(batch.toDF(), wh, outDir, batchId, idCol, textCol,
-          minTokens, shingleK, bands): Unit
-      }
-      .start()
+    startGate(docs, checkpointDir, queryName)(corpusIngestBatch(_, wh,
+      outDir, _, idCol, textCol, minTokens, shingleK, bands))
 
   // ---------------------------------------------------------------------
   // Streaming sketch maintenance: fold each micro-batch's Count-Min cells
@@ -1509,7 +1397,7 @@ object Streams {
     StructField("batch_id", LongType), StructField("r", LongType),
     StructField("bucket", LongType), StructField("cnt", LongType)))
 
-  /** The foreachBatch body, callable directly in tests and replay drills.
+  /** Fold one micro-batch into the cells table (a foreachBatch body).
     * Returns false when `batchId` was already folded in (pure replay).
     */
   def sketchMaintainBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
@@ -1522,12 +1410,7 @@ object Streams {
       .select(col("batch_id"), col("r"), col("bucket"), col("cnt"))
     // materialize BEFORE the swap: `cur`'s lineage reads the table files the
     // write below replaces (depth×width + history rows — tiny)
-    val merged = cur.unionByName(cells).localCheckpoint(true)
-    try { wh.write(table, merged); true }
-    finally merged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
+    withCheckpoint(cur.unionByName(cells)) { merged => wh.write(table, merged); true }
   }
 
   /** The corpus-wide sketch maintained so far: cells summed across batches
@@ -1538,21 +1421,6 @@ object Streams {
     wh.readOrEmpty(table, cmsCellsSchema)
       .groupBy(col("r"), col("bucket"))
       .agg(sum(col("cnt")).cast(LongType).as("cnt"))
-
-  /** Start streaming sketch maintenance over a token stream. */
-  def startSketchMaintenance(tokens: DataFrame, wh: graft.airbnb.Warehouse,
-      table: String, checkpointDir: String, tokenCol: String,
-      depth: Int = 4, width: Int = 64,
-      queryName: String = "sketch_maintenance"): StreamingQuery =
-    tokens.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sketchMaintainBatch(batch.toDF(), wh, table, batchId,
-          tokenCol, depth, width): Unit
-      }
-      .start()
 
   /** Read the sink's committed output: only batch directories bearing the
     * _COMMITTED marker participate, so readers never observe a torn batch.
