@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
@@ -9,25 +8,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/spill files on tmpfs: /tmp here is a virtio ext4 disk, and
-      // thread dumps during stalled suite runs showed executor threads
-      // blocked in per-shuffle-file FileOutputStream flushes (the machine
-      // has 128 GB RAM sitting idle). A real cluster writes shuffle to
-      // local SSDs; locally tmpfs is the honest equivalent, and DuckDB's
-      // oracle runs fully in memory on the same host anyway.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
     // JVM/classloader warmup outside any query's measurement: exercise the
     // parquet reader, shuffle, window, join, HOF and vector machinery once
     // each so the timed pass measures the queries, not first-touch JIT.
@@ -35,7 +16,7 @@ object Bench {
       "q_text_quality", "q_vec_norm_stats")
     warmups.foreach { n =>
       SparkEntry.registry.find(_.name == n).foreach { q =>
-        try q.run(spark, sfDir).count() catch { case NonFatal(e) =>
+        try Materialize.scope(q.run(spark, sfDir).count()) catch { case NonFatal(e) =>
           System.err.println(
             s"BENCH WARMUP FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}")
         }
@@ -77,8 +58,8 @@ object Bench {
       .map { q =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
+        try Materialize.scope { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        catch { case NonFatal(e) =>
           failed += q.name
           System.err.println(
             s"BENCH FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}")
@@ -87,35 +68,28 @@ object Bench {
       }
       // Hygiene between EVERY pair of timed runs, outside any timing
       // (round-10 verdict #3, extended by round-11 verdict #3): a run's
-      // debris — leaked cache entries, live CkptCycle checkpoint blocks,
-      // deferred garbage the ContextCleaner hasn't processed — pollutes the
-      // NEXT timed run. Round 11 scrubbed only after the cold+warm pair, so
-      // the warm run of a checkpoint-heavy query executed while the cold
-      // run's localCheckpoint blocks still occupied executor storage
-      // (q_dedup_embedding_components warm-raw 6.38 s vs 2.49 cold).
+      // debris — live checkpoint blocks, deferred garbage the
+      // ContextCleaner hasn't processed — pollutes the NEXT timed run.
+      // Every prepare and every timed run is its own Materialize scope, so
+      // its caches and checkpoint blocks are freed when it returns.
       //
-      // BETWEEN the cold and warm run of the SAME query, only caches and
-      // checkpoint registrations are released — no System.gc(): a full GC
-      // there can unload the cold run's freshly generated (and freshly
-      // JIT-compiled) codegen classes, forcing the warm run to recompile
-      // the very code whose reuse the warm number is defined to measure
-      // (codegen-heavy pipelines measured 5.1 s warm vs a 2.9 s hot
-      // retry under an intra-pair GC). The full GC + settle runs AFTER
-      // the pair, and only after non-trivial runs, so the 195-query suite
-      // doesn't spend minutes collecting a 128 GB heap for free.
-      def release(): Unit = {
-        spark.catalog.clearCache()
-        graft.CkptCycle.releaseAll(spark)
-      }
-      // scrub keys on the MOST EXPENSIVE run of the pair, not the last
+      // BETWEEN the cold and warm run of the SAME query there is no
+      // System.gc(): a full GC there can unload the cold run's freshly
+      // generated (and freshly JIT-compiled) codegen classes, forcing the
+      // warm run to recompile the very code whose reuse the warm number is
+      // defined to measure (codegen-heavy pipelines measured 5.1 s warm vs
+      // a 2.9 s hot retry under an intra-pair GC). The full GC + settle
+      // runs AFTER the pair, and only after non-trivial runs, so the
+      // 195-query suite doesn't spend minutes collecting a 128 GB heap for
+      // free.
+      //
+      // The GC keys on the MOST EXPENSIVE run of the pair, not the last
       // one: a heavy-cold/cheap-warm query must still pay the GC + settle
       // before the next query, or the next cold runs against the heavy
       // run's deferred garbage (the round-10 pathology: raw colds 49.9 s
       // vs 17.7 s on immediate retry).
-      def scrub(prev: Double): Unit = {
-        release()
+      def scrub(prev: Double): Unit =
         if (prev > 0.5) { System.gc(); Thread.sleep(150) }
-      }
       // SETUP outside the timer (VERDICT r18 #2): serve rows read persisted
       // once-per-JVM artifacts; production builds yesterday's index before
       // today's batch arrives, so the build must not land in the cold
@@ -123,18 +97,18 @@ object Bench {
       // builds the same artifact and any real error surfaces there, timed.
       // A prepare failure must be VISIBLE (ADVICE r19): a silently broken
       // hook shifts the artifact build back into the timed cold number —
-      // the exact distortion the hook exists to remove. And release() runs
-      // in a finally so a failed prepare can't leave its checkpoint blocks
-      // live during the timed run either.
+      // the exact distortion the hook exists to remove. The prepare's scope
+      // frees its checkpoint blocks on failure too, so none stay live
+      // during the timed run.
       q.prepare.foreach { p =>
-        try p(spark, sfDir)
+        try Materialize.scope(p(spark, sfDir))
         catch { case NonFatal(e) =>
           System.err.println(
             s"BENCH PREPARE FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}" +
             " — artifact build will land in the timed cold run")
-        } finally release()
+        }
       }
-      val cold0 = once(); release(); val warm = once()
+      val cold0 = once(); val warm = once()
       scrub(math.max(cold0, warm))
       // De-noise, conservatively (round-8 advice): a SINGLE retry per side —
       // retries run with codegen/plan caches hot, so looping retries would
@@ -148,7 +122,7 @@ object Bench {
       def retryOnce(side: String, base: Double, bound: Double): Double = {
         val t0 = System.nanoTime()
         val retry =
-          try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          try Materialize.scope { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch { case NonFatal(e) =>
             System.err.println(
               s"BENCH RETRY FAIL ${q.name} $side: ${e.getClass.getName}: ${e.getMessage}")
@@ -173,9 +147,9 @@ object Bench {
           f"BENCH CLAMP ${q.name} warm: $warmR%.3f -> $cold%.3f (pathological inversion)")
         cold
       } else warmR
-      // Every timed run above is followed by a scrub(), so the next query
-      // always starts from a clean cache/checkpoint/GC state — no trailing
-      // hygiene block needed here.
+      // Every timed run above is its own scope and every pair is followed
+      // by a scrub(), so the next query always starts from a clean
+      // cache/checkpoint/GC state — no trailing hygiene block needed here.
       (q.name, cold, warmD, warmR)
     }
     // NOISE SENTINEL (round-13 verdict #5): the same suite on the same code

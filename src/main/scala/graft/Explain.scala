@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries (all
   * when no args) so scan pruning (ReadSchema/PushedFilters), join strategies
   * (BroadcastHashJoin vs SortMergeJoin) and WholeStageCodegen spans can be
@@ -10,21 +8,14 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.isEmpty) SparkEntry.registry.map(_.name) else args.toSeq
     wanted.foreach { name =>
       SparkEntry.registry.find(_.name == name) match {
         case Some(q) =>
           println(s"\n========== $name ==========")
-          q.run(spark, sfDir).explain("formatted")
+          Materialize.scope(q.run(spark, sfDir).explain("formatted"))
         case None => System.err.println(s"unknown query: $name")
       }
     }

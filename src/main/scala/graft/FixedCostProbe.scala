@@ -18,14 +18,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 object FixedCostProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session("graft-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("q_o1_limit")
@@ -33,24 +26,18 @@ object FixedCostProbe {
     spark.stop()
   }
 
-  private def release(spark: SparkSession): Unit = {
-    spark.catalog.clearCache(); CkptCycle.releaseAll(spark)
-  }
-
   def probe(spark: SparkSession, dir: String, name: String): Unit = {
     val q = SparkEntry.registry.find(_.name == name).getOrElse(
       sys.error(s"no such query: $name"))
-    q.run(spark, dir).count() // warm up (codegen, page cache)
-    release(spark)
+    Materialize.scope(q.run(spark, dir).count()) // warm up (codegen, page cache)
     def ns[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime(); val r = f; ((System.nanoTime() - t0) / 1e6, r)
     }
-    for (i <- 1 to 3) {
+    for (i <- 1 to 3) Materialize.scope {
       val (tBuild, df) = ns(q.run(spark, dir))
       val (tPlan, _) = ns(df.queryExecution.executedPlan)
       val (tExec, n) = ns(df.count())
       println(f"$name iter$i build=$tBuild%7.1fms optimize+plan=$tPlan%7.1fms execute=$tExec%7.1fms rows=$n")
-      release(spark)
     }
     // decomposition pass: count jobs + completed stages for one warm run.
     // (query CONSTRUCTION can itself launch jobs — eager-contract
@@ -71,7 +58,7 @@ object FixedCostProbe {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    val rows = q.run(spark, dir).count()
+    val rows = Materialize.scope(q.run(spark, dir).count())
     val wallMs = (System.nanoTime() - t0) / 1e6
     // the listener bus drains asynchronously; a short settle keeps the
     // counts complete without reaching into private Spark API
@@ -86,6 +73,5 @@ object FixedCostProbe {
     st.foreach { case (id, nm, nt, d) =>
       println(f"  stage $id%5d $d%6dms tasks=$nt%4d  $nm")
     }
-    release(spark)
   }
 }

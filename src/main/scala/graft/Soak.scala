@@ -142,23 +142,7 @@ object Soak {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SOAK_FACTOR", "10").toInt
     val small = "/root/testdata/sf0.1"
     val big = s"/tmp/graft-soak-x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/spill files on tmpfs: /tmp here is a virtio ext4 disk, and
-      // thread dumps during stalled suite runs showed executor threads
-      // blocked in per-shuffle-file FileOutputStream flushes (the machine
-      // has 128 GB RAM sitting idle). A real cluster writes shuffle to
-      // local SSDs; locally tmpfs is the honest equivalent, and DuckDB's
-      // oracle runs fully in memory on the same host anyway.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
+    val spark = Session("graft-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!new java.io.File(s"$big/lineitem.parquet").exists()) generate(spark, small, big, factor)
@@ -176,17 +160,15 @@ object Soak {
       soakQueries.filter(n => wanted.isEmpty || wanted.exists(n.contains))
         .foreach { name =>
         val q = SparkEntry.registry.find(_.name == name).get
-        // release caches + cycled checkpoint blocks between timed runs
-        // (the Bench hygiene): several queries localCheckpoint shared
-        // stages under CkptCycle, and without a release every LATER soak
-        // row times against the accumulated storage of every earlier one
-        def scrub(): Unit = {
-          spark.catalog.clearCache(); CkptCycle.releaseAll(spark)
-        }
-        time(q.run(spark, small).count()); scrub() // cold: codegen, discarded
-        val tSmall = time(q.run(spark, small).count()); scrub()
-        time(q.run(spark, big).count()); scrub()
-        val tBig = time(q.run(spark, big).count()); scrub()
+        // each timed run is its own Materialize scope (the Bench hygiene):
+        // several queries checkpoint shared stages, and without a release
+        // every LATER soak row times against the accumulated storage of
+        // every earlier one
+        def run(dir: String): Double = Materialize.scope(time(q.run(spark, dir).count()))
+        run(small) // cold: codegen, discarded
+        val tSmall = run(small)
+        run(big)
+        val tBig = run(big)
         println(f"$name%-24s $tSmall%10.2f $tBig%10.2f ${tBig / tSmall}%7.1f")
       }
     }
@@ -430,13 +412,11 @@ object Soak {
         .foreach { case (name, f) =>
         // warm BOTH sides: timing the big corpus cold would fold plan codegen
         // and first-touch I/O into exactly the ratio this section reports.
-        // Scrub caches + cycled checkpoints between runs (the main-sweep
-        // hygiene) so no row times against an earlier row's leaked blocks.
-        def scrub(): Unit = {
-          spark.catalog.clearCache(); CkptCycle.releaseAll(spark)
-        }
-        f(small); scrub(); val tSmall = time(f(small)); scrub()
-        f(dbig); scrub(); val tBig = time(f(dbig)); scrub()
+        // One Materialize scope per run (the main-sweep hygiene) so no row
+        // times against an earlier row's leaked blocks.
+        def run(dir: String): Double = Materialize.scope(time(f(dir)))
+        run(small); val tSmall = run(small)
+        run(dbig); val tBig = run(dbig)
         println(f"$name%-24s $tSmall%10.2f $tBig%10.2f ${tBig / tSmall}%7.1f")
       }
     }
@@ -681,22 +661,20 @@ object Soak {
           CorpusPipeline.Config())(_.corpus.count())
       def closure(dir: String): Long = {
         val pairs = Dedup.minhashLshPairs(docs(dir), "doc_id", "text", 4, 0.5)
-        val comp = CkptCycle.cycle("soak_compose_closure",
-          Components.connectedComponents(pairs, "a_id", "b_id",
-            localThreshold =
-              if (dir == small) Components.LocalEdgeThreshold else 0L))
+        val comp = Components.connectedComponents(pairs, "a_id", "b_id",
+          localThreshold = if (dir == small) Components.LocalEdgeThreshold else 0L)
         val scored = docs(dir).select(col("doc_id"),
           graft.functions.TextFns.tokenCount(col("text")).cast("long").as("score"))
         Components.survivorsByQuality(comp, scored, "doc_id", "score").count()
       }
-      def scrub(): Unit = { spark.catalog.clearCache(); CkptCycle.releaseAll(spark) }
+      def run(f: String => Long, dir: String): Double = Materialize.scope(time(f(dir)))
       val runs: Seq[(String, String => Long)] = Seq(
         "compose_corpus_pipeline" -> (pipeline _),
         "compose_dedup_closure" -> (closure _))
       println(f"${"compose op"}%-26s ${"small_warm"}%10s ${"big_warm"}%10s ${"ratio"}%7s ${"r/f"}%5s (data x$composeFactor)")
       runs.foreach { case (name, f) =>
-        f(small); scrub(); val tS = time(f(small)); scrub()
-        f(dbig); scrub(); val tB = time(f(dbig)); scrub()
+        run(f, small); val tS = run(f, small)
+        run(f, dbig); val tB = run(f, dbig)
         println(f"$name%-26s $tS%10.2f $tB%10.2f ${tB / tS}%7.1f ${tB / tS / composeFactor}%5.2f")
       }
     }
@@ -733,12 +711,12 @@ object Soak {
       }
       def runPercentile(dir: String): Unit = {
         val out = tmp("soak-pct-out"); val rej = tmp("soak-pct-rej")
-        val thr = graft.operators.Curation.qualityScore(docs(dir), "text",
+        val thr0 = graft.operators.Curation.qualityScore(docs(dir), "text",
             Seq("a", "the"), keepThreshold = Long.MinValue)
           .groupBy(col("lang"))
           .agg(expr("CAST(percentile_approx(score, 0.5) AS BIGINT)")
             .as("score_threshold"))
-          .localCheckpoint(true)
+        val thr = Materialize.eager(thr0)
         (0 until 3).foreach { i =>
           Streams.percentileGateBatch(batch(dir, i), thr, out, rej,
             i.toLong, "text", "lang", Seq("a", "the"))
@@ -775,7 +753,7 @@ object Soak {
           val out0 = tmp("soak-subl-out")
           val all = docs(dir)
           val held = (0 until 3).map { i =>
-            all.filter(pmod(col("doc_id"), lit(m)) === i).localCheckpoint(true)
+            Materialize.eager(all.filter(pmod(col("doc_id"), lit(m)) === i))
           }
           // steady-state index: everything outside the held-out slices,
           // ingested once, untimed
@@ -855,13 +833,14 @@ object Soak {
           val wh0 = graft.airbnb.Warehouse(spark, tmp("soak-kgl-wh"))
           val out0 = tmp("soak-kgl-out")
           val all = emb(dir)
-          val tagged = graft.operators.KMeans.assignWith(all, "vec_id",
+          val tagged0 = graft.operators.KMeans.assignWith(all, "vec_id",
               "embedding", cents)
             .filter(pmod(col("vec_id"), lit(97)) === 0 && col("cluster") < 3)
-            .select(col("vec_id"), col("cluster")).localCheckpoint(true)
+            .select(col("vec_id"), col("cluster"))
+          val tagged = Materialize.eager(tagged0)
           val bs = (0 until 3).map { i =>
-            all.join(tagged.filter(col("cluster") === i).select("vec_id"),
-              Seq("vec_id"), "left_semi").localCheckpoint(true)
+            Materialize.eager(all.join(tagged.filter(col("cluster") === i).select("vec_id"),
+              Seq("vec_id"), "left_semi"))
           }
           // steady-state corpus: everything outside the held-out batches,
           // ingested once, untimed

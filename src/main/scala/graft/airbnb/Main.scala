@@ -1,7 +1,6 @@
 package graft.airbnb
 
 import graft.operators.Profile
-import org.apache.spark.sql.SparkSession
 
 /** Non-interactive CLI mirroring the reference's main.py menu
   * (/root/reference/main.py:49-77): analyze | etl | views | validate | stats.
@@ -19,15 +18,10 @@ object Main {
     }.toMap
     val raw = opts.getOrElse("raw", "data/raw")
     val whRoot = opts.getOrElse("warehouse", "data/warehouse")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(opts.getOrElse("master", "local[*]"))
-      .appName("airbnb-dw")
-      .config("spark.sql.shuffle.partitions", opts.getOrElse("shuffle", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // --master / --shuffle are deployment settings; unset, the session
+    // factory derives both from SPARK_GRAFT_CPUS
+    val spark = graft.Session("airbnb-dw", master = opts.get("master"),
+      shufflePartitions = opts.get("shuffle").map(_.toInt))
 
     def globs = (s"$raw/*listings*.csv.gz", s"$raw/*calendar*.csv.gz", s"$raw/*reviews*.csv.gz")
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the closure step every
   * near-dedup pipeline needs after pair generation: LSH/Jaccard emit PAIRS,
@@ -46,7 +45,7 @@ object Components {
     */
   private[operators] def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
+    else graft.Materialize.eager(df)
 
   /** Edge-count threshold below which closure runs as driver union-find
     * instead of the distributed loop — the broadcast-join pattern applied
@@ -91,10 +90,9 @@ object Components {
     // collects HALF the rows; the distributed path mirrors map-side off the
     // persisted undirected set with explode(array(fwd, rev)) — identical
     // row multiset to the old union, distinct unchanged above it.
-    val undirected = pairs
+    val undirected = graft.Materialize.lazily(pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // One job sizes the edge set (and materializes the persist for either
     // path); the size decides the strategy, exactly like a broadcast
     // threshold decides a join's. 2× because the old threshold counted
@@ -102,17 +100,16 @@ object Components {
     val nPairs = undirected.count()
     if (2L * nPairs <= localThreshold) {
       val result = localClosure(pairs.sparkSession, undirected)
-      undirected.unpersist()
+      graft.Materialize.release(undirected)
       result
     } else {
-      val edges = undirected.select(explode(array(
+      val edges = graft.Materialize.lazily(undirected.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       val result = distributedClosure(edges, maxIters)
-      undirected.unpersist()
+      graft.Materialize.release(undirected)
       result
     }
   }
@@ -186,11 +183,11 @@ object Components {
           (if (r == k) prop else round).select(col("node"), col("label"))
       }
       converged = obs.get("changed").asInstanceOf[Long] == 0L
-      graft.CkptCycle.release(prevRound)
+      graft.Materialize.release(prevRound)
       prevRound = prop
       iters += k
     }
-    edges.unpersist()
+    graft.Materialize.release(edges)
     // Fail loudly rather than return silently split components: an
     // unconverged label set would make survivors() emit multiple
     // "representatives" per true cluster — a wrong deletion list. (Rounds

@@ -56,11 +56,11 @@ object CorpusPipeline {
     */
   final case class Result(corpus: DataFrame, droppedQuality: Long,
                           droppedExactDup: Long, droppedNearDup: Long)(
-      releasable: DataFrame) {
+      private[operators] val releasable: DataFrame) {
     /** Free the pipeline's persisted survivor stage. The corpus can still be
       * consumed afterwards, but recomputes its lineage from the source.
       */
-    def unpersist(): Unit = releasable.unpersist(blocking = false)
+    def unpersist(): Unit = graft.Materialize.release(releasable)
   }
 
   /** Prepare `df` (must have `idCol`: long, `textCol`: string). Output keeps
@@ -116,9 +116,8 @@ object CorpusPipeline {
       if (cfg.scrubPii) gated.withColumn(textCol, TextFns.piiScrub(col(textCol)))
       else gated
     val obsGated = org.apache.spark.sql.Observation()
-    val scrubbed = scrubbed0
-      .observe(obsGated, count(lit(1)).as("n_gated"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scrubbed = graft.Materialize.lazily(scrubbed0
+      .observe(obsGated, count(lit(1)).as("n_gated")))
 
     // 3. exact dedup: min-id survivor per identical content (one shuffle).
     // Persist reused stages: the drop-count actions and the final consumer
@@ -140,15 +139,15 @@ object CorpusPipeline {
     val obsExact = org.apache.spark.sql.Observation()
     val exactSurvivors = Dedup.exact(scrubbed, idCol, Seq(textCol)).select(id)
     val exactJoined = scrubbed.join(exactSurvivors, Seq(idCol), "left_semi")
-    val exactDeduped = (if (needEagerExact) exactJoined
+    val exactDeduped = graft.Materialize.lazily(
+      if (needEagerExact) exactJoined
       else exactJoined.observe(obsExact, count(lit(1)).as("n_exact")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nExactEager = if (needEagerExact) exactDeduped.count() else -1L
     // On the eager leg the scrub cache is fully consumed by that count (the
     // near-dup stage reads the exact-dedup cache, not scrubbed) — release it
     // before the pair join runs. On the deferred leg it is consumed inside
     // the nNear count below and released after.
-    if (needEagerExact) scrubbed.unpersist(blocking = false)
+    if (needEagerExact) graft.Materialize.release(scrubbed)
 
     // 4. near-dup removal: bounded shared-shingle pair join, lower id wins.
     // With near-dup off the exact-dedup frame IS the output — keep its cache
@@ -171,8 +170,7 @@ object CorpusPipeline {
         val losers = Dedup.minhashLshPairs(exactDeduped, idCol, textCol,
             cfg.nearDupK, cfg.nearDupJaccard)
           .select(col("b_id").as(idCol)).distinct()
-        exactDeduped.join(losers, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.Materialize.lazily(exactDeduped.join(losers, Seq(idCol), "left_anti"))
       } else {
         val maxDf = Tuning.maxShingleDocFreq(spark, nExactEager)
         // The exploded shingle stage is PERSISTED for the pair join's many
@@ -186,14 +184,12 @@ object CorpusPipeline {
         // Unpersisted right after the survivor count below materializes
         // `nearDeduped` — the cache never outlives the one job that
         // consumes it.
-        val shN = Dedup.ngramShingleStage(exactDeduped, idCol, textCol,
-            cfg.nearDupK, maxDocFreq = maxDf)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val shN = graft.Materialize.lazily(Dedup.ngramShingleStage(exactDeduped, idCol,
+          textCol, cfg.nearDupK, maxDocFreq = maxDf))
         shingleStage = Some(shN)
         val losers = Dedup.ngramJaccardPairsFrom(shN, idCol, cfg.nearDupJaccard)
           .select(col("b_id").as(idCol)).distinct()
-        exactDeduped.join(losers, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.Materialize.lazily(exactDeduped.join(losers, Seq(idCol), "left_anti"))
       }
     val nNear = nearDeduped.count()
     // Deferred accounting resolves here: the nNear count materialized every
@@ -205,9 +201,9 @@ object CorpusPipeline {
       else obsExact.get("n_exact").asInstanceOf[Long]
     val nIn = obsIn.get("n_in").asInstanceOf[Long]
     val nGated = obsGated.get("n_gated").asInstanceOf[Long]
-    if (!needEagerExact) scrubbed.unpersist(blocking = false)
-    shingleStage.foreach(_.unpersist(blocking = false))
-    if (!(nearDeduped eq exactDeduped)) exactDeduped.unpersist(blocking = false)
+    if (!needEagerExact) graft.Materialize.release(scrubbed)
+    shingleStage.foreach(graft.Materialize.release(_))
+    if (!(nearDeduped eq exactDeduped)) graft.Materialize.release(exactDeduped)
 
     // 5. deterministic split (pure expression — reproducible on any engine)
     val bucket = pmod(TextFns.polyHash(s"CAST($idCol AS STRING)"), lit(100L))
@@ -243,6 +239,6 @@ object CorpusPipeline {
   def withPrepared[T](df: DataFrame, idCol: String, textCol: String,
                       cfg: Config = Config())(f: Result => T): T = {
     val r = prepare(df, idCol, textCol, cfg)
-    try f(r) finally r.unpersist()
+    try f(r) finally graft.Materialize.release(r.releasable)
   }
 }

@@ -76,8 +76,7 @@ object Curation {
     * Returns (idCol, clean_text, n_chunks, n_kept).
     */
   def removeBoilerplate(df: DataFrame, idCol: String, textCol: String,
-                        chunkTokens: Int, maxDocFreq: Long,
-                        shareKey: Option[String] = None): DataFrame = {
+                        chunkTokens: Int, maxDocFreq: Long): DataFrame = {
     // KEY-SPACE NOTE (round 14): __ck is now the ChunkHashStrings kernel's
     // shingleHash64 over the token slice — the SAME key space
     // boilerplateAccounting's ChunkHashes kernel emits, so the two halves
@@ -93,26 +92,16 @@ object Curation {
     // ChunkHashes kernel (it never needs text — the r14 decomposition
     // measured the two duplicated ~200 ms string-building stages as this
     // query's dominant cost), and only the probe side builds strings, via
-    // the one-pass struct kernel. `shareKey` checkpoints the probe stage
-    // so even the tokenize runs once (chunked text ≈ corpus bytes — the
-    // same storage-for-recompute trade selectByTokenBudget documents);
-    // None keeps the operator a pure lazy plan.
+    // the one-pass struct kernel. The operator stays a pure lazy plan.
     val toks = TextFns.tokens(col(textCol))
-    val ch0 = df.select(col(idCol), posexplode(
+    val ch = df.select(col(idCol), posexplode(
         graft.functions.SketchFns.chunkHashStrings(toks, chunkTokens, chunkTokens)))
       .select(col(idCol), (col("pos") + 1).cast(LongType).as("pos"),
         col("col.ck").as("__ck"), col("col.chunk").as("chunk"))
-    val ch = shareKey
-      .map(k => graft.CkptCycle.cycle(k, ch0.localCheckpoint(true)))
-      .getOrElse(ch0)
-    val dfSide = shareKey match {
-      // with a checkpoint the probe blocks are materialized — read them
-      case Some(_) => ch.select(col(idCol), col("__ck"))
-      // lazy form: hash-only scan, no chunk strings on this side
-      case None => df.select(col(idCol), explode(
-          graft.functions.SketchFns.chunkHashes(toks, chunkTokens, chunkTokens)).as("__ck"))
-    }
-    val dfreq = dfSide.groupBy(col("__ck"))
+    // hash-only scan: no chunk strings on the frequency side
+    val dfreq = df.select(col(idCol), explode(
+        graft.functions.SketchFns.chunkHashes(toks, chunkTokens, chunkTokens)).as("__ck"))
+      .groupBy(col("__ck"))
       .agg(countDistinct(col(idCol)).as("__df"))
     ch.join(dfreq, "__ck")
       .groupBy(col(idCol))
@@ -180,8 +169,7 @@ object Curation {
     // build, exact join) — checkpoint it once so the test corpus is
     // shingled in one pass, not three (r10 verdict #7: the family paid
     // redundant scans). Bounded by assumption: the held-out side is the
-    // small one (MBs of eval against TBs of train). CkptCycle frees the
-    // previous invocation's blocks — single-live-frame-per-key contract.
+    // small one (MBs of eval against TBs of train).
     //
     // Sketch sizing needs an EXACT row count BEFORE the sketch can be
     // allocated (an under-sized Bloom filter silently degenerates the
@@ -191,11 +179,9 @@ object Curation {
     // RIDES the checkpoint materialization as an observed metric — the
     // CorpusPipeline accounting trick — so sizing costs zero extra jobs.
     val obsN = org.apache.spark.sql.Observation()
-    val testSh = graft.CkptCycle.cycle("decontaminateBloom_test",
-      Dedup.shingleHashes(test, idCol, textCol, k)
-        .select(col(idCol).as("test_id"), col("__sk"))
-        .observe(obsN, count(lit(1)).as("n"))
-        .localCheckpoint(true))
+    val testSh = graft.Materialize.eager(Dedup.shingleHashes(test, idCol, textCol, k)
+      .select(col(idCol).as("test_id"), col("__sk"))
+      .observe(obsN, count(lit(1)).as("n")))
     val nTest = obsN.get("n").asInstanceOf[Long]
     val bloom = testSh.stat.bloomFilter("__sk", math.max(nTest, 64L), fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
@@ -384,12 +370,11 @@ object Curation {
     // branch); exchange reuse alone re-ran the pair-vocabulary hash
     // aggregate per consumer — pair strings barely compress in map-side
     // partials, so that re-aggregation was the measured dominant cost.
-    // One localCheckpoint (pair-vocab-sized, ≪ corpus) under the
-    // CkptCycle single-live-frame contract; don't construct speculatively.
+    // One localCheckpoint (pair-vocab-sized, ≪ corpus); don't construct
+    // speculatively.
     // spread before tokenize+explode: the pair construction fused onto
     // the unsplittable scan ran serial (measured 424 ms 1-task stage)
-    val allPairs = graft.CkptCycle.cycle("collocations_paircounts",
-      graft.Tables.spread(df).withColumn("__t", TextFns.tokens(col(textCol)))
+    val allPairs = graft.Materialize.eager(graft.Tables.spread(df).withColumn("__t", TextFns.tokens(col(textCol)))
         // drop hostile sentinel-valued tokens (scaladoc): an in-corpus
         // U+0001 would otherwise collide with the terminal marker
         .withColumn("__t", expr(s"filter(__t, x -> x != '$sent')"))
@@ -398,8 +383,7 @@ object Curation {
           "concat(transform(slice(__t, 1, size(__t) - 1), " +
             "(x, i) -> concat(x, ' ', element_at(__t, i + 2))), " +
             s"array(concat(element_at(__t, -1), ' $sent')))")).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("cab"))
-        .localCheckpoint(true))
+        .groupBy(col("pair")).agg(count(lit(1)).as("cab")))
     val uni = allPairs
       .groupBy(substring_index(col("pair"), " ", 1).as("w"))
       .agg(sum(col("cab")).as("cw"))
@@ -692,17 +676,11 @@ object Curation {
     *         row, gate verdict attached
     */
   def percentileGate(scored: DataFrame, idCol: String, groupCol: String,
-                     scoreCol: String, keepPermille: Int,
-                     shareKey: String = null): DataFrame = {
+                     scoreCol: String, keepPermille: Int): DataFrame = {
     require(keepPermille >= 0 && keepPermille <= 1000,
       s"keepPermille must be in [0, 1000]: $keepPermille")
-    val key = if (shareKey != null) shareKey
-      else graft.CkptCycle.callSiteKey("Curation.percentileGate",
-        "graft.operators.Curation")
-    val ck = graft.CkptCycle.cycle(key,
-      scored.select(col(idCol), col(groupCol),
-          col(scoreCol).cast(LongType).as("score"))
-        .localCheckpoint(true))
+    val ck = graft.Materialize.eager(scored.select(col(idCol), col(groupCol),
+      col(scoreCol).cast(LongType).as("score")))
     // NULL-score rows are unscoreable: they never enter the histogram (so
     // they neither consume quota nor shift the boundary) and come back
     // selected=false — without this branch a null score fails BOTH the
@@ -800,18 +778,12 @@ object Curation {
     */
   def tokenBudgetPerGroup(scored: DataFrame, idCol: String, groupCol: String,
                           scoreCol: String, ntokCol: String,
-                          budgetPermille: Int,
-                          shareKey: String = null): DataFrame = {
+                          budgetPermille: Int): DataFrame = {
     require(budgetPermille >= 0 && budgetPermille <= 1000,
       s"budgetPermille must be in [0, 1000]: $budgetPermille")
-    val key = if (shareKey != null) shareKey
-      else graft.CkptCycle.callSiteKey("Curation.tokenBudgetPerGroup",
-        "graft.operators.Curation")
-    val ck = graft.CkptCycle.cycle(key,
-      scored.select(col(idCol), col(groupCol),
-          col(scoreCol).cast(LongType).as("score"),
-          col(ntokCol).cast(LongType).as("ntok"))
-        .localCheckpoint(true))
+    val ck = graft.Materialize.eager(scored.select(col(idCol), col(groupCol),
+      col(scoreCol).cast(LongType).as("score"),
+      col(ntokCol).cast(LongType).as("ntok")))
     // NULL-score rows never enter the histogram (a null score would both
     // vanish from the output — it fails the off/tie filters under
     // three-valued logic — and corrupt the per-score token sums); they come
@@ -928,7 +900,7 @@ object Curation {
     * Returns (idCol, n_bigrams, lm_ppm) for every doc with >= 2 tokens.
     */
   def bigramLmScore(df: DataFrame, idCol: String, textCol: String,
-                    shareKey: Option[String] = None): DataFrame = {
+                    share: Boolean = false): DataFrame = {
     // PairHashes kernel (r21): one codegen pass emits both join keys per
     // position — the prior HOF transform ran INTERPRETED inside
     // GenerateExec, materialized every pair string, and paid two xxhash64
@@ -944,13 +916,11 @@ object Curation {
     // The hashed pair stream feeds TWO exchanges — the pair-count partial
     // and the final join's probe side — whose canonicalized forms differ
     // (one carries the partial agg), so the tokenize+explode map work
-    // evaluates twice. With `shareKey` the (id, __hp, __hw) stream — three
+    // evaluates twice. With `share` the (id, __hp, __hw) stream — three
     // longs per bigram position, ~24 bytes where the text it came from is
-    // hundreds — checkpoints once under the CkptCycle single-live-frame
-    // contract; None keeps the operator a pure lazy plan.
-    val pairs = shareKey
-      .map(k => graft.CkptCycle.cycle(k, pairs0.localCheckpoint(true)))
-      .getOrElse(pairs0)
+    // hundreds — checkpoints once; without it the operator is a pure lazy
+    // plan.
+    val pairs = if (share) graft.Materialize.eager(pairs0) else pairs0
     // Prefix counts derive from the PAIR aggregate, not the raw pair
     // stream: c(w1) = Σ_{pairs starting w1} c(pair), so the second
     // aggregation runs over the distinct-pair vocabulary (≪ corpus) —
@@ -1139,15 +1109,14 @@ object Curation {
     require(nMerges >= 1 && nMerges <= 64, s"nMerges out of range: $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    val v0 = df.withColumn("__t", TextFns.tokens(col(textCol)))
-      .select(explode(col("__t")).as("w"))
-      .filter(col("w").rlike("^[a-z]+$"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .withColumn("seq",
-        expr("array_join(transform(split(w, ''), c -> concat('(', c, ')')), '')"))
-      .select(col("seq"), col("freq"))
-      .persist()
-    try {
+    graft.Materialize.scope {
+      val v0 = graft.Materialize.lazily(df.withColumn("__t", TextFns.tokens(col(textCol)))
+        .select(explode(col("__t")).as("w"))
+        .filter(col("w").rlike("^[a-z]+$"))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .withColumn("seq",
+          expr("array_join(transform(split(w, ''), c -> concat('(', c, ')')), '')"))
+        .select(col("seq"), col("freq")))
       var cur = v0
       val merges = Seq.newBuilder[(Long, String, String, Long)]
       var round = 1
@@ -1174,7 +1143,7 @@ object Curation {
         }
       }
       merges.result().toDF("round", "lhs", "rhs", "freq")
-    } finally v0.unpersist(blocking = false)
+    }
   }
 
   /** Deterministic DSIR selection: the top `keep` raw documents by
@@ -1218,17 +1187,10 @@ object Curation {
     * their scan into the execution job instead of paying a third
     * construction-time job.
     *
-    * STORAGE CONTRACT — single live result per `shareKey`: the returned
-    * frame reads the internal checkpoint's blocks, which are registered
-    * with [[graft.CkptCycle]] under `shareKey`; the NEXT invocation with
-    * the same key frees them (and a freed frame cannot recompute — its
-    * lineage is truncated). The DEFAULT key is derived per CALL SITE
-    * ([[graft.CkptCycle.callSiteKey]]), so repeated invocations from one
-    * source line cycle each other's blocks while two different call sites
-    * never collide — two concurrently-live selections built with defaults
-    * cannot free each other. Pass an explicit `shareKey` to opt into
-    * cross-call-site cycling (or to make a loop body's invocations share
-    * one key regardless of inlining). At 100 TB the checkpoint holds the
+    * STORAGE CONTRACT — the returned frame reads the internal
+    * checkpoint's blocks, which live until the caller's
+    * [[graft.Materialize.scope]] closes (a freed frame cannot recompute —
+    * its lineage is truncated). At 100 TB the checkpoint holds the
     * corpus once in executor memory-and-disk — the deliberate trade
     * against re-tokenizing the corpus once per consumer, and the same
     * posture as the corpus-pipeline operator.
@@ -1246,22 +1208,17 @@ object Curation {
     */
   def selectByTokenBudget(df: DataFrame, idCol: String, textCol: String,
                           stopwords: Seq[String], budgetTokens: Long,
-                          tieWindowMaxRows: Long = TieWindowMaxRows,
-                          shareKey: String = null): DataFrame = {
+                          tieWindowMaxRows: Long = TieWindowMaxRows): DataFrame = {
     require(budgetTokens >= 0, s"budget must be >= 0: $budgetTokens")
-    val key = if (shareKey != null) shareKey
-      else graft.CkptCycle.callSiteKey("Curation.selectByTokenBudget",
-        "graft.operators.Curation")
     // NO spread on this checkpoint — A/B'd r19: the score kernel does run
     // serially inside the one-row-group scan (~320 ms), but the repartition
     // pays a raw-text shuffle + one extra job and measured wash-to-loss
     // (647 → 738 ms wall, stage Σ 418 → 347 but non-stage +160). Same
     // verdict as the incremental gates' probes (SCALING r16); bigram_lm
     // differs because its kernel is ~5× the scan.
-    val scored = graft.CkptCycle.cycle(key,
+    val scored = graft.Materialize.eager(
       qualityScore(df, textCol, stopwords, keepThreshold = Long.MinValue)
-        .withColumn("ntok", TextFns.tokenCount(col(textCol)).cast(LongType))
-        .localCheckpoint(true))
+        .withColumn("ntok", TextFns.tokenCount(col(textCol)).cast(LongType)))
     // Integral ids get the sharded tie path; anything else (string ids are
     // legal and order lexicographically) sticks to the single window — a
     // CAST on a string id would order numerically (disagreeing with the
@@ -1376,16 +1333,13 @@ object Curation {
     // The (id, score) frame feeds TWO consumers — the score histogram and
     // the phase-join probe — and unshared each would re-run the full
     // tokenize→score kernel scan (measured as the query's two dominant
-    // stages: 631 + 453 ms of a 1.3 s warm at sf0.1). Checkpointed ONCE
-    // under the CkptCycle per-call-site contract; the frame is two longs
+    // stages: 631 + 453 ms of a 1.3 s warm at sf0.1). Checkpointed ONCE;
+    // the frame is two longs
     // per document (the selectByTokenBudget discipline — cache the narrow
     // derived frame, never the corpus).
-    val scored = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Curation.curriculumSchedule",
-        "graft.operators.Curation"),
+    val scored = graft.Materialize.eager(
       qualityScore(df, textCol, stopwords, keepThreshold = Long.MinValue)
-        .select(col(idCol), col("score"))
-        .localCheckpoint(true))
+        .select(col(idCol), col("score")))
     val hist = scored.groupBy(col("score")).agg(count(lit(1)).as("__c"))
     // The 1-partition window is safe by construction: its input is the
     // score histogram (distinct integer score values), never the corpus.
@@ -1509,7 +1463,7 @@ object Curation {
     */
   def perceptronFeatures(df: DataFrame, idCol: String, textCol: String,
                          stopwords: Seq[String], teacherThreshold: Long,
-                         nBuckets: Int, shareKey: String = null): DataFrame = {
+                         nBuckets: Int): DataFrame = {
     require(nBuckets >= 2, "nBuckets >= 2")
     val labeled = qualityScore(df, textCol, stopwords, keepThreshold = Long.MinValue)
       .select(col(idCol),
@@ -1529,23 +1483,16 @@ object Curation {
     val divF = stats.select(col(idCol),
       expr(s"CAST(${nBuckets + 9}L + " +
         "LEAST(((__nd * 1000000L) DIV __n) DIV 125000L, 7L) AS BIGINT)").as("bucket"))
-    val key = if (shareKey != null) shareKey
-      else graft.CkptCycle.callSiteKey("Curation.perceptronFeatures",
-        "graft.operators.Curation")
-    graft.CkptCycle.cycle(key,
+    graft.Materialize.eager(
       hashF.unionByName(biasF).unionByName(lenF).unionByName(divF)
-        .join(labeled, Seq(idCol))
-        .localCheckpoint(true))
+        .join(labeled, Seq(idCol)))
   }
 
   def distillPerceptron(df: DataFrame, idCol: String, textCol: String,
                         stopwords: Seq[String], teacherThreshold: Long,
                         nBuckets: Int, epochs: Int): DataFrame =
     distillPerceptronWith(
-      perceptronFeatures(df, idCol, textCol, stopwords, teacherThreshold,
-        nBuckets,
-        shareKey = graft.CkptCycle.callSiteKey("Curation.distillPerceptron",
-          "graft.operators.Curation")),
+      perceptronFeatures(df, idCol, textCol, stopwords, teacherThreshold, nBuckets),
       idCol, nBuckets, epochs)
 
   /** [[distillPerceptron]] over an ALREADY-BUILT feature frame (see
@@ -1618,10 +1565,7 @@ object Curation {
     // pass (two corpus scans at scale; two serial ~350 ms kernel stages at
     // fixture scale, FixedCostProbe r19). Checkpoint once — the frame is
     // (id, weight)-shaped, far smaller than what produced it.
-    val cached = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Curation.weightedBernoulli",
-        "graft.operators.Curation"),
-      df.localCheckpoint(true))
+    val cached = graft.Materialize.eager(df)
     val stats = cached.agg(min(col(weightCol).cast(LongType)).as("__wmin"),
       max(col(weightCol).cast(LongType)).as("__wmax")).collect()(0)
     if (stats.isNullAt(0)) return cached // empty input: nothing to sample

@@ -398,20 +398,16 @@ object Dedup {
     // stage deletes the per-row array_sort the a-side join leg re-ran on
     // every doc's full hash array (FixedCostProbe priced that leg equal to
     // the b-side's full explode); the b side is order-insensitive (set).
-    // EAGER localCheckpoint, deliberately NOT cycleCached (r21 A/B): the
+    // EAGER localCheckpoint, deliberately NOT a lazy persist (r21 A/B): the
     // two join legs are submitted CONCURRENTLY by AQE, so a lazy cache
     // races its own fill — both legs computed the kernel pass and the
     // probe measured execute 0.84-1.09 s vs 0.39-0.63 s with the eager
     // form (the serve gate differs: its probe strictly precedes the
     // verify, so the lazy cache wins there).
-    val hs = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.containmentSketchPairs",
-        "graft.operators.Dedup"),
-      df.select(col(idCol).as("__id"),
-          array_sort(graft.functions.SketchFns.winnowFingerprints(toks, k, 1))
-            .as("__hs"))
-        .filter(size(col("__hs")) > 0)
-        .localCheckpoint(true))
+    val hs = graft.Materialize.eager(df.select(col(idCol).as("__id"),
+        array_sort(graft.functions.SketchFns.winnowFingerprints(toks, k, 1))
+          .as("__hs"))
+      .filter(size(col("__hs")) > 0))
     val a = hs.select(col("__id").as("a_id"),
         slice(col("__hs"), 1, bottomK).as("__bk"))
       .withColumn("nbk", size(col("__bk")).cast(LongType))
@@ -455,11 +451,7 @@ object Dedup {
     // two serial scan+tokenize passes off the one-row-group fixture scan
     // (the 271 ms 1-task stage FixedCostProbe measured); sample-bounded,
     // and spread is identity where the scan already parallelizes
-    val s = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.lshRecallEval",
-        "graft.operators.Dedup"),
-      graft.Tables.spread(s0.select(col(idCol), col(textCol)))
-        .localCheckpoint(true))
+    val s = graft.Materialize.eager(graft.Tables.spread(s0.select(col(idCol), col(textCol))))
     val exact = ngramJaccardPairs(s, idCol, textCol, k, threshold)
       .select(col("a_id"), col("b_id"), lit(1).as("__e"))
     val lsh = minhashLshPairs(s, idCol, textCol, k, threshold, bands)
@@ -765,11 +757,8 @@ object Dedup {
     // materializes (it is the index), and the eager form is required: AQE
     // submits the a/b exchange jobs concurrently, so a lazy cache races
     // its own fill (the r21 containment A/B, commit 6eca6de).
-    val m = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("semDedup_m", "graft.operators.Dedup"),
-      KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-        .localCheckpoint(true))
+    val m = graft.Materialize.eager(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
+      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u")))))
     val a = m.select(col(idCol).as("a_id"), col("cluster"),
       col("dist").as("a_dist"), col("__u").as("ae"), col("__n").as("an"))
     val b = m.select(col(idCol).as("b_id"), col("cluster"),
@@ -808,24 +797,6 @@ object Dedup {
       .distinct()
     m.join(dropped, col(idCol) === col("__drop_id"), "left_anti")
       .select(col(idCol), col("cluster"), col("dist"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs within LSH buckets: vectors are
-    * sign-random-projection bucketed (Similarity.lshBucket) and only
-    * same-bucket pairs are scored — the scale path for embedding dedup.
-    */
-  def embeddingNearDupPairs(df: DataFrame, idCol: String, embCol: String,
-                            nBits: Int, threshold: Double): DataFrame = {
-    val b = Similarity.withNorm(df.select(col(idCol), col(embCol)), embCol, "__n")
-      .withColumn("bucket", Similarity.lshBucket(embCol, nBits))
-    val a = b.select(col(idCol).as("a_id"), col(embCol).as("ae"),
-      col("__n").as("an"), col("bucket"))
-    val c = b.select(col(idCol).as("b_id"), col(embCol).as("be"),
-      col("__n").as("bn"), col("bucket"))
-    a.join(c, Seq("bucket")).filter(col("a_id") < col("b_id"))
-      .withColumn("cos", Similarity.cosinePre("ae", "be", col("an"), col("bn")))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id"), col("b_id"), col("cos"))
   }
 
   /** Cross-document maximal repeated token-span detection — the
@@ -869,7 +840,7 @@ object Dedup {
     // hash per start position INCLUDING short tails; positions past n-k are
     // cut so every surviving hash covers exactly k tokens. posexplode gives
     // the 0-based start; +1 makes offsets 1-based (oracle list indexing).
-    // Checkpointed ONCE under the CkptCycle per-call-site contract: the
+    // Checkpointed ONCE: the
     // stage feeds the occurrence aggregate AND the prefilter join, and
     // unshared each consumer re-runs the serial scan→tokenize→ChunkHashes
     // kernel stage (FixedCostProbe measured it twice at 533 + 367 ms of a
@@ -883,11 +854,8 @@ object Dedup {
     // incremental gates' probe/index sides sit behind broadcast-join plans
     // where an extra shuffle only adds jobs (A/B measured a wash-to-loss).
     // At scale the scan is wide and spread is the identity.
-    val base = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpans",
-        "graft.operators.Dedup"),
-      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .localCheckpoint(true))
+    val base = graft.Materialize.eager(
+      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k))
     val shared = base.groupBy(col("sh")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2L &&
         (if (maxOccurrences > 0L) col("__occ") <= maxOccurrences else lit(true)))
@@ -994,15 +962,12 @@ object Dedup {
     // recomputed it a third time — with micro-batches that was two extra
     // near-batch-size kernel passes per trigger. The checkpoint is
     // batch-bounded (three longs per token position), the count scans the
-    // materialized blocks, and the join reads them again; CkptCycle frees
-    // the previous batch's blocks at the next call from this site.
+    // materialized blocks, and the join reads them again; the caller's
+    // materialization scope frees them.
     val newA0 = positionalAnchors(newDf, idCol, textCol, k)
     val newA =
       if (maxBroadcastAnchors <= 0L) newA0
-      else graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndex",
-          "graft.operators.Dedup"),
-        newA0.localCheckpoint(true))
+      else graft.Materialize.eager(newA0)
     // island columns: a_id = NEW doc (pa = its position), b_id = index doc
     val aSide = newA.select(col(idCol).as("a_id"), col("pos").as("pa"), col("sh"))
     val bSide = index.select(col(idCol).as("b_id"), col("pos").as("pb"), col("sh"))
@@ -1074,14 +1039,10 @@ object Dedup {
     // broadcast-bounded and an extra shuffle only adds job launches.
     val spreadDf = graft.Tables.spread(df)
     val sp = sparseAnchors(spreadDf, idCol, textCol, k, w)
-    val cand = sp.select(col(idCol).as("a_id"), col("sh"))
+    val candFrame = graft.Materialize.eager(sp.select(col(idCol).as("a_id"), col("sh"))
       .join(sp.select(col(idCol).as("b_id"), col("sh")), "sh")
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
-      .localCheckpoint(true)
-    val candFrame = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpansSparse",
-        "graft.operators.Dedup"), cand)
+      .select(col("a_id"), col("b_id")).distinct())
     val candDocs = candFrame.select(col("a_id").as(idCol))
       .unionByName(candFrame.select(col("b_id").as(idCol))).distinct()
     // Dense verify off the SPREAD frame (round 22): joined against the raw
@@ -1138,7 +1099,7 @@ object Dedup {
         idSetFilter(histDf, idCol, idType, ids), idCol, textCol, k),
       distA = c => positionalAnchors(newDf.join(c, Seq(idCol)), idCol, textCol, k),
       distB = c => positionalAnchors(histDf.join(c, Seq(idCol)), idCol, textCol, k),
-      idCol, k, minSpanTokens, maxDriverCand, "Dedup.tagSpansAgainstIndexSparse")
+      idCol, k, minSpanTokens, maxDriverCand)
   }
 
   /** The shared two-tier candidate probe + dense verify of the sparse gate
@@ -1169,8 +1130,7 @@ object Dedup {
   private def sparseProbeVerify(idxSparse: DataFrame, batchSparse: DataFrame,
       fastA: Array[Any] => DataFrame, fastB: Array[Any] => DataFrame,
       distA: DataFrame => DataFrame, distB: DataFrame => DataFrame,
-      idCol: String, k: Int, minSpanTokens: Int, maxDriverCand: Int,
-      ckptKey: String): DataFrame = {
+      idCol: String, k: Int, minSpanTokens: Int, maxDriverCand: Int): DataFrame = {
     val probe = idxSparse.join(broadcast(batchSparse), "sh")
       .select(col("a_id"), col("b_id"))
     val rawHead = probe.limit(maxDriverCand + 1).collect()
@@ -1180,9 +1140,7 @@ object Dedup {
         fastB(pairsLocal.map(_._2).distinct), cand = None, idCol, k,
         minSpanTokens, broadcastA = true)
     } else {
-      val cand = graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey(ckptKey, "graft.operators.Dedup"),
-        probe.distinct().localCheckpoint(true)).hint("broadcast")
+      val cand = graft.Materialize.eager(probe.distinct()).hint("broadcast")
       sparseVerify(distA(cand.select(col("a_id").as(idCol)).distinct()),
         distB(cand.select(col("b_id").as(idCol)).distinct()),
         Some(cand), idCol, k, minSpanTokens)
@@ -1230,12 +1188,9 @@ object Dedup {
   def tagSpansSplit(df: DataFrame, histPred: Column, idCol: String,
       textCol: String, k: Int, minSpanTokens: Int,
       maxOccurrences: Long = 0L): DataFrame = {
-    val rows = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansSplit",
-        "graft.operators.Dedup"),
+    val rows = graft.Materialize.eager(
       positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .withColumn("__hist", histPred)
-        .localCheckpoint(true))
+        .withColumn("__hist", histPred))
     val idx0 = rows.filter(col("__hist"))
     val idx =
       if (maxOccurrences <= 0L) idx0
@@ -1259,12 +1214,9 @@ object Dedup {
     require(minSpanTokens >= w + k - 1,
       s"winnowing guarantee needs minSpanTokens >= w + k - 1: $minSpanTokens < ${w + k - 1}")
     val idType = df.schema(idCol).dataType
-    val rows = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansSplitSparse",
-        "graft.operators.Dedup"),
+    val rows = graft.Materialize.eager(
       anchorRowsFrame(graft.Tables.spread(df), idCol, textCol, k, w)
-        .withColumn("__hist", histPred)
-        .localCheckpoint(true))
+        .withColumn("__hist", histPred))
     sparseProbeVerify(
       rows.filter(col("__hist") && col("sparse"))
         .select(col(idCol).as("b_id"), col("sh")),
@@ -1274,7 +1226,7 @@ object Dedup {
       fastB = ids => idSetFilter(rows.filter(col("__hist")), idCol, idType, ids),
       distA = c => rows.filter(!col("__hist")).join(c, Seq(idCol)),
       distB = c => rows.filter(col("__hist")).join(c, Seq(idCol)),
-      idCol, k, minSpanTokens, maxDriverCand, "Dedup.tagSpansSplitSparse.cand")
+      idCol, k, minSpanTokens, maxDriverCand)
   }
 
   /** Id-set membership as an InSet predicate fused into the scan (with a
@@ -1363,7 +1315,7 @@ object Dedup {
     // ONE kernel pass over the batch — lazily CACHED (r21), spread off the
     // unsplittable scan — feeds the probe broadcast AND the a-side verify
     // (the r17 shape tokenized the batch twice and history once per
-    // serve). cycleCached, not an eager localCheckpoint: the probe
+    // serve). A lazy persist, not an eager localCheckpoint: the probe
     // broadcast scans the whole frame first anyway, so the cache fills
     // inside that job and the serve pays no dedicated materialization job
     // (FixedCostProbe: the eager form held an extra job + a 73 ms
@@ -1372,9 +1324,7 @@ object Dedup {
     // batch kernel onto the unsplittable scan — probe read 254 ms 1-task
     // vs 114 ms scan + 49 ms wide kernel; net wash locally, and at scale
     // spread is the identity. Kept.)
-    val batchAnchors = graft.CkptCycle.cycleCached(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndexSparseServe",
-        "graft.operators.Dedup"),
+    val batchAnchors = graft.Materialize.lazily(
       anchorRowsFrame(graft.Tables.spread(newDf), idCol, textCol, k, w))
     sparseProbeVerify(
       idx.filter(col("sparse")).select(col(idCol).as("b_id"), col("sh")),
@@ -1384,8 +1334,7 @@ object Dedup {
       fastB = ids => idSetFilter(idx, idCol, idType, ids),
       distA = c => batchAnchors.join(c, Seq(idCol)),
       distB = c => idx.join(c, Seq(idCol)),
-      idCol, k, minSpanTokens, maxDriverRows,
-      "Dedup.tagSpansAgainstIndexSparseServe.cand")
+      idCol, k, minSpanTokens, maxDriverRows)
   }
 
   /** The shared dense-verify tail of the sparse serve tiers: join of the
@@ -1488,11 +1437,8 @@ object Dedup {
                              maxOccurrences: Long = 0L): DataFrame = {
     require(k >= 2, s"k must be >= 2: $k")
     require(minSpanTokens >= k, s"minSpanTokens must be >= k: $minSpanTokens < $k")
-    val base = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpansWithinDoc",
-        "graft.operators.Dedup"),
-      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .localCheckpoint(true))
+    val base = graft.Materialize.eager(
+      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k))
     val shared = base.groupBy(col("sh")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2L &&
         (if (maxOccurrences > 0L) col("__occ") <= maxOccurrences else lit(true)))
@@ -1514,8 +1460,7 @@ object Dedup {
     * union of 1-based token positions each LATER document shares with an
     * earlier one (overlapping spans from several earlier partners collapse
     * in the distinct). The shared spine of the scrub and the coverage
-    * diagnostic. Checkpointed ONCE under the CkptCycle per-call-site
-    * contract: downstream consumers (affected-doc prefilter, anti-join,
+    * diagnostic. Checkpointed ONCE: downstream consumers (affected-doc prefilter, anti-join,
     * per-source accounting) would otherwise each re-evaluate the whole
     * span subtree — 14 parquet scans measured by PlanLintSpec on the
     * unshared scrub. The frame is bounded by the corpus's DUPLICATED
@@ -1525,14 +1470,10 @@ object Dedup {
                        minSpanTokens: Int,
                        maxOccurrences: Long = 0L): DataFrame = {
     val spans = repeatedSpans(df, idCol, textCol, k, minSpanTokens, maxOccurrences)
-    graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.coveredPositions",
-        "graft.operators.Dedup"),
-      spans
-        .select(col("b_id").as(idCol),
-          explode(expr("sequence(start_b, start_b + len_tokens - 1)")).as("pos"))
-        .distinct()
-        .localCheckpoint(true))
+    graft.Materialize.eager(spans
+      .select(col("b_id").as(idCol),
+        explode(expr("sequence(start_b, start_b + len_tokens - 1)")).as("pos"))
+      .distinct())
   }
 
   /** The rewrite half of [[repeatedSpans]] — Lee et al. 2022's keep-first

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * EAGER CONTRACT: construction materializes the edge checkpoint and runs
   * one node-count job (plus one rank materialization per `truncateEvery`
   * rounds). The returned frame's plan references the edge-checkpoint
-  * blocks — callers that manage storage deterministically should register
-  * it with [[graft.CkptCycle]] (the queries do) or unpersist when done.
+  * blocks, which live until the caller's [[graft.Materialize.scope]]
+  * closes.
   */
 object LinkGraph {
 
@@ -81,7 +81,7 @@ object LinkGraph {
           // a newer checkpoint cuts every plan's lineage to it — the
           // previously checkpointed rank frame is unreachable, free it
           val t = Components.truncate(next)
-          lastCkpt.foreach(graft.CkptCycle.release(_))
+          lastCkpt.foreach(graft.Materialize.release(_))
           lastCkpt = Some(t)
           t
         } else next
@@ -113,11 +113,9 @@ object LinkGraph {
     * needs no shuffle), with no storage for the caller to manage. Beyond
     * the gate it falls back to [[pageRank]] unchanged (one re-scan of
     * `edges` — negligible against the iteration cost that dominates the
-    * corpus-scale path), keeping pageRank's eager contract. The fallback
-    * result is registered with [[graft.CkptCycle]] under a per-call-site
-    * key, so a long-running scheduler issuing the query repeatedly frees
-    * each prior invocation's edge-checkpoint blocks instead of
-    * accumulating them (the driver fast path has no storage to manage).
+    * corpus-scale path), keeping pageRank's eager contract: its
+    * checkpoints belong to the caller's [[graft.Materialize.scope]] (the
+    * driver fast path has no storage to manage).
     */
   def pageRankAuto(edges: DataFrame, srcCol: String, dstCol: String,
                    iters: Int, maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
@@ -129,10 +127,7 @@ object LinkGraph {
         .filter(col("src") =!= col("dst")).distinct()
     val rows = e0.limit(maxDriverEdges.toInt + 1).collect()
     if (rows.length > maxDriverEdges) {
-      graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("LinkGraph.pageRankAuto",
-          "graft.operators.LinkGraph"),
-        pageRank(edges, srcCol, dstCol, iters))
+      pageRank(edges, srcCol, dstCol, iters)
     } else {
       val deg = new java.util.HashMap[Long, Long]()
       val nodes = new java.util.TreeSet[java.lang.Long]()
@@ -178,8 +173,8 @@ object LinkGraph {
     * loop's lesson); superseded checkpoints are freed as newer ones land.
     *
     * EAGER CONTRACT: like [[pageRank]] — the edge list and each round's
-    * distance table materialize at construction; callers register the
-    * result with [[graft.CkptCycle]] (the query does) or unpersist.
+    * distance table materialize at construction, owned by the caller's
+    * [[graft.Materialize.scope]].
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
@@ -202,12 +197,12 @@ object LinkGraph {
         .join(dist.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hops"))
       dist = Components.truncate(dist.unionByName(discovered))
-      graft.CkptCycle.release(prev)
+      graft.Materialize.release(prev)
       prev = dist
     }
     // the returned table is its own checkpoint — the edge blocks are no
     // longer reachable from it
-    graft.CkptCycle.release(e)
+    graft.Materialize.release(e)
     dist
   }
 
@@ -239,10 +234,7 @@ object LinkGraph {
       .filter(col("node").isNotNull).distinct()
     val sRows = s0.limit(maxDriverEdges.toInt + 1).collect()
     if (eRows.length > maxDriverEdges || sRows.length > maxDriverEdges) {
-      graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("LinkGraph.bfsHopsAuto",
-          "graft.operators.LinkGraph"),
-        bfsHops(edges, srcCol, dstCol, seeds, seedCol, maxHops))
+      bfsHops(edges, srcCol, dstCol, seeds, seedCol, maxHops)
     } else {
       val adj = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
       eRows.foreach { r =>

@@ -71,21 +71,6 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
   }
 
-  /** [[cosineTopK]] on the custom bounded-heap operator
-    * (graft.plans.TopKPerGroup) instead of a window: same results, but the
-    * per-query ranking is O(n log k) with O(queries·k) state — no full sort,
-    * no window spill. The shape of choice when candidates are fact-scale.
-    */
-  def cosineTopKFast(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val scored = withNorm(candidates, "ce", "cn")
-      .crossJoin(broadcast(withNorm(queries, "qe", "qn")))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .select(col("q_id"), col("c_id"), col("similarity"))
-    graft.plans.TopKPerGroup.topK(scored, Seq("q_id"),
-      Seq(("similarity", true), ("c_id", false)), k)
-  }
-
   /** IVF (inverted-file) ANN: a deterministic coarse quantizer — centroids
     * from a fixed-seed k-means run over a sample — partitions the corpus into
     * `nLists` cells; probes score only the `nProbe` nearest cells.
@@ -779,37 +764,6 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
   }
 
-  /** Multiprobe LSH ANN top-k: scores the query's own bucket PLUS every
-    * bucket at Hamming distance 1 (one sign-bit flip) — the standard recall
-    * lever at zero index cost. A vector whose projection is near one
-    * hyperplane lands across that bucket boundary; probing the flip
-    * recovers it. Candidates are a strict superset of [[lshTopK]]'s, so
-    * multiprobe recall >= single-probe recall for every query (spec-pinned
-    * as an exact property, not a statistical one).
-    *
-    * Scale: the candidate side is untouched (still one bucket id per row,
-    * the write-partition key); only the broadcast-small probe side fans out
-    * ×(nBits+1). The join stays a bucket equi-join — never a distance
-    * predicate.
-    */
-  def lshMultiProbeTopK(queries: DataFrame, candidates: DataFrame,
-                        nBits: Int, k: Int): DataFrame = {
-    val probes = withNorm(queries, "qe", "qn")
-      .withColumn("__b0", lshBucket("qe", nBits))
-      .withColumn("bucket", explode(array(
-        (col("__b0") +: (0 until nBits).map(j =>
-          col("__b0").bitwiseXOR(lit(1L << j)))): _*)))
-      .drop("__b0")
-    val c = withNorm(candidates, "ce", "cn").withColumn("bucket", lshBucket("ce", nBits))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    c.join(broadcast(probes), Seq("bucket"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
-  }
-
   /** Contrastive triplet mining — training data FOR embedding models
     * (the SimCSE/E5 preparation shape): every vector becomes an anchor
     * with its best same-cell POSITIVE (cosine ≥ `posThreshold`) and its
@@ -836,11 +790,8 @@ object Similarity {
     // the scan + quantize + assign kernel as its own serial stage (the
     // fixture scan is one row group); at scale this is the materialized
     // assignment table the pair search indexes anyway.
-    val m = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("contrastive_m", "graft.operators.Similarity"),
-      KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-        .localCheckpoint(true))
+    val m = graft.Materialize.eager(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
+      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u")))))
     val a = m.select(col(idCol).as("anchor"), col("cluster"),
       col("__u").as("ae"), col("__n").as("an"))
     val b = m.select(col(idCol).as("other"), col("cluster"),
@@ -982,8 +933,7 @@ object Similarity {
                     degree: Int, requireCapped: Boolean = false): DataFrame = {
     require(degree >= 1, s"degree must be >= 1: $degree")
     val newEdges = newCandidateEdges(histDf, batchDf, idCol, embCol, cents)
-    rerankMergeTail(graph, newEdges, carry = Nil, degree, requireCapped,
-      "mergeKnnGraph_touchedOld")
+    rerankMergeTail(graph, newEdges, carry = Nil, degree, requireCapped)
   }
 
   /** The TOUCHED-NODE-ONLY re-rank tail shared by [[mergeKnnGraph]] and
@@ -1006,14 +956,11 @@ object Similarity {
     * rewrite with a key-not-found on the duplicated attribute ids).
     */
   private def rerankMergeTail(old0: DataFrame, newEdges: DataFrame,
-      carry: Seq[String], degree: Int, requireCapped: Boolean,
-      ckptKey: String): DataFrame = {
+      carry: Seq[String], degree: Int, requireCapped: Boolean): DataFrame = {
     val cols = (Seq("node", "nbr", "sim") ++ carry).map(col)
     val touchedNodes = broadcast(newEdges.select(col("node")).distinct())
     val old = old0.select(cols: _*)
-    val touchedOld = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey(ckptKey, "graft.operators.Similarity"),
-      old.join(touchedNodes, Seq("node"), "left_semi").localCheckpoint(true))
+    val touchedOld = graft.Materialize.eager(old.join(touchedNodes, Seq("node"), "left_semi"))
     validateCapped(touchedOld, degree, requireCapped)
     val reranked = graft.plans.TopKPerGroup.topK(
         touchedOld.unionByName(newEdges.select(cols: _*)),
@@ -1057,17 +1004,14 @@ object Similarity {
       d.withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
     // the assigned batch feeds FOUR consumers (touched cells, the mates
     // union, the a-side, and the broadcast's own subplan) — checkpointed
-    // once per the CkptCycle rule; it is batch-sized, never the corpus.
+    // once; it is batch-sized, never the corpus.
     // A caller that already holds the batch as a checkpoint (the gate,
     // which collected touched cells from it) says so — the norm column is
     // a cheap projection over the existing blocks, and a second
     // localCheckpoint would re-materialize the whole batch per merge.
     val bAssign =
       if (batchMaterialized) withNorms(batchA)
-      else graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("mergeKnnGraph_batch",
-          "graft.operators.Similarity"),
-        withNorms(batchA).localCheckpoint(true))
+      else graft.Materialize.eager(withNorms(batchA))
     // history vectors in touched cells only; norms compute AFTER the cell
     // filter, for survivors only. A caller that already knows the batch's
     // cells driver-side (the gate collected them for the partition-pruned
@@ -1116,12 +1060,7 @@ object Similarity {
           col("sim"), col("cluster")))).as("__e"))
       .select(col("__e.node").as("node"), col("__e.nbr").as("nbr"),
         col("__e.sim").as("sim"), col("__e.cluster").as("cluster"))
-    graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("mergeKnnGraph_newEdges",
-        "graft.operators.Similarity"),
-      bothDirs
-        .distinct()
-        .localCheckpoint(true))
+    graft.Materialize.eager(bothDirs.distinct())
   }
 
   /** The merge precondition made loud on demand (`requireCapped = true`):
@@ -1194,7 +1133,7 @@ object Similarity {
         idCol, batchMaterialized, touchedCellsHint)
       .withColumnRenamed("cluster", "cell")
     rerankMergeTail(oldTouchedCells, newEdges, carry = Seq("cell"), degree,
-      requireCapped, "mergeKnnGraphCells_touchedOld")
+      requireCapped)
   }
 
   /** Graph-ANN serving: best-first BEAM SEARCH over a (typically
@@ -1306,15 +1245,12 @@ object Similarity {
     // now OVERLAP (guide §2.6 "overlap independent jobs"): the graph build
     // — the expensive action of the inline rows — runs on a future while
     // the main thread builds the entry beam, and hop 1 awaits it. Actions
-    // from two driver threads are ordinary concurrent Spark jobs; the
-    // CkptCycle registry is a ConcurrentHashMap.
-    val gKey = graft.CkptCycle.callSiteKey("graphTopK_graph",
-      "graft.operators.Similarity")
-    val gFut = scala.concurrent.Future(graft.CkptCycle.cycle(gKey,
-      graph.select(col("node"), col("nbr")).localCheckpoint(true)))(
+    // from two driver threads are ordinary concurrent Spark jobs. The
+    // future's thread has no materialization scope, so the graph is
+    // recorded in this thread's scope once awaited.
+    val gFut = scala.concurrent.Future(
+      graft.Materialize.eager(graph.select(col("node"), col("nbr"))))(
       scala.concurrent.ExecutionContext.global)
-    val beamKey = graft.CkptCycle.callSiteKey("graphTopK_beam",
-      "graft.operators.Similarity")
     // Only the ENTRY beam is checkpointed (round 22). Later hops stay LAZY:
     // a hop's two consumers (neighbor join + union) duplicate its subtree in
     // the logical plan, but the subtrees are canonically identical, so AQE's
@@ -1331,15 +1267,15 @@ object Similarity {
     // OPTIMIZATION_r22.md.
     def ckptIfMoreHops(df: DataFrame, h: Int): DataFrame =
       if (h == 0 && hops > 0)
-        graft.CkptCycle.cycle(beamKey, df.localCheckpoint(true))
+        graft.Materialize.eager(df)
       else df
     var beamDf = ckptIfMoreHops(graft.plans.TopKPerGroup.topK(
         score(qKeys.crossJoin(broadcast(entries))),
         Seq("q_id"), Seq(("similarity", true), ("c_id", false)), beam), 0)
     // awaited unconditionally (hops = 0 included) so the checkpointed graph
-    // is always registered/owned before this call returns
-    val g = scala.concurrent.Await.result(gFut,
-      scala.concurrent.duration.Duration.Inf)
+    // is always owned by the caller's scope before this call returns
+    val g = graft.Materialize.own(scala.concurrent.Await.result(gFut,
+      scala.concurrent.duration.Duration.Inf))
     var h = 0
     while (h < hops) {
       // The FRONTIER side broadcasts (round 22): it is |queries|·beam rows
@@ -1416,9 +1352,7 @@ object Similarity {
     val sub = books(0)(0).length
     // the PQ-coded candidate table feeds every hop — materialized once
     // (a ~free checkpoint when the caller passes a persisted-index read)
-    val cIdx = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("graphTopKPQ_codes", "graft.operators.Similarity"),
-      codesIdx.select(col("c_id"), col("codes")).localCheckpoint(true))
+    val cIdx = graft.Materialize.eager(codesIdx.select(col("c_id"), col("codes")))
     val lutCol = concat((0 until m).map { j =>
       kernelCol(graft.plans.CellDotsQ(
         kernelExpr(slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),

@@ -138,10 +138,7 @@ object CorpusQueries {
         // row-group scan the aug corpus lands in ONE partition and all
         // four gate legs' tokenize/signal kernels run serial (measured
         // 195–451 ms 1-task stages); spread once, every leg parallelizes
-        val aug = graft.CkptCycle.cycle(
-          graft.CkptCycle.callSiteKey("CorpusQueries.q_quality_gate_matrix",
-            "graft.queries.CorpusQueries"),
-          graft.Tables.spread(docs).localCheckpoint(true))
+        val aug = graft.Materialize.eager(graft.Tables.spread(docs))
         val c4 = Curation.c4QualitySignals(aug, "doc_id", "text",
             minLineWords = 5L, minSentences = 3L)
           .select(col("doc_id"), col("keep").as("k_c4"))
@@ -590,13 +587,12 @@ object CorpusQueries {
         // compute-bearing reader; at scale hashpartitioning(fp) is the
         // distribution the pair join needs anyway.
         val nPartW = s.sessionState.conf.numShufflePartitions
-        val bounded = graft.CkptCycle.cycle("q_text_winnow_pairs",
+        val bounded = graft.Materialize.eager(
           ex.repartition(nPartW, col("fp"))
             .withColumn("__nd", count(lit(1)).over(
               org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
             .filter(col("__nd").between(2L, 8L))
-            .select(col("doc_id"), col("fp"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("fp")))
         // The self-join stays UNPINNED: the bounded set is micro-frame-
         // sized (df ∈ [2, 8] fingerprints only), and a round-22 A/B of a
         // 32-wide pinned pair join read execute +180 ms — pure scheduling

@@ -522,11 +522,10 @@ object CurationQueries {
         val docs = t(s, dir, "documents")
         val mid = docs.agg(expr("coalesce(MAX(doc_id) DIV 2, 0)").as("mid"))
           .collect()(0).getLong(0)
-        val scored = graft.CkptCycle.cycle("q_stream_percentile_batch_sc",
+        val scored = graft.Materialize.eager(
           Curation.qualityScore(docs, "text", Seq("a", "the"),
               keepThreshold = Long.MinValue)
-            .select(col("doc_id"), col("lang"), col("score"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("lang"), col("score")))
         val thr = Curation.percentileThresholds(
           scored.filter(col("doc_id") < mid), "lang", "score",
           keepPermille = 400)
@@ -641,11 +640,10 @@ object CurationQueries {
         val docs = t(s, dir, "documents")
         val mid = docs.agg(expr("coalesce(MAX(doc_id) DIV 2, 0)").as("m"))
           .collect()(0).getLong(0)
-        val scored = graft.CkptCycle.cycle("q_quality_recalibrate_sc",
+        val scored = graft.Materialize.eager(
           Curation.qualityScore(docs, "text", Seq("a", "the"),
               keepThreshold = Long.MinValue)
-            .select(col("doc_id"), col("lang"), col("score"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("lang"), col("score")))
         val hist = scored.filter(col("doc_id") < mid)
         val fresh = scored.filter(col("doc_id") >= mid)
         val tOld = Curation.percentileThresholds(hist, "lang", "score", 400)
@@ -1132,7 +1130,7 @@ object CurationQueries {
     Q("q_text_bigram_lm",
       (s, dir) =>
         Curation.bigramLmScore(t(s, dir, "documents"), "doc_id", "text",
-            shareKey = Some("q_text_bigram_lm"))
+            share = true)
           // bounded per-doc output: in-place sort, not a range-sampled
           // orderBy (one job less; the scoring aggregate stage stays wide)
           .repartition(1).sortWithinPartitions(col("doc_id")),
@@ -1317,8 +1315,7 @@ object CurationQueries {
       (s, dir) => {
         val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"),
           "doc_id", "text", 4, 0.4)
-        graft.CkptCycle.cycle("q_dedup_components",
-            Components.connectedComponents(pairs, "a_id", "b_id"))
+        Components.connectedComponents(pairs, "a_id", "b_id")
           .orderBy(col("node"))
       },
       Some("""
@@ -1362,8 +1359,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_dedup_survivor_quality",
-          Components.connectedComponents(pairs, "a_id", "b_id"))
+        val comp = Components.connectedComponents(pairs, "a_id", "b_id")
         val scored = Curation.qualityScore(docs, "text", Seq("a", "the"),
           keepThreshold = Long.MinValue)
         Components.survivorsByQuality(comp, scored, "doc_id", "score")
@@ -1429,8 +1425,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_dedup_audit",
-          Components.connectedComponents(pairs, "a_id", "b_id"))
+        val comp = Components.connectedComponents(pairs, "a_id", "b_id")
         val scored = Curation.qualityScore(docs, "text", Seq("a", "the"),
             keepThreshold = Long.MinValue)
           .select(col("doc_id"), col("score"))
@@ -1501,12 +1496,8 @@ object CurationQueries {
       (s, dir) => {
         val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"),
           "doc_id", "text", 4, 0.4)
-        // cycle() walks the whole analyzed tree, so the checkpoint leaf
-        // under the survivors aggregate is found and the previous
-        // invocation's blocks freed
-        graft.CkptCycle.cycle("q_dedup_survivors",
-            Components.survivors(
-              Components.connectedComponents(pairs, "a_id", "b_id")))
+        Components.survivors(
+          Components.connectedComponents(pairs, "a_id", "b_id"))
           .orderBy(col("survivor_id"))
       },
       Some("""
@@ -1551,8 +1542,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_split_leakage_safe",
-          Components.connectedComponents(pairs, "a_id", "b_id"))
+        val comp = Components.connectedComponents(pairs, "a_id", "b_id")
         docs.select(col("doc_id"))
           .join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
           .withColumn("group_id", coalesce(col("component_id"), col("doc_id")))
@@ -1647,16 +1637,12 @@ object CurationQueries {
         // only ever sees checkpoint blocks, and the heavyweight cache never
         // outlives this function (a leaked cache made the warm bench run
         // SLOWER than cold in round 4).
-        val out = graft.operators.CorpusPipeline.withPrepared(
+        graft.operators.CorpusPipeline.withPrepared(
             t(s, dir, "documents"), "doc_id", "text",
             graft.operators.CorpusPipeline.Config()) { r =>
-          r.corpus
-            .select(col("doc_id"), md5(col("text")).as("text_fp"), col("split"))
-            .localCheckpoint(true)
-        }
-        // free the PREVIOUS invocation's checkpoint blocks (GC-driven reclaim
-        // is too late across a 2-pass bench — warm measured slower than cold)
-        graft.CkptCycle.cycle("q_corpus_pipeline", out).orderBy(col("doc_id"))
+          graft.Materialize.eager(r.corpus
+            .select(col("doc_id"), md5(col("text")).as("text_fp"), col("split")))
+        }.orderBy(col("doc_id"))
       },
       Some(s"""
         WITH t0 AS (SELECT doc_id, text,

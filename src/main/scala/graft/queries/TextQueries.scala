@@ -942,15 +942,14 @@ object TextQueries {
         // ppm-class accounting error at 100 TB (the birthday budget in the
         // ChunkHashes kernel scaladoc); the exact leg keys on md5 so the
         // collision budget never touches removal decisions.
-        val base = graft.CkptCycle.cycle("q_dedup_method_matrix_base",
+        val base = graft.Materialize.eager(
           graft.Tables.spread(t(s, dir, "documents")
               .select(col("doc_id"), TextFns.tokens(col("text")).as("t")))
             .withColumn("ntok", size(col("t")).cast(LongType))
             .withColumn("fp", md5(concat_ws(" ", col("t"))))
             .withColumn("lh", graft.functions.SketchFns.chunkHashes(col("t"), 3, 3))
             .withColumn("ch", graft.functions.SketchFns.chunkHashes(col("t"), 8, 8))
-            .drop("t")
-            .localCheckpoint(true))
+            .drop("t"))
         val tot = base.agg(sum(col("ntok")).as("__tt"))
         def leg(name: String, agged: DataFrame): DataFrame =
           agged.withColumn("method", lit(name))
@@ -1501,13 +1500,12 @@ object TextQueries {
         // paid 14 jobs): __g is the length gate, __novel the fingerprint
         // gate, both flags not filters, because the per-source accounting
         // needs the pre-gate populations from the same rows
-        val tagged = graft.CkptCycle.cycle("q_incremental_pipeline_tagged",
+        val tagged = graft.Materialize.eager(
           Dedup.tagAgainstIndex(
               batch.withColumn("__g", size(TextFns.tokens(col("text"))) >= 20),
               wh.read("fp_index"), "text")
             .withColumn("__novel", col("__g") && col("is_novel"))
-            .drop("fp", "is_novel")
-            .localCheckpoint(true))
+            .drop("fp", "is_novel"))
         // near-dup ids among novel rows: a LAZY subplan consumed twice
         // (anti-join + accounting join) through canonically identical
         // broadcast exchanges, so AQE materializes it once per action
@@ -1641,8 +1639,7 @@ object TextQueries {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", 4, 0.5)
           .select(col("a_id"), col("b_id"))
-        val comp = graft.CkptCycle.cycle("q_dedup_rebalance",
-          graft.operators.Components.connectedComponents(pairs, "a_id", "b_id"))
+        val comp = graft.operators.Components.connectedComponents(pairs, "a_id", "b_id")
         val losers = comp.filter(col("node") =!= col("component_id"))
           .select(col("node").as("doc_id"))
         val keepers = docs

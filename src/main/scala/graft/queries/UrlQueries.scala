@@ -211,9 +211,8 @@ object UrlQueries {
     // all three iterations bit-for-bit as chained CTEs.
     Q("q_link_pagerank",
       (s, dir) => {
-        graft.CkptCycle.cycle("q_link_pagerank",
-            graft.operators.LinkGraph.pageRank(
-              synthEdges(t(s, dir, "documents")), "src", "dst", iters = 3))
+        graft.operators.LinkGraph.pageRank(
+          synthEdges(t(s, dir, "documents")), "src", "dst", iters = 3)
           .orderBy(col("node"))
       },
       Some("""
@@ -265,7 +264,7 @@ object UrlQueries {
         val seeds = docs.select((col("doc_id") % 20).as("node"))
           .filter(col("node") % 7 === 0)
         // bfsHopsAuto: domain-scale graph (20 nodes) → gated driver BFS,
-        // local-relation result, no checkpoint to cycle (see pageRankAuto
+        // local-relation result, no checkpoint to free (see pageRankAuto
         // at q_crawl_frontier)
         graft.operators.LinkGraph.bfsHopsAuto(
             synthEdges(docs), "src", "dst", seeds, "node", maxHops = 3)

@@ -573,8 +573,7 @@ object VectorQueries {
           .withColumn("cos", VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")))
           .filter(round(col("cos"), 6) >= 0.2)
           .select(col("a_id"), col("b_id"))
-        graft.CkptCycle.cycle("q_dedup_embedding_components",
-            graft.operators.Components.connectedComponents(pairs, "a_id", "b_id"))
+        graft.operators.Components.connectedComponents(pairs, "a_id", "b_id")
           .orderBy(col("node"))
       },
       Some {
@@ -1473,10 +1472,9 @@ object VectorQueries {
         // the persisted-index stand-in (production merges against a READ
         // of yesterday's edge table): materialize history's graph once,
         // or the union side re-derives its whole build subtree
-        val g0 = graft.CkptCycle.cycle("q_ann_graph_merge_g0",
+        val g0 = graft.Materialize.eager(
           graft.operators.Similarity.knnGraphWith(hist, "vec_id",
-              "embedding", cents, degree = 6)
-            .localCheckpoint(true))
+              "embedding", cents, degree = 6))
         graft.operators.Similarity.mergeKnnGraph(g0, hist, batch, "vec_id",
             "embedding", cents, degree = 6)
           .orderBy(col("node"), col("nbr"))
@@ -1537,12 +1535,12 @@ object VectorQueries {
         // each gate step reads the PREVIOUS persisted graph version —
         // materialized, as the warehouse table would be (distinct keys:
         // g0 is still live while g1 builds)
-        val g0 = graft.CkptCycle.cycle("q_stream_knn_graph_g0",
+        val g0 = graft.Materialize.eager(
           graft.operators.Similarity.knnGraphWith(b0, "vec_id", "embedding",
-            cents, degree = 6).localCheckpoint(true))
-        val g1 = graft.CkptCycle.cycle("q_stream_knn_graph_g1",
+            cents, degree = 6))
+        val g1 = graft.Materialize.eager(
           graft.operators.Similarity.mergeKnnGraph(g0, b0, b1, "vec_id",
-            "embedding", cents, degree = 6).localCheckpoint(true))
+            "embedding", cents, degree = 6))
         graft.operators.Similarity.mergeKnnGraph(g1,
             e.filter(col("vec_id") < 2 * t3), b2, "vec_id", "embedding",
             cents, degree = 6)
@@ -1796,11 +1794,10 @@ object VectorQueries {
           .withColumn("n_tokens",
             graft.functions.TextFns.tokenCount(col("text")).cast(LongType))
         val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-        val gated = graft.CkptCycle.cycle("q_semantic_curation_pipeline",
+        val gated = graft.Materialize.eager(
           scored.filter(col("keep"))
             .join(emb, col("doc_id") === col("vec_id"))
-            .select(col("doc_id"), col("source"), col("n_tokens"), col("embedding"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("source"), col("n_tokens"), col("embedding")))
         val surv = graft.operators.Dedup.semDedup(
             gated, "doc_id", "embedding", k = 4, passes = 2, threshold = 0.2)
           .select(col("doc_id"), lit(true).as("surv"))
@@ -1892,9 +1889,9 @@ object VectorQueries {
         // aggregate and its re-join — uncached, the media synth + decode
         // subtree re-evaluates per consumer (the lint's 7-scan cap
         // caught 9 documents scans); two longs per doc, checkpoint once
-        val img = graft.CkptCycle.cycle("q_mm_trimodal_img",
+        val img = graft.Materialize.eager(
           graft.multimodal.Multimodal.dHash(imgMedia).toDF()
-            .select(col("doc_id"), col("dhash")).localCheckpoint(true))
+            .select(col("doc_id"), col("dhash")))
         val imgDup = img
           .join(img.groupBy(col("dhash")).agg(min(col("doc_id")).as("__is")), "dhash")
           .select(col("doc_id"), (col("doc_id") =!= col("__is")).as("img_dup"))
@@ -1913,9 +1910,9 @@ object VectorQueries {
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodeWavPcm16(16000, samples))
           }
-        val au = graft.CkptCycle.cycle("q_mm_trimodal_au",
+        val au = graft.Materialize.eager(
           graft.multimodal.Multimodal.audioFingerprint(auMedia).toDF()
-            .select(col("doc_id"), col("fp")).localCheckpoint(true))
+            .select(col("doc_id"), col("fp")))
         val auDup = au
           .join(au.groupBy(col("fp")).agg(min(col("doc_id")).as("__as")), "fp")
           .select(col("doc_id"), (col("doc_id") =!= col("__as")).as("audio_dup"))
@@ -2090,13 +2087,12 @@ object VectorQueries {
         // round 14 and measured a WASH: the extra exchange job offsets the
         // saved ones, and at k=4 it collapses parallelism to 4 partitions.
         // Revisit only with corpus-scale k.)
-        val m = graft.CkptCycle.cycle("q_stream_semdedup_batch_m",
+        val m = graft.Materialize.eager(
           graft.operators.KMeans.assignmentsQ(
               t(s, dir, "embeddings"), "vec_id", "embedding", k = 4, passes = 2)
             .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
             .withColumn("batch", pmod(col("vec_id"), lit(3L)))
-            .select(col("vec_id"), col("batch"), col("cluster"), col("__u"), col("__n"))
-            .localCheckpoint(true))
+            .select(col("vec_id"), col("batch"), col("cluster"), col("__u"), col("__n")))
         def arriving(df: DataFrame): DataFrame = df.select(
           col("vec_id").as("a_id"), col("cluster"),
           col("__u").as("a_u"), col("__n").as("a_n"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -297,22 +298,23 @@ object Streams {
   // ---------------------------------------------------------------------
 
   // Every gate below shares one commit protocol: [[commitOnce]] skips a
-  // batch whose output marker exists, [[priorIndex]] shows the batch only
-  // index rows from strictly earlier batches, [[withCheckpoint]] frees the
-  // batch's checkpoint blocks on every exit, and [[startGate]] is the one
-  // foreachBatch driver.
+  // batch whose output marker exists and runs the rest in one
+  // graft.Materialize scope (the batch's checkpoints are freed on every
+  // exit), [[priorIndex]] shows the batch only index rows from strictly
+  // earlier batches, and [[startGate]] is the one foreachBatch driver.
 
   /** The batch-keyed directory of `batchId` under `root` (sink output and
     * every side output: rejects, quarantine, spend ledger). */
   private def batchDir(root: String, batchId: Long) = new Path(root, f"batch-$batchId%09d")
 
-  /** Run `body` unless `batchId` already committed under `outDir`; a
-    * committed batch is a pure replay and returns false. */
+  /** Run `body` in its own materialization scope unless `batchId` already
+    * committed under `outDir`; a committed batch is a pure replay and
+    * returns false. */
   private def commitOnce(spark: SparkSession, outDir: String, batchId: Long)
                         (body: => Boolean): Boolean = {
     val dir = batchDir(outDir, batchId)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    !fs.exists(new Path(dir, "_COMMITTED")) && body
+    !fs.exists(new Path(dir, "_COMMITTED")) && Materialize.scope(body)
   }
 
   /** The index rows batch `batchId` may see: those of strictly earlier
@@ -321,13 +323,6 @@ object Streams {
   private def priorIndex(wh: graft.airbnb.Warehouse, table: String,
       schema: StructType, batchId: Long): DataFrame =
     wh.readOrEmpty(table, schema).filter(col("batch_id") < batchId)
-
-  /** Materialize `df` as a local checkpoint, run `body` over it and free
-    * the checkpoint's blocks however `body` exits. */
-  private def withCheckpoint[A](df: DataFrame)(body: DataFrame => A): A = {
-    val ckpt = df.localCheckpoint(true)
-    try body(ckpt) finally graft.CkptCycle.release(ckpt)
-  }
 
   /** The one foreachBatch driver: every `start*` runs its batch body here.
     * `checkpointDir` carries the source offsets. */
@@ -421,17 +416,16 @@ object Streams {
       val kept = batch.join(tags, Seq(idCol), "left")
         .filter(!coalesce(col("is_near_dup"), lit(false)))
         .drop("is_near_dup")
-      withCheckpoint(kept) { survivors =>
-        // survivors' bands join the index under min-batch-id semantics; the
-        // groupBy also re-distincts, so replays cannot grow the table
-        val merged = wh.readOrEmpty(indexTable, bandIndexSchema).unionByName(
-            graft.operators.Dedup.bandIndex(survivors, idCol, textCol, k, bands)
-              .withColumn("batch_id", lit(batchId)))
-          .groupBy(col("band_idx"), col("band_key"))
-          .agg(min(col("batch_id")).as("batch_id"))
-        wh.write(indexTable, merged)
-        writeBatchIdempotent(survivors, outDir, batchId)
-      }
+      val survivors = Materialize.eager(kept)
+      // survivors' bands join the index under min-batch-id semantics; the
+      // groupBy also re-distincts, so replays cannot grow the table
+      val merged = wh.readOrEmpty(indexTable, bandIndexSchema).unionByName(
+          graft.operators.Dedup.bandIndex(survivors, idCol, textCol, k, bands)
+            .withColumn("batch_id", lit(batchId)))
+        .groupBy(col("band_idx"), col("band_key"))
+        .agg(min(col("batch_id")).as("batch_id"))
+      wh.write(indexTable, merged)
+      writeBatchIdempotent(survivors, outDir, batchId)
     }
 
   /** Start the streaming near-dup gate on a documents stream. The triple
@@ -492,22 +486,21 @@ object Streams {
         maxBroadcastAnchors = maxBroadcastAnchors)
       // materialize survivors once: they feed the index append AND the sink
       val clean = batch.join(tags.select(col(idCol)), Seq(idCol), "left_anti")
-      try withCheckpoint(clean) { survivors =>
-        // the index GROWS BY THE BATCH's anchors only, landed as an
-        // idempotent batch_id partition (r18): the r17 shape re-read and
-        // re-wrote the WHOLE index through a groupBy-dedupe + table swap
-        // every batch — O(index) per batch, the dominant term of the gate's
-        // ×10 soak growth. Cross-partition duplicates cannot arise (survivor
-        // doc ids are unique across the stream, anchorIndex rows are unique
-        // within a batch), and a replay overwrites its own partition. The
-        // per-batch occurrence cap still applies at build time;
-        // Dedup.compactAnchorIndex remains the periodic global re-cap.
-        wh.writePartition(indexTable, "batch_id", batchId,
-          graft.operators.Dedup.anchorIndex(survivors, idCol, textCol, k,
-              maxOccurrences)
-            .select(col(idCol).as("doc_id"), col("pos"), col("sh")))
-        writeBatchIdempotent(survivors, outDir, batchId)
-      } finally graft.CkptCycle.release(tags, batch) // the probe's anchor checkpoint
+      val survivors = Materialize.eager(clean)
+      // the index GROWS BY THE BATCH's anchors only, landed as an
+      // idempotent batch_id partition (r18): the r17 shape re-read and
+      // re-wrote the WHOLE index through a groupBy-dedupe + table swap
+      // every batch — O(index) per batch, the dominant term of the gate's
+      // ×10 soak growth. Cross-partition duplicates cannot arise (survivor
+      // doc ids are unique across the stream, anchorIndex rows are unique
+      // within a batch), and a replay overwrites its own partition. The
+      // per-batch occurrence cap still applies at build time;
+      // Dedup.compactAnchorIndex remains the periodic global re-cap.
+      wh.writePartition(indexTable, "batch_id", batchId,
+        graft.operators.Dedup.anchorIndex(survivors, idCol, textCol, k,
+            maxOccurrences)
+          .select(col(idCol).as("doc_id"), col("pos"), col("sh")))
+      writeBatchIdempotent(survivors, outDir, batchId)
     }
 
   /** Start the streaming substring gate on a documents stream. The triple
@@ -571,18 +564,17 @@ object Streams {
       // pattern): the quarantine and clean writes are two actions over it,
       // and uncached each would re-run the tokenize + ShingleHashes +
       // broadcast-join pipeline per write; micro-batch-sized blocks
-      withCheckpoint(batch.join(hits, Seq(idCol), "left")) { tagged =>
-        val contaminated = tagged.filter(col("n_shared_shingles").isNotNull)
-        val clean = tagged.filter(col("n_shared_shingles").isNull)
-          .drop("n_shared_shingles")
-        // quarantine first (evidence must exist before the sink marker says
-        // the batch is done), then the marker-bearing clean write; a crash
-        // between the two replays both — the quarantine write is a plain
-        // batch-keyed overwrite, so the replay converges
-        contaminated.write.mode("overwrite")
-          .parquet(batchDir(quarantineDir, batchId).toString)
-        writeBatchIdempotent(clean, outDir, batchId)
-      }
+      val tagged = Materialize.eager(batch.join(hits, Seq(idCol), "left"))
+      val contaminated = tagged.filter(col("n_shared_shingles").isNotNull)
+      val clean = tagged.filter(col("n_shared_shingles").isNull)
+        .drop("n_shared_shingles")
+      // quarantine first (evidence must exist before the sink marker says
+      // the batch is done), then the marker-bearing clean write; a crash
+      // between the two replays both — the quarantine write is a plain
+      // batch-keyed overwrite, so the replay converges
+      contaminated.write.mode("overwrite")
+        .parquet(batchDir(quarantineDir, batchId).toString)
+      writeBatchIdempotent(clean, outDir, batchId)
     }
 
   /** Start the streaming decontamination gate on a documents stream. The
@@ -595,8 +587,8 @@ object Streams {
       indexTable: String, outDir: String, quarantineDir: String,
       checkpointDir: String, idCol: String, textCol: String, k: Int,
       queryName: String = "decontaminate_gate"): StreamingQuery = {
-    val idx = wh.readOrEmpty(indexTable,
-      StructType(Seq(StructField("__sk", LongType)))).localCheckpoint(true)
+    val idx = Materialize.eager(wh.readOrEmpty(indexTable,
+      StructType(Seq(StructField("__sk", LongType)))))
     startGate(docs, checkpointDir, queryName)(decontaminateGateBatch(_, idx,
       outDir, quarantineDir, _, idCol, textCol, k))
   }
@@ -647,17 +639,16 @@ object Streams {
           broadcast(thr.withColumnRenamed(groupCol, "__g")),
           col(groupCol) <=> col("__g"), "left")
         .drop("__g")
-      withCheckpoint(withThr) { tagged =>
-        val kept = tagged.filter(col("score_threshold").isNotNull &&
-          col("score") > col("score_threshold")).drop("score_threshold")
-        val rejected = tagged.filter(col("score_threshold").isNull ||
-          col("score") <= col("score_threshold"))
-        // reject evidence first, then the marker-bearing clean write; a
-        // crash between the two replays both and the batch-keyed overwrite
-        // converges
-        rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
-        writeBatchIdempotent(kept, outDir, batchId)
-      }
+      val tagged = Materialize.eager(withThr)
+      val kept = tagged.filter(col("score_threshold").isNotNull &&
+        col("score") > col("score_threshold")).drop("score_threshold")
+      val rejected = tagged.filter(col("score_threshold").isNull ||
+        col("score") <= col("score_threshold"))
+      // reject evidence first, then the marker-bearing clean write; a
+      // crash between the two replays both and the batch-keyed overwrite
+      // converges
+      rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
+      writeBatchIdempotent(kept, outDir, batchId)
     }
 
   /** Start the streaming percentile gate on a documents stream. Thresholds
@@ -669,8 +660,7 @@ object Streams {
       checkpointDir: String, textCol: String, groupCol: String,
       stopwords: Seq[String],
       queryName: String = "percentile_gate"): StreamingQuery = {
-    val thr = wh.readOrEmpty(thresholdTable, thresholdSchema(groupCol))
-      .localCheckpoint(true)
+    val thr = Materialize.eager(wh.readOrEmpty(thresholdTable, thresholdSchema(groupCol)))
     startGate(docs, checkpointDir, queryName)(percentileGateBatch(_, thr,
       outDir, rejectDir, _, textCol, groupCol, stopwords))
   }
@@ -905,20 +895,19 @@ object Streams {
           (col("budget_tokens") - coalesce(col("__spent"), lit(0L)))
             .as("__remaining"))
       val decided = budgetSpendPlan(batch, remaining, idCol, textCol, groupCol, stopwords)
-      withCheckpoint(decided) { tagged =>
-        val kept = tagged.filter(col("__selected"))
-          .drop("__remaining", "__cum", "__selected")
-        val rejected = tagged.filter(!col("__selected"))
-          .drop("__remaining", "__cum", "__selected")
-        // ledger first (replay must see its own spend overwritten, never
-        // doubled), then reject evidence, then the marker-bearing clean
-        // write
-        kept.groupBy(col(groupCol)).agg(sum(col("__ntok")).as("spent"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(batchDir(ledgerDir, batchId).toString)
-        rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
-        writeBatchIdempotent(kept, outDir, batchId)
-      }
+      val tagged = Materialize.eager(decided)
+      val kept = tagged.filter(col("__selected"))
+        .drop("__remaining", "__cum", "__selected")
+      val rejected = tagged.filter(!col("__selected"))
+        .drop("__remaining", "__cum", "__selected")
+      // ledger first (replay must see its own spend overwritten, never
+      // doubled), then reject evidence, then the marker-bearing clean
+      // write
+      kept.groupBy(col(groupCol)).agg(sum(col("__ntok")).as("spent"))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(batchDir(ledgerDir, batchId).toString)
+      rejected.write.mode("overwrite").parquet(batchDir(rejectDir, batchId).toString)
+      writeBatchIdempotent(kept, outDir, batchId)
     }
 
   /** Fold the spend ledger's per-batch delta files into ONE committed
@@ -948,10 +937,10 @@ object Streams {
     if (!fs.exists(base)) return // nothing to compact
     val target = new Path(base, f"fold-$uptoBatchId%09d")
     if (!fs.exists(new Path(target, "_SUCCESS"))) {
-      val folded = ledgerRows(spark, ledgerDir, groupCol, uptoBatchId)
+      // folded sums pinned BEFORE any file mutation
+      val folded = Materialize.eager(ledgerRows(spark, ledgerDir, groupCol, uptoBatchId)
         .groupBy(col(groupCol)).agg(sum(col("spent")).as("spent"))
-        .withColumn("batch_id", lit(uptoBatchId - 1))
-        .localCheckpoint(true) // folded sums pinned BEFORE any file mutation
+        .withColumn("batch_id", lit(uptoBatchId - 1)))
       if (folded.isEmpty) return // no spend to fold
       val tmp = new Path(base, f".fold-tmp-$uptoBatchId%09d")
       fs.delete(tmp, true)
@@ -977,8 +966,7 @@ object Streams {
       ledgerDir: String, checkpointDir: String, idCol: String,
       textCol: String, groupCol: String, stopwords: Seq[String],
       queryName: String = "budget_gate"): StreamingQuery = {
-    val budgets = wh.readOrEmpty(budgetTable, budgetSchema(groupCol))
-      .localCheckpoint(true)
+    val budgets = Materialize.eager(wh.readOrEmpty(budgetTable, budgetSchema(groupCol)))
     startGate(docs, checkpointDir, queryName)(budgetGateBatch(_, budgets,
       outDir, rejectDir, ledgerDir, _, idCol, textCol, groupCol, stopwords))
   }
@@ -1051,17 +1039,16 @@ object Streams {
       val kept = batch.join(
         assigned.join(dropped, Seq(idCol), "left_anti")
           .select(col(idCol), col("cluster"), col("__u")), Seq(idCol))
-      withCheckpoint(kept) { survivors =>
-        // survivors' cells merge under min-batch-id semantics; the groupBy
-        // also re-distincts, so replays cannot grow the table
-        val merged = wh.readOrEmpty(cellTable, cellIndexSchema).unionByName(
-            survivors.select(col(idCol).cast(StringType).as("vec_id"),
-              col("cluster"), col("__u").as("u"), lit(batchId).as("batch_id")))
-          .groupBy(col("vec_id"), col("cluster"), col("u"))
-          .agg(min(col("batch_id")).as("batch_id"))
-        wh.write(cellTable, merged)
-        writeBatchIdempotent(survivors.drop("cluster", "__u"), outDir, batchId)
-      }
+      val survivors = Materialize.eager(kept)
+      // survivors' cells merge under min-batch-id semantics; the groupBy
+      // also re-distincts, so replays cannot grow the table
+      val merged = wh.readOrEmpty(cellTable, cellIndexSchema).unionByName(
+          survivors.select(col(idCol).cast(StringType).as("vec_id"),
+            col("cluster"), col("__u").as("u"), lit(batchId).as("batch_id")))
+        .groupBy(col("vec_id"), col("cluster"), col("u"))
+        .agg(min(col("batch_id")).as("batch_id"))
+      wh.write(cellTable, merged)
+      writeBatchIdempotent(survivors.drop("cluster", "__u"), outDir, batchId)
     }
 
   /** Start the streaming SemDeDup gate on an embeddings stream. The fit is
@@ -1152,74 +1139,72 @@ object Streams {
         val assigned = graft.operators.KMeans.assignWith(
             batch.select(col(idCol), col(embCol)), idCol, embCol, cents)
           .select(col(idCol), col("cluster"), col("__u"))
-        withCheckpoint(assigned) { bAssign =>
-          // cells this batch lands in: one bounded collect (≤ k values — the
-          // centroid matrix is already driver-sized), needed driver-side to
-          // drive the partition-pruned read and the per-partition swap set
-          val touchedCells: Array[Long] = bAssign.select(col("cluster"))
-            .distinct().collect().map(_.getLong(0))
-          // per-cell batch stamps, read from ONLY the touched partitions
-          // (partition-pruned): cells already stamped with this batch committed
-          // in a previous attempt's partial swap — skip them; re-merge the rest.
-          val doneCells: Set[Long] =
-            if (touchedCells.isEmpty) Set.empty
-            else g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
-              .groupBy(col("cell").cast(LongType).as("cell"))
-              .agg(max(col("batch_id")).as("stamp"))
-              .filter(col("stamp") >= batchId)
-              .collect().map(_.getLong(0)).toSet
-          val remainCells = touchedCells.filterNot(doneCells)
-          if (remainCells.nonEmpty) {
-            // history pre-assigned from STORED columns — cell filter + stored
-            // quantized vectors, no distance kernel; at 100 TB the vector
-            // table partitions by cell too and this read partition-prunes
-            val histA = vecHist.filter(col("cluster").isin(remainCells: _*))
-              .select(col(idCol), col("cluster"), col("u").as("__u"))
-            // restrict the merge to the cells still at an older stamp: on a
-            // first attempt that is every touched cell; on a partial-swap
-            // replay only the unswapped ones (their partitions are fully old —
-            // each partition swaps atomically, never mixes versions)
-            val batchA =
-              if (remainCells.length == touchedCells.length) bAssign
-              else bAssign.filter(col("cluster").isin(remainCells: _*))
-            val oldTouched = g0
-              .filter(col("cell").cast(LongType).isin(remainCells: _*))
-              .select(col("node"), col("nbr"), col("sim"),
-                col("cell").cast(LongType).as("cell"))
-            // materialize the merge BEFORE either table write (the band-gate
-            // rule): it reads graphTable AND vecTable
-            val merge = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
-                oldTouched, histA, batchA, idCol, degree,
-                batchMaterialized = true,
-                touchedCellsHint = Some(remainCells.toSeq))
-              .withColumn("batch_id", lit(batchId))
-            try withCheckpoint(merge) { merged =>
-              // vectors APPEND as a batch_id partition — O(batch) bytes per
-              // batch; a replay overwrites the same partition, so idempotence
-              // needs no dedupe pass. Ids are unique across the stream (the
-              // vec_id contract), so cross-partition duplicates cannot arise.
-              // SORTED BY CLUSTER within the write: parquet row-group min/max
-              // stats on `cluster` then answer the history read's touched-cell
-              // filter — at production batch sizes (many row groups per file)
-              // the filter row-group-prunes instead of scanning every vector's
-              // cluster column, without the write amplification a fully
-              // cell-partitioned vector store would pay on corpus-scale batches
-              wh.writePartition(vecTable, "batch_id", batchId,
-                bAssign.select(col(idCol), col("__u").as("u"), col("cluster"))
-                  .sortWithinPartitions(col("cluster")))
-              // graph: touched-cell partitions ONLY, each swapped atomically
-              // and stamped with this batch — untouched cells are never read
-              // or rewritten (the r19 touched-range shape). Hash-partition by
-              // cell first: a partitionBy write otherwise emits a file per
-              // (task × cell) — tasks × touched-cells small files per batch,
-              // whose open cost taxes every later read (the first soak of the
-              // store measured it); with the exchange each cell lands as one
-              // file (per-cell parallelism matters only when one cell exceeds
-              // a task — then drop this or re-split by a secondary key)
-              wh.writePartitions(graphTable, "cell",
-                merged.repartition(col("cell")))
-            } finally graft.CkptCycle.release(merge) // the merge's own checkpoints
-          }
+        val bAssign = Materialize.eager(assigned)
+        // cells this batch lands in: one bounded collect (≤ k values — the
+        // centroid matrix is already driver-sized), needed driver-side to
+        // drive the partition-pruned read and the per-partition swap set
+        val touchedCells: Array[Long] = bAssign.select(col("cluster"))
+          .distinct().collect().map(_.getLong(0))
+        // per-cell batch stamps, read from ONLY the touched partitions
+        // (partition-pruned): cells already stamped with this batch committed
+        // in a previous attempt's partial swap — skip them; re-merge the rest.
+        val doneCells: Set[Long] =
+          if (touchedCells.isEmpty) Set.empty
+          else g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
+            .groupBy(col("cell").cast(LongType).as("cell"))
+            .agg(max(col("batch_id")).as("stamp"))
+            .filter(col("stamp") >= batchId)
+            .collect().map(_.getLong(0)).toSet
+        val remainCells = touchedCells.filterNot(doneCells)
+        if (remainCells.nonEmpty) {
+          // history pre-assigned from STORED columns — cell filter + stored
+          // quantized vectors, no distance kernel; at 100 TB the vector
+          // table partitions by cell too and this read partition-prunes
+          val histA = vecHist.filter(col("cluster").isin(remainCells: _*))
+            .select(col(idCol), col("cluster"), col("u").as("__u"))
+          // restrict the merge to the cells still at an older stamp: on a
+          // first attempt that is every touched cell; on a partial-swap
+          // replay only the unswapped ones (their partitions are fully old —
+          // each partition swaps atomically, never mixes versions)
+          val batchA =
+            if (remainCells.length == touchedCells.length) bAssign
+            else bAssign.filter(col("cluster").isin(remainCells: _*))
+          val oldTouched = g0
+            .filter(col("cell").cast(LongType).isin(remainCells: _*))
+            .select(col("node"), col("nbr"), col("sim"),
+              col("cell").cast(LongType).as("cell"))
+          // materialize the merge BEFORE either table write (the band-gate
+          // rule): it reads graphTable AND vecTable
+          val merge = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
+              oldTouched, histA, batchA, idCol, degree,
+              batchMaterialized = true,
+              touchedCellsHint = Some(remainCells.toSeq))
+            .withColumn("batch_id", lit(batchId))
+          val merged = Materialize.eager(merge)
+          // vectors APPEND as a batch_id partition — O(batch) bytes per
+          // batch; a replay overwrites the same partition, so idempotence
+          // needs no dedupe pass. Ids are unique across the stream (the
+          // vec_id contract), so cross-partition duplicates cannot arise.
+          // SORTED BY CLUSTER within the write: parquet row-group min/max
+          // stats on `cluster` then answer the history read's touched-cell
+          // filter — at production batch sizes (many row groups per file)
+          // the filter row-group-prunes instead of scanning every vector's
+          // cluster column, without the write amplification a fully
+          // cell-partitioned vector store would pay on corpus-scale batches
+          wh.writePartition(vecTable, "batch_id", batchId,
+            bAssign.select(col(idCol), col("__u").as("u"), col("cluster"))
+              .sortWithinPartitions(col("cluster")))
+          // graph: touched-cell partitions ONLY, each swapped atomically
+          // and stamped with this batch — untouched cells are never read
+          // or rewritten (the r19 touched-range shape). Hash-partition by
+          // cell first: a partitionBy write otherwise emits a file per
+          // (task × cell) — tasks × touched-cells small files per batch,
+          // whose open cost taxes every later read (the first soak of the
+          // store measured it); with the exchange each cell lands as one
+          // file (per-cell parallelism matters only when one cell exceeds
+          // a task — then drop this or re-split by a secondary key)
+          wh.writePartitions(graphTable, "cell",
+            merged.repartition(col("cell")))
         }
       }
       writeBatchIdempotent(batch, outDir, batchId)
@@ -1286,22 +1271,21 @@ object Streams {
       val novel = afterExact.join(tags, Seq(idCol), "left")
         .filter(!coalesce(col("is_near_dup"), lit(false)))
         .drop("is_near_dup")
-      withCheckpoint(novel) { accepted => // feeds both index appends and the sink
-        // both indexes grow by the batch's SURVIVOR contribution only,
-        // landed as idempotent batch_id partitions (r18 — the r17 shape
-        // rewrote each whole index through a groupBy-dedupe + swap every
-        // batch). Cross-partition duplicates cannot arise by the gates' own
-        // acceptance rules: an fp matching history is rejected by the exact
-        // gate, and an accepted doc shares NO band key with history (a
-        // shared band key is exactly what is_near_dup flags); within-batch
-        // duplicates are deduped here (fp distinct; bandIndex is distinct by
-        // construction). Replays overwrite their own partitions.
-        wh.writePartition("fp_index", "batch_id", batchId,
-          accepted.select(md5(col(textCol)).as("fp")).distinct())
-        wh.writePartition("band_index", "batch_id", batchId,
-          graft.operators.Dedup.bandIndex(accepted, idCol, textCol, shingleK, bands))
-        writeBatchIdempotent(accepted, outDir, batchId)
-      }
+      val accepted = Materialize.eager(novel) // feeds both index appends and the sink
+      // both indexes grow by the batch's SURVIVOR contribution only,
+      // landed as idempotent batch_id partitions (r18 — the r17 shape
+      // rewrote each whole index through a groupBy-dedupe + swap every
+      // batch). Cross-partition duplicates cannot arise by the gates' own
+      // acceptance rules: an fp matching history is rejected by the exact
+      // gate, and an accepted doc shares NO band key with history (a
+      // shared band key is exactly what is_near_dup flags); within-batch
+      // duplicates are deduped here (fp distinct; bandIndex is distinct by
+      // construction). Replays overwrite their own partitions.
+      wh.writePartition("fp_index", "batch_id", batchId,
+        accepted.select(md5(col(textCol)).as("fp")).distinct())
+      wh.writePartition("band_index", "batch_id", batchId,
+        graft.operators.Dedup.bandIndex(accepted, idCol, textCol, shingleK, bands))
+      writeBatchIdempotent(accepted, outDir, batchId)
     }
 
   // ---------------------------------------------------------------------
@@ -1349,8 +1333,8 @@ object Streams {
     // the rejects write and the ingest half each run actions over this
     // lineage — unpersisted, every action would re-read and re-parse the
     // whole spool batch (binaryFile read + gunzip + record codec)
-    records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scope {
+      Materialize.lazily(records)
       writeBatchIdempotent(records.filter(col("reject_reason").isNotNull)
         .select(col("file"), col("offset"), col("reject_reason")),
         s"$outDir/rejects", batchId)
@@ -1362,7 +1346,7 @@ object Streams {
           graft.functions.HtmlFns.cleanText(col("body")).as("text"))
       corpusIngestBatch(docs, wh, outDir, batchId, "doc_id", "text",
         minTokens, shingleK, bands)
-    } finally records.unpersist(false)
+    }
   }
 
   /** Start the streaming crawl-intake pipeline on a [[readWarc]] stream. */
@@ -1410,7 +1394,7 @@ object Streams {
       .select(col("batch_id"), col("r"), col("bucket"), col("cnt"))
     // materialize BEFORE the swap: `cur`'s lineage reads the table files the
     // write below replaces (depth×width + history rows — tiny)
-    withCheckpoint(cur.unionByName(cells)) { merged => wh.write(table, merged); true }
+    Materialize.scope { wh.write(table, Materialize.eager(cur.unionByName(cells))); true }
   }
 
   /** The corpus-wide sketch maintained so far: cells summed across batches
