@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * EDA → clean → load → views; SURVEY §3.1), idempotent and re-runnable —
   * a second run over the same feeds updates listings in place (MERGE
   * semantics) and inserts zero duplicate reviews (anti-join), exactly like
-  * the reference.
+  * the reference. A rerun writes only its delta to the grow-only tables
+  * (id map, review facts, review language tags); the dims and
+  * fact_calendar are swapped whole.
   */
 object AirbnbEtl {
 
@@ -50,8 +52,10 @@ object AirbnbEtl {
       case (k, v: Long) if v > 0 => k -> v
     }.toMap
 
+    // grow-only tables (the id map, the review facts and their language
+    // tags) take only the day's new rows through Warehouse.append
     val mapExisting = wh.readOrEmpty("dim_listing_id_map", Schemas.dimListingIdMap)
-    wh.write("dim_listing_id_map", Loaders.appendIdMap(cleanL, mapExisting))
+    wh.append("dim_listing_id_map", Loaders.appendIdMap(cleanL, mapExisting))
 
     // ---- hosts, dates
     val dimListings = wh.read("dim_listings")
@@ -68,21 +72,16 @@ object AirbnbEtl {
         .repartition(col("week_start_date"))
         .sortWithinPartitions(col("week_start_date"), col("listing_id")),
       partitionBy = Seq("week_start_date"))
-    // schema migration: a warehouse written before review_year existed still
-    // appends cleanly (rows with an unknown year land in the null partition)
-    val existingReviews0 = wh.readOrEmpty("fact_reviews", Schemas.factReviews)
-    val existingReviews =
-      if (existingReviews0.columns.contains("review_year")) existingReviews0
-      else existingReviews0.withColumn("review_year",
-        lit(null).cast(org.apache.spark.sql.types.IntegerType))
+    // J3: existing reviews are read only for the anti-join's review_id
     val newReviews = Loaders.loadReviews(cleanR, wh.read("dim_dates"),
-      dimListings, existingReviews)
+      dimListings, wh.readOrEmpty("fact_reviews", Schemas.factReviews))
     // range-partition on (year, listing_id): hash-partitioning on year alone
     // would collapse the write to one task per distinct year — a parallelism
     // cliff on the biggest fact; range keeps many tasks per year while
-    // partitionBy still splits the directories for pruning
-    wh.write("fact_reviews",
-      existingReviews.unionByName(newReviews)
+    // partitionBy still splits the directories for pruning. Each appended
+    // file stays sorted on listing_id for row-group pruning.
+    wh.append("fact_reviews",
+      newReviews
         .repartitionByRange(col("review_year"), col("listing_id"))
         .sortWithinPartitions(col("review_year"), col("listing_id")),
       partitionBy = Seq("review_year"))
@@ -92,7 +91,15 @@ object AirbnbEtl {
       Enrich.pretreat(wh.read("dim_listings"), wh.read("dim_hosts"))
     wh.write("dim_listings_enriched", enrichedListings)
     wh.write("dim_hosts_enriched", enrichedHosts)
-    wh.write("fact_reviews_enriched", Enrich.addReviewLang(wh.read("fact_reviews")))
+    // J8: tag only the reviews not yet tagged (fact_reviews ▷
+    // fact_reviews_enriched); this also heals a crash between the two appends
+    val facts = wh.readOrEmpty("fact_reviews", Schemas.factReviews)
+    val untagged =
+      if (wh.exists("fact_reviews_enriched"))
+        facts.join(wh.read("fact_reviews_enriched").select("review_id"), Seq("review_id"),
+          "left_anti")
+      else facts
+    wh.append("fact_reviews_enriched", Enrich.addReviewLang(untagged))
     Views.register(spark, wh.read("dim_listings_enriched"))
 
     Result(wh, wh.stats(), mergeActions)

@@ -67,7 +67,8 @@ object Loaders {
 
   /** Append-only raw-id map (modules/data_loader.py:292-300): EVERY staging
     * row — including non-convertible ids — gets a mapping row with 6-char
-    * splits. mapping_id continues from the existing max (IDENTITY).
+    * splits. mapping_id continues from `existing`'s max (IDENTITY). Returns
+    * only the fresh rows, for `Warehouse.append`.
     */
   def appendIdMap(stagingRaw: DataFrame, existing: DataFrame): DataFrame = {
     val base = existing.agg(coalesce(max(col("mapping_id")), lit(0L))).collect()(0).getLong(0)
@@ -93,8 +94,7 @@ object Loaders {
       sorted.rdd.zipWithIndex().map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq((base + i + 1L) +: r.toSeq)
       }, schema)
-    existing.unionByName(
-      withId.select("mapping_id", "listing_id", "listing_raw_id", "part1", "part2", "part3"))
+    withId.select("mapping_id", "listing_id", "listing_raw_id", "part1", "part2", "part3")
   }
 
   /** dim_hosts (sql/data/02_load_hosts.sql): latest-wins dedup per host (W1)

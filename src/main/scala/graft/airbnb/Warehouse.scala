@@ -30,6 +30,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
     *    materializing → roll FORWARD (promote __tmp, drop __old);
     *  - dest absent, __old present: roll BACK to the previous version;
     *  - incomplete __tmp (no _SUCCESS): a dead write job → drop.
+    * Then the [[append]] staging dir `__atmp`:
+    *  - complete (has _SUCCESS): the appender died while promoting files →
+    *    roll FORWARD by moving the files it still holds (the ones already
+    *    moved are gone from it, so each lands exactly once);
+    *  - incomplete: a dead write job → drop.
     */
   private def recover(name: String): Unit = {
     val dest = new Path(path(name)); val f = fs(dest)
@@ -44,6 +49,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
       if (f.exists(tmp)) f.delete(tmp, true)
       if (f.exists(old) && !f.rename(old, dest))
         throw new java.io.IOException(s"recover: rollback failed for $name")
+    }
+    val atmp = new Path(path(name) + "__atmp")
+    if (f.exists(atmp)) {
+      if (isComplete(f, atmp)) promoteAppend(name, f, atmp)
+      else f.delete(atmp, true)
     }
     recoverPartitions(name)
   }
@@ -127,6 +137,85 @@ final case class Warehouse(spark: SparkSession, root: String) {
         Warehouse.allNullable(df.schema)): Unit
   }
 
+  /** Crash-safe APPEND for grow-only tables (fact_reviews, its enriched
+    * copy, the id map): only `df`'s rows are written, never the existing
+    * ones. `df` materializes with Spark's committer into the sibling
+    * `name__atmp` dir (same `partitionBy`), then each data file is renamed
+    * to the same relative path under `name/` — part-file names carry the
+    * write job's UUID, so they never collide with earlier appends — and
+    * the staging dir is deleted. A crash before `_SUCCESS` leaves an
+    * incomplete staging dir that [[recover]] drops; a crash while promoting
+    * leaves a complete one that [[recover]] rolls forward, so after
+    * recovery every append is all-or-nothing.
+    *
+    * Refused before any bytes move: a partitioned append into a table whose
+    * root holds data files (or partition dirs under another column), an
+    * unpartitioned append into a partitioned table, and a `df` whose
+    * columns (names and types, in order) differ from the table's.
+    *
+    * Each call adds files; a table fed daily grows a few files per
+    * partition per day — [[compactSmallFiles]] is the remedy.
+    */
+  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+    recover(name)
+    val base = new Path(path(name)); val f = fs(base)
+    if (partitionBy.nonEmpty) requirePartitionedLayout(f, base, name, partitionBy.head, "append")
+    else if (f.exists(base))
+      f.listStatus(base).find(st => st.isDirectory && st.getPath.getName.contains("="))
+        .foreach(st => throw new IllegalStateException(
+          s"append($name): table is partitioned ('${st.getPath.getName}'); pass " +
+          s"its partitionBy — root data files beside partition dirs break discovery."))
+    val existed = hasData(name)
+    if (existed) {
+      // names and types, in order; not nullability (footer inference reads
+      // every column back nullable)
+      val table = read(name).schema
+      def dataCols(s: StructType) = s.fields.toSeq.filterNot(c => partitionBy.contains(c.name))
+        .map(c => c.name -> Warehouse.nullableType(c.dataType))
+      require(dataCols(table) == dataCols(df.schema) &&
+          partitionBy.forall(table.fieldNames.contains),
+        s"append($name): schema ${df.schema.simpleString} differs from the " +
+        s"table's ${table.simpleString}")
+    }
+    val staging = new Path(path(name) + "__atmp")
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staging.toString)
+    f.mkdirs(base)
+    promoteAppend(name, f, staging)
+    // an existing table's cached schema was just checked: only its file
+    // listing goes stale. A new table caches df's schema as write() does.
+    if (existed) spark.catalog.refreshByPath(path(name))
+    else {
+      invalidateListings(name)
+      if (partitionBy.isEmpty)
+        Warehouse.schemaCache.put(path(name), Warehouse.allNullable(df.schema)): Unit
+    }
+  }
+
+  /** Move every data file of a complete [[append]] staging dir to the same
+    * relative path under the table, then drop the staging dir. Files
+    * already moved by an interrupted earlier promote are no longer there,
+    * so a roll-forward moves exactly the rest.
+    */
+  private def promoteAppend(name: String, f: org.apache.hadoop.fs.FileSystem,
+                            staging: Path): Unit = {
+    val base = new Path(path(name))
+    def move(dir: Path, rel: String): Unit = f.listStatus(dir).foreach { st =>
+      val n = st.getPath.getName
+      if (!n.startsWith("_") && !n.startsWith(".")) {
+        if (st.isDirectory) move(st.getPath, s"$rel$n/")
+        else {
+          val dest = new Path(base, rel + n)
+          f.mkdirs(dest.getParent)
+          if (!f.rename(st.getPath, dest))
+            throw new java.io.IOException(s"append: promote failed for $name/$rel$n")
+        }
+      }
+    }
+    move(staging, "")
+    f.delete(staging, true)
+  }
+
   /** Drop Spark's cached file listings/footers for a table path after a
     * swap: a DataFrame planned against the PREVIOUS version's listing
     * would otherwise fail mid-query with FAILED_READ_FILE on the renamed
@@ -182,20 +271,20 @@ final case class Warehouse(spark: SparkSession, root: String) {
     */
   private def requirePartitionedLayout(f: org.apache.hadoop.fs.FileSystem,
                                        base: Path, name: String,
-                                       partCol: String): Unit = {
+                                       partCol: String, op: String = "writePartition"): Unit = {
     if (!f.exists(base)) return
     f.listStatus(base).foreach { st =>
       val n = st.getPath.getName
       if (st.isFile && !n.startsWith("_") && !n.startsWith("."))
         throw new IllegalStateException(
-          s"writePartition($name): table root holds data file '$n' (the " +
+          s"$op($name): table root holds data file '$n' (the " +
           s"whole-table write() layout); a partition write would create a " +
           s"mixed layout that breaks partition discovery. Rewrite once via " +
           s"write(name, df, partitionBy = Seq(\"$partCol\")) first.")
       if (st.isDirectory && n.contains("=") && !n.startsWith(partCol + "=") &&
           !n.startsWith("_") && !n.startsWith("."))
         throw new IllegalStateException(
-          s"writePartition($name): table is partitioned by '${n.takeWhile(_ != '=')}', " +
+          s"$op($name): table is partitioned by '${n.takeWhile(_ != '=')}', " +
           s"not '$partCol' — one table, one partition column.")
     }
   }
@@ -363,13 +452,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // which has entries but still fails schema inference — so the guard
     // skips underscore/dot-prefixed metadata names, exactly the names
     // FileInputFormat hides from readers.
+    if (hasData(name)) read(name)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
+
+  private def hasData(name: String): Boolean = {
     val p = new Path(path(name))
-    val hasData = exists(name) && fs(p).listStatus(p).exists { st =>
+    exists(name) && fs(p).listStatus(p).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-    if (hasData) read(name)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   def exists(name: String): Boolean = {
@@ -377,13 +469,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val p = new Path(path(name)); fs(p).exists(p)
   }
 
-  /** Remove a table AND its __tmp/__old swap strays: leaving strays would
+  /** Remove a table AND its __tmp/__old/__atmp strays: leaving strays would
     * let a later recover() roll the dropped table FORWARD from a pre-drop
-    * __tmp. The one shared deletion path for every truncate-like operation.
+    * __tmp, or promote a pre-drop append into a recreated table. The one
+    * shared deletion path for every truncate-like operation.
     */
   private def dropTable(name: String): Unit = {
     Warehouse.schemaCache.remove(path(name))
-    Seq(path(name), path(name) + "__tmp", path(name) + "__old").foreach { s =>
+    Seq(path(name), path(name) + "__tmp", path(name) + "__old",
+        path(name) + "__atmp").foreach { s =>
       val p = new Path(s); val f = fs(p)
       if (f.exists(p)) f.delete(p, true)
     }
@@ -401,10 +495,14 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** S10 — clear in FK order (facts → dims), like 00_prepare_tables.sql:5-10. */
+  /** S10 — clear in FK order (facts → dims), like 00_prepare_tables.sql:5-10.
+    * The enriched copies go too: a surviving fact_reviews_enriched would
+    * count every reloaded review as already tagged.
+    */
   def truncateAll(): Unit =
-    Seq("fact_calendar", "fact_reviews", "dim_listing_id_map", "dim_hosts",
-        "dim_dates", "dim_listings").foreach(dropTable)
+    Seq("fact_reviews_enriched", "fact_calendar", "fact_reviews", "dim_listing_id_map",
+        "dim_hosts_enriched", "dim_hosts", "dim_dates", "dim_listings_enriched",
+        "dim_listings").foreach(dropTable)
 
   /** Schema/type migration (scripts/maintenance/convert_ids_to_bigint.py:
     * 119-135 — widen INT→BIGINT across FK-dependent tables): rewrite the
@@ -523,10 +621,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
         "fact_calendar", "fact_reviews")
 
   /** A6/F16 — the reference's post-load statistics
-    * (modules/data_loader.py:570-578): table → row count.
+    * (modules/data_loader.py:570-578): table → row count. One collect over a
+    * union of 1-row counts, not a count() job pair per table.
     */
-  def stats(): Map[String, Long] =
-    tableNames.filter(exists).map(t => t -> read(t).count()).toMap
+  def stats(): Map[String, Long] = {
+    val present = tableNames.filter(exists)
+    if (present.isEmpty) Map.empty
+    else present.map(t => read(t).agg(count(lit(1)).as("n")).select(lit(t).as("t"), col("n")))
+      .reduce(_ unionByName _).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
 
   /** The reference's db-size report (scripts/analysis/db_size_check.py:22-46):
     * table → bytes on disk. Pure filesystem metadata — no scan.

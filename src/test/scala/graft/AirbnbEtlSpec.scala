@@ -51,6 +51,34 @@ class AirbnbEtlSpec extends AnyFunSuite {
   private lazy val whRoot =
     java.nio.file.Files.createTempDirectory("graft-wh").toFile.getPath
 
+  /** The next day's feeds: the same listings and calendar, and a reviews
+    * feed holding one review already loaded (5002) and one new one (5005).
+    */
+  private lazy val rerunDir: File = {
+    val d = java.nio.file.Files.createTempDirectory("graft-airbnb-rerun").toFile
+    rawDir.listFiles().filterNot(_.getName.contains("_reviews_")).foreach { f =>
+      java.nio.file.Files.copy(f.toPath, new File(d, f.getName).toPath)
+    }
+    writeGz(new File(d, "France_Paris_reviews_02-May-2025.csv.gz"), Seq(
+      "listing_id,id,date,reviewer_id,reviewer_name,comments",
+      "102,5002,2025-04-29,7002,Eve,la maison est belle et le quartier est calme",
+      "103,5005,2025-04-28,7005,Hal,the flat was clean and the host was kind"))
+    d
+  }
+
+  private def runOn(raw: File, wh: String) = AirbnbEtl.run(spark, wh,
+    s"$raw/*listings*.csv.gz", s"$raw/*calendar*.csv.gz", s"$raw/*reviews*.csv.gz")
+
+  private def reviewIds(wh: Warehouse, table: String): Seq[Long] =
+    wh.read(table).select(col("review_id")).collect().map(_.getLong(0)).toSeq.sorted
+
+  /** Parquet data files under `dir`, as paths relative to it. */
+  private def dataFiles(dir: File): Set[String] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) dataFiles(f).map(n => s"${f.getName}/$n")
+      else if (f.getName.endsWith(".parquet")) Seq(f.getName) else Nil
+    }.toSet
+
   private lazy val result = AirbnbEtl.run(spark, whRoot,
     s"$rawDir/*listings*.csv.gz", s"$rawDir/*calendar*.csv.gz", s"$rawDir/*reviews*.csv.gz")
 
@@ -167,6 +195,37 @@ class AirbnbEtlSpec extends AnyFunSuite {
     val sizes = result.wh.sizeStats()
     assert(sizes.keySet.contains("dim_listings"))
     assert(sizes.values.forall(_ > 0L), sizes.toString)
+  }
+
+  test("rerun appends only the new review and its tag; a lost tag table is rebuilt") {
+    val root = java.nio.file.Files.createTempDirectory("graft-wh-rerun").toFile
+    assert(runOn(rawDir, root.getPath).stats("fact_reviews") == 2)
+    val before = Seq("fact_reviews", "fact_reviews_enriched")
+      .map(t => t -> dataFiles(new File(root, t))).toMap
+    val second = runOn(rerunDir, root.getPath)
+    assert(second.stats("fact_reviews") == 3)
+    before.foreach { case (t, files) =>
+      val after = dataFiles(new File(root, t))
+      assert(files.nonEmpty && files.subsetOf(after), s"$t: $files not all in $after")
+    }
+    assert(reviewIds(second.wh, "fact_reviews") == Seq(5001L, 5002L, 5005L))
+    assert(reviewIds(second.wh, "fact_reviews_enriched") == Seq(5001L, 5002L, 5005L))
+    // the catch-up path: with the tag table gone, the rerun tags every review
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(root, "fact_reviews_enriched"))
+    val third = runOn(rerunDir, root.getPath)
+    val langs = third.wh.read("fact_reviews_enriched").collect()
+      .map(r => r.getAs[Long]("review_id") -> r.getAs[String]("review_lang")).toMap
+    assert(langs == Map(5001L -> "en", 5002L -> "fr", 5005L -> "en"))
+    assert(AirbnbEtl.validate(third.wh).values.forall(_ == 0L))
+  }
+
+  test("truncateAll drops the enriched tables: a reload tags exactly fact_reviews") {
+    val root = java.nio.file.Files.createTempDirectory("graft-wh-trunc").toFile.getPath
+    runOn(rawDir, root).wh.truncateAll()
+    // the reload's feed lacks 5001: a surviving tag table would keep it
+    val reload = runOn(rerunDir, root)
+    assert(reviewIds(reload.wh, "fact_reviews") == Seq(5002L, 5005L))
+    assert(reviewIds(reload.wh, "fact_reviews_enriched") == Seq(5002L, 5005L))
   }
 
   test("O4 sample cap activates only above the row threshold") {

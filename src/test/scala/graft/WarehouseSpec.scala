@@ -263,6 +263,76 @@ class WarehouseSpec extends AnyFunSuite {
     assert(ex2.getMessage.contains("one partition column"))
   }
 
+  test("append adds files beside the existing ones and heals every crash window") {
+    import java.io.File
+    val root = java.nio.file.Files.createTempDirectory("wh-append").toString
+    val wh = Warehouse(spark, root)
+    def dataFiles(dir: String): Set[String] =
+      Option(new File(dir).listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) dataFiles(f.getPath).map(n => s"${f.getName}/$n")
+        else if (f.getName.endsWith(".parquet")) Seq(f.getName) else Nil
+      }.toSet
+    def ids() = wh.read("t").select(col("id")).as[Long].collect().toSeq
+    wh.append("t", spark.range(0, 10).select(col("id"), (col("id") % 2).as("k")),
+      partitionBy = Seq("k"))
+    val first = dataFiles(s"$root/t")
+    wh.append("t", spark.range(10, 15).select(col("id"), (col("id") % 2).as("k")),
+      partitionBy = Seq("k"))
+    assert(first.subsetOf(dataFiles(s"$root/t")), "an append rewrote existing files")
+    assert(ids().sorted == (0L until 15L))
+    assert(!new File(s"$root/t__atmp").exists)
+
+    // crash MID-WRITE (no _SUCCESS): the staging dir is dropped, rows unchanged
+    spark.range(100, 110).select(col("id"), (col("id") % 2).as("k"))
+      .write.partitionBy("k").parquet(s"$root/t__atmp")
+    assert(new File(s"$root/t__atmp/_SUCCESS").delete())
+    assert(ids().sorted == (0L until 15L))
+    assert(!new File(s"$root/t__atmp").exists)
+
+    // crash while PROMOTING: k of n files already moved, staging complete →
+    // roll forward to exactly n, no duplicate rows
+    spark.range(200, 240).select(col("id"), (col("id") % 2).as("k")).repartition(4)
+      .write.partitionBy("k").parquet(s"$root/t__atmp")
+    val staged = dataFiles(s"$root/t__atmp").toSeq.sorted
+    assert(staged.size > 3, staged.toString)
+    staged.take(3).foreach { rel =>
+      assert(new File(s"$root/t__atmp/$rel").renameTo(new File(s"$root/t/$rel")))
+    }
+    assert(ids().sorted == (0L until 15L) ++ (200L until 240L))
+    assert(!new File(s"$root/t__atmp").exists)
+    assert(staged.toSet.subsetOf(dataFiles(s"$root/t")))
+
+    // a partitioned append into a table with root data files fails loudly,
+    // before any bytes move
+    wh.write("flat", spark.range(5).select(col("id"), (col("id") % 2).as("k")))
+    val ex = intercept[IllegalStateException] {
+      wh.append("flat", spark.range(5, 6).select(col("id"), (col("id") % 2).as("k")),
+        partitionBy = Seq("k"))
+    }
+    assert(ex.getMessage.contains("mixed layout") &&
+      ex.getMessage.contains("partitionBy = Seq(\"k\")"), ex.getMessage)
+    assert(!new File(s"$root/flat__atmp").exists && wh.read("flat").count() == 5)
+    // ... as do an unpartitioned append into a partitioned table and a
+    // schema that differs from the table's
+    intercept[IllegalStateException] {
+      wh.append("t", spark.range(1).select(col("id"), col("id").as("k")))
+    }
+    intercept[IllegalArgumentException] {
+      wh.append("flat", spark.range(1).select(col("id"), col("id").cast("string").as("k")))
+    }
+    assert(wh.read("flat").count() == 5 && ids().size == 55)
+
+    // truncateAll drops the enriched tables and each table's pending
+    // append: no roll-forward of pre-drop rows into the recreated table
+    wh.append("fact_reviews_enriched", spark.range(3).toDF("id"))
+    spark.range(300, 302).toDF("id").write.parquet(s"$root/fact_reviews_enriched__atmp")
+    wh.truncateAll()
+    assert(!new File(s"$root/fact_reviews_enriched").exists &&
+      !new File(s"$root/fact_reviews_enriched__atmp").exists)
+    wh.append("fact_reviews_enriched", spark.range(7, 8).toDF("id"))
+    assert(wh.read("fact_reviews_enriched").as[Long].collect().toSeq == Seq(7L))
+  }
+
   test("J9 catalog introspection replaces sys.tables/sys.columns queries") {
     Seq((1L, "x")).toDF("id", "v").createOrReplaceTempView("t_cat_probe")
     val tables = spark.catalog.listTables().collect().map(_.name)
