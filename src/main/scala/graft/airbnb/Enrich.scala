@@ -12,7 +12,12 @@ import org.apache.spark.sql.functions._
   *
   * The reference round-trips every row through client-side Python for (2);
   * here both passes are column expressions / a distributed UDF — no driver
-  * data movement at any scale.
+  * data movement at any scale. Like the reference's ALTER + UPDATE-joins,
+  * the columns land in the table they describe: `AirbnbEtl.run` tags
+  * `review_lang` inside the fact_reviews append and adds
+  * `host_country_corrected` as dim_hosts is written. Only the listings
+  * keep a separate enriched table (dim_listings_enriched), since
+  * dim_listings is the MERGE target.
   */
 object Enrich {
 
@@ -33,17 +38,14 @@ object Enrich {
     dimListings.withColumn("is_local_host",
       CleanFns.isLocal(col("host_country_corrected"), col("property_country")))
 
-  /** Full pretreatment: corrected country on hosts + listings, then the flag. */
-  def pretreat(dimListings: DataFrame, dimHosts: DataFrame): (DataFrame, DataFrame) = {
-    val listings = addIsLocalHost(
-      addCorrectedCountry(dimListings, "host_country", "host_country_corrected"))
-    val hosts = addCorrectedCountry(dimHosts, "host_country", "host_country_corrected")
-    (listings, hosts)
-  }
+  /** Listings pretreatment: corrected country, then the flag. */
+  def pretreat(dimListings: DataFrame): DataFrame =
+    addIsLocalHost(addCorrectedCountry(dimListings, "host_country", "host_country_corrected"))
 
   /** U4 — review_lang on non-empty comments (first 100 chars, 'und' default),
     * language_detection.py:56-95; the UPDATE-join writeback (J8) becomes a
-    * plain column add on the immutable table.
+    * column added to the new reviews before they are appended, so each
+    * review is tagged once, in the same file as its row.
     */
   def addReviewLang(factReviews: DataFrame): DataFrame =
     factReviews.withColumn("review_lang",

@@ -99,7 +99,9 @@ object Loaders {
 
   /** dim_hosts (sql/data/02_load_hosts.sql): latest-wins dedup per host (W1)
     * + per-host listing count (A3/J6) — fused into one window pass instead of
-    * the reference's self-join.
+    * the reference's self-join. `AirbnbEtl.run` adds
+    * `host_country_corrected` (`Enrich.addCorrectedCountry`) before the
+    * write, so the stored table has `Schemas.dimHosts`.
     */
   def loadHosts(dimListings: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("host_id")).orderBy(col("updated_date").desc)

@@ -62,7 +62,10 @@ object Schemas {
     StructField("host_name", StringType),
     StructField("host_city", StringType),
     StructField("host_country", StringType),
-    StructField("total_listings", LongType)))
+    StructField("total_listings", LongType),
+    // F12, added as the table is written (pretreatment.py:41-64 ALTERs
+    // it onto the table and fills it)
+    StructField("host_country_corrected", StringType)))
 
   val factCalendar: StructType = StructType(Seq(
     StructField("listing_id", LongType, nullable = false),
@@ -78,6 +81,9 @@ object Schemas {
     StructField("reviewer_id", LongType),
     StructField("reviewer_name", StringType),
     StructField("comments", StringType),
+    // U4, tagged as the row is appended (language_detection.py:35 ALTERs
+    // it onto the table)
+    StructField("review_lang", StringType),
     // physical partition column (SURVEY §4: fact_reviews by review year →
     // dynamic partition pruning on year-ranged reads)
     StructField("review_year", IntegerType)))

@@ -137,21 +137,23 @@ final case class Warehouse(spark: SparkSession, root: String) {
         Warehouse.allNullable(df.schema)): Unit
   }
 
-  /** Crash-safe APPEND for grow-only tables (fact_reviews, its enriched
-    * copy, the id map): only `df`'s rows are written, never the existing
-    * ones. `df` materializes with Spark's committer into the sibling
-    * `name__atmp` dir (same `partitionBy`), then each data file is renamed
-    * to the same relative path under `name/` — part-file names carry the
-    * write job's UUID, so they never collide with earlier appends — and
-    * the staging dir is deleted. A crash before `_SUCCESS` leaves an
-    * incomplete staging dir that [[recover]] drops; a crash while promoting
-    * leaves a complete one that [[recover]] rolls forward, so after
-    * recovery every append is all-or-nothing.
+  /** Crash-safe APPEND for grow-only tables (fact_reviews, each row with
+    * its `review_lang` tag, and the id map): only `df`'s rows are written,
+    * never the existing ones. `df` materializes with Spark's committer into
+    * the sibling `name__atmp` dir (same `partitionBy`), then each data file
+    * is renamed to the same relative path under `name/` — part-file names
+    * carry the write job's UUID, so they never collide with earlier
+    * appends — and the staging dir is deleted. A crash before `_SUCCESS`
+    * leaves an incomplete staging dir that [[recover]] drops; a crash while
+    * promoting leaves a complete one that [[recover]] rolls forward, so
+    * after recovery every append is all-or-nothing.
     *
     * Refused before any bytes move: a partitioned append into a table whose
     * root holds data files (or partition dirs under another column), an
     * unpartitioned append into a partitioned table, and a `df` whose
-    * columns (names and types, in order) differ from the table's.
+    * columns (names and types, in order) differ from the table's — so a
+    * table written in an older layout (a fact_reviews without
+    * `review_lang`) fails loudly instead of mixing file schemas.
     *
     * Each call adds files; a table fed daily grows a few files per
     * partition per day — [[compactSmallFiles]] is the remedy.
@@ -496,8 +498,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** S10 — clear in FK order (facts → dims), like 00_prepare_tables.sql:5-10.
-    * The enriched copies go too: a surviving fact_reviews_enriched would
-    * count every reloaded review as already tagged.
+    * dim_listings_enriched goes too, and so do fact_reviews_enriched and
+    * dim_hosts_enriched: older layouts wrote those full enriched copies
+    * (their columns now live in fact_reviews and dim_hosts), and a truncate
+    * must not leave them behind.
     */
   def truncateAll(): Unit =
     Seq("fact_reviews_enriched", "fact_calendar", "fact_reviews", "dim_listing_id_map",
@@ -621,14 +625,19 @@ final case class Warehouse(spark: SparkSession, root: String) {
         "fact_calendar", "fact_reviews")
 
   /** A6/F16 — the reference's post-load statistics
-    * (modules/data_loader.py:570-578): table → row count. One collect over a
-    * union of 1-row counts, not a count() job pair per table.
+    * (modules/data_loader.py:570-578): table → row count. One grouped count
+    * over the union of the tables' name-tagged rows: one shuffle, where a
+    * union of per-table aggregates shuffles once per table. An empty table
+    * has no group and reports 0.
     */
   def stats(): Map[String, Long] = {
     val present = tableNames.filter(exists)
     if (present.isEmpty) Map.empty
-    else present.map(t => read(t).agg(count(lit(1)).as("n")).select(lit(t).as("t"), col("n")))
-      .reduce(_ unionByName _).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    else {
+      val counts = present.map(t => read(t).select(lit(t).as("t"))).reduce(_ union _)
+        .groupBy("t").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      present.map(t => t -> counts.getOrElse(t, 0L)).toMap
+    }
   }
 
   /** The reference's db-size report (scripts/analysis/db_size_check.py:22-46):

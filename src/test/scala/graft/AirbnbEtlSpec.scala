@@ -72,6 +72,10 @@ class AirbnbEtlSpec extends AnyFunSuite {
   private def reviewIds(wh: Warehouse, table: String): Seq[Long] =
     wh.read(table).select(col("review_id")).collect().map(_.getLong(0)).toSeq.sorted
 
+  private def reviewLangs(wh: Warehouse): Map[Long, String] =
+    wh.read("fact_reviews").collect()
+      .map(r => r.getAs[Long]("review_id") -> r.getAs[String]("review_lang")).toMap
+
   /** Parquet data files under `dir`, as paths relative to it. */
   private def dataFiles(dir: File): Set[String] =
     Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
@@ -129,8 +133,7 @@ class AirbnbEtlSpec extends AnyFunSuite {
   test("reviews: in-batch dedup, bad dates and orphans dropped, lang enrichment") {
     val r = result.wh.read("fact_reviews")
     assert(r.count() == 2) // 5001 (deduped), 5002; 5003 bad date; 5004 orphan
-    val langs = result.wh.read("fact_reviews_enriched")
-      .collect().map(x => x.getAs[Long]("review_id") -> x.getAs[String]("review_lang")).toMap
+    val langs = reviewLangs(result.wh)
     assert(langs(5001L) == "en")
     assert(langs(5002L) == "fr")
   }
@@ -141,6 +144,9 @@ class AirbnbEtlSpec extends AnyFunSuite {
         (r.getAs[String]("host_country_corrected"), r.getAs[Boolean]("is_local_host"))).toMap
     assert(e(101L) == ("France", true))
     assert(e(103L) == ("United States", false))
+    val h = result.wh.read("dim_hosts").collect()
+      .map(r => r.getAs[Long]("host_id") -> r.getAs[String]("host_country_corrected")).toMap
+    assert(h == Map(9001L -> "France", 9002L -> "United States"))
   }
 
   test("views answer the reference's analytical questions (SQL surface)") {
@@ -197,35 +203,76 @@ class AirbnbEtlSpec extends AnyFunSuite {
     assert(sizes.values.forall(_ > 0L), sizes.toString)
   }
 
-  test("rerun appends only the new review and its tag; a lost tag table is rebuilt") {
+  test("rerun appends only the new review, tagged as it lands") {
     val root = java.nio.file.Files.createTempDirectory("graft-wh-rerun").toFile
     assert(runOn(rawDir, root.getPath).stats("fact_reviews") == 2)
-    val before = Seq("fact_reviews", "fact_reviews_enriched")
-      .map(t => t -> dataFiles(new File(root, t))).toMap
+    val before = dataFiles(new File(root, "fact_reviews"))
     val second = runOn(rerunDir, root.getPath)
     assert(second.stats("fact_reviews") == 3)
-    before.foreach { case (t, files) =>
-      val after = dataFiles(new File(root, t))
-      assert(files.nonEmpty && files.subsetOf(after), s"$t: $files not all in $after")
-    }
+    val after = dataFiles(new File(root, "fact_reviews"))
+    assert(before.nonEmpty && before.subsetOf(after), s"$before not all in $after")
     assert(reviewIds(second.wh, "fact_reviews") == Seq(5001L, 5002L, 5005L))
-    assert(reviewIds(second.wh, "fact_reviews_enriched") == Seq(5001L, 5002L, 5005L))
-    // the catch-up path: with the tag table gone, the rerun tags every review
-    org.apache.commons.io.FileUtils.deleteDirectory(new File(root, "fact_reviews_enriched"))
-    val third = runOn(rerunDir, root.getPath)
-    val langs = third.wh.read("fact_reviews_enriched").collect()
-      .map(r => r.getAs[Long]("review_id") -> r.getAs[String]("review_lang")).toMap
-    assert(langs == Map(5001L -> "en", 5002L -> "fr", 5005L -> "en"))
-    assert(AirbnbEtl.validate(third.wh).values.forall(_ == 0L))
+    assert(reviewLangs(second.wh) == Map(5001L -> "en", 5002L -> "fr", 5005L -> "en"))
+    assert(AirbnbEtl.validate(second.wh).values.forall(_ == 0L))
   }
 
   test("truncateAll drops the enriched tables: a reload tags exactly fact_reviews") {
     val root = java.nio.file.Files.createTempDirectory("graft-wh-trunc").toFile.getPath
     runOn(rawDir, root).wh.truncateAll()
-    // the reload's feed lacks 5001: a surviving tag table would keep it
+    // the reload's feed lacks 5001: a surviving table would keep it
     val reload = runOn(rerunDir, root)
-    assert(reviewIds(reload.wh, "fact_reviews") == Seq(5002L, 5005L))
-    assert(reviewIds(reload.wh, "fact_reviews_enriched") == Seq(5002L, 5005L))
+    val langs = reviewLangs(reload.wh)
+    assert(langs.keys.toSeq.sorted == Seq(5002L, 5005L))
+    assert(langs.values.forall(_ != null), langs.toString)
+  }
+
+  test("a fact_reviews without review_lang fails the next run before any file moves") {
+    val root = java.nio.file.Files.createTempDirectory("graft-wh-oldlayout").toFile
+    val wh = runOn(rawDir, root.getPath).wh
+    // the previous layout: review facts without the language tag
+    wh.write("fact_reviews", wh.read("fact_reviews").drop("review_lang"),
+      partitionBy = Seq("review_year"))
+    val before = dataFiles(new File(root, "fact_reviews"))
+    val ex = intercept[IllegalArgumentException](runOn(rerunDir, root.getPath))
+    assert(ex.getMessage.contains("append(fact_reviews): schema"), ex.getMessage)
+    assert(dataFiles(new File(root, "fact_reviews")) == before)
+    assert(!new File(root, "fact_reviews__atmp").exists)
+    // the one-time fix the README names, after which the run proceeds
+    wh.write("fact_reviews", Enrich.addReviewLang(wh.read("fact_reviews")),
+      partitionBy = Seq("review_year"))
+    val fixed = runOn(rerunDir, root.getPath)
+    assert(reviewIds(fixed.wh, "fact_reviews") == Seq(5001L, 5002L, 5005L))
+    assert(AirbnbEtl.validate(fixed.wh).values.forall(_ == 0L))
+  }
+
+  test("validate reports exactly one of each planted violation") {
+    val wh = Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-wh-audit").toFile.getPath)
+    import spark.implicits._
+    // listing ids: 1 duplicated, one NULL
+    wh.write("dim_listings", Seq(Some(1L), Some(1L), Some(2L), None).toDF("listing_id"))
+    // one calendar row for a listing that does not exist
+    wh.write("fact_calendar", Seq(1L, 2L, 99L).toDF("listing_id"))
+    // review ids: 10 duplicated, one NULL; review 13 is an orphan; review 12
+    // has a comment but no tag (empty and NULL comments need none)
+    wh.write("fact_reviews", Seq[(Option[Long], Long, String, String)](
+      (Some(10L), 1L, "great stay", "en"), (Some(10L), 1L, "great stay", "en"),
+      (None, 2L, "", null), (Some(11L), 2L, null, null),
+      (Some(12L), 2L, "calme et belle", null), (Some(13L), 99L, "ok", "en"))
+      .toDF("review_id", "listing_id", "comments", "review_lang"))
+    assert(AirbnbEtl.validate(wh) == Map(
+      "dup_listing_pk" -> 1L, "null_listing_pk" -> 1L,
+      "dup_review_pk" -> 1L, "null_review_pk" -> 1L,
+      "orphan_calendar_rows" -> 1L, "orphan_review_rows" -> 1L,
+      "reviews_lang_untagged" -> 1L))
+  }
+
+  test("stats counts every present table in one grouped count; an empty one is 0") {
+    val wh = Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-wh-stats").toFile.getPath)
+    wh.write("dim_listings", spark.range(3).toDF("listing_id"))
+    wh.write("fact_calendar", spark.range(0).toDF("listing_id"))
+    assert(wh.stats() == Map("dim_listings" -> 3L, "fact_calendar" -> 0L))
   }
 
   test("O4 sample cap activates only above the row threshold") {
