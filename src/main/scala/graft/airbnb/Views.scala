@@ -3,9 +3,9 @@ package graft.airbnb
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The three analytical views (A2, sql/schema/03_create_views.sql) in both
-  * surfaces the reference exposes: SQL text (registered over catalog temp
-  * views) and the DataFrame API.
+/** The three analytical views (A2, sql/schema/03_create_views.sql) as
+  * DataFrames; [[register]] exposes the same frames as catalog temp views
+  * for the reference's SQL surface.
   *
   * All three are single hash-aggregates over dim_listings — at scale they
   * are one shuffle each on their grouping keys, with partial aggregation
@@ -39,33 +39,14 @@ object Views {
            count(lit(1)).as("total_listings"),
            avg(col("price")).as("avg_price"))
 
-  /** SQL surface: registers dim_listings and the three views as temp views
-    * so `spark.sql("SELECT * FROM vw_neighborhood_performance")` works.
+  /** SQL surface: registers dim_listings and the three views above as temp
+    * views, so `spark.sql("SELECT * FROM vw_neighborhood_performance")`
+    * runs the same DataFrame code the API callers do.
     */
   def register(spark: SparkSession, dimListings: DataFrame): Unit = {
     dimListings.createOrReplaceTempView("dim_listings")
-    spark.sql("""
-      CREATE OR REPLACE TEMPORARY VIEW vw_local_foreign_analysis AS
-      SELECT property_country, property_city, latitude, longitude, is_local_host,
-             COUNT(*) AS total_listings, AVG(price) AS avg_price,
-             AVG(review_scores_rating) AS avg_rating,
-             SUM(number_of_reviews) AS total_reviews
-      FROM dim_listings
-      GROUP BY property_country, property_city, latitude, longitude, is_local_host""")
-    spark.sql("""
-      CREATE OR REPLACE TEMPORARY VIEW vw_neighborhood_performance AS
-      SELECT property_country, property_city, property_neighbourhood, latitude, longitude,
-             COUNT(*) AS listing_count, AVG(price) AS avg_price,
-             AVG(review_scores_rating) AS avg_rating,
-             AVG(number_of_reviews) AS avg_reviews
-      FROM dim_listings
-      GROUP BY property_country, property_city, property_neighbourhood, latitude, longitude""")
-    spark.sql("""
-      CREATE OR REPLACE TEMPORARY VIEW vw_host_activity AS
-      SELECT host_country, host_city, latitude, longitude,
-             COUNT(DISTINCT host_id) AS unique_hosts,
-             COUNT(*) AS total_listings, AVG(price) AS avg_price
-      FROM dim_listings
-      GROUP BY host_country, host_city, latitude, longitude""")
+    localForeignAnalysis(dimListings).createOrReplaceTempView("vw_local_foreign_analysis")
+    neighborhoodPerformance(dimListings).createOrReplaceTempView("vw_neighborhood_performance")
+    hostActivity(dimListings).createOrReplaceTempView("vw_host_activity")
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   */
 final case class Warehouse(spark: SparkSession, root: String) {
 
-  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.{FileSystem, Path}
 
   private def path(name: String) = s"$root/$name"
 
@@ -21,7 +21,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** Spark's committer leaves _SUCCESS when (and only when) a write job
     * completed — the marker that a __tmp directory is safe to promote.
     */
-  private def isComplete(f: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
+  private def isComplete(f: FileSystem, p: Path): Boolean =
     f.exists(new Path(p, "_SUCCESS"))
 
   /** Finish or undo a swap interrupted by a crash. States (dest, __tmp, __old):
@@ -97,12 +97,31 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
+  /** The one directory swap: `staged` replaces `dest`, whose previous
+    * version is parked at `park` until the promote rename succeeds (a failed
+    * promote rolls the park back). Never delete-before-rename, so every
+    * crash point leaves the previous rows at `dest` or `park`, where
+    * [[recover]] finds them. A park present on entry is a completed swap's
+    * stray: recover() ran first and rolled back any park holding live rows.
+    */
+  private def swapIn(f: FileSystem, staged: Path, dest: Path, park: Path,
+                     what: String): Unit = {
+    if (f.exists(park)) f.delete(park, true)
+    if (f.exists(dest) && !f.rename(dest, park))
+      throw new java.io.IOException(s"swap: park failed for $what")
+    if (!f.rename(staged, dest)) {
+      if (f.exists(park)) f.rename(park, dest) // roll back
+      throw new java.io.IOException(s"swap failed for $what")
+    }
+    if (f.exists(park)) f.delete(park, true)
+  }
+
   /** Write-to-temp-then-swap: upserts read the current table while producing
     * its replacement, and Spark (correctly) refuses to overwrite a path it is
     * reading from — so materialize beside it, then swap via the Hadoop
     * FileSystem API (HDFS/object-store paths included; plain java.io.File
-    * would silently corrupt non-local roots). The previous version is parked
-    * at __old until the new one is in place, so every crash point is
+    * would silently corrupt non-local roots). [[swapIn]] parks the previous
+    * version at __old until the new one is in place, so every crash point is
     * recoverable by [[recover]] — no delete-before-rename data-loss window.
     * NOTE: rename is atomic on HDFS/local; on S3-style stores it is
     * copy+delete — still recoverable here via the _SUCCESS-gated roll-forward,
@@ -113,15 +132,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val tmpStr = path(name) + "__tmp"
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmpStr)
-    val dest = new Path(path(name)); val f = fs(dest)
-    val tmp = new Path(tmpStr); val old = new Path(path(name) + "__old")
-    if (f.exists(dest) && !f.rename(dest, old))
-      throw new java.io.IOException(s"swap: park failed for $name")
-    if (!f.rename(tmp, dest)) {
-      if (f.exists(old)) f.rename(old, dest) // roll back
-      throw new java.io.IOException(s"swap failed for $name")
-    }
-    if (f.exists(old)) f.delete(old, true)
+    val dest = new Path(path(name))
+    swapIn(fs(dest), new Path(tmpStr), dest, new Path(path(name) + "__old"), name)
     invalidateListings(name)
     // write-time schema capture, UNPARTITIONED tables only: the on-disk
     // schema is exactly df's, so the first read-back skips its footer
@@ -161,12 +173,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
     recover(name)
     val base = new Path(path(name)); val f = fs(base)
-    if (partitionBy.nonEmpty) requirePartitionedLayout(f, base, name, partitionBy.head, "append")
-    else if (f.exists(base))
-      f.listStatus(base).find(st => st.isDirectory && st.getPath.getName.contains("="))
-        .foreach(st => throw new IllegalStateException(
-          s"append($name): table is partitioned ('${st.getPath.getName}'); pass " +
-          s"its partitionBy — root data files beside partition dirs break discovery."))
+    requireLayout(f, base, name, partitionBy.headOption, "append")
     val existed = hasData(name)
     if (existed) {
       // names and types, in order; not nullability (footer inference reads
@@ -199,8 +206,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * already moved by an interrupted earlier promote are no longer there,
     * so a roll-forward moves exactly the rest.
     */
-  private def promoteAppend(name: String, f: org.apache.hadoop.fs.FileSystem,
-                            staging: Path): Unit = {
+  private def promoteAppend(name: String, f: FileSystem, staging: Path): Unit = {
     val base = new Path(path(name))
     def move(dir: Path, rel: String): Unit = f.listStatus(dir).foreach { st =>
       val n = st.getPath.getName
@@ -248,79 +254,78 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
+  /** Refuse a write whose layout does not match the table's, before any
+    * bytes move. With `partCol` (a per-partition write or a partitioned
+    * append): a table root that holds data FILES (the [[write]] layout) or
+    * partition dirs under a DIFFERENT column — root-level files beside
+    * `partCol=` dirs break partition discovery on every later read
+    * (CONFLICTING_PARTITION_COLUMN_NAMES / silently missing rows), and the
+    * mix is only detectable at read time. A table that needs a whole-table
+    * rewrite while staying partitioned (the periodic re-cap maintenance
+    * shape, e.g. persisting Dedup.compactAnchorIndex output) must go through
+    * `write(name, df, partitionBy = Seq(partCol))`, which preserves the
+    * layout — after which per-partition writes remain valid. Without
+    * `partCol` (an unpartitioned append): a table that has partition dirs.
+    */
+  private def requireLayout(f: FileSystem, base: Path, name: String,
+                            partCol: Option[String], op: String): Unit =
+    if (f.exists(base)) f.listStatus(base).foreach { st =>
+      val n = st.getPath.getName
+      val hidden = n.startsWith("_") || n.startsWith(".")
+      partCol match {
+        case Some(c) =>
+          if (st.isFile && !hidden)
+            throw new IllegalStateException(
+              s"$op($name): table root holds data file '$n' (the " +
+              s"whole-table write() layout); a partition write would create a " +
+              s"mixed layout that breaks partition discovery. Rewrite once via " +
+              s"write(name, df, partitionBy = Seq(\"$c\")) first.")
+          if (st.isDirectory && n.contains("=") && !n.startsWith(c + "=") && !hidden)
+            throw new IllegalStateException(
+              s"$op($name): table is partitioned by '${n.takeWhile(_ != '=')}', " +
+              s"not '$c' — one table, one partition column.")
+        case None =>
+          if (st.isDirectory && n.contains("="))
+            throw new IllegalStateException(
+              s"$op($name): table is partitioned ('$n'); pass its partitionBy — " +
+              s"root data files beside partition dirs break discovery.")
+      }
+    }
+
+  /** The per-partition writers' setup: heal, refuse a mixed layout, mkdirs. */
+  private def partitionedRoot(name: String, partCol: String): (FileSystem, Path) = {
+    recover(name)
+    val base = new Path(path(name)); val f = fs(base)
+    requireLayout(f, base, name, Some(partCol), "writePartition")
+    f.mkdirs(base)
+    (f, base)
+  }
+
   /** Idempotent PER-PARTITION write: lands `df` as the single
     * `partCol=partValue` partition directory of `name`, leaving every
     * other partition untouched — the APPEND shape for grow-only tables
     * (streaming gates' per-batch vector/index appends), where [[write]]'s
     * whole-table swap would rewrite O(table) bytes per batch. The
-    * partition is written to an underscore-prefixed temp dir (invisible
-    * to readers — FileInputFormat skips `_`/`.` paths), then swapped in;
-    * a replay of the same `partValue` overwrites the same partition, so
-    * the foreachBatch replay contract holds without any groupBy-dedupe
-    * pass. Readers go through [[read]] as usual: partition discovery
-    * re-attaches `partCol` from the directory names.
+    * partition is written to the sibling dir `name__ptmp_<part>`, then
+    * swapped in ([[swapIn]], parked at `name__pold_<part>`); a replay of
+    * the same `partValue` overwrites the same partition, so the
+    * foreachBatch replay contract holds without any groupBy-dedupe pass.
+    * Readers go through [[read]] as usual: partition discovery re-attaches
+    * `partCol` from the directory names.
     */
-  /** Refuse a per-partition write into a table whose root holds data FILES
-    * (the [[write]] layout) or partition dirs under a DIFFERENT column:
-    * root-level files beside `partCol=` dirs break partition discovery on
-    * every later read (CONFLICTING_PARTITION_COLUMN_NAMES / silently
-    * missing rows), and the mix is only detectable at read time. A table
-    * that needs a whole-table rewrite while staying partitioned (the
-    * periodic re-cap maintenance shape, e.g. persisting
-    * Dedup.compactAnchorIndex output) must go through
-    * `write(name, df, partitionBy = Seq(partCol))`, which preserves the
-    * layout — after which per-partition writes remain valid.
-    */
-  private def requirePartitionedLayout(f: org.apache.hadoop.fs.FileSystem,
-                                       base: Path, name: String,
-                                       partCol: String, op: String = "writePartition"): Unit = {
-    if (!f.exists(base)) return
-    f.listStatus(base).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith("."))
-        throw new IllegalStateException(
-          s"$op($name): table root holds data file '$n' (the " +
-          s"whole-table write() layout); a partition write would create a " +
-          s"mixed layout that breaks partition discovery. Rewrite once via " +
-          s"write(name, df, partitionBy = Seq(\"$partCol\")) first.")
-      if (st.isDirectory && n.contains("=") && !n.startsWith(partCol + "=") &&
-          !n.startsWith("_") && !n.startsWith("."))
-        throw new IllegalStateException(
-          s"$op($name): table is partitioned by '${n.takeWhile(_ != '=')}', " +
-          s"not '$partCol' — one table, one partition column.")
-    }
-  }
-
   def writePartition(name: String, partCol: String, partValue: Long,
                      df: DataFrame): Unit = {
-    recover(name)
-    val base = new Path(path(name)); val f = fs(base)
-    requirePartitionedLayout(f, base, name, partCol)
-    f.mkdirs(base)
+    val (f, base) = partitionedRoot(name, partCol)
     val part = s"$partCol=$partValue"
-    val dest = new Path(base, part)
     // temp and park dirs live OUTSIDE the table root as siblings: a dir
     // inside the root that contains data files participates in partition
     // DISCOVERY regardless of an underscore prefix (a parked
     // `__old_batch_id=2` raised CONFLICTING_PARTITION_COLUMN_NAMES, and a
     // mid-write temp would race readers the same way)
     val tmp = new Path(path(name) + s"__ptmp_$part")
-    val old = new Path(path(name) + s"__pold_$part")
-    // stray park from an earlier crash of THIS partition: the replay that
-    // reaches here rewrites the partition anyway, so the park is obsolete
-    if (f.exists(old)) f.delete(old, true)
     df.drop(partCol).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // park-then-promote, never delete-before-rename (the write() swap
-    // discipline): every crash window leaves the previous rows on disk —
-    // either still at dest, or parked at the reader-invisible __old_ dir —
-    // and a rename failure rolls the park back
-    if (f.exists(dest) && !f.rename(dest, old))
-      throw new java.io.IOException(s"partition swap: park failed for $name/$part")
-    if (!f.rename(tmp, dest)) {
-      if (f.exists(old)) f.rename(old, dest) // roll back
-      throw new java.io.IOException(s"partition swap failed for $name/$part")
-    }
-    if (f.exists(old)) f.delete(old, true)
+    swapIn(f, tmp, new Path(base, part), new Path(path(name) + s"__pold_$part"),
+      s"$name/$part")
     invalidateListings(name)
   }
 
@@ -332,52 +337,39 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * bytes per batch and [[writePartition]] can only append one new value.
     * One write job materializes all partitions into a sibling temp dir
     * (partition values become directory names via partitionBy), then each
-    * partition dir swaps in through the same park-then-promote discipline
-    * as [[writePartition]] — every crash window leaves each INDIVIDUAL
-    * partition either fully old or fully new, never mixed, so a caller
-    * that stamps rows with the writing batch can detect and skip
-    * already-committed partitions on replay (per-partition idempotence).
-    * Returns the partition directory names written.
+    * partition dir swaps in through [[swapIn]] — every crash window leaves
+    * each INDIVIDUAL partition either fully old or fully new, never mixed,
+    * so a caller that stamps rows with the writing batch can detect and
+    * skip already-committed partitions on replay (per-partition
+    * idempotence). Returns the partition directory names written.
     */
   def writePartitions(name: String, partCol: String, df: DataFrame): Seq[String] = {
-    recover(name)
-    val base = new Path(path(name)); val f = fs(base)
-    requirePartitionedLayout(f, base, name, partCol)
-    f.mkdirs(base)
+    val (f, base) = partitionedRoot(name, partCol)
     val tmpRoot = new Path(path(name) + "__ptmp_multi")
     if (f.exists(tmpRoot)) f.delete(tmpRoot, true)
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmpRoot.toString)
-    val parts = f.listStatus(tmpRoot).filter { st =>
-      st.isDirectory && st.getPath.getName.startsWith(partCol + "=")
-    }
-    parts.foreach { st =>
-      val part = st.getPath.getName
-      val dest = new Path(base, part)
-      val old = new Path(path(name) + s"__pold_$part")
-      // stray park from an earlier crash of THIS partition: obsolete — the
-      // replay that reaches here rewrites the partition anyway
-      if (f.exists(old)) f.delete(old, true)
-      if (f.exists(dest) && !f.rename(dest, old))
-        throw new java.io.IOException(s"partition swap: park failed for $name/$part")
-      if (!f.rename(st.getPath, dest)) {
-        if (f.exists(old)) f.rename(old, dest) // roll back
-        throw new java.io.IOException(s"partition swap failed for $name/$part")
-      }
-      if (f.exists(old)) f.delete(old, true)
+    val parts = f.listStatus(tmpRoot).map(_.getPath.getName)
+      .filter(_.startsWith(partCol + "=")).toSeq
+    parts.foreach { part =>
+      swapIn(f, new Path(tmpRoot, part), new Path(base, part),
+        new Path(path(name) + s"__pold_$part"), s"$name/$part")
     }
     f.delete(tmpRoot, true)
     invalidateListings(name)
-    parts.map(_.getPath.getName).toSeq
+    parts
   }
 
   /** (beyond ref) §2.11 maintenance — small-files compaction. Streaming
-    * sinks, incremental upserts, and over-parallel writes leave tables as
-    * thousands of KB-sized parquet files; at cluster scale that means a
-    * task (and an object-store request) per tiny file on every read. When
-    * the table's average data-file size falls below `targetBytes / 2`,
-    * rewrite it into ceil(totalBytes / targetBytes) files through the same
-    * crash-recoverable swap as [[write]] (a crash mid-compaction can
-    * never lose the table).
+    * sinks, incremental upserts, appends and over-parallel writes leave
+    * tables as thousands of KB-sized parquet files; at cluster scale that
+    * means a task (and an object-store request) per tiny file on every
+    * read. Each unit — every partition dir of a partitioned table, else the
+    * table root — whose average data-file size falls below
+    * `targetBytes / 2` is rewritten into ceil(totalBytes / targetBytes)
+    * files and swapped in through [[swapIn]] (a crash mid-compaction can
+    * never lose the table). A partitioned table is compacted per partition
+    * so its layout survives: a whole-table rewrite would flatten the
+    * partition column into root-level data files.
     *
     * Returns the data-file count after the call (unchanged when healthy —
     * the rewrite is skipped, not repeated, so scheduled compaction is
@@ -386,6 +378,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def compactSmallFiles(name: String, targetBytes: Long = 128L << 20): Int = {
     recover(name)
     val dir = new Path(path(name)); val f = fs(dir)
+    if (!f.exists(dir)) return 0
     def dataFilesUnder(root: Path) = {
       val it = f.listFiles(root, true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
@@ -395,53 +388,35 @@ final case class Warehouse(spark: SparkSession, root: String) {
       }
       buf.toSeq
     }
-    if (!f.exists(dir)) return 0
-    // a PARTITIONED table (the writePartition layout) compacts each
-    // partition directory IN PLACE: the whole-table path below would
-    // rewrite it unpartitioned — flattening the partition column into
-    // root-level data files, so the next writePartition would produce a
-    // mixed layout that breaks partition discovery on every later read
-    val partDirs = f.listStatus(dir).filter { st =>
+    // (partition dir name or "" for the root, staging suffix, park suffix):
+    // both dirs are siblings of the table root that recover() heals (see
+    // writePartition — in-root dirs join partition discovery)
+    val parts = f.listStatus(dir).filter { st =>
       val n = st.getPath.getName
       st.isDirectory && n.contains("=") && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (partDirs.nonEmpty) {
-      partDirs.foreach { pd =>
-        val files = dataFilesUnder(pd.getPath)
-        if (files.length > 1) {
-          val total = files.map(_.getLen).sum
-          if (total / files.length < targetBytes / 2) {
-            val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-            // sibling temp/park dirs, outside the table root (see
-            // writePartition — in-root dirs join partition discovery)
-            val tmp = new Path(path(name) + s"__ptmp_${pd.getPath.getName}")
-            spark.read.parquet(pd.getPath.toString).coalesce(nOut)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-            val old = new Path(path(name) + s"__pold_${pd.getPath.getName}")
-            if (f.exists(old)) f.delete(old, true)
-            if (!f.rename(pd.getPath, old))
-              throw new java.io.IOException(s"compaction park failed: ${pd.getPath}")
-            if (!f.rename(tmp, pd.getPath)) {
-              f.rename(old, pd.getPath) // roll back
-              throw new java.io.IOException(s"compaction swap failed: ${pd.getPath}")
-            }
-            f.delete(old, true)
-          }
-        }
+    }.map(_.getPath.getName).toSeq
+    val units = if (parts.isEmpty) Seq(("", "__tmp", "__old"))
+                else parts.map(p => (p, s"__ptmp_$p", s"__pold_$p"))
+    var swapped = false
+    units.foreach { case (part, staged, park) =>
+      val live = if (part.isEmpty) dir else new Path(dir, part)
+      val files = dataFilesUnder(live)
+      val total = files.map(_.getLen).sum
+      if (files.length > 1 && total / files.length < targetBytes / 2) {
+        val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
+        // the root reads through read(), whose cached schema skips a footer
+        // job; coalesce, not repartition: compaction must not pay a
+        // shuffle — merging co-located small files is a narrow dependency
+        val src = if (part.isEmpty) read(name) else spark.read.parquet(live.toString)
+        val tmp = new Path(path(name) + staged)
+        src.coalesce(nOut).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        swapIn(f, tmp, live, new Path(path(name) + park), s"$name/$part".stripSuffix("/"))
+        swapped = true
       }
-      return dataFilesUnder(dir).length
     }
-    val files = dataFilesUnder(dir)
-    if (files.isEmpty) return 0
-    val total = files.map(_.getLen).sum
-    val avg = total / files.length
-    if (files.length > 1 && avg < targetBytes / 2) {
-      val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-      // coalesce, not repartition: compaction must not pay a shuffle —
-      // merging co-located small files is a narrow dependency
-      write(name, read(name).coalesce(nOut))
-      dataFilesUnder(dir).length
-    } else files.length
+    // the schema is unchanged, so only the file listing goes stale
+    if (swapped) spark.catalog.refreshByPath(path(name))
+    dataFilesUnder(dir).length
   }
 
   def readOrEmpty(name: String, schema: StructType): DataFrame = {
@@ -471,29 +446,19 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val p = new Path(path(name)); fs(p).exists(p)
   }
 
-  /** Remove a table AND its __tmp/__old/__atmp strays: leaving strays would
-    * let a later recover() roll the dropped table FORWARD from a pre-drop
-    * __tmp, or promote a pre-drop append into a recreated table. The one
-    * shared deletion path for every truncate-like operation.
+  /** Remove a table AND every swap stray beside it — `__tmp`, `__old`,
+    * `__atmp` and the per-partition `__ptmp_*` / `__pold_*` siblings:
+    * leaving strays would let a later recover() roll the dropped table
+    * FORWARD from a pre-drop __tmp, roll a pre-drop partition park back, or
+    * promote a pre-drop append into a recreated table. The one shared
+    * deletion path for every truncate-like operation.
     */
   private def dropTable(name: String): Unit = {
     Warehouse.schemaCache.remove(path(name))
-    Seq(path(name), path(name) + "__tmp", path(name) + "__old",
-        path(name) + "__atmp").foreach { s =>
-      val p = new Path(s); val f = fs(p)
-      if (f.exists(p)) f.delete(p, true)
-    }
-    // per-partition swap strays ([[writePartition]]/compaction siblings:
-    // name__ptmp_* / name__pold_*) — a dropped table must not leave them
-    val tableDir = new Path(path(name)); val f = fs(tableDir)
-    val parent = tableDir.getParent
-    if (parent != null && f.exists(parent)) {
-      val base = tableDir.getName
-      f.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(base + "__ptmp_") || n.startsWith(base + "__pold_"))
-          f.delete(st.getPath, true)
-      }
+    val f = fs(new Path(path(name)))
+    Seq("", "__tmp", "__old", "__atmp", "__ptmp_*", "__pold_*").foreach { s =>
+      Option(f.globStatus(new Path(path(name) + s))).toSeq.flatten
+        .foreach(st => f.delete(st.getPath, true))
     }
   }
 

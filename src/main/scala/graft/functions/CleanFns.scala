@@ -23,10 +23,6 @@ object CleanFns {
   def priceClean(c: Column): Column =
     regexp_replace(wsTrim(c), "[$,\r]", "").try_cast(DecimalType(10, 2))
 
-  /** F2 — NULL-on-failure cast (reference TRY_CAST, modules/data_loader.py:253-267). */
-  def tryCastLong(c: Column): Column = c.try_cast(LongType)
-  def tryCastDate(c: Column): Column = c.try_cast(DateType)
-
   /** F3 — Monday week start / Sunday week end.
     * Reference: DATEADD(wk, DATEDIFF(wk, 0, d), 0) in
     * /root/reference/sql/data/04_load_calendar.sql:28-29 (epoch 1900-01-01 is

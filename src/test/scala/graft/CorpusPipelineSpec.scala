@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.{persisted, persistedSince}
 import graft.operators.CorpusPipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,13 +134,13 @@ class CorpusPipelineSpec extends AnyFunSuite {
   test("Result.unpersist releases the pipeline's cached stage") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
       .select($"doc_id", $"text").limit(100)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
     val r = CorpusPipeline.prepare(docs, "doc_id", "text",
       CorpusPipeline.Config(minTokens = 5))
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
+    assert(persistedSince(before) > 0,
       "prepare() no longer persists its survivor stage — test is vacuous")
     r.unpersist()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert(persistedSince(before) == 0,
       "unpersist() left the survivor stage cached (round-4 warm-slower-than-cold leak)")
   }
 
@@ -155,17 +156,17 @@ class CorpusPipelineSpec extends AnyFunSuite {
   test("withPrepared loan releases the cache even when the body throws") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
       .select($"doc_id", $"text").limit(100)
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
     val n = CorpusPipeline.withPrepared(docs, "doc_id", "text",
       CorpusPipeline.Config(minTokens = 5))(_.corpus.count())
     assert(n > 0)
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert(persistedSince(before) == 0,
       "withPrepared leaked the survivor stage on the normal path")
     intercept[RuntimeException] {
       CorpusPipeline.withPrepared(docs, "doc_id", "text",
         CorpusPipeline.Config(minTokens = 5)) { _ => throw new RuntimeException("boom") }
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    assert(persistedSince(before) == 0,
       "withPrepared leaked the survivor stage on the exception path")
   }
 }

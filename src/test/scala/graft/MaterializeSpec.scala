@@ -1,17 +1,17 @@
 package graft
 
+import graft.TestSpark.{persisted, persistedSince}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The lifetime rule of [[Materialize]]: a scope frees the frames made on
   * its thread while it was open — on return and on throw — and nothing
-  * else. Storage is observed through the context's persistent-RDD count.
+  * else. Storage is observed through the ids of the context's persisted RDDs.
   */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def persisted = spark.sparkContext.getPersistentRDDs.size
   private def frame(n: Int) = spark.range(n).selectExpr("id", "id * 2 AS v")
 
   test("a scope frees its eager and lazily frames on return") {
@@ -20,11 +20,11 @@ class MaterializeSpec extends AnyFunSuite {
       val e = Materialize.eager(frame(10))
       val l = Materialize.lazily(frame(20))
       val rows = e.count() + l.count()
-      assert(persisted == before + 2, "both frames should be stored inside the scope")
+      assert(persistedSince(before) == 2, "both frames should be stored inside the scope")
       rows
     }
     assert(n == 30)
-    assert(persisted == before, "the scope left frames stored on return")
+    assert(persistedSince(before) == 0, "the scope left frames stored on return")
   }
 
   test("a scope frees its eager and lazily frames on throw") {
@@ -33,11 +33,11 @@ class MaterializeSpec extends AnyFunSuite {
       Materialize.scope {
         Materialize.eager(frame(10))
         Materialize.lazily(frame(20)).count()
-        assert(persisted == before + 2)
+        assert(persistedSince(before) == 2)
         throw new IllegalStateException("boom")
       }
     }
-    assert(persisted == before, "the scope left frames stored on throw")
+    assert(persistedSince(before) == 0, "the scope left frames stored on throw")
   }
 
   test("a nested scope frees only its own frames") {
@@ -47,12 +47,12 @@ class MaterializeSpec extends AnyFunSuite {
       Materialize.scope {
         Materialize.eager(frame(30))
         Materialize.lazily(frame(40)).count()
-        assert(persisted == before + 3)
+        assert(persistedSince(before) == 3)
       }
-      assert(persisted == before + 1, "the inner scope must free exactly its two frames")
+      assert(persistedSince(before) == 1, "the inner scope must free exactly its two frames")
       assert(outer.count() == 10, "the outer frame must still be readable")
     }
-    assert(persisted == before)
+    assert(persistedSince(before) == 0)
   }
 
   test("a frame made outside any scope is untouched by a scope that closes later") {
@@ -60,10 +60,10 @@ class MaterializeSpec extends AnyFunSuite {
     val free = Materialize.eager(frame(10))
     try {
       Materialize.scope(Materialize.eager(frame(20)).count())
-      assert(persisted == before + 1, "the scope freed a frame it did not make")
+      assert(persistedSince(before) == 1, "the scope freed a frame it did not make")
       assert(free.count() == 10)
     } finally Materialize.release(free)
-    assert(persisted == before)
+    assert(persistedSince(before) == 0)
   }
 
   test("graphTopK in a scope leaves nothing persisted, the future's graph checkpoint included") {
@@ -79,11 +79,11 @@ class MaterializeSpec extends AnyFunSuite {
           entryK = 1, beam = 2, hops = 4, k = 1)
         .select(col("c_id")).collect().head.getLong(0)
       // the graph checkpoint (built on a future) and the entry beam
-      assert(persisted >= before + 2, "graphTopK no longer materializes — test is vacuous")
+      assert(persistedSince(before) >= 2, "graphTopK no longer materializes — test is vacuous")
       r
     }
     assert(top == 5L)
-    assert(persisted == before, "graphTopK's checkpoints outlived the scope")
+    assert(persistedSince(before) == 0, "graphTopK's checkpoints outlived the scope")
   }
 
   test("lint: no materialization outside Materialize.scala") {

@@ -333,6 +333,39 @@ class WarehouseSpec extends AnyFunSuite {
     assert(wh.read("fact_reviews_enriched").as[Long].collect().toSeq == Seq(7L))
   }
 
+  test("compaction after appends shrinks each partition and keeps appends valid") {
+    import java.io.File
+    val root = java.nio.file.Files.createTempDirectory("wh-append-compact").toString
+    val wh = Warehouse(spark, root)
+    // two tasks per batch, each seeing both years: every append adds two
+    // files to each partition
+    def batch(lo: Long) = spark.range(lo, lo + 40).repartition(2)
+      .select(col("id"), (col("id") % 3).as("v"), (col("id") % 2 + 2023).as("review_year"))
+    def append(lo: Long) = wh.append("t", batch(lo), partitionBy = Seq("review_year"))
+    def filesPerPartition() = new File(s"$root/t").listFiles().filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    def rows() = wh.read("t").select(col("id"), col("v"), col("review_year").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    Seq(0L, 100L, 200L).foreach(append)
+    val before = filesPerPartition()
+    val rowsBefore = rows()
+    assert(before.keySet == Set("review_year=2023", "review_year=2024"), before)
+    assert(before.values.forall(_ > 1), s"fixture should be fragmented: $before")
+    wh.compactSmallFiles("t", targetBytes = 512L << 20)
+    val after = filesPerPartition()
+    assert(after.keySet == before.keySet)
+    before.foreach { case (p, n) => assert(after(p) < n, s"$p not compacted: $after") }
+    assert(rows() == rowsBefore && rowsBefore.size == 120)
+    assert(!new File(s"$root/t").listFiles().exists(_.isFile),
+      "compaction left a root-level file")
+    val strays = new File(root).list().filter(n => Seq("t__ptmp_", "t__pold_", "t__tmp")
+      .exists(n.startsWith))
+    assert(strays.isEmpty, strays.mkString(", "))
+    // a fourth append passes the schema and layout checks on the compacted table
+    append(300L)
+    assert(rows().size == 160)
+  }
+
   test("J9 catalog introspection replaces sys.tables/sys.columns queries") {
     Seq((1L, "x")).toDF("id", "v").createOrReplaceTempView("t_cat_probe")
     val tables = spark.catalog.listTables().collect().map(_.name)
