@@ -105,37 +105,47 @@ object AirbnbEtl {
     * language-progress row counts rows still awaiting detection, like
     * scripts/debug/check_language_detection_progress.py:29-37).
     *
-    * One aggregate per scanned relation — dim_listings (dup + null keys),
-    * fact_reviews (dup + null keys + untagged comments) and each orphan
-    * anti-join — each unpivoted to (name, v) rows; the union collects once,
-    * not a count() job per check (SURVEY §7.4). Under AQE every shuffle
-    * stage is its own job: a call runs 8 jobs (counted with a job listener).
+    * One fused pass (SURVEY §7.4: no count() job per check): the three
+    * tables become one union of (t, k, orphan, untagged) rows — listings
+    * keyed by listing_id, reviews by review_id, calendar rows with a NULL
+    * key — where `orphan` is an EXISTS against the listing keys (one
+    * broadcast, reused by both facts). groupBy(t, k) gives each key's row
+    * count, and groupBy(t) sums n − 1 over the non-null keys (duplicates)
+    * and n of the NULL key (null keys). Two shuffles, no distinct
+    * aggregate and no anti-join: under AQE a call runs 4 jobs (counted
+    * with a job listener).
     */
   def validate(wh: Warehouse): Map[String, Long] = {
     val listings = wh.read("dim_listings")
-    val calendar = wh.read("fact_calendar")
-    val reviews = wh.read("fact_reviews")
-    val lkeys = listings.select("listing_id")
-    def checks(df: DataFrame, named: (String, Column)*): DataFrame =
-      df.select(named.map { case (n, c) => c.cast("long").as(n) }: _*)
-        .unpivot(Array.empty[Column], named.map(n => col(n._1)).toArray, "name", "v")
-    // countDistinct ignores NULL keys, so the dup check counts only non-null
-    // rows on both sides (duplicates among real keys); NULL keys are their
-    // own invariant row — together these preserve the original
-    // count - distinct semantics
-    def pk(prefix: String, key: String) = Seq(
-      s"dup_${prefix}_pk" -> (count(col(key)) - countDistinct(col(key))),
-      s"null_${prefix}_pk" -> count(when(col(key).isNull, 1)))
-    Seq(
-      checks(listings, pk("listing", "listing_id"): _*),
-      checks(reviews, pk("review", "review_id") :+ ("reviews_lang_untagged" ->
-        count(when(col("review_lang").isNull && col("comments").isNotNull
-          && length(col("comments")) > 0, 1))): _*),
-      checks(calendar.join(lkeys, Seq("listing_id"), "left_anti"),
-        "orphan_calendar_rows" -> count(lit(1))),
-      checks(reviews.join(lkeys, Seq("listing_id"), "left_anti"),
-        "orphan_review_rows" -> count(lit(1))))
-      .reduce(_ unionByName _).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // a fact's listing_id is read as `fk`, so the correlated reference can
+    // only resolve to the outer row, never to the subquery's own listing_id
+    def fact(name: String) = wh.read(name).withColumnRenamed("listing_id", "fk")
+    val orphanFlag = when(listings.select(col("listing_id").as("lk"))
+      .where(col("lk") === col("fk").outer()).exists(), 0L).otherwise(1L)
+    def rows(t: String, df: DataFrame, key: Column, orphan: Column, untagged: Column) =
+      df.select(lit(t).as("t"), key.cast("long").as("k"), orphan.as("orphan"),
+        untagged.as("untagged"))
+    val perTable = Seq(
+      rows("listing", listings, col("listing_id"), lit(0L), lit(0L)),
+      rows("review", fact("fact_reviews"), col("review_id"), orphanFlag,
+        when(col("review_lang").isNull && col("comments").isNotNull
+          && length(col("comments")) > 0, 1L).otherwise(0L)),
+      rows("calendar", fact("fact_calendar"), lit(null), orphanFlag, lit(0L)))
+      .reduce(_ union _)
+      .groupBy("t", "k").agg(count(lit(1)).as("n"), sum("orphan").as("orphan"),
+        sum("untagged").as("untagged"))
+      .groupBy("t").agg(
+        sum(when(col("k").isNotNull, col("n") - 1)).as("dup"),
+        sum(when(col("k").isNull, col("n"))).as("null"),
+        sum("orphan").as("orphan"), sum("untagged").as("untagged"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    // an empty table has no group, a sum over no rows is NULL: both are 0
+    def v(t: String, c: String): Long = perTable.get(t)
+      .map(r => r.getAs[java.lang.Long](c)).filter(_ != null).fold(0L)(_.longValue)
+    Map("dup_listing_pk" -> v("listing", "dup"), "null_listing_pk" -> v("listing", "null"),
+      "dup_review_pk" -> v("review", "dup"), "null_review_pk" -> v("review", "null"),
+      "reviews_lang_untagged" -> v("review", "untagged"),
+      "orphan_review_rows" -> v("review", "orphan"),
+      "orphan_calendar_rows" -> v("calendar", "orphan"))
   }
 }

@@ -5,7 +5,9 @@ import graft.operators.{DatesDim, Upsert}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Load stage: the reference's per-feed pipelines (SURVEY §3.1) re-expressed
   * as pure DataFrame → DataFrame functions.
@@ -71,7 +73,7 @@ object Loaders {
     * only the fresh rows, for `Warehouse.append`.
     */
   def appendIdMap(stagingRaw: DataFrame, existing: DataFrame): DataFrame = {
-    val base = existing.agg(coalesce(max(col("mapping_id")), lit(0L))).collect()(0).getLong(0)
+    val spark = stagingRaw.sparkSession
     val parts = CleanFns.idParts(col("listing_raw_id")).toMap
     val fresh = stagingRaw
       .withColumnRenamed("id", "listing_raw_id")
@@ -81,20 +83,37 @@ object Loaders {
         parts("part1").as("part1"), parts("part2").as("part2"), parts("part3").as("part3"))
     // Distributed IDENTITY: a global Window.orderBy would drag every row to a
     // single partition (never finishes at 100 TB). Instead fix a deterministic
-    // global order with range partitioning + in-partition sort, then assign
-    // contiguous ids two-phase via zipWithIndex (per-partition counts → offsets
-    // — one lightweight extra job, no data concentration). Ids depend only on
-    // the global sort order, not on range boundaries, so they're stable.
-    val sorted = fresh
-      .repartitionByRange(col("listing_raw_id"), col("listing_id"))
-      .sortWithinPartitions(col("listing_raw_id"), col("listing_id"))
+    // global order — SQL's ascending (listing_raw_id, listing_id), NULLS
+    // FIRST, strings by UTF-8 bytes — with a range-partitioned sort, then
+    // number the rows two-phase: one job counts each sorted partition AND
+    // takes the existing map's max, the write adds the offsets. Ids depend
+    // only on the global sort order, not on range boundaries, so they're
+    // stable. The ranges are sized like AQE's coalesced ones (one per
+    // advisory partition size of input, at most the shuffle partitions);
+    // a single range needs no sample job, more cost one.
+    val conf = spark.sessionState.conf
+    val ranges = (fresh.queryExecution.optimizedPlan.stats.sizeInBytes /
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      .min(conf.numShufflePartitions).toInt.max(1)
+    implicit val utf8Order: Ordering[UTF8String] = Ordering.fromLessThan(_.compareTo(_) < 0)
+    val sorted = fresh.rdd
+      .keyBy(r => (Option(r.getString(1)).map(UTF8String.fromString),
+        if (r.isNullAt(0)) None else Some(r.getLong(0))))
+      .sortByKey(numPartitions = ranges)
+      .values
+    val (counts, maxes) = sorted
+      .mapPartitions(rows => Iterator[Either[Long, Long]](Left(rows.size.toLong)))
+      .union(existing.select(col("mapping_id")).rdd.mapPartitions(rows =>
+        Iterator(Right(rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption.getOrElse(0L)))))
+      .collect().partitionMap(identity)
+    val offsets = counts.scanLeft(maxes.maxOption.getOrElse(0L))(_ + _)
     val schema = StructType(
-      StructField("mapping_id", LongType, nullable = false) +: sorted.schema.fields)
-    val withId = stagingRaw.sparkSession.createDataFrame(
-      sorted.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq((base + i + 1L) +: r.toSeq)
-      }, schema)
-    withId.select("mapping_id", "listing_id", "listing_raw_id", "part1", "part2", "part3")
+      StructField("mapping_id", LongType, nullable = false) +: fresh.schema.fields)
+    val withId = sorted.mapPartitionsWithIndex { (i, rows) =>
+      var id = offsets(i)
+      rows.map { r => id += 1; org.apache.spark.sql.Row.fromSeq(id +: r.toSeq) }
+    }
+    spark.createDataFrame(withId, schema)
   }
 
   /** dim_hosts (sql/data/02_load_hosts.sql): latest-wins dedup per host (W1)

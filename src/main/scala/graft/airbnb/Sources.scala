@@ -1,7 +1,13 @@
 package graft.airbnb
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source layer (SURVEY §2.1): csv.gz scans with the reference's
   * schema-on-read discipline — header row, every column string, no
@@ -24,15 +30,61 @@ object Sources {
     * escape='"' = RFC-4180 doubled quotes, what the feeds (and DuckDB) use.
     */
   def readRawCsv(spark: SparkSession, pathGlob: String): DataFrame =
-    spark.read.option("header", "true")
-      .option("multiLine", "true").option("escape", "\"")
-      .csv(pathGlob)
+    readCsv(spark, pathGlob, csvOptions)
 
   /** S4 — pipe-delimited cleaned intermediates (modules/data_loader.py:133). */
   def readPipeCsv(spark: SparkSession, pathGlob: String): DataFrame =
-    spark.read.option("header", "true").option("sep", "|")
-      .option("multiLine", "true").option("escape", "\"")
-      .csv(pathGlob)
+    readCsv(spark, pathGlob, csvOptions + ("sep" -> "|"))
+
+  private val csvOptions =
+    Map("header" -> "true", "multiLine" -> "true", "escape" -> "\"")
+
+  /** Plans a header csv scan with the all-string schema Spark would infer,
+    * read on the driver from the header record of the first file, so the
+    * scan fires no job while it is planned (Spark's own multiLine inference
+    * runs one job to read that record). Falls back to Spark's inference —
+    * its result or its error — when no file matches or none has a record.
+    */
+  private def readCsv(spark: SparkSession, pathGlob: String,
+                      options: Map[String, String]): DataFrame = {
+    val reader = spark.read.options(options)
+    headerSchema(spark, pathGlob, options)
+      .fold(reader.csv(pathGlob))(reader.schema(_).csv(pathGlob))
+  }
+
+  /** The schema Spark's multiLine inference gives `pathGlob` with
+    * inferSchema off: the first record of the first file, in the order
+    * Spark lists them (glob order; a directory's visible files), tokenized
+    * with the read's own parser settings and codec, with Spark's header
+    * rules (a duplicate name gets its index appended, a blank one becomes
+    * `_c<i>`), every column a nullable string.
+    */
+  private def headerSchema(spark: SparkSession, pathGlob: String,
+                           options: Map[String, String]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pattern = new Path(pathGlob)
+    val fs = pattern.getFileSystem(conf)
+    def visible(st: FileStatus) = st.isFile && {
+      val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".")
+    }
+    val files = Option(fs.globStatus(pattern)).toSeq.flatten
+      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+      .filter(visible)
+    val sqlConf = spark.sessionState.conf
+    val parsed = new CSVOptions(options, sqlConf.csvColumnPruning, sqlConf.sessionLocalTimeZone)
+    def firstRecord(file: Path): Option[Array[String]] = {
+      val in = CodecStreams.createInputStreamWithCloseResource(conf, file)
+      try {
+        val parser = new CsvParser(parsed.asParserSettings)
+        parser.beginParsing(in, parsed.charset)
+        Option(parser.parseNext())
+      } finally in.close()
+    }
+    files.iterator.flatMap(st => firstRecord(st.getPath)).nextOption().map { row =>
+      val names = CSVUtils.makeSafeHeader(row, sqlConf.caseSensitiveAnalysis, parsed)
+      StructType(names.map(StructField(_, StringType)))
+    }
+  }
 
   /** S7 — cleaned csv.gz sink: pipe-separated, gzip, no index column
     * (modules/data_cleaner.py:146). escape='"' writes RFC-4180 doubled
@@ -54,7 +106,7 @@ object Sources {
   /** (beyond ref) JSONL source with a pinned schema (schema-on-read like the
     * csv feeds — never inference over the full corpus at scale).
     */
-  def readJsonl(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+  def readJsonl(spark: SparkSession, schema: StructType,
                 pathGlob: String): DataFrame =
     spark.read.schema(schema).json(pathGlob)
 
@@ -75,7 +127,4 @@ object Sources {
   def quarantine(df: DataFrame, validity: org.apache.spark.sql.Column)
       : (DataFrame, DataFrame) =
     (df.filter(validity), df.filter(!coalesce(validity, lit(false))))
-
-  /** P9 — empty-file guard (modules/data_cleaner.py:138-142). */
-  def nonEmpty(df: DataFrame): Boolean = !df.isEmpty
 }

@@ -135,19 +135,24 @@ final case class Warehouse(spark: SparkSession, root: String) {
     val dest = new Path(path(name))
     swapIn(fs(dest), new Path(tmpStr), dest, new Path(path(name) + "__old"), name)
     invalidateListings(name)
-    // write-time schema capture, UNPARTITIONED tables only: the on-disk
-    // schema is exactly df's, so the first read-back skips its footer
-    // job. Partitioned writes keep read-side inference — partition-value
-    // inference types (e.g. boolean partition dirs read back as string)
-    // are the established read contract and a declared-type cache would
-    // silently change it. NORMALIZED to nullable (ADVICE r20): footer
-    // inference in any other JVM (or after eviction) returns all-nullable
-    // fields, so caching the writer's nullability would present the same
-    // table with two schemas depending on which session reads it.
-    if (partitionBy.isEmpty)
-      Warehouse.schemaCache.put(path(name),
-        Warehouse.allNullable(df.schema)): Unit
+    cacheWrittenSchema(name, df.schema, partitionBy)
   }
+
+  /** Write-time schema capture: the files hold exactly `written`'s data
+    * columns, so the first read-back skips its footer job. A partitioned
+    * table caches its data columns only: [[read]] passes them as the read
+    * schema and Spark still infers the partition columns from the directory
+    * names, so partition-value inference types (e.g. boolean partition
+    * dirs read back as string) stay the read contract — a declared-type
+    * cache would silently change them. NORMALIZED to nullable (ADVICE
+    * r20): footer inference in any other JVM (or after eviction) returns
+    * all-nullable fields, so caching the writer's nullability would present
+    * the same table with two schemas depending on which session reads it.
+    */
+  private def cacheWrittenSchema(name: String, written: StructType,
+                                 partitionBy: Seq[String]): Unit =
+    Warehouse.schemaCache.put(path(name), Warehouse.allNullable(
+      StructType(written.filterNot(c => partitionBy.contains(c.name))))): Unit
 
   /** Crash-safe APPEND for grow-only tables (fact_reviews, each row with
     * its `review_lang` tag, and the id map): only `df`'s rows are written,
@@ -196,8 +201,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     if (existed) spark.catalog.refreshByPath(path(name))
     else {
       invalidateListings(name)
-      if (partitionBy.isEmpty)
-        Warehouse.schemaCache.put(path(name), Warehouse.allNullable(df.schema)): Unit
+      cacheWrittenSchema(name, df.schema, partitionBy)
     }
   }
 
@@ -590,18 +594,21 @@ final case class Warehouse(spark: SparkSession, root: String) {
         "fact_calendar", "fact_reviews")
 
   /** A6/F16 — the reference's post-load statistics
-    * (modules/data_loader.py:570-578): table → row count. One grouped count
-    * over the union of the tables' name-tagged rows: one shuffle, where a
-    * union of per-table aggregates shuffles once per table. An empty table
-    * has no group and reports 0.
+    * (modules/data_loader.py:570-578): table → row count. One Observation
+    * of a per-table count over the union of the tables' name-tagged rows,
+    * run through a `noop` write: one job and no shuffle. An empty table
+    * counts 0.
     */
   def stats(): Map[String, Long] = {
     val present = tableNames.filter(exists)
     if (present.isEmpty) Map.empty
     else {
-      val counts = present.map(t => read(t).select(lit(t).as("t"))).reduce(_ union _)
-        .groupBy("t").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      present.map(t => t -> counts.getOrElse(t, 0L)).toMap
+      val obs = org.apache.spark.sql.Observation()
+      val counts = present.map(t => count(when(col("t") === t, 1)).as(t))
+      present.map(t => read(t).select(lit(t).as("t"))).reduce(_ union _)
+        .observe(obs, counts.head, counts.tail: _*)
+        .write.format("noop").mode(SaveMode.Overwrite).save()
+      obs.get.map { case (t, n) => t -> n.asInstanceOf[Long] }
     }
   }
 
@@ -621,7 +628,7 @@ object Warehouse {
     * inference job per table per JVM instead of per read. Cleared by
     * invalidateListings (every swap path) and dropTable.
     */
-  private[airbnb] val schemaCache =
+  private[graft] val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** The all-nullable form footer inference would return (ADVICE r20) —

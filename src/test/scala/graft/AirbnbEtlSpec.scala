@@ -275,6 +275,49 @@ class AirbnbEtlSpec extends AnyFunSuite {
     assert(wh.stats() == Map("dim_listings" -> 3L, "fact_calendar" -> 0L))
   }
 
+  test("validate runs in at most 4 jobs and stats in 1 on the fixture warehouse") {
+    result
+    val (audits, validateJobs) = TestSpark.jobsDuring(AirbnbEtl.validate(result.wh))
+    assert(audits.size == 7 && audits.values.forall(_ == 0L), audits.toString)
+    assert(validateJobs <= 4, s"validate ran $validateJobs jobs")
+    val (stats, statsJobs) = TestSpark.jobsDuring(result.wh.stats())
+    assert(stats.keySet == Set("dim_listings", "dim_listing_id_map", "dim_hosts",
+      "dim_dates", "fact_calendar", "fact_reviews"), stats.toString)
+    assert(statsJobs == 1, s"stats ran $statsJobs jobs")
+  }
+
+  test("appendIdMap numbers fresh raw ids in sorted order from the map's max") {
+    import spark.implicits._
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.collect().map(r => (r.getAs[String]("listing_raw_id"), r.getAs[Long]("mapping_id")))
+        .toSeq.sortBy(_._2)
+    val staging = Cleaner.cleanListings(Sources.readRawCsv(spark, s"$rawDir/*listings*.csv.gz"))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      Schemas.dimListingIdMap)
+    val first = Loaders.appendIdMap(staging, empty)
+    assert(ids(first) == Seq("101" -> 1L, "102" -> 2L, "103" -> 3L, "abc-77" -> 4L))
+    val abc = first.filter(col("listing_raw_id") === "abc-77").collect().head
+    assert(abc.isNullAt(abc.fieldIndex("listing_id")) && abc.getAs[String]("part1") == "abc-77")
+    // building the rows (before their write) runs at most the range sample
+    // and the one job that counts the ranges and takes the existing max
+    val (second, buildJobs) = TestSpark.jobsDuring(Loaders.appendIdMap(staging, first))
+    assert(buildJobs <= 2, s"appendIdMap ran $buildJobs jobs before its write")
+    assert(ids(second) == Seq("101" -> 5L, "102" -> 6L, "103" -> 7L, "abc-77" -> 8L))
+    // several partitions, repeated and NULL raw ids, numeric and not
+    val raw = (0 until 3000).map(i =>
+      if (i % 97 == 0) null else if (i % 3 == 0) s"${i % 500}" else s"r${i % 700}")
+    val existing = spark.range(1, 11).select(col("id").as("mapping_id"))
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(advisory, "1k")
+    val (got, ranges) = try {
+      val m = Loaders.appendIdMap(raw.toDF("id").repartition(5), existing)
+      (ids(m), m.rdd.getNumPartitions)
+    } finally spark.conf.unset(advisory)
+    assert(ranges > 1, "the ids should come from several sorted ranges")
+    val want = raw.sortBy(Option(_)).zipWithIndex.map { case (r, i) => (r, 11L + i) }
+    assert(got == want)
+  }
+
   test("O4 sample cap activates only above the row threshold") {
     val df = spark.range(1000).toDF("id")
     assert(Loaders.sampleCap(df, 2000).count() == 1000)

@@ -43,6 +43,52 @@ class SourcesSpec extends AnyFunSuite {
     assert(files.exists(_.endsWith(".csv.gz")))
   }
 
+  private def writeGz(f: java.io.File, text: String): Unit = {
+    val w = new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8")
+    try w.write(text) finally w.close()
+  }
+
+  /** Spark's own schema inference for the same read. */
+  private def inferred(path: String, sep: String) =
+    spark.read.option("header", "true").option("sep", sep)
+      .option("multiLine", "true").option("escape", "\"").csv(path)
+
+  test("csv feeds plan with no job and keep Spark's inferred header") {
+    val root = java.nio.file.Files.createTempDirectory("graft-header").toFile
+    Seq("," -> Sources.readRawCsv _, "|" -> Sources.readPipeCsv _).foreach { case (sep, read) =>
+      val d = new java.io.File(root, if (sep == ",") "comma" else "pipe")
+      d.mkdirs()
+      def line(cells: String*) = cells.mkString(sep) + "\n"
+      // the first file in glob order holds no record, so the header comes
+      // from the next one: a quoted name holding a comma, a duplicate name
+      // (case-insensitively) and a blank one
+      writeGz(new java.io.File(d, "a_empty.csv.gz"), "")
+      writeGz(new java.io.File(d, "b_city.csv.gz"),
+        line("id", "\"name, full\"", "dup", "DUP", "", "note") +
+        line("1", "\"x, y\"", "a", "b", "", "\"two\nlines\""))
+      writeGz(new java.io.File(d, "c_city.csv.gz"),
+        line("other", "names", "in", "this", "file", "too") +
+        line("2", "z", "c", "d", "e", "f"))
+      val glob = s"$d/*.csv.gz"
+      val (df, jobs) = TestSpark.jobsDuring(read(spark, glob))
+      assert(jobs == 0, s"sep '$sep': planning fired $jobs jobs")
+      val spark0 = inferred(glob, sep)
+      assert(df.schema == spark0.schema)
+      assert(df.columns.toSeq == Seq("id", "name, full", "dup2", "DUP3", "_c4", "note"))
+      assert(df.collect().toSeq.sortBy(_.getString(0)) ==
+        spark0.collect().toSeq.sortBy(_.getString(0)))
+    }
+    // a directory of part files (the S7 sink's layout)
+    val sink = new java.io.File(root, "sink").toString
+    Sources.writePipeCsv(Seq(("1", "a"), ("2", "b")).toDF("id", "t"), sink)
+    val (df, jobs) = TestSpark.jobsDuring(Sources.readPipeCsv(spark, sink))
+    assert(jobs == 0 && df.schema == inferred(sink, "|").schema, s"$jobs jobs, ${df.schema}")
+    // no match: Spark's own error
+    intercept[org.apache.spark.sql.AnalysisException](
+      Sources.readRawCsv(spark, s"$root/none/*.csv.gz"))
+  }
+
   test("tolerant projection keeps intersection and backfills missing (P2)") {
     val df = Seq(("1", "x")).toDF("id", "extra")
     val out = Sources.tolerantProject(df, Seq("id", "missing_col"))

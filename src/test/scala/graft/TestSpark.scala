@@ -16,4 +16,27 @@ object TestSpark {
     * bare size difference.
     */
   def persistedSince(before: Set[Int]): Int = (persisted -- before).size
+
+  /** `f`'s result and the Spark jobs started while it ran, counted with a
+    * job listener. The listener bus is drained before and after, so events
+    * of earlier jobs are not counted and every one of `f`'s is. Suites run
+    * one at a time in the forked test JVM, so every job started meanwhile
+    * is `f`'s.
+    */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.TestBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

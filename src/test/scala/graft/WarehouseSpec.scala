@@ -366,6 +366,28 @@ class WarehouseSpec extends AnyFunSuite {
     assert(rows().size == 160)
   }
 
+  test("a partitioned write or append is read back with no footer job, as inferred") {
+    val root = java.nio.file.Files.createTempDirectory("wh-pschema").toString
+    val wh = Warehouse(spark, root)
+    val df = spark.range(0, 40).select($"id", ($"id" % 3).as("year"),
+      ($"id" % 2 === 0).as("flag"), $"id".cast("string").as("s"))
+    wh.write("by_year", df, partitionBy = Seq("year"))
+    wh.write("by_flag", df, partitionBy = Seq("flag"))
+    wh.append("appended", df, partitionBy = Seq("year"))
+    Seq("by_year", "by_flag", "appended").foreach { t =>
+      val (cached, jobs) = TestSpark.jobsDuring(wh.read(t).schema)
+      assert(jobs == 0, s"$t: reading fired $jobs jobs")
+      val rows = wh.read(t).orderBy("id").collect().toSeq
+      Warehouse.schemaCache.remove(s"$root/$t")
+      val fresh = wh.read(t)
+      assert(cached == fresh.schema, s"$t: $cached != ${fresh.schema}")
+      assert(rows == fresh.orderBy("id").collect().toSeq)
+    }
+    // partition-value inference stays the read contract: a boolean
+    // partition column reads back as string
+    assert(wh.read("by_flag").schema("flag").dataType == org.apache.spark.sql.types.StringType)
+  }
+
   test("J9 catalog introspection replaces sys.tables/sys.columns queries") {
     Seq((1L, "x")).toDF("id", "v").createOrReplaceTempView("t_cat_probe")
     val tables = spark.catalog.listTables().collect().map(_.name)
