@@ -43,13 +43,13 @@ object Tables {
   private val frameCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  /** Serializes every nanosAsLong probe-then-maybe-restore across the JVM
-    * (here and Streams.tsIsNanosLong): the conf is session-global, so an
-    * unsynchronized restore could land between another probe's set and its
-    * footer read. Genuinely-nanos reads keep the flag set on exit — the
-    * lock scopes the PROBE, not the scan-time requirement.
+  /** Serializes every nanosAsLong probe-then-maybe-restore across the JVM:
+    * the conf is session-global, so an unsynchronized restore could land
+    * between another probe's set and its footer read. Genuinely-nanos reads
+    * keep the flag set on exit — the lock scopes the PROBE, not the
+    * scan-time requirement.
     */
-  private[graft] val nanosProbeLock = new Object
+  private val nanosProbeLock = new Object
 
   /** Drop cached frames whose owning session has stopped — otherwise the
     * strong (session → plan) references keep dead sessions reachable for

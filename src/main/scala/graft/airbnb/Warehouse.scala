@@ -549,34 +549,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
     archiveName
   }
 
-  /** Z-ordered write: rows are clustered along the Morton curve of `zCols`
-    * so parquet min/max stats data-skip on EVERY z dimension (multi-column
-    * B-tree index intent, sql/schema/04_create_indexes.sql, re-expressed for
-    * columnar storage). See operators.ZOrder.
-    */
-  def writeZOrdered(name: String, df: DataFrame, zCols: Seq[String],
-                    bits: Int = 8, numPartitions: Int = 0): Unit =
-    write(name, graft.operators.ZOrder.cluster(df, zCols, bits, numPartitions))
-
-  /** Bucketed catalog table (SURVEY §4: bucketing co-locates repeated joins
-    * on the same key — both sides pre-hashed into the same bucket layout join
-    * with NO exchange). Requires the session catalog (bucketBy is
-    * saveAsTable-only); use for hot join keys like listing_id.
-    */
-  def writeBucketed(name: String, df: DataFrame, bucketCols: Seq[String],
-                    nBuckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    // a table dropped in a previous session leaves its managed location
-    // behind; saveAsTable refuses to reuse it (LOCATION_ALREADY_EXISTS)
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-    if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet").saveAsTable(name)
-  }
-
   /** S11 — SQL script runner (modules/data_loader.py:532-568): split on ';',
     * execute each statement, tolerate failures only on DROP statements.
     */

@@ -456,16 +456,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Frame-sample stub: pick every `stride`-th byte as a "frame" digest. */
-  def frameSample(media: Dataset[MediaRow], stride: Int): DataFrame = {
-    // fail fast on the driver: Range.by(0) would otherwise throw per-row
-    // inside executor tasks (retry storm, error far from the bad argument)
-    require(stride > 0, s"stride must be > 0, got $stride")
-    import media.sparkSession.implicits._
-    media.map { r =>
-      val frames = r.media.indices.by(stride).map(i => r.media(i).toInt & 0xff).toArray
-      (r.doc_id, frames)
-    }.toDF("doc_id", "frame_digest")
-  }
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.CleanFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,9 +9,6 @@ import org.apache.spark.sql.types._
   * dimension row-by-row in Python (modules/data_loader.py:484-522); here it
   * is `sequence` + `explode` — the engine's one generator — with the F4
   * date-part family and a deterministic surrogate key.
-  *
-  * The single-partition window for date_id is fine at any scale: a date
-  * dimension is bounded (~36k rows per century), never fact-sized.
   */
 object DatesDim {
 
@@ -23,11 +19,12 @@ object DatesDim {
       max(col(dateCol).cast(DateType)).as("hi")))
 
   private def build(span: DataFrame): DataFrame = {
-    val days = span.select(explode(sequence(col("lo"), col("hi"))).as("full_date"))
-    val w = Window.orderBy(col("full_date"))
+    // one gap-free sequence from lo: a date's id is its day offset + 1
+    val days = span
+      .select(explode(sequence(col("lo"), col("hi"))).as("full_date"), col("lo"))
+      .select(col("full_date"),
+        (datediff(col("full_date"), col("lo")) + 1).cast(LongType).as("date_id"))
     CleanFns.dateParts(col("full_date"))
-      .foldLeft(days.withColumn("date_id", row_number().over(w).cast(LongType))) {
-        case (df, (n, c)) => df.withColumn(n, c)
-      }
+      .foldLeft(days) { case (df, (n, c)) => df.withColumn(n, c) }
   }
 }

@@ -25,16 +25,4 @@ object SkewJoin {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Salted aggregation: two-phase groupBy for a skewed key — partial
-    * aggregate on (key, salt), then final on key. Spark's hash aggregate
-    * already does map-side partials; this is for the pathological case where
-    * even a single reducer per key is too hot (e.g. count/sum over a
-    * power-law key).
-    */
-  def saltedCount(df: DataFrame, key: String, saltFactor: Int,
-                  seed: Long = 42L): DataFrame =
-    df.withColumn("__salt", (rand(seed) * saltFactor).cast("int"))
-      .groupBy(col(key), col("__salt")).agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key)).agg(sum(col("__partial")).as("n"))
 }

@@ -2,59 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-config-driven tuning for the dedup/ANN family, replacing
-  * hard-coded constants with corpus-size-scaled defaults (VERDICT r1 #10).
+/** Session-config-driven tuning for the dedup family, replacing a
+  * hard-coded constant with a corpus-size-scaled default (VERDICT r1 #10).
   *
-  * Sizing rules (see SCALING.md):
-  *   - sign-LSH: buckets should hold ~`targetBucketSize` vectors, so
-  *     nBits ≈ log2(corpusRows / targetBucketSize) — log-scaled, clamped to
-  *     [4, 30] (the bucket id is a long of nBits sign bits);
-  *   - MinHash bands: at fixed permutations p, b bands × r=p/b rows detect
-  *     pairs above s* ≈ (1/b)^(1/r); more bands → higher recall, more
-  *     candidate pairs. Must divide p;
-  *   - shingle document-frequency cutoff: a shingle present in d docs emits
-  *     d·(d-1)/2 candidate pairs, so capping d at ~sqrt(2·corpusRows) keeps
-  *     the worst single shingle's fan-out at ~corpus-linear.
+  * Sizing rule (see SCALING.md): a shingle present in d docs emits
+  * d·(d-1)/2 candidate pairs, so capping d at ~sqrt(2·corpusRows) keeps the
+  * worst single shingle's fan-out at ~corpus-linear.
   */
 object Tuning {
-
-  /** `spark.graft.lsh.nbits` override, else log2-scaled to the corpus. */
-  def lshNBits(spark: SparkSession, corpusRows: Long, targetBucketSize: Long = 64): Int =
-    spark.conf.getOption("spark.graft.lsh.nbits").map(_.toInt).getOrElse {
-      val buckets = math.max(1L, corpusRows / math.max(1L, targetBucketSize))
-      math.min(30, math.max(4, (math.log(buckets.toDouble) / math.log(2.0)).ceil.toInt))
-    }
-
-  /** `spark.graft.minhash.bands` override, else 2. */
-  def minhashBands(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.minhash.bands").map(_.toInt).getOrElse(2)
 
   /** `spark.graft.dedup.maxDocFreq` override, else sqrt(2·corpusRows). */
   def maxShingleDocFreq(spark: SparkSession, corpusRows: Long): Long =
     spark.conf.getOption("spark.graft.dedup.maxDocFreq").map(_.toLong).getOrElse {
       math.max(16L, math.sqrt(2.0 * corpusRows).toLong)
     }
-
-  /** MinHash LSH band plan: among all factorizations b·r = `permutations`,
-    * the (bands, rowsPerBand) whose S-curve threshold (1/b)^(1/r) sits
-    * closest to `targetJaccard` — the sizing a 100 TB dedup run does ONCE
-    * before committing to a banding (re-banding later re-sketches the
-    * corpus). Collision probability at similarity s is 1 − (1 − s^r)^b;
-    * the returned threshold is the curve's steepest point, so pairs above
-    * it are likely candidates and pairs below mostly are not. Ties between
-    * factorizations (equidistant thresholds) go to the SMALLER band count:
-    * fewer bands → fewer candidate pairs for the same sketch budget, the
-    * cheaper side of the tie at scale. Driver-side closed-form arithmetic;
-    * feed the result to `Dedup.bandedSignatures`.
-    */
-  def bandPlan(permutations: Int, targetJaccard: Double): (Int, Int, Double) = {
-    require(permutations >= 1, s"need >= 1 permutation: $permutations")
-    require(targetJaccard > 0.0 && targetJaccard < 1.0,
-      s"targetJaccard must be in (0, 1): $targetJaccard")
-    val plans = for {
-      b <- 1 to permutations if permutations % b == 0
-      r = permutations / b
-    } yield (b, r, math.pow(1.0 / b, 1.0 / r))
-    plans.minBy { case (b, _, t) => (math.abs(t - targetJaccard), b) }
-  }
 }

@@ -49,8 +49,4 @@ object Upsert {
           .otherwise(lit("insert")))
       .drop("__pri", "__rn", "__hascur")
   }
-
-  /** The reference's OUTPUT $action summary (A10). */
-  def actionCounts(merged: DataFrame): DataFrame =
-    merged.groupBy(col("action")).agg(count(lit(1)).as("n"))
 }

@@ -2798,9 +2798,8 @@ object TextQueries {
                CAST(px_sum AS BIGINT) AS px_sum
         FROM s ORDER BY doc_id""")),
 
-    // ----- streaming batch-equivalent: tumbling hourly window (the
-    // Structured Streaming surface with watermark lives in
-    // graft.streaming.Streams and is spec-tested against this result)
+    // ----- windowed event counts in batch form: sliding (2 h every hour)
+    // here, tumbling hourly below
     Q("q_stream_sliding_batch",
       (s, dir) =>
         t(s, dir, "events")

@@ -4,281 +4,25 @@ import graft.Materialize
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-/** Structured Streaming surface over the `events` table shape (SURVEY §2.9:
-  * the reference is pure batch; this is the engine's streaming extension —
-  * the daily→weekly calendar roll-up A1 becomes a watermarked tumbling
-  * window).
+/** Streaming gates for the corpus side of the engine (SURVEY §2.9: the
+  * reference is pure batch; these are the engine's streaming extension).
+  * Each gate is a `*Batch` body — one micro-batch's work as plain batch
+  * plans over the warehouse — and a `start*` entry point that runs that body
+  * under `foreachBatch` through one shared commit protocol: exactly-once
+  * output via batch-keyed directories and `_COMMITTED` markers, and
+  * replay-safe index merges that only ever see strictly earlier batches.
+  * The gates: the idempotent parquet sink, near-dup and exact-substring
+  * dedup, eval-set decontamination, per-group percentile and token-budget
+  * cuts, SemDeDup, the incremental kNN graph, corpus and crawl ingest, and
+  * the Count-Min sketch maintenance.
   *
-  * Scale: windowed aggregation state is keyed by (window, event_type) and
-  * bounded by the watermark; mapGroupsWithState keys by user_id. Both shapes
-  * run identically on a 1000-executor cluster — state lives in the state
-  * store, never on the driver.
+  * Scale: a gate keeps its state in warehouse tables, not in the state
+  * store, and collects at most small bounded key sets to the driver.
   */
 object Streams {
-
-  /** File schema of a legacy nanos-fixture events stream (ts read as long
-    * via nanosAsLong). */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** File schema of a micros-fixture events stream (ts a real timestamp). */
-  val microsSchema: StructType = StructType(rawSchema.map(f =>
-    if (f.name == "ts") f.copy(dataType = TimestampNTZType) else f))
-
-  /** True iff the parquet files at `dir` carry ts as nanos-as-long (the
-    * legacy fixture shape). Streaming reads REQUIRE an explicit schema, so
-    * one batch footer inference up front decides which one — the same
-    * type-branch `graft.Tables.events` applies on the batch side (the
-    * fixture has shipped as both TIMESTAMP(NANOS) and timestamp[us]).
-    */
-  private def tsIsNanosLong(spark: SparkSession, dir: String): Boolean =
-    // Scoped probe: restore the previous conf when the fixture is micros so
-    // the check doesn't leak a session-wide behavior change (an unrelated
-    // nanos read would silently infer LongType). For a nanos fixture the
-    // flag must STAY set — the explicit-schema streaming scan needs it at
-    // every microbatch to admit TIMESTAMP(NANOS) as LongType. Serialized
-    // under the shared probe lock (see Tables.nanosProbeLock).
-    graft.Tables.nanosProbeLock.synchronized {
-      val prev = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val isNanos = spark.read.parquet(dir).schema("ts").dataType == LongType
-      if (!isNanos) prev match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None    => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-      isNanos
-    }
-
-  /** Streaming read of an events directory (either fixture shape → micros).
-    * Unlike graft.Tables.events this exposes ts as TIMESTAMP (local-tz):
-    * watermarks require it — EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
-    * TIMESTAMP_NTZ. Session tz is UTC so wall-clock values match the batch
-    * reader.
-    */
-  def readEvents(spark: SparkSession, dir: String): DataFrame =
-    if (tsIsNanosLong(spark, dir))
-      spark.readStream.schema(rawSchema).parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else
-      spark.readStream.schema(microsSchema).parquet(dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-
-  /** Batch twin of [[readEvents]]: identical ts rendering (TIMESTAMP,
-    * local-tz), for batch-vs-stream parity checks.
-    */
-  def readEventsBatch(spark: SparkSession, dir: String): DataFrame =
-    if (tsIsNanosLong(spark, dir))
-      spark.read.schema(rawSchema).parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else
-      spark.read.schema(microsSchema).parquet(dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-
-  /** Tumbling-window counts/sums with a watermark for late data. */
-  def tumblingAgg(events: DataFrame, windowLen: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("value").cast(DecimalType(25, 4))).cast(DoubleType).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-
-  /** Sliding-window variant (windowLen every slide). */
-  def slidingAgg(events: DataFrame, windowLen: String, slide: String,
-                 watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-
-  /** Session windows per user with a gap timeout (built-in session_window). */
-  def sessionAgg(events: DataFrame, gap: String, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-              col("user_id"), col("n_events"))
-
-  /** Streaming dedup by event_id with bounded state: duplicates arriving
-    * within the watermark horizon are dropped, and state for ids older than
-    * the watermark is evicted (dropDuplicatesWithinWatermark — plain
-    * dropDuplicates on a stream would keep ALL ids forever).
-    */
-  def dedupStream(events: DataFrame, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static enrichment join: the static side (a dimension) is
-    * broadcast per micro-batch; the stream side never shuffles. The streaming
-    * twin of the batch FK-filter join (J1).
-    */
-  def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key))
-
-  /** Stream-stream inner join with event-time bounds: a right event matches
-    * a left event of the same key when it lands in [l_ts, l_ts + maxDelay]
-    * (attribution: "click within maxDelay of the impression"). BOTH sides
-    * carry watermarks and the join predicate bounds the time skew — that is
-    * what lets Spark evict buffered rows (left rows older than
-    * watermark, right rows older than watermark + maxDelay); either side
-    * unbounded would buffer a stream forever. State shuffles on the key only.
-    */
-  def correlateStreams(left: DataFrame, right: DataFrame, key: String,
-                       watermark: String, maxDelay: String): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col(key), col("ts").as("l_ts"), col("event_id").as("l_id"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col(key).as("__rkey"), col("ts").as("r_ts"),
-        col("event_id").as("r_id"))
-    l.join(r,
-        col(key) === col("__rkey") &&
-          col("r_ts") >= col("l_ts") &&
-          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $maxDelay"))
-      .select(col(key), col("l_id"), col("r_id"), col("l_ts"), col("r_ts"))
-  }
-
-  final case class UserEvent(user_id: Long, event_id: Long)
-  final case class UserRunning(user_id: Long, n_events: Long)
-
-  /** Custom state: running per-user event counts via mapGroupsWithState
-    * (KeyValueGroupedDataset surface, SURVEY §7.2 step 9).
-    */
-  def runningCounts(events: Dataset[UserEvent]): Dataset[UserRunning] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[Long, UserRunning](GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[UserEvent], state: GroupState[Long]) =>
-          val n = state.getOption.getOrElse(0L) + batch.size
-          state.update(n)
-          UserRunning(uid, n)
-      }
-  }
-
-  final case class ChangeEvent(user_id: Long, ts: java.sql.Timestamp,
-      event_id: Long, event_type: String)
-  final case class Scd2Open(state: String, valid_from: java.sql.Timestamp,
-      from_id: Long)
-  final case class Scd2Closed(user_id: Long, event_type: String,
-      valid_from: java.sql.Timestamp, valid_to: java.sql.Timestamp,
-      event_id: Long)
-
-  /** Streaming SCD2: the stateful twin of operators.Scd2.fromChangeLog.
-    * Per key, state holds only the OPEN version (current state + its start);
-    * a batch's events are applied in (ts, event_id) order, consecutive
-    * duplicate states collapse, and each version whose successor arrives is
-    * EMITTED closed (valid_to = successor's start) — append-mode semantics:
-    * the open version stays in state until its close is known, exactly like
-    * a warehouse SCD2 whose current rows are open-ended.
-    *
-    * Equivalence contract (StreamsSpec): over any prefix of the change log
-    * processed in event order, the emitted closed versions equal
-    * `Scd2.fromChangeLog(...).filter(valid_to IS NOT NULL)`. Cross-batch
-    * ordering relies on the source delivering a key's events in order
-    * (within a batch they are sorted here); late events older than the open
-    * version would need a watermark + reordering buffer, the same caveat
-    * every streaming SCD2 carries.
-    *
-    * Scale: state is ONE small tuple per key (not the version history), kept
-    * in the state store keyed by user — the 100 TB shape.
-    */
-  def scd2Stream(events: Dataset[ChangeEvent]): Dataset[Scd2Closed] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2Open, Scd2Closed](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[ChangeEvent], state: GroupState[Scd2Open]) =>
-          // full-precision event order: getTime() alone truncates to millis,
-          // which would order same-millisecond events differently from the
-          // batch twin's micros-precision ORDER BY ts
-          val sorted = batch.toArray.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.getNanos, e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Closed]
-          var cur = state.getOption
-          sorted.foreach { e =>
-            cur match {
-              case Some(open) if open.state == e.event_type => // dup collapses
-              case Some(open) =>
-                out += Scd2Closed(uid, open.state, open.valid_from, e.ts, open.from_id)
-                cur = Some(Scd2Open(e.event_type, e.ts, e.event_id))
-              case None =>
-                cur = Some(Scd2Open(e.event_type, e.ts, e.event_id))
-            }
-          }
-          cur.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  final case class FunnelEvent(user_id: Long, us: Long, event_id: Long,
-      event_type: String)
-  final case class FunnelProgress(stage: Int, t1_us: Long, t2_us: Long)
-  final case class FunnelConversion(user_id: Long, t1_us: Long, t2_us: Long,
-      t3_us: Long)
-
-  /** Streaming funnel: the stateful twin of `q_funnel_steps` — a per-user
-    * state MACHINE (stage + the stage times) advanced event by event:
-    * the first signup opens the funnel, the first view within `windowUs`
-    * of it advances, the first purchase within `windowUs` of that view
-    * EMITS the conversion (append mode) and parks the user terminal. A
-    * user whose deadline lapses simply never advances — identical to the
-    * batch query's min-within-window semantics, so over any in-order
-    * prefix the emitted conversions equal the batch answer's reached=3
-    * rows (the StreamsSpec contract; cross-batch ordering carries the
-    * same in-order-source caveat as [[scd2Stream]]).
-    *
-    * Scale: state is ONE small tuple per user — stage and two longs —
-    * regardless of event volume; conversions emit exactly once.
-    */
-  def funnelStream(events: Dataset[FunnelEvent], windowUs: Long): Dataset[FunnelConversion] = {
-    require(windowUs > 0, s"windowUs must be positive: $windowUs")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelProgress, FunnelConversion](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelProgress]) =>
-          var st = state.getOption.getOrElse(FunnelProgress(0, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelConversion]
-          batch.toArray.sortBy(e => (e.us, e.event_id)).foreach { e =>
-            st.stage match {
-              case 0 if e.event_type == "signup" =>
-                st = FunnelProgress(1, e.us, 0L)
-              case 1 if e.event_type == "view" && e.us > st.t1_us &&
-                        e.us <= st.t1_us + windowUs =>
-                st = FunnelProgress(2, st.t1_us, e.us)
-              case 2 if e.event_type == "purchase" && e.us > st.t2_us &&
-                        e.us <= st.t2_us + windowUs =>
-                out += FunnelConversion(uid, st.t1_us, st.t2_us, e.us)
-                st = FunnelProgress(3, st.t1_us, st.t2_us)
-              case _ => ()
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Drive a streaming frame to completion against a memory sink and return
-    * the materialized result (for specs and local smoke). Default mode is
-    * Complete — right for the aggregation helpers; pass Append for
-    * [[dedupStream]]/[[enrichStream]] (no aggregation). Always stops the
-    * query, even when processing throws — a leaked StreamingQuery would keep
-    * polling the source for the rest of the session.
-    */
-  def runToMemory(df: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    df.sparkSession.table(name)
-  }
-
   // ---------------------------------------------------------------------
   // Production sink: idempotent foreachBatch parquet upsert.
   //

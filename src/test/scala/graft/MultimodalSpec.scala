@@ -67,17 +67,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out(1L) != out(3L)) // different waveform flips bits
   }
 
-  test("frame sampling yields ceil(len/stride) frames") {
-    val docs = Tables.load(spark, TestSpark.sfDir, "documents").limit(5)
-    val media = Multimodal.asMedia(docs, "doc_id", "text")
-    val lens = media.collect().map(r => r.doc_id -> r.media.length).toMap
-    Multimodal.frameSample(media, 10).collect().foreach { r =>
-      val id = r.getLong(0)
-      val frames = r.getSeq[Int](1)
-      assert(frames.length == (lens(id) + 9) / 10)
-    }
-  }
-
   test("MJPEG frame extraction decodes exactly the sampled frames, hand-computed stats") {
     import spark.implicits._
     import graft.multimodal.MediaCodecs

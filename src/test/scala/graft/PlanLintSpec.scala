@@ -254,8 +254,10 @@ class PlanLintSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.functions._
     import spark.implicits._
+    // the physical plan before AQE wraps it: collect does not descend
+    // into an AdaptiveSparkPlanExec root, so executedPlan shows no window
     def emptyPartWindows(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.executedPlan.collect {
+      df.queryExecution.sparkPlan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }
     val staging = Seq(("101", "x"), ("abc-7", "y")).toDF("id", "junk")
@@ -268,6 +270,8 @@ class PlanLintSpec extends AnyFunSuite {
     val listings = Seq((1L, "h", "c", "co", java.sql.Timestamp.valueOf("2025-01-01 00:00:00")))
       .toDF("host_id", "host_name", "host_city", "host_country", "updated_date")
     assert(emptyPartWindows(graft.airbnb.Loaders.loadHosts(listings)).isEmpty)
+    val dates = Seq("2025-01-03", "2025-01-01", "not a date").toDF("date")
+    assert(emptyPartWindows(graft.airbnb.Loaders.loadDates(dates, "date")).isEmpty)
   }
 
   test("contrastive triplets plan the pair join exactly once, nothing materialized") {

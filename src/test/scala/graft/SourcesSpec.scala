@@ -1,7 +1,6 @@
 package graft
 
 import graft.airbnb.Sources
-import graft.operators.Aggregators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -101,20 +100,5 @@ class SourcesSpec extends AnyFunSuite {
     val (ok, bad) = Sources.quarantine(df, $"id".try_cast("long").isNotNull)
     assert(ok.count() == 2)
     assert(bad.count() == 2) // 'oops' and null both quarantined
-  }
-
-  test("availability histogram aggregator matches a groupBy count") {
-    val days = Seq(0L, 7L, 7L, 3L, 3L, 3L, 9L, -1L).toDS() // out-of-range clamped
-    val hist = days.select(Aggregators.AvailabilityHistogram.toColumn).collect().head
-    assert(hist(0) == 2) // 0 and clamped -1
-    assert(hist(3) == 3)
-    assert(hist(7) == 3) // two 7s and clamped 9
-    assert(hist.sum == 8)
-  }
-
-  test("price stats aggregator computes min/max/avg in one pass") {
-    val ps = Seq(10.0, 20.0, 30.0).toDS()
-      .select(Aggregators.PriceStatsAgg.toColumn).collect().head
-    assert(ps.n == 3 && ps.min == 10.0 && ps.max == 30.0 && math.abs(ps.avg - 20.0) < 1e-12)
   }
 }

@@ -2,141 +2,11 @@ package graft
 
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** File streaming sources need a directory; stage the fixture into one. */
-  private lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-events")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"${TestSpark.sfDir}/events.parquet"),
-      d.resolve("events.parquet"))
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
-  test("streaming tumbling window equals the batch aggregation") {
-    val stream = Streams.readEvents(spark, eventsDir)
-    val fmt = "yyyy-MM-dd HH:mm"
-    val got = Streams.runToMemory(
-        Streams.tumblingAgg(stream, "1 hour", "10 minutes"), "t_tumbling")
-      .select(date_format($"window_start", fmt), $"event_type", $"n")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .toSet
-    val batch = Tables.events(spark, TestSpark.sfDir)
-      .groupBy(date_trunc("hour", $"ts").as("window_start"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select(date_format($"window_start", fmt), $"event_type", $"n")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .toSet
-    assert(got == batch)
-    assert(got.nonEmpty)
-  }
-
-  test("streaming session windows produce per-user sessions") {
-    val stream = Streams.readEvents(spark, eventsDir)
-    val sessions = Streams.runToMemory(
-      Streams.sessionAgg(stream, "30 minutes", "10 minutes"), "t_sessions")
-    assert(sessions.count() > 0)
-    // session integrity: per-user event counts are preserved
-    val perUser = sessions.groupBy("user_id").agg(sum("n_events").as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = Tables.events(spark, TestSpark.sfDir).groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(perUser == batch)
-  }
-
-  test("sliding windows carry each event into windowLen/slide windows") {
-    val stream = Streams.readEvents(spark, eventsDir)
-    val slid = Streams.runToMemory(
-      Streams.slidingAgg(stream, "2 hours", "1 hour", "10 minutes"), "t_sliding")
-    val total = slid.groupBy().sum("n").collect().head.getLong(0)
-    val nEvents = Tables.events(spark, TestSpark.sfDir).count()
-    assert(total == nEvents * 2, s"each event must land in exactly 2 windows")
-  }
-
-  test("streaming dedup within watermark drops replayed events, bounded state") {
-    val d = java.nio.file.Files.createTempDirectory("graft-events-dup")
-    val src = java.nio.file.Paths.get(s"${TestSpark.sfDir}/events.parquet")
-    java.nio.file.Files.copy(src, d.resolve("events_a.parquet"))
-    java.nio.file.Files.copy(src, d.resolve("events_b.parquet")) // full replay
-    d.toFile.deleteOnExit()
-    val stream = Streams.readEvents(spark, d.toString)
-    val out = Streams.runToMemory(
-      Streams.dedupStream(stream, "10 minutes"), "t_dedup", OutputMode.Append())
-    val nDistinct = Tables.events(spark, TestSpark.sfDir)
-      .select("event_id").distinct().count()
-    assert(out.count() == nDistinct,
-      s"replayed file must be fully deduplicated (got ${out.count()}, want $nDistinct)")
-  }
-
-  test("stream-static broadcast join enriches every event without losses") {
-    val dim = Tables.events(spark, TestSpark.sfDir)
-      .select($"user_id").distinct().withColumn("segment", $"user_id" % 3)
-    val stream = Streams.readEvents(spark, eventsDir)
-    val out = Streams.runToMemory(
-      Streams.enrichStream(stream, dim, "user_id"), "t_enrich", OutputMode.Append())
-    assert(out.count() == Tables.events(spark, TestSpark.sfDir).count())
-    assert(out.filter($"segment".isNull).count() == 0)
-  }
-
-  test("stream-stream time-bounded join equals the batch range join") {
-    val views = Streams.readEvents(spark, eventsDir).filter($"event_type" === "view")
-    val clicks = Streams.readEvents(spark, eventsDir).filter($"event_type" === "click")
-    val got = Streams.runToMemory(
-        Streams.correlateStreams(views, clicks, "user_id",
-          "10 minutes", "30 minutes"), "t_corr", OutputMode.Append())
-      .select($"user_id", $"l_id", $"r_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ev = Tables.events(spark, TestSpark.sfDir)
-    val batch = ev.filter($"event_type" === "view")
-      .select($"user_id", $"ts".as("l_ts"), $"event_id".as("l_id"))
-      .join(ev.filter($"event_type" === "click")
-          .select($"user_id".as("__rkey"), $"ts".as("r_ts"), $"event_id".as("r_id")),
-        $"user_id" === $"__rkey" && $"r_ts" >= $"l_ts" &&
-          $"r_ts" <= $"l_ts" + expr("INTERVAL 30 minutes"))
-      .select($"user_id", $"l_id", $"r_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == batch)
-    assert(got.nonEmpty, "fixture must contain at least one view→click pair")
-  }
-
-  test("streaming SCD2 emits exactly the batch operator's closed versions") {
-    val stream = Streams.readEvents(spark, eventsDir)
-      .selectExpr("user_id", "ts", "event_id", "event_type")
-      .as[Streams.ChangeEvent]
-    val got = Streams.runToMemory(Streams.scd2Stream(stream).toDF(),
-        "t_scd2", OutputMode.Append())
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2),
-        r.getTimestamp(3), r.getLong(4)))
-      .toSet
-    // batch twin on the SAME (local-tz) timestamp rendering as the stream
-    val batchEvents = Streams.readEventsBatch(spark, eventsDir)
-    val batch = graft.operators.Scd2
-      .fromChangeLog(batchEvents, "user_id", "ts", "event_id", "event_type")
-      .filter($"valid_to".isNotNull)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2),
-        r.getTimestamp(3), r.getLong(5)))
-      .toSet
-    assert(got == batch)
-    assert(got.nonEmpty)
-  }
-
-  test("mapGroupsWithState keeps running per-user counts") {
-    val ev = Tables.events(spark, TestSpark.sfDir)
-      .select($"user_id", $"event_id").as[Streams.UserEvent]
-    val got = Streams.runningCounts(ev)
-      .collect().map(r => r.user_id -> r.n_events).toMap
-    val batch = Tables.events(spark, TestSpark.sfDir).groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == batch)
-  }
 
   /** Drop a single-file parquet into a streaming-source directory. */
   private def addSourceFile(dir: java.nio.file.Path, name: String,
@@ -1017,71 +887,5 @@ class StreamsSpec extends AnyFunSuite {
     val vecs = wh.read("kg_vecs")
     assert(vecs.groupBy("vec_id").count().filter($"count" > 1).count() == 0L)
     assert(vecs.count() == all.length.toLong)
-  }
-
-  test("streaming funnel equals batch min-within-window semantics at sf0.001") {
-    val evs = Tables.events(spark, TestSpark.sfDir)
-      .select($"user_id", unix_micros($"ts".cast("timestamp")).as("us"),
-        $"event_id", $"event_type")
-      .as[Streams.FunnelEvent]
-    val W = 72L * 3600 * 1000000 // 72 h per step: 8 conversions at sf0.001
-    val got = Streams.funnelStream(evs, W).collect()
-      .map(c => (c.user_id, c.t1_us, c.t2_us, c.t3_us)).toSet
-    // independent model: t1 = min signup, t2 = min view in (t1, t1+W],
-    // t3 = min purchase in (t2, t2+W]
-    val model = evs.collect().groupBy(_.user_id).flatMap { case (u, es) =>
-      val signups = es.filter(_.event_type == "signup").map(_.us)
-      if (signups.isEmpty) None
-      else {
-        val t1 = signups.min
-        val vs = es.filter(e => e.event_type == "view" && e.us > t1 &&
-          e.us <= t1 + W).map(_.us)
-        if (vs.isEmpty) None
-        else {
-          val t2 = vs.min
-          val ps = es.filter(e => e.event_type == "purchase" && e.us > t2 &&
-            e.us <= t2 + W).map(_.us)
-          if (ps.isEmpty) None else Some((u, t1, t2, ps.min))
-        }
-      }
-    }.toSet
-    assert(got == model)
-    assert(got.size == 8)
-  }
-
-  test("streaming funnel carries state across micro-batches and emits once") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val src = java.nio.file.Files.createTempDirectory("graft-funnel-src")
-    def drop(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-funnel-one")
-      rows.toDF("user_id", "us", "event_id", "event_type")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, src.resolve(name))
-    }
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("us", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType)))
-    val stream = spark.readStream.schema(schema).parquet(src.toString)
-      .as[Streams.FunnelEvent]
-    drop("b0.parquet", Seq((1L, 100L, 1L, "signup"), (2L, 100L, 2L, "signup")))
-    val q = Streams.funnelStream(stream, 1000L).toDF().writeStream
-      .outputMode("append").format("memory").queryName("t_funnel_x").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("t_funnel_x").isEmpty) // funnel open, nothing emitted
-      // user 1 completes ACROSS the batch boundary; user 2's view misses
-      // the 1000 us deadline and must never convert
-      drop("b1.parquet", Seq((1L, 200L, 3L, "view"), (1L, 300L, 4L, "purchase"),
-        (2L, 5000L, 5L, "view")))
-      q.processAllAvailable()
-      // a terminal user's later purchases must not emit a second conversion
-      drop("b2.parquet", Seq((1L, 400L, 6L, "purchase"), (2L, 5100L, 7L, "purchase")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("t_funnel_x").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(rows == Seq((1L, 100L, 200L, 300L)))
   }
 }

@@ -50,7 +50,7 @@ class ZOrderSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("wh-zorder").toString
     val wh = Warehouse(spark, root)
 
-    wh.writeZOrdered("ev_z", ev, Seq("user_id", "value"), numPartitions = 16)
+    wh.write("ev_z", ZOrder.cluster(ev, Seq("user_id", "value"), numPartitions = 16))
     val z = wh.read("ev_z")
     assert(z.count() == ev.count())
 
