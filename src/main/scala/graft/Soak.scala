@@ -244,7 +244,7 @@ object Soak {
       }),
       Section("skew", _.tables(Seq("lineitem")), skewRows(spark)),
       Section("etl", _.feeds, etlRows(spark, tmp)),
-      Section("dedup", _.corpus, dedupRows(spark, docs, nRows)),
+      Section("dedup", _.corpus, dedupRows(docs, nRows)),
       Section("spine", _.corpus, spineRows(docs, emb)),
       Section("gates", _.corpus, gateRows(spark, tmp, docs, emb)))
   }
@@ -312,11 +312,10 @@ object Soak {
   // frequency, so WITHOUT the cutoff the pair join fans out quadratically
   // by construction — the point of this section is showing the cutoff
   // keeps it ~linear.
-  private def dedupRows(spark: SparkSession, docs: String => DataFrame,
-                        nRows: String => Long): Seq[Row] = Seq(
+  private def dedupRows(docs: String => DataFrame, nRows: String => Long): Seq[Row] = Seq(
     timed("dedup_ngram_dfcut") { (dir, _) =>
       Dedup.ngramJaccardPairs(docs(dir), "doc_id", "text", 4, 0.4,
-        maxDocFreq = Tuning.maxShingleDocFreq(spark, nRows(dir))).count()
+        maxDocFreq = Tuning.maxShingleDocFreq(nRows(dir))).count()
     },
     timed("dedup_simhash") { (dir, _) =>
       Dedup.simhash(docs(dir), "doc_id", "text", 16).count()
@@ -344,7 +343,7 @@ object Soak {
     // copy-local so rounds stay constant and cost tracks the pair count
     timed("dedup_components") { (dir, _) =>
       val pairs = Dedup.ngramJaccardPairs(docs(dir), "doc_id", "text", 4, 0.4,
-        maxDocFreq = Tuning.maxShingleDocFreq(spark, nRows(dir)))
+        maxDocFreq = Tuning.maxShingleDocFreq(nRows(dir)))
       Components.connectedComponents(pairs, "a_id", "b_id").count()
     },
     // incremental near-dup gate: second half of the corpus tagged against
@@ -365,14 +364,14 @@ object Soak {
     // island window stays bounded by one pair's overlap at any factor.
     timed("dedup_substring_spans") { (dir, _) =>
       Dedup.repeatedSpans(docs(dir), "doc_id", "text", 4, 6,
-        maxOccurrences = Tuning.maxShingleDocFreq(spark, nRows(dir))).count()
+        maxOccurrences = Tuning.maxShingleDocFreq(nRows(dir))).count()
     },
     // the rewrite half: adds the covered-position checkpoint (bounded
     // by duplicated-token volume) + (id, pos) anti-join + reassembly
     // of affected docs only
     timed("dedup_substring_scrub") { (dir, _) =>
       Dedup.scrubRepeatedSpans(docs(dir), "doc_id", "text", 4, 6,
-        maxOccurrences = Tuning.maxShingleDocFreq(spark, nRows(dir))).count()
+        maxOccurrences = Tuning.maxShingleDocFreq(nRows(dir))).count()
     },
     // the sparse-candidate path (r15): winnowed anchors (~1/3 the
     // positions) nominate pairs, dense anchors materialize only for
@@ -448,13 +447,12 @@ object Soak {
           Seq("a", "the"), budgetTokens = 4L * nRows(dir))
         .filter(col("selected")).count()
     },
-    // end-to-end pipeline: gate → scrub → exact dedup → near-dup (cutoff
-    // self-derived from the post-dedup corpus size) → split. Includes the
-    // pipeline's own accounting actions; caches cleared per run so the
-    // big run can't ride the small run's blocks.
+    // end-to-end pipeline: gate → scrub → exact dedup → MinHash-LSH
+    // near-dup → split. Includes the pipeline's own accounting actions;
+    // caches cleared per run so the big run can't ride the small run's
+    // blocks.
     timed("corpus_pipeline") { (dir, _) =>
-      CorpusPipeline.withPrepared(docs(dir), "doc_id",
-        "text", CorpusPipeline.Config())(_.corpus.count())
+      CorpusPipeline.withPrepared(docs(dir), "doc_id", "text")(_.corpus.count())
     },
     // integer-exact TF-IDF: tf shuffle on (source, term), df from per-row
     // distinct, term-keyed join, heap top-k — vocabulary grows with the
@@ -530,8 +528,7 @@ object Soak {
       Similarity.contrastiveTriplets(emb(dir), "vec_id", "embedding", k, passes = 2,
         posThreshold = 0.25, negLo = 0.05, negHi = 0.15).count()
     def pipeline(dir: String): Long =
-      CorpusPipeline.withPrepared(docs(dir), "doc_id", "text",
-        CorpusPipeline.Config())(_.corpus.count())
+      CorpusPipeline.withPrepared(docs(dir), "doc_id", "text")(_.corpus.count())
     Seq(
       timed("spine_minhash_lsh")((dir, _) =>
         Dedup.minhashLshPairs(docs(dir), "doc_id", "text", 4, 0.5).count()),

@@ -124,10 +124,10 @@ object Curation {
     * which it always is in practice (an eval set is MBs against a TB-scale
     * train side), turning the whole check into a map-side join with zero
     * shuffle of the training corpus. The gate reads the test input's
-    * planner size estimate against `spark.graft.decontaminate.broadcastMaxBytes`
-    * (default 32 MB of input text ≈ low hundreds of MB of hashed shingle
-    * rows); a genuinely large held-out side falls back to the shuffled
-    * equi-join, whose fan-out is bounded by real content overlap.
+    * planner size estimate against a fixed 32 MB bound (32 MB of input text
+    * ≈ low hundreds of MB of hashed shingle rows); a genuinely large
+    * held-out side falls back to the shuffled equi-join, whose fan-out is
+    * bounded by real content overlap.
     */
   def decontaminate(train: DataFrame, test: DataFrame, idCol: String,
                     textCol: String, k: Int): DataFrame = {
@@ -135,8 +135,7 @@ object Curation {
       .select(col(idCol).as("train_id"), col("__sk"))
     val testShRaw = Dedup.shingleHashes(test, idCol, textCol, k)
       .select(col(idCol).as("test_id"), col("__sk"))
-    val maxBytes = test.sparkSession.conf
-      .get("spark.graft.decontaminate.broadcastMaxBytes", (32L << 20).toString).toLong
+    val maxBytes = 32L << 20
     val testSh =
       if (test.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes)
         broadcast(testShRaw)

@@ -176,24 +176,33 @@ object Dedup {
     *        ubiquitous shingles barely moves Jaccard for true near-dups.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        k: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame =
-    ngramJaccardPairsFrom(
-      ngramShingleStage(df, idCol, textCol, k, maxDocFreq), idCol, threshold)
+                        k: Int, threshold: Double, maxDocFreq: Long = 0L): DataFrame = {
+    val shN = ngramShingleStage(df, idCol, textCol, k, maxDocFreq)
+    // SHUFFLE_HASH hint (the simhashNearDupPairs discipline, minus the
+    // sort): a broadcast of the "small" side re-runs the whole
+    // scan→tokenize→ShingleHashes pipeline once per join input; with both
+    // sides shuffling on `sh` the canonicalized exchanges are equal and
+    // ReusedExchange computes the shingle set ONCE, and hash join skips
+    // the two sorts sort-merge would pay on the exploded set. At fact
+    // scale both sides shuffle anyway, so the hint only changes the
+    // toy-scale plan.
+    shN.select(col(idCol).as("a_id"), col("sh"), col("nsh").as("na")).hint("shuffle_hash")
+      .join(shN.select(col(idCol).as("b_id"), col("sh"), col("nsh").as("nb")), "sh")
+      .filter(col("a_id") < col("b_id"))
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(count(lit(1)).as("n_common"), first(col("na")).as("na"), first(col("nb")).as("nb"))
+      .withColumn("jaccard",
+        col("n_common").cast(DoubleType) / (col("na") + col("nb") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a_id"), col("b_id"), col("jaccard"))
+  }
 
   /** The exploded, cutoff-filtered (idCol, nsh, sh) shingle stage of
-    * [[ngramJaccardPairs]] — exposed so a multi-consumer pipeline can
-    * `persist` it ONCE before pairing: the tokenize→ShingleHashes chain is
-    * the operator's dominant map cost and, unshared, it re-evaluates
-    * inside every exchange the stage feeds (the corpus pipeline measured
-    * EIGHT ~600 ms evaluations of it per run — the dfreq partial, the
-    * cutoff-join probe, both nshPost branches, and both pair-join sides).
-    *
-    * Scale note: the persisted stage is (long, long, long) rows — the
-    * shingle TEXT never materializes — so caching it costs ~24 bytes per
-    * position versus re-tokenizing the corpus once per consumer.
+    * [[ngramJaccardPairs]] and [[ngramContainmentPairs]]: (long, long, long)
+    * rows — the shingle TEXT never materializes, ~24 bytes per position.
     */
-  def ngramShingleStage(df: DataFrame, idCol: String, textCol: String,
-                        k: Int, maxDocFreq: Long = 0L): DataFrame = {
+  private def ngramShingleStage(df: DataFrame, idCol: String, textCol: String,
+                                k: Int, maxDocFreq: Long): DataFrame = {
     // Per-doc shingle counts are free row-local facts (size of the distinct
     // shingle array) — no window pass, no sizes re-join. Only the optional
     // document-frequency cutoff pays a shuffle (its count is inherently
@@ -239,30 +248,6 @@ object Dedup {
       val nshPost = kept.groupBy(col(idCol)).agg(count(lit(1)).as("nsh"))
       kept.join(nshPost, Seq(idCol))
     }
-  }
-
-  /** The pair join + Jaccard aggregate of [[ngramJaccardPairs]] over a
-    * prepared [[ngramShingleStage]] frame (columns idCol, nsh, sh).
-    */
-  def ngramJaccardPairsFrom(shN: DataFrame, idCol: String,
-                            threshold: Double): DataFrame = {
-    // SHUFFLE_HASH hint (the simhashNearDupPairs discipline, minus the
-    // sort): a broadcast of the "small" side re-runs the whole
-    // scan→tokenize→ShingleHashes pipeline once per join input; with both
-    // sides shuffling on `sh` the canonicalized exchanges are equal and
-    // ReusedExchange computes the shingle set ONCE, and hash join skips
-    // the two sorts sort-merge would pay on the exploded set. At fact
-    // scale both sides shuffle anyway, so the hint only changes the
-    // toy-scale plan.
-    shN.select(col(idCol).as("a_id"), col("sh"), col("nsh").as("na")).hint("shuffle_hash")
-      .join(shN.select(col(idCol).as("b_id"), col("sh"), col("nsh").as("nb")), "sh")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("n_common"), first(col("na")).as("na"), first(col("nb")).as("nb"))
-      .withColumn("jaccard",
-        col("n_common").cast(DoubleType) / (col("na") + col("nb") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
   /** MinHash signatures (8 permutations) per document — ONE narrow pass: the
@@ -696,7 +681,7 @@ object Dedup {
       col(srcCol).as("__src")).distinct()
     val a = fps.select(col("fp"), col("__src").as("src_a"))
     val b = fps.select(col("fp"), col("__src").as("src_b"))
-    // SHUFFLE_HASH hint (the ngramJaccardPairsFrom discipline): a broadcast
+    // SHUFFLE_HASH hint (the ngramJaccardPairs discipline): a broadcast
     // of the "small" side re-runs the scan→fingerprint→distinct subtree per
     // join input; with both sides shuffling on fp the canonicalized
     // exchanges are equal and ReusedExchange computes the fingerprint set
@@ -844,9 +829,8 @@ object Dedup {
     // stage feeds the occurrence aggregate AND the prefilter join, and
     // unshared each consumer re-runs the serial scan→tokenize→ChunkHashes
     // kernel stage (FixedCostProbe measured it twice at 533 + 367 ms of a
-    // 1.67 s warm). Same tradeoff ngramShingleStage documents: (long,
-    // long, long) rows cost ~24 bytes per token position vs re-tokenizing
-    // the corpus once per consumer.
+    // 1.67 s warm). (long, long, long) rows cost ~24 bytes per token
+    // position vs re-tokenizing the corpus once per consumer.
     // spread: the tokenize+ChunkHashes kernel is this family's heaviest map
     // stage; fused onto an unsplittable one-row-group scan it runs serial
     // (measured: 323 ms 1-task checkpoint stage; with the spread the same
@@ -863,7 +847,7 @@ object Dedup {
     // Both pair-join inputs shuffle on `sh` from the same prefiltered stage,
     // so the canonicalized exchange is computed once (ReusedExchange) and
     // hash join skips sort-merge's sorts of the exploded set — the
-    // ngramJaccardPairsFrom discipline.
+    // ngramJaccardPairs discipline.
     val kept = base.join(shared, "sh")
     val pairs = kept.select(col(idCol).as("a_id"), col("pos").as("pa"), col("sh"))
       .hint("shuffle_hash")

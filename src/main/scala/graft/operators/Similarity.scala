@@ -1282,7 +1282,7 @@ object Similarity {
       // — bounded by the probe set at ANY corpus size — while the graph is
       // the billion-edge table. Unhinted, the checkpoint's unknown stats
       // planned a SortMergeJoin that exchanged AND sorted the graph side
-      // once per hop (plans/r22/q_ann_graph_topk_after first cut); with
+      // once per hop (seen in q_ann_graph_topk's physical plan); with
       // the hint the graph side is only scanned (or, sharded by node in
       // production, not even that — the hint never makes the BIG side move).
       val nbrs = broadcast(beamDf.select(col("q_id"), col("c_id")))

@@ -75,43 +75,15 @@ case class TopKPerGroupPartialExec(
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  private val maxGroupsPerPartition: Long =
-    conf.getConfString("spark.graft.topk.maxGroupsPerPartition", "50000000").toLong
-
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output
     val gExprs = groupExprs
     val so = sortOrder
     val kk = k
     val numOutputRows = longMetric("numOutputRows")
-    val maxGroups = maxGroupsPerPartition
     child.execute().mapPartitions { iter =>
-      val keyProj = UnsafeProjection.create(gExprs, childOut)
-      val o = RowOrdering.create(so, childOut)
-      val heaps = scala.collection.mutable.HashMap
-        .empty[UnsafeRow, scala.collection.mutable.PriorityQueue[InternalRow]]
-      implicit val ord: Ordering[InternalRow] =
-        (a: InternalRow, b: InternalRow) => o.compare(a, b)
-      iter.foreach { row =>
-        val key = keyProj(row)
-        heaps.get(key) match {
-          case Some(heap) =>
-            if (heap.size < kk) heap.enqueue(row.copy())
-            else if (o.compare(row, heap.head) < 0) {
-              heap.dequeue(); heap.enqueue(row.copy())
-            }
-          case None =>
-            if (heaps.size >= maxGroups) {
-              throw new IllegalStateException(
-                s"TopKPerGroupPartialExec: more than $maxGroups groups in one " +
-                  s"partition (O(groups*k) state would exceed memory); raise " +
-                  s"spark.graft.topk.maxGroupsPerPartition or repartition finer")
-            }
-            val heap = scala.collection.mutable.PriorityQueue.empty[InternalRow]
-            heap.enqueue(row.copy())
-            heaps.put(key.copy(), heap)
-        }
-      }
+      val heaps = TopKPerGroup.perKeyHeaps(iter, UnsafeProjection.create(gExprs, childOut),
+        RowOrdering.create(so, childOut), kk, "TopKPerGroupPartialExec")
       heaps.iterator.flatMap { case (_, heap) =>
         heap.dequeueAll.iterator.map { (r: InternalRow) => numOutputRows += 1; r }
       }
@@ -145,12 +117,6 @@ case class TopKPerGroupExec(
     if (groupExprs.isEmpty) UnspecifiedDistribution :: Nil
     else ClusteredDistribution(groupExprs) :: Nil
 
-  /** Belt-and-braces state guard: documented O(groups·k) memory, fail loudly
-    * (instead of OOMing an executor) if one partition sees more groups.
-    */
-  private val maxGroupsPerPartition: Long =
-    conf.getConfString("spark.graft.topk.maxGroupsPerPartition", "50000000").toLong
-
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output
     val gExprs = groupExprs
@@ -159,7 +125,6 @@ case class TopKPerGroupExec(
     val outTypes = output.map(_.dataType).toArray
     val numOutputRows = longMetric("numOutputRows")
     val numGroups = longMetric("numGroups")
-    val maxGroups = maxGroupsPerPartition
 
     // Bounded local top-k of one iterator: max-heap whose head is the current
     // worst of the best-k. O(n log k) time, O(k) state.
@@ -204,33 +169,8 @@ case class TopKPerGroupExec(
       }
     } else {
       child.execute().mapPartitions { iter =>
-        val keyProj = UnsafeProjection.create(gExprs, childOut)
-        val o = RowOrdering.create(so, childOut)
-        val baseOrd: Ordering[InternalRow] = (a: InternalRow, b: InternalRow) => o.compare(a, b)
-        implicit val ord: Ordering[InternalRow] = baseOrd
-        // max-heap per key: head is the current worst of the best-k
-        val heaps = scala.collection.mutable.HashMap
-          .empty[UnsafeRow, scala.collection.mutable.PriorityQueue[InternalRow]]
-        iter.foreach { row =>
-          val key = keyProj(row)
-          heaps.get(key) match {
-            case Some(heap) =>
-              if (heap.size < kk) heap.enqueue(row.copy())
-              else if (o.compare(row, heap.head) < 0) {
-                heap.dequeue(); heap.enqueue(row.copy())
-              }
-            case None =>
-              if (heaps.size >= maxGroups) {
-                throw new IllegalStateException(
-                  s"TopKPerGroupExec: more than $maxGroups groups in one partition " +
-                    s"(O(groups*k) state would exceed memory); raise " +
-                    s"spark.graft.topk.maxGroupsPerPartition or repartition finer")
-              }
-              val heap = scala.collection.mutable.PriorityQueue.empty[InternalRow]
-              heap.enqueue(row.copy())
-              heaps.put(key.copy(), heap)
-          }
-        }
+        val heaps = TopKPerGroup.perKeyHeaps(iter, UnsafeProjection.create(gExprs, childOut),
+          RowOrdering.create(so, childOut), kk, "TopKPerGroupExec")
         numGroups += heaps.size
         val joined = new JoinedRow
         val outProj = UnsafeProjection.create(outTypes)
@@ -244,6 +184,44 @@ case class TopKPerGroupExec(
 }
 
 object TopKPerGroup {
+
+  /** Belt-and-braces state guard: the operator's memory is O(groups·k) per
+    * partition, so more groups than this in one partition fail loudly
+    * instead of OOMing an executor.
+    */
+  private val MaxGroupsPerPartition = 50000000L
+
+  /** The bounded per-key heap loop both execs run over one partition: a
+    * max-heap per group key whose head is the current worst of the best
+    * `k` rows. O(n log k) time, O(groups·k) state.
+    */
+  private[plans] def perKeyHeaps(iter: Iterator[InternalRow], keyProj: UnsafeProjection,
+      o: Ordering[InternalRow], k: Int, exec: String)
+      : scala.collection.mutable.HashMap[UnsafeRow, scala.collection.mutable.PriorityQueue[InternalRow]] = {
+    implicit val ord: Ordering[InternalRow] = o
+    val heaps = scala.collection.mutable.HashMap
+      .empty[UnsafeRow, scala.collection.mutable.PriorityQueue[InternalRow]]
+    iter.foreach { row =>
+      val key = keyProj(row)
+      heaps.get(key) match {
+        case Some(heap) =>
+          if (heap.size < k) heap.enqueue(row.copy())
+          else if (o.compare(row, heap.head) < 0) {
+            heap.dequeue(); heap.enqueue(row.copy())
+          }
+        case None =>
+          if (heaps.size >= MaxGroupsPerPartition) {
+            throw new IllegalStateException(
+              s"$exec: more than $MaxGroupsPerPartition groups in one partition " +
+                "(O(groups*k) state would exceed memory); repartition finer")
+          }
+          val heap = scala.collection.mutable.PriorityQueue.empty[InternalRow]
+          heap.enqueue(row.copy())
+          heaps.put(key.copy(), heap)
+      }
+    }
+    heaps
+  }
 
   /** Registers the strategy on the session (idempotent). Also injectable via
     * GraftExtensions for config-time wiring.

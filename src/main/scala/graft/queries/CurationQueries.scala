@@ -1623,12 +1623,11 @@ object CurationQueries {
     // gate → PII scrub → exact dedup → near-dup removal → deterministic
     // split) hash-checked as ONE oracle — every stage mirrored in SQL. The
     // strongest correctness statement in the registry: not just each
-    // operator, but their composition. Round 14: the near-dup leg is the
-    // pipeline's new MinHash-LSH default (per-doc sketch + banded
-    // self-join — the method production pipelines run at corpus scale),
-    // replayed in SQL as the 8-permutation signature + 2-band candidate
-    // join; the exact-Jaccard leg remains available via Config("ngram")
-    // and oracle-covered at operator granularity (q_dedup_ngram_jaccard).
+    // operator, but their composition. The near-dup leg is MinHash-LSH
+    // (per-doc sketch + banded self-join — the method production
+    // pipelines run at corpus scale), replayed in SQL as the 8-permutation
+    // signature + 2-band candidate join. Exact-Jaccard near-dup removal is
+    // oracle-covered at operator granularity (q_dedup_ngram_jaccard).
     Q("q_corpus_pipeline",
       (s, dir) => {
         // Loan wrapper: materialize the (small) projected answer eagerly
@@ -1638,8 +1637,7 @@ object CurationQueries {
         // outlives this function (a leaked cache made the warm bench run
         // SLOWER than cold in round 4).
         graft.operators.CorpusPipeline.withPrepared(
-            t(s, dir, "documents"), "doc_id", "text",
-            graft.operators.CorpusPipeline.Config()) { r =>
+            t(s, dir, "documents"), "doc_id", "text") { r =>
           graft.Materialize.eager(r.corpus
             .select(col("doc_id"), md5(col("text")).as("text_fp"), col("split")))
         }.orderBy(col("doc_id"))

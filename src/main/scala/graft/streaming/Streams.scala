@@ -16,8 +16,7 @@ import org.apache.spark.sql.types._
   * replay-safe index merges that only ever see strictly earlier batches.
   * The gates: the idempotent parquet sink, near-dup and exact-substring
   * dedup, eval-set decontamination, per-group percentile and token-budget
-  * cuts, SemDeDup, the incremental kNN graph, corpus and crawl ingest, and
-  * the Count-Min sketch maintenance.
+  * cuts, SemDeDup, the incremental kNN graph, and corpus and crawl ingest.
   *
   * Scale: a gate keeps its state in warehouse tables, not in the state
   * store, and collects at most small bounded key sets to the driver.
@@ -1108,47 +1107,6 @@ object Streams {
       queryName: String = "corpus_ingest"): StreamingQuery =
     startGate(docs, checkpointDir, queryName)(corpusIngestBatch(_, wh,
       outDir, _, idCol, textCol, minTokens, shingleK, bands))
-
-  // ---------------------------------------------------------------------
-  // Streaming sketch maintenance: fold each micro-batch's Count-Min cells
-  // into a persisted per-batch cells table — the streaming face of
-  // CountMin.merge. The corpus-wide sketch is ONE tiny groupBy over the
-  // table at read time; history is never re-scanned, and the per-batch
-  // row key makes replay after any crash a detectable no-op (the same
-  // idempotence discipline as the dedup indexes, without needing
-  // min-batch-id semantics: a batch's cells either all landed — the swap
-  // is atomic — or none did).
-  // ---------------------------------------------------------------------
-
-  /** Per-batch Count-Min cells table schema for streaming sketch upkeep. */
-  val cmsCellsSchema: StructType = StructType(Seq(
-    StructField("batch_id", LongType), StructField("r", LongType),
-    StructField("bucket", LongType), StructField("cnt", LongType)))
-
-  /** Fold one micro-batch into the cells table (a foreachBatch body).
-    * Returns false when `batchId` was already folded in (pure replay).
-    */
-  def sketchMaintainBatch(batch: DataFrame, wh: graft.airbnb.Warehouse,
-      table: String, batchId: Long, tokenCol: String,
-      depth: Int, width: Int): Boolean = {
-    val cur = wh.readOrEmpty(table, cmsCellsSchema)
-    if (!cur.filter(col("batch_id") === batchId).isEmpty) return false
-    val cells = graft.operators.CountMin.sketch(batch, tokenCol, depth, width)
-      .withColumn("batch_id", lit(batchId))
-      .select(col("batch_id"), col("r"), col("bucket"), col("cnt"))
-    // materialize BEFORE the swap: `cur`'s lineage reads the table files the
-    // write below replaces (depth×width + history rows — tiny)
-    Materialize.scope { wh.write(table, Materialize.eager(cur.unionByName(cells))); true }
-  }
-
-  /** The corpus-wide sketch maintained so far: cells summed across batches
-    * — exactly CountMin.sketch over every token ever folded (distributive
-    * merge, spec'd in CorpusOpsSpec/StreamsSpec).
-    */
-  def corpusSketch(wh: graft.airbnb.Warehouse, table: String): DataFrame =
-    wh.readOrEmpty(table, cmsCellsSchema)
-      .groupBy(col("r"), col("bucket"))
-      .agg(sum(col("cnt")).cast(LongType).as("cnt"))
 
   /** Read the sink's committed output: only batch directories bearing the
     * _COMMITTED marker participate, so readers never observe a torn batch.

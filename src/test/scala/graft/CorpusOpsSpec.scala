@@ -182,23 +182,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("streaming sketch maintenance folds batches, survives replay, equals the whole-corpus sketch") {
-    import graft.streaming.Streams
-    val wh = graft.airbnb.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-cms-wh").toString)
-    val b0 = (0 until 90).map(i => s"w${i % 9}").toDF("token")
-    val b1 = (0 until 60).map(i => s"w${i % 13}").toDF("token")
-    assert(Streams.sketchMaintainBatch(b0, wh, "cms", 0L, "token", 3, 8))
-    assert(Streams.sketchMaintainBatch(b1, wh, "cms", 1L, "token", 3, 8))
-    // replay of an already-folded batch is a detected no-op
-    assert(!Streams.sketchMaintainBatch(b1, wh, "cms", 1L, "token", 3, 8))
-    val maintained = Streams.corpusSketch(wh, "cms")
-      .orderBy("r", "bucket").collect().toSeq
-    val direct = CountMin.sketch(b0.unionByName(b1), "token", 3, 8)
-      .orderBy("r", "bucket").collect().toSeq
-    assert(maintained == direct)
-  }
-
   // ---------- winnowing ----------
 
   test("winnow selects window minima; short streams fall back to global min") {

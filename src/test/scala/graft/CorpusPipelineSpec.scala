@@ -11,7 +11,8 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   private val goodText =
     "the analysis of large corpora requires careful attention to quality " +
-    "signals and duplicate structure across many different documents today"
+    "signals and duplicate structure across many different documents that " +
+    "were collected from the open web over several years by teams today"
 
   test("pipeline gates quality, scrubs, dedups exact+near, splits, accounts") {
     val docs = Seq(
@@ -21,15 +22,22 @@ class CorpusPipelineSpec extends AnyFunSuite {
       (4L, "too short"),                               // quality: token floor
       (5L, ("spam spam spam " * 20).trim),             // quality: repetition
       (6L, "contact me at someone@example.org or 555-1234 about the corpus " +
-           "quality analysis work we discussed during the previous meeting ok"))
+           "quality analysis work we discussed during the previous meeting " +
+           "early this week ok"))
       .toDF("doc_id", "text")
-    // the "ngram" leg: this fixture's near-dup pair was hand-computed for
-    // the EXACT Jaccard score (today→tomorrow changes 1 of 17 distinct
-    // 4-gram shingles → J = 15/17 ≈ 0.88 ≥ 0.85); the sketch leg's
-    // estimate is a different (deterministic but perm-dependent) quantity,
-    // covered by the operator-parity test below
-    val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 15, nearDupMethod = "ngram"))
+    // The near-dup losers are the MinHash-LSH operator's own on the docs
+    // that survive the gate, scrub and exact dedup (1, 3 and the scrubbed
+    // 6): the sketch's Jaccard estimate is deterministic but
+    // permutation-dependent, so it is read off the operator, not computed
+    // by hand.
+    val expectedLosers = graft.operators.Dedup
+      .minhashLshPairs(docs.filter($"doc_id".isin(1L, 3L, 6L))
+          .withColumn("text", graft.functions.TextFns.piiScrub($"text")),
+        "doc_id", "text", 4, 0.85)
+      .select("b_id").collect().map(_.getLong(0)).toSet
+    assert(expectedLosers == Set(3L),
+      s"fixture's near dup is not an LSH loser — the near-dup check is vacuous: $expectedLosers")
+    val r = CorpusPipeline.prepare(docs, "doc_id", "text")
     val kept = r.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 6L), s"kept=$kept")
     assert(r.droppedQuality == 2)  // 4 and 5
@@ -60,8 +68,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .select("b_id").collect().map(_.getLong(0)).toSet
     assert(expectedLosers.nonEmpty,
       "fixture produced no LSH losers — the wiring check is vacuous")
-    val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 15))
+    val r = CorpusPipeline.prepare(docs, "doc_id", "text")
     val kept = r.corpus.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L, 3L, 4L) -- expectedLosers, s"kept=$kept")
     assert(r.droppedNearDup == expectedLosers.size)
@@ -69,40 +76,12 @@ class CorpusPipelineSpec extends AnyFunSuite {
     r.unpersist()
   }
 
-  test("chunking mode emits overlapping windows that reassemble the doc") {
-    val docs = Seq((7L, (1 to 100).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
-    val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 10, nearDupK = 0,
-        chunkSize = 40, chunkStride = 30))
-    val chunks = r.corpus.orderBy("chunk_idx")
-      .select("chunk_idx", "chunk").collect()
-      .map(row => row.getLong(0) -> row.getString(1))
-    // starts at 1, 31, 61, 91 → 4 chunks; tail chunk has 10 tokens
-    assert(chunks.length == 4)
-    assert(chunks.head._2.startsWith("w1 w2 ") && chunks.head._2.split(" ").length == 40)
-    assert(chunks.last._2.split(" ").length == 10)
-    // overlap: chunk 2 starts at token 31, inside chunk 1's [1, 40] window
-    assert(chunks(1)._2.startsWith("w31 "))
-  }
-
-  test("near-dup off keeps the corpus cached and chunkSize alone is legal") {
-    val docs = Seq((8L, (1 to 50).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text")
-    val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 10, nearDupK = 0, chunkSize = 20))
-    // stride defaulted to chunkSize → non-overlapping: ceil on stride grid
-    val chunks = r.corpus.select("chunk_idx").collect().map(_.getLong(0)).sorted
-    assert(chunks.toSeq == Seq(1L, 2L, 3L))
-    // consuming twice still works (nothing was unpersisted out from under us)
-    assert(r.corpus.count() == 3)
-  }
-
   test("accounting rides observed metrics — no separate raw-input count job") {
     // Every materializing action in prepare() is accounted for; the raw
-    // input count must NOT add an action of its own (it rides the gate pass
-    // as an observed metric). With near-dup and chunking off the pipeline
-    // runs exactly 3 actions: gate+scrub count, exact-dedup count, and the
-    // final (cache-served) count. Jobs are NOT a stable unit (AQE
-    // materializes shuffle stages as extra jobs) — QueryExecutions are.
+    // input, gate-survivor and exact-survivor counts must NOT add actions of
+    // their own (they ride the near-dup survivor count as observed
+    // metrics), so the pipeline runs one action. Jobs are NOT a stable unit
+    // (AQE materializes shuffle stages as extra jobs) — QueryExecutions are.
     val actions = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -116,8 +95,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     spark.listenerManager.register(listener)
     try {
-      val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-        CorpusPipeline.Config(minTokens = 5, nearDupK = 0))
+      val r = CorpusPipeline.prepare(docs, "doc_id", "text")
       assert(r.droppedQuality == 0 && r.droppedExactDup == 0)
       // listener events post asynchronously — wait for the count to settle
       var last = -1
@@ -135,8 +113,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
       .select($"doc_id", $"text").limit(100)
     val before = persisted
-    val r = CorpusPipeline.prepare(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 5))
+    val r = CorpusPipeline.prepare(docs, "doc_id", "text")
     assert(persistedSince(before) > 0,
       "prepare() no longer persists its survivor stage — test is vacuous")
     r.unpersist()
@@ -157,14 +134,14 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
       .select($"doc_id", $"text").limit(100)
     val before = persisted
-    val n = CorpusPipeline.withPrepared(docs, "doc_id", "text",
-      CorpusPipeline.Config(minTokens = 5))(_.corpus.count())
+    val n = CorpusPipeline.withPrepared(docs, "doc_id", "text")(_.corpus.count())
     assert(n > 0)
     assert(persistedSince(before) == 0,
       "withPrepared leaked the survivor stage on the normal path")
     intercept[RuntimeException] {
-      CorpusPipeline.withPrepared(docs, "doc_id", "text",
-        CorpusPipeline.Config(minTokens = 5)) { _ => throw new RuntimeException("boom") }
+      CorpusPipeline.withPrepared(docs, "doc_id", "text") { _ =>
+        throw new RuntimeException("boom")
+      }
     }
     assert(persistedSince(before) == 0,
       "withPrepared leaked the survivor stage on the exception path")

@@ -86,32 +86,48 @@ class MaterializeSpec extends AnyFunSuite {
     assert(persistedSince(before) == 0, "graphTopK's checkpoints outlived the scope")
   }
 
+  /** `file:line: code` of every code line (comments skipped) in
+    * `src/main/scala` that `banned` matches and `exempt(relPath, line)`
+    * does not excuse.
+    */
+  private def mainSourceHits(banned: scala.util.matching.Regex,
+      exempt: (String, String) => Boolean): Seq[String] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.toList.flatMap { case (line, i) =>
+        val code = line.trim
+        val stripped = if (code.startsWith("//") || code.startsWith("*") ||
+          code.startsWith("/*")) "" else line.replaceAll("//.*$", "")
+        if (banned.findFirstIn(stripped).isDefined && !exempt(rel, stripped))
+          Some(s"$rel:${i + 1}: $code")
+        else None
+      } finally src.close()
+    }
+  }
+
   test("lint: no materialization outside Materialize.scala") {
     // Every localCheckpoint / persist / unpersist / checkpoint in main code
     // goes through Materialize, so its scope owns the lifetime. The one
     // exception is Components.truncate's reliable checkpoint (files, not
     // blocks), taken when a checkpoint dir is set.
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     val banned = """(localCheckpoint\(|\.persist\(|\.unpersist\(|\.checkpoint\()""".r
     val allowed = ("graft/operators/Components.scala", "df.checkpoint(eager = true)")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val hits = files(root).filter(_.getName.endsWith(".scala"))
-      .filterNot(_.getName == "Materialize.scala")
-      .flatMap { f =>
-        val rel = root.toPath.relativize(f.toPath).toString
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().zipWithIndex.toList.flatMap { case (line, i) =>
-          val code = line.trim
-          val stripped = if (code.startsWith("//") || code.startsWith("*") ||
-            code.startsWith("/*")) "" else line.replaceAll("//.*$", "")
-          val exempt = rel == allowed._1 && stripped.contains(allowed._2) &&
-            banned.findAllIn(stripped).size == 1
-          if (banned.findFirstIn(stripped).isDefined && !exempt) Some(s"$rel:${i + 1}: $code")
-          else None
-        } finally src.close()
-      }
+    val hits = mainSourceHits(banned, (rel, stripped) =>
+      rel.split('/').last == "Materialize.scala" ||
+        (rel == allowed._1 && stripped.contains(allowed._2) &&
+          banned.findAllIn(stripped).size == 1))
     assert(hits.isEmpty, hits.mkString("materialization outside Materialize:\n", "\n", ""))
+  }
+
+  test("lint: no spark.graft.* session settings in main code") {
+    // Operator sizing is a constant or a call argument, never a session
+    // conf key that no workload sets.
+    val hits = mainSourceHits(""""spark\.graft\.""".r, (_, _) => false)
+    assert(hits.isEmpty, hits.mkString("spark.graft.* conf key in main code:\n", "\n", ""))
   }
 }

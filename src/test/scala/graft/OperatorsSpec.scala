@@ -304,10 +304,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("tuning knobs: session-config override and corpus-scaled defaults") {
-    assert(Tuning.maxShingleDocFreq(spark, 50_000_000L) == math.sqrt(1e8).toLong)
-    spark.conf.set("spark.graft.dedup.maxDocFreq", "123")
-    try assert(Tuning.maxShingleDocFreq(spark, 1L << 40) == 123L)
-    finally spark.conf.unset("spark.graft.dedup.maxDocFreq")
+    assert(Tuning.maxShingleDocFreq(50_000_000L) == math.sqrt(1e8).toLong)
   }
 
   test("minhash LSH with 4 bands still finds the planted pair (param band count)") {
