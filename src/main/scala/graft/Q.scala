@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit, sum, when}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** One verifiable operator query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle query over
@@ -31,11 +33,24 @@ final case class Q(
     prepare: Option[(SparkSession, String) => Unit] = None)
 
 object Q {
+  /** A registry table of the sf dir, loaded the one way every row loads it. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    Tables.load(s, dir, name)
+
+  /** Exact decimal sum of a double column, returned as double. */
+  def dsum(c: Column): Column = sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
   /** DuckDB SQL fragment: exact decimal sum of a double expr, as DOUBLE. */
   def dsumSql(c: String): String = s"CAST(SUM(CAST(($c) AS DECIMAL(25,4))) AS DOUBLE)"
+  /** Exact average of a double column, returned as double. */
+  def davg(c: Column): Column = dsum(c) / count(c)
   /** DuckDB SQL fragment: exact average of a double expr, as DOUBLE. */
   def davgSql(c: String): String = s"(${dsumSql(c)} / COUNT($c))"
+  /** Order-independent exact mean of a ratio-scale double (12 dp). */
+  def dravg(c: Column): Column =
+    sum(c.cast(DecimalType(25, 12))).cast(DoubleType) / count(c)
   /** DuckDB SQL fragment: exact average of ratio-scale doubles (12 dp). */
   def dravgSql(c: String): String =
     s"(CAST(SUM(CAST(($c) AS DECIMAL(25,12))) AS DOUBLE) / COUNT($c))"
+  /** BIGINT conditional count on both engines. */
+  def cntIf(cond: Column): Column = count(when(cond, lit(1)))
 }

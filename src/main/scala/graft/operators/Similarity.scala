@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -311,17 +311,26 @@ object Similarity {
     */
   def pqCodebooksFromDf(df: DataFrame, expectedM: Int = -1,
                         expectedKCent: Int = -1,
-                        expectedSubdim: Int = -1): Array[Array[Array[Double]]] = {
+                        expectedSubdim: Int = -1): Array[Array[Array[Double]]] =
+    codebooksFromDf(df, col("value"), _.getDouble(3),
+      expectedM, expectedKCent, expectedSubdim)
+
+  /** The one codebook-frame reader behind [[pqCodebooksFromDf]] and
+    * [[pqCodebooksUnitsFromDf]]: `value` selects the value column and `get`
+    * reads it from column 3 of a collected row. */
+  private def codebooksFromDf[V: scala.reflect.ClassTag](df: DataFrame,
+      value: Column, get: Row => V, expectedM: Int, expectedKCent: Int,
+      expectedSubdim: Int): Array[Array[Array[V]]] = {
     // the shape columns ride the ONE bounded collect (FitFrames contract)
     val hasShape = df.columns.contains("m") && df.columns.contains("k_cent") &&
       df.columns.contains("subdim")
-    val base = Seq(col("subspace"), col("centroid"), col("dim"), col("value"))
+    val base = Seq(col("subspace"), col("centroid"), col("dim"), value)
     val sel = if (hasShape)
       base ++ Seq(col("m").cast(LongType), col("k_cent").cast(LongType),
         col("subdim").cast(LongType)) else base
     val collected = df.select(sel: _*).collect()
     require(collected.nonEmpty, "empty PQ codebook frame")
-    val rows = collected.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+    val rows = collected.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), get(r)))
     val m = FitFrames.declared("m", expectedM,
       if (hasShape) Some(collected.map(_.getLong(4))) else None,
       rows.map(_._1).max + 1)
@@ -656,36 +665,9 @@ object Similarity {
     */
   def pqCodebooksUnitsFromDf(df: DataFrame, expectedM: Int = -1,
                              expectedKCent: Int = -1,
-                             expectedSubdim: Int = -1): Array[Array[Array[Long]]] = {
-    val hasShape = df.columns.contains("m") && df.columns.contains("k_cent") &&
-      df.columns.contains("subdim")
-    val base = Seq(col("subspace"), col("centroid"), col("dim"),
-      col("value").cast(LongType))
-    val sel = if (hasShape)
-      base ++ Seq(col("m").cast(LongType), col("k_cent").cast(LongType),
-        col("subdim").cast(LongType)) else base
-    val collected = df.select(sel: _*).collect()
-    require(collected.nonEmpty, "empty PQ codebook frame")
-    val rows = collected.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-    val m = FitFrames.declared("m", expectedM,
-      if (hasShape) Some(collected.map(_.getLong(4))) else None,
-      rows.map(_._1).max + 1)
-    val kc = FitFrames.declared("k_cent", expectedKCent,
-      if (hasShape) Some(collected.map(_.getLong(5))) else None,
-      rows.map(_._2).max + 1)
-    val sd = FitFrames.declared("subdim", expectedSubdim,
-      if (hasShape) Some(collected.map(_.getLong(6))) else None,
-      rows.map(_._3).max + 1)
-    require(rows.map(_._1).max + 1 == m && rows.map(_._2).max + 1 == kc &&
-        rows.map(_._3).max + 1 == sd && rows.length == m * kc * sd &&
-        rows.map(t => (t._1, t._2, t._3)).distinct.length == rows.length,
-      s"PQ codebook frame holes: ${rows.length} rows, expected ${m}x${kc}x$sd")
-    rows.groupBy(_._1).toArray.sortBy(_._1).map { case (_, bySub) =>
-      bySub.groupBy(_._2).toArray.sortBy(_._1).map { case (_, byCent) =>
-        byCent.sortBy(_._3).map(_._4)
-      }
-    }
-  }
+                             expectedSubdim: Int = -1): Array[Array[Array[Long]]] =
+    codebooksFromDf(df, col("value").cast(LongType), _.getLong(3),
+      expectedM, expectedKCent, expectedSubdim)
 
   /** Oracle-replayable IVF-PQ ANN top-k — the production billion-vector
     * index shape: the coarse quantizer bounds COMPUTE (each query scores

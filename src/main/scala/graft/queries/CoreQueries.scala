@@ -1,9 +1,9 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.Q._
 import graft.functions.CleanFns
-import graft.operators.Upsert
+import graft.operators.{AsOfJoin, Upsert}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,14 +21,20 @@ import org.apache.spark.sql.types._
   */
 object CoreQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Exact decimal sum of a double column, returned as double (see Q doc). */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-  private def davg(c: Column): Column = dsum(c) / count(c)
-  /** BIGINT conditional count on both engines. */
-  private def cntIf(cond: Column): Column = count(when(cond, lit(1)))
+  /** Each click as-of joined to the user's purchases by `join(clicks,
+    * purchases)`, an AsOfJoin.asof carrying the purchase value and ts. */
+  private def clickAsOf(s: SparkSession, dir: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = t(s, dir, "events")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("value"))
+    join(clicks, purchases)
+      .select(col("event_id"), col("user_id"),
+              col("asof_value"), col("asof_ts"))
+      .orderBy(col("event_id"))
+  }
 
   val qs: Seq[Q] = Seq(
 
@@ -843,18 +849,8 @@ object CoreQueries {
     // purchase. Composed as union + running window (operators.AsOfJoin, one
     // shuffle); DuckDB verifies with its native ASOF JOIN.
     Q("q_asof_join",
-      (s, dir) => {
-        val ev = t(s, dir, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("value"))
-        graft.operators.AsOfJoin.asof(clicks, purchases, "user_id", "ts", "ts",
-            Seq("value", "ts"))
-          .select(col("event_id"), col("user_id"),
-                  col("asof_value"), col("asof_ts"))
-          .orderBy(col("event_id"))
-      },
+      (s, dir) => clickAsOf(s, dir)(AsOfJoin.asof(_, _, "user_id", "ts", "ts",
+        Seq("value", "ts"))),
       Some("""
         SELECT l.event_id, l.user_id, r.value AS asof_value, r.ts AS asof_ts
         FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l
@@ -867,18 +863,8 @@ object CoreQueries {
     // union+window shape, traversal reversed). Oracle: argmin-over-window
     // formulation (portable regardless of DuckDB ASOF direction support).
     Q("q_asof_forward",
-      (s, dir) => {
-        val ev = t(s, dir, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("value"))
-        graft.operators.AsOfJoin.asof(clicks, purchases, "user_id", "ts", "ts",
-            Seq("value", "ts"), forward = true)
-          .select(col("event_id"), col("user_id"),
-                  col("asof_value"), col("asof_ts"))
-          .orderBy(col("event_id"))
-      },
+      (s, dir) => clickAsOf(s, dir)(AsOfJoin.asof(_, _, "user_id", "ts", "ts",
+        Seq("value", "ts"), forward = true)),
       Some("""
         WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
         r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
@@ -894,18 +880,8 @@ object CoreQueries {
     // point-in-time feature join carries (a quote from last week must not
     // enrich today's trade). Map-side post-filter on the carried right time.
     Q("q_asof_tolerance",
-      (s, dir) => {
-        val ev = t(s, dir, "events")
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("value"))
-        graft.operators.AsOfJoin.asof(clicks, purchases, "user_id", "ts", "ts",
-            Seq("value", "ts"), tolerance = Some(expr("INTERVAL 6 HOUR")))
-          .select(col("event_id"), col("user_id"),
-                  col("asof_value"), col("asof_ts"))
-          .orderBy(col("event_id"))
-      },
+      (s, dir) => clickAsOf(s, dir)(AsOfJoin.asof(_, _, "user_id", "ts", "ts",
+        Seq("value", "ts"), tolerance = Some(expr("INTERVAL 6 HOUR")))),
       Some("""
         WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
         r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
@@ -1633,7 +1609,7 @@ object CoreQueries {
     // in ZOrderSpec (file layout isn't DuckDB-expressible).
     Q("q_zorder_locality",
       (s, dir) => {
-        val ev = Tables.load(s, dir, "events")
+        val ev = t(s, dir, "events")
         ev.withColumn("__z",
             graft.operators.ZOrder.zValue(ev, Seq("user_id", "value"), 8))
           .groupBy(expr("__z DIV 1024").as("z_bucket"))

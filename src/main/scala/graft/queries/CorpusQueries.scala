@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Q._
 import graft.functions.TextFns
 import graft.operators.{CountMin, Curation, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,9 +21,6 @@ import org.apache.spark.sql.types._
   * hash-compared against its DuckDB oracle.
   */
 object CorpusQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** The fixture corpus has no newline structure, so line-rule queries
     * rebuild each document as 8-token lines IN-QUERY on both engines —

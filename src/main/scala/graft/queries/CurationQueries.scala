@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Q._
 import graft.functions.TextFns
 import graft.operators.{Components, Curation, Dedup, Scd2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,13 +20,71 @@ import org.apache.spark.sql.types._
   */
 object CurationQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
+  /** DuckDB tokens CTE (lower + trim + whitespace split) over documents,
+    * carrying `cols`. */
+  private def toksOf(cols: String): String =
+    s"""toks AS (SELECT $cols,
+      |  string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents)""".stripMargin
+  private val toksCte = toksOf("doc_id, source")
 
-  /** DuckDB tokens CTE (lower + trim + whitespace split) over documents. */
-  private val toksCte =
-    """toks AS (SELECT doc_id, source,
-      |  string_split_regex(lower(trim(text)), '\s+') AS t FROM documents)""".stripMargin
+  /** CTEs `g` and `sc`: Curation.qualityScore's integer `score` (stopwords
+    * a, the) of each `toks` row, carrying `cols`, and `ntok` computed as
+    * `ntokExpr` when one is given. */
+  private def scoreCtes(cols: String, ntokExpr: String = ""): String = {
+    val (gNtok, scNtok) =
+      if (ntokExpr.isEmpty) ("", "") else (s" $ntokExpr AS ntok,", " ntok,")
+    s"""g AS (SELECT $cols,$gNtok GREATEST(len(t), 1) AS n,
+                len(list_distinct(t)) AS nd,
+                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
+              FROM toks),
+        sc AS (SELECT $cols,$scNtok
+                 1000 * LEAST(n, 200)
+                   + (500 * ((nd * 1000000) // n)) // 1000
+                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
+               FROM g)"""
+  }
+
+  /** CTEs `toks`, `sh0` and `sh(doc_id, source, sh)`: each document's
+    * distinct word 4-gram shingles, tagged with its source. */
+  private def sourceShingleCtes: String = {
+    val terms = (0 until 4)
+      .map(j => if (j == 0) "t[i]" else s"t[i+$j]").mkString(" || ' ' || ")
+    s"""$toksCte,
+        sh0 AS (SELECT doc_id, source,
+                  unnest(list_transform(range(1, len(t) - 2), i -> $terms)) AS sh
+                FROM toks WHERE len(t) >= 4),
+        sh AS (SELECT DISTINCT doc_id, source, sh FROM sh0)"""
+  }
+
+  /** DuckDB oracle of train/test decontamination (exact and Bloom rows):
+    * per train doc (source <> 'src0'), the shingles and held-out docs it
+    * shares with the src0 slice. */
+  private def decontaminateOracle: String = s"""
+        WITH $sourceShingleCtes,
+        tr AS (SELECT doc_id AS train_id, sh FROM sh WHERE source <> 'src0'),
+        te AS (SELECT doc_id AS test_id, sh FROM sh WHERE source = 'src0')
+        SELECT train_id, COUNT(*) AS n_shared_shingles,
+               COUNT(DISTINCT test_id) AS n_test_docs_hit
+        FROM tr JOIN te USING (sh)
+        GROUP BY train_id ORDER BY train_id"""
+
+  /** CTEs `toks`, `sh`, `pairs(a_id, b_id)` and `comp(node, component_id)`:
+    * the word 4-gram Jaccard >= 0.4 near-dup pairs and their connected
+    * components, mirroring Dedup.ngramJaccardPairs(_, 4, 0.4) composed with
+    * Components.connectedComponents. The enclosing WITH must be RECURSIVE.
+    */
+  private val nearDupCompCtes: String = s"""${Fragments.shingleCtes},
+        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
+        cand AS (
+          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
+          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+          GROUP BY 1, 2),
+        pairs AS (
+          SELECT a_id, b_id FROM cand
+          JOIN sizes sa ON a_id = sa.doc_id
+          JOIN sizes sb ON b_id = sb.doc_id
+          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
+        ${Fragments.closureCtes("pairs")}"""
 
   /** The perceptron-distillation replay as a CTE chain (g → … → bw): full
     * unroll of `epochs` data-dependent pocket-perceptron epochs over the
@@ -165,22 +224,7 @@ object CurationQueries {
             "doc_id", "text", k = 4)
           .orderBy(col("train_id"))
       },
-      Some {
-        val terms = (0 until 4)
-          .map(j => if (j == 0) "t[i]" else s"t[i+$j]").mkString(" || ' ' || ")
-        s"""
-        WITH $toksCte,
-        sh0 AS (SELECT doc_id, source,
-                  unnest(list_transform(range(1, len(t) - 2), i -> $terms)) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, source, sh FROM sh0),
-        tr AS (SELECT doc_id AS train_id, sh FROM sh WHERE source <> 'src0'),
-        te AS (SELECT doc_id AS test_id, sh FROM sh WHERE source = 'src0')
-        SELECT train_id, COUNT(*) AS n_shared_shingles,
-               COUNT(DISTINCT test_id) AS n_test_docs_hit
-        FROM tr JOIN te USING (sh)
-        GROUP BY train_id ORDER BY train_id"""
-      }),
+      Some(decontaminateOracle)),
 
     // ----- decontamination via broadcast Bloom sketch: the 100 TB path for
     // when even the hashed held-out shingle set exceeds broadcast budget.
@@ -196,22 +240,7 @@ object CurationQueries {
             "doc_id", "text", k = 4)
           .orderBy(col("train_id"))
       },
-      Some {
-        val terms = (0 until 4)
-          .map(j => if (j == 0) "t[i]" else s"t[i+$j]").mkString(" || ' ' || ")
-        s"""
-        WITH $toksCte,
-        sh0 AS (SELECT doc_id, source,
-                  unnest(list_transform(range(1, len(t) - 2), i -> $terms)) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, source, sh FROM sh0),
-        tr AS (SELECT doc_id AS train_id, sh FROM sh WHERE source <> 'src0'),
-        te AS (SELECT doc_id AS test_id, sh FROM sh WHERE source = 'src0')
-        SELECT train_id, COUNT(*) AS n_shared_shingles,
-               COUNT(DISTINCT test_id) AS n_test_docs_hit
-        FROM tr JOIN te USING (sh)
-        GROUP BY train_id ORDER BY train_id"""
-      }),
+      Some(decontaminateOracle)),
 
     // ----- eval-side contamination report: per test doc, the ppm of its
     // distinct shingles already present in train (the mirror of
@@ -225,23 +254,15 @@ object CurationQueries {
             "doc_id", "text", k = 4)
           .orderBy(col("test_id"))
       },
-      Some {
-        val terms = (0 until 4)
-          .map(j => if (j == 0) "t[i]" else s"t[i+$j]").mkString(" || ' ' || ")
-        s"""
-        WITH $toksCte,
-        sh0 AS (SELECT doc_id, source,
-                  unnest(list_transform(range(1, len(t) - 2), i -> $terms)) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, source, sh FROM sh0),
+      Some(s"""
+        WITH $sourceShingleCtes,
         tr AS (SELECT DISTINCT sh FROM sh WHERE source <> 'src0'),
         te AS (SELECT doc_id AS test_id, sh FROM sh WHERE source = 'src0')
         SELECT test_id, COUNT(*) AS n_shingles,
                COUNT(tr.sh) AS n_leaked,
                COUNT(tr.sh) * 1000000 // COUNT(*) AS leak_ppm
         FROM te LEFT JOIN tr USING (sh)
-        GROUP BY test_id ORDER BY test_id"""
-      }),
+        GROUP BY test_id ORDER BY test_id""")),
 
     // ----- sequence packing: per-shard (source) deterministic layout,
     // 512-token context windows; documents binned by first-token offset.
@@ -332,15 +353,7 @@ object CurationQueries {
       },
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT source, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT source,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g)
+        ${scoreCtes("source")}
         SELECT source, COUNT(*) AS n_docs,
                COUNT(CASE WHEN score >= 250000 THEN 1 END) AS n_keep,
                CAST(SUM(score) AS DOUBLE) / COUNT(*) AS avg_score
@@ -365,9 +378,8 @@ object CurationQueries {
           .select(col("lang"), col("doc_id"), col("score"))
           .orderBy(col("lang"), col("doc_id"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
         g AS (SELECT doc_id, lang, GREATEST(len(t), 1) AS n,
                 len(list_distinct(t)) AS nd,
                 len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
@@ -406,19 +418,9 @@ object CurationQueries {
           .select(col("lang"), col("doc_id"), col("ntok"))
           .orderBy(col("lang"), col("doc_id"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT doc_id, lang, CAST(len(t) AS BIGINT) AS ntok,
-                GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id, lang, ntok,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
+        ${scoreCtes("doc_id, lang", "CAST(len(t) AS BIGINT)")},
         q AS (SELECT lang, (SUM(ntok) * 300) // 1000 AS quota
               FROM sc GROUP BY lang),
         r AS (SELECT lang, doc_id, ntok,
@@ -477,15 +479,9 @@ object CurationQueries {
           // aggregate as ONE task; the exchange moves only groups×2 rows.
           .repartition(1).sortWithinPartitions(col("lang"), col("batch"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT doc_id, lang, CAST(len(t) AS BIGINT) AS ntok,
-                GREATEST(len(t), 1) AS n, len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns FROM toks),
-        sc AS (SELECT doc_id, lang, ntok,
-                 1000 * LEAST(n, 200) + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score FROM g),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
+        ${scoreCtes("doc_id, lang", "CAST(len(t) AS BIGINT)")},
         mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
         bud AS (SELECT lang, (SUM(ntok) * 600) // 1000 AS b FROM sc GROUP BY lang),
         p0 AS (SELECT sc.*, SUM(ntok) OVER (PARTITION BY lang
@@ -538,15 +534,9 @@ object CurationQueries {
               .cast(LongType).as("n_kept"))
           .orderBy(col("lang"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT doc_id, lang, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns FROM toks),
-        sc AS (SELECT doc_id, lang,
-                 1000 * LEAST(n, 200) + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score FROM g),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
+        ${scoreCtes("doc_id, lang")},
         mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
         hist AS (SELECT sc.* FROM sc, mid WHERE doc_id < m),
         nn AS (SELECT lang, COUNT(*) AS n FROM hist GROUP BY lang),
@@ -598,15 +588,9 @@ object CurationQueries {
             sum(col("__d")).cast(LongType).as("l1_ppm"))
           .orderBy(col("lang"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT doc_id, lang, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns FROM toks),
-        sc AS (SELECT doc_id, lang,
-                 1000 * LEAST(n, 200) + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score FROM g),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
+        ${scoreCtes("doc_id, lang")},
         mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
         b AS (SELECT doc_id, lang,
                 CASE WHEN score >= 0 THEN score // 50000
@@ -681,15 +665,9 @@ object CurationQueries {
               .cast(LongType).as("n_kept"))
           .orderBy(col("lang"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT doc_id, lang, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns FROM toks),
-        sc AS (SELECT doc_id, lang,
-                 1000 * LEAST(n, 200) + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score FROM g),
+      Some(s"""
+        WITH ${toksOf("doc_id, lang")},
+        ${scoreCtes("doc_id, lang")},
         mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
         hist AS (SELECT sc.* FROM sc, mid WHERE doc_id < m),
         fresh AS (SELECT sc.* FROM sc, mid WHERE doc_id >= m),
@@ -744,8 +722,7 @@ object CurationQueries {
             "doc_id", "text", Seq("a", "the"), teacherThreshold = 250000L,
             nBuckets = 64, epochs = 6)
           .orderBy(col("bucket")),
-      Some {
-        s"""
+      Some(s"""
         WITH $toksCte,
         ${CurationQueries.distillCtes(6)},
         tot2 AS (SELECT COUNT(*) AS nn FROM lab)
@@ -754,8 +731,7 @@ object CurationQueries {
                CAST((best.ok * 1000000) // tot2.nn AS BIGINT) AS acc_ppm
         FROM (SELECT unnest(range(0, 81)) AS b) r
         LEFT JOIN bw ON r.b = bw.bucket, best, tot2
-        ORDER BY bucket"""
-      },
+        ORDER BY bucket"""),
       // The oracle unrolls SIX data-dependent training epochs as joins — a
       // correctness device, not a latency baseline: it prices at ~34 s in
       // DuckDB at sf0.1 vs ~2 s for Spark's driver-loop trainer, which
@@ -797,8 +773,7 @@ object CurationQueries {
               .cast(LongType).as("margin_kept"))
           .orderBy(col("source"))
       },
-      Some {
-        s"""
+      Some(s"""
         WITH $toksCte,
         ${CurationQueries.distillCtes(6)},
         mm AS (SELECT f.doc_id, SUM(bw.w) AS score
@@ -819,8 +794,7 @@ object CurationQueries {
                CAST(COUNT(CASE WHEN selected = 1 THEN 1 END) AS BIGINT) AS n_kept,
                CAST(COALESCE(SUM(CASE WHEN selected = 1 THEN score END), 0)
                     AS BIGINT) AS margin_kept
-        FROM sel GROUP BY source ORDER BY source"""
-      },
+        FROM sel GROUP BY source ORDER BY source"""),
       // Same exclusion as q_classifier_distill: this oracle REPLAYS the six
       // unrolled epochs (71.7 s in DuckDB at sf0.1 vs 4.9 s warm for the
       // whole Spark capstone — measured, SCALING.md) — including it would
@@ -852,19 +826,9 @@ object CurationQueries {
             col("n_docs"), col("n_tokens"), col("mean_score"))
           .orderBy(col("source"), col("lang"))
       },
-      Some("""
-        WITH toks AS (SELECT doc_id, source, lang,
-               string_split_regex(lower(trim(text)), '\s+') AS t FROM documents),
-        g AS (SELECT source, lang, CAST(len(t) AS BIGINT) AS ntok,
-                GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT source, lang, ntok,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g)
+      Some(s"""
+        WITH ${toksOf("doc_id, source, lang")},
+        ${scoreCtes("source, lang", "CAST(len(t) AS BIGINT)")}
         SELECT COALESCE(source, 'ALL') AS source, COALESCE(lang, 'ALL') AS lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(ntok) AS BIGINT) AS n_tokens,
@@ -923,15 +887,7 @@ object CurationQueries {
           .orderBy(col("source"), col("rank")),
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT doc_id, source, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id, source,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+        ${scoreCtes("doc_id, source")},
         r AS (SELECT source, doc_id, score,
                 row_number() OVER (PARTITION BY source
                   ORDER BY score DESC, doc_id) AS rank
@@ -1007,15 +963,7 @@ object CurationQueries {
           .orderBy(col("phase"), col("ord"), col("doc_id")),
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT doc_id, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+        ${scoreCtes("doc_id")},
         hist AS (SELECT score, COUNT(*) AS c FROM sc GROUP BY score),
         cuts AS (SELECT score,
                    COALESCE(SUM(c) OVER (ORDER BY score DESC
@@ -1059,15 +1007,7 @@ object CurationQueries {
       },
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT doc_id, len(t) AS ntok, GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id, ntok,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+        ${scoreCtes("doc_id", "len(t)")},
         hist AS (SELECT score, COUNT(*) AS c FROM sc GROUP BY score),
         cuts AS (SELECT score,
                    COALESCE(SUM(c) OVER (ORDER BY score DESC
@@ -1175,16 +1115,7 @@ object CurationQueries {
       },
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT doc_id, source, CAST(len(t) AS BIGINT) AS ntok,
-                GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id, source, ntok,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+        ${scoreCtes("doc_id, source", "CAST(len(t) AS BIGINT)")},
         ord AS (SELECT *, SUM(ntok) OVER (ORDER BY score DESC, doc_id
                             ROWS UNBOUNDED PRECEDING) AS cum
                 FROM sc)
@@ -1278,16 +1209,7 @@ object CurationQueries {
       },
       Some(s"""
         WITH $toksCte,
-        g AS (SELECT doc_id, source, CAST(len(t) AS BIGINT) AS ntok,
-                GREATEST(len(t), 1) AS n,
-                len(list_distinct(t)) AS nd,
-                len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id, source, ntok,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+        ${scoreCtes("doc_id, source", "CAST(len(t) AS BIGINT)")},
         per AS (SELECT source, SUM(ntok) AS tokens FROM sc GROUP BY source),
         wgt AS (SELECT source, CAST(floor(sqrt(tokens)) AS BIGINT) AS weight FROM per),
         tot AS (SELECT CAST(SUM(weight) AS BIGINT) AS total_w FROM wgt),
@@ -1318,32 +1240,9 @@ object CurationQueries {
         Components.connectedComponents(pairs, "a_id", "b_id")
           .orderBy(col("node"))
       },
-      Some("""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-        cand AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT a_id, b_id FROM cand
-          JOIN sizes sa ON a_id = sa.doc_id
-          JOIN sizes sb ON b_id = sb.doc_id
-          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
-        edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                  UNION SELECT b_id, a_id FROM pairs),
-        reach(node, r) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src)
-        SELECT node, LEAST(node, MIN(r)) AS component_id
-        FROM reach GROUP BY node ORDER BY node""")),
+      Some(s"""
+        WITH RECURSIVE $nearDupCompCtes
+        SELECT node, component_id FROM comp ORDER BY node""")),
 
     // ----- cluster survivorship: one representative (min id) per near-dup
     // component plus the cluster size — the actual deletion-list shape a
@@ -1368,41 +1267,9 @@ object CurationQueries {
             col("n_members").cast(LongType).as("n_members"))
           .orderBy(col("component_id"))
       },
-      Some("""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-        cand AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT a_id, b_id FROM cand
-          JOIN sizes sa ON a_id = sa.doc_id
-          JOIN sizes sb ON b_id = sb.doc_id
-          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
-        edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                  UNION SELECT b_id, a_id FROM pairs),
-        reach(node, r) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-        comp AS (SELECT node, LEAST(node, MIN(r)) AS component_id
-                 FROM reach GROUP BY node),
-        g AS (SELECT doc_id, GREATEST(len(t), 1) AS n,
-                     len(list_distinct(t)) AS nd,
-                     len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+      Some(s"""
+        WITH RECURSIVE $nearDupCompCtes,
+        ${scoreCtes("doc_id")},
         j AS (SELECT comp.component_id, comp.node, sc.score
               FROM comp JOIN sc ON comp.node = sc.doc_id),
         r AS (SELECT *,
@@ -1442,41 +1309,9 @@ object CurationQueries {
               .cast(LongType).as("score_deficit"))
           .orderBy(col("dropped_id"))
       },
-      Some("""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-        cand AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT a_id, b_id FROM cand
-          JOIN sizes sa ON a_id = sa.doc_id
-          JOIN sizes sb ON b_id = sb.doc_id
-          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
-        edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                  UNION SELECT b_id, a_id FROM pairs),
-        reach(node, r) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-        comp AS (SELECT node, LEAST(node, MIN(r)) AS component_id
-                 FROM reach GROUP BY node),
-        g AS (SELECT doc_id, GREATEST(len(t), 1) AS n,
-                     len(list_distinct(t)) AS nd,
-                     len(list_filter(t, x -> x = 'a' OR x = 'the')) AS ns
-              FROM toks),
-        sc AS (SELECT doc_id,
-                 1000 * LEAST(n, 200)
-                   + (500 * ((nd * 1000000) // n)) // 1000
-                   - (300 * ((ns * 1000000) // n)) // 1000 AS score
-               FROM g),
+      Some(s"""
+        WITH RECURSIVE $nearDupCompCtes,
+        ${scoreCtes("doc_id")},
         j AS (SELECT comp.component_id, comp.node, sc.score
               FROM comp JOIN sc ON comp.node = sc.doc_id),
         srv AS (SELECT component_id, node AS survivor_id, score AS s_score
@@ -1500,32 +1335,8 @@ object CurationQueries {
           Components.connectedComponents(pairs, "a_id", "b_id"))
           .orderBy(col("survivor_id"))
       },
-      Some("""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-        cand AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT a_id, b_id FROM cand
-          JOIN sizes sa ON a_id = sa.doc_id
-          JOIN sizes sb ON b_id = sb.doc_id
-          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
-        edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                  UNION SELECT b_id, a_id FROM pairs),
-        reach(node, r) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-        comp AS (SELECT node, LEAST(node, MIN(r)) AS component_id
-                 FROM reach GROUP BY node)
+      Some(s"""
+        WITH RECURSIVE $nearDupCompCtes
         SELECT component_id AS survivor_id, COUNT(*) AS n_members
         FROM comp GROUP BY component_id ORDER BY survivor_id""")),
 
@@ -1552,32 +1363,8 @@ object CurationQueries {
           .select(col("doc_id"), col("group_id"), col("split"))
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents),
-        sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                FROM toks WHERE len(t) >= 4),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM sh GROUP BY doc_id),
-        cand AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT a_id, b_id FROM cand
-          JOIN sizes sa ON a_id = sa.doc_id
-          JOIN sizes sb ON b_id = sb.doc_id
-          WHERE CAST(n_common AS DOUBLE) / (sa.nsh + sb.nsh - n_common) >= 0.4),
-        edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                  UNION SELECT b_id, a_id FROM pairs),
-        reach(node, r) AS (
-          SELECT src, dst FROM edges
-          UNION
-          SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-        comp AS (SELECT node, LEAST(node, MIN(r)) AS component_id
-                 FROM reach GROUP BY node)
+      Some(s"""
+        WITH RECURSIVE $nearDupCompCtes
         SELECT d.doc_id,
                COALESCE(comp.component_id, d.doc_id) AS group_id,
                CASE WHEN (COALESCE(comp.component_id, d.doc_id) % 2147483647)

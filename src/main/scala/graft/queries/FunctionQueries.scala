@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.Q._
 import graft.functions.CleanFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -15,11 +15,6 @@ import org.apache.spark.sql.types._
   * then applies the CleanFns implementation.
   */
 object FunctionQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-  private def cntIf(cond: Column): Column = count(when(cond, lit(1)))
 
   val qs: Seq[Q] = Seq(
 

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Q._
 import graft.functions.{HtmlFns, TextFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,9 +22,6 @@ import org.apache.spark.sql.types._
   * shuffles are the final aggregations/sorts, on `lang` or top-k.
   */
 object MarkupQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** The synthesized per-row HTML document (see object scaladoc). Kept
     * adjacent to [[synthHtmlSql]] so the two engines cannot drift.

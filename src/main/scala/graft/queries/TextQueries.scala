@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.Q._
 import graft.functions.TextFns
 import graft.operators.Dedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -71,13 +71,6 @@ object TextQueries {
     }
     wh
   }
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(25, 4))).cast(DoubleType)
-  /** order-independent exact mean of a ratio-scale double */
-  private def dravg(c: Column): Column =
-    sum(c.cast(DecimalType(25, 12))).cast(DoubleType) / count(c)
 
   /** DuckDB CTE `sims(doc_id, simhash)` mirroring
     * Dedup.simhash(_, "doc_id", "text", bits): per-bit majority vote over
@@ -149,16 +142,237 @@ object TextQueries {
                     CAST(${simExpr("t")} AS BIGINT) AS s2 FROM agg)"""
   }
 
+  /** One synthetic media blob per doc, `encode(id, w, h)` with w = id % 640
+    * + 1 and h = id * 7 % 480 + 1, header-decoded by Multimodal.decode. */
+  private def decodedHeaders(s: SparkSession, dir: String)(
+      encode: (Long, Int, Int) => Array[Byte]): DataFrame = {
+    import s.implicits._
+    val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
+      .map { id =>
+        val w = (id % 640 + 1).toInt
+        val h = (id * 7 % 480 + 1).toInt
+        graft.multimodal.Multimodal.MediaRow(id, encode(id, w, h))
+      }
+    graft.multimodal.Multimodal.decode(media)
+      .select(
+        col("doc_id"),
+        col("meta.codec").as("codec"),
+        col("meta.width").cast(LongType).as("width"),
+        col("meta.height").cast(LongType).as("height"),
+        col("meta.n_frames").cast(LongType).as("n_frames"),
+        col("n_bytes"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** DuckDB twin of [[decodedHeaders]]: the dims it derives from doc_id,
+    * with codec and byte-count expressions `codec` and `nBytes`. */
+  private def headerSql(codec: String, nBytes: String): String = s"""
+        SELECT doc_id,
+               $codec AS codec,
+               CAST(doc_id % 640 + 1 AS BIGINT) AS width,
+               CAST((doc_id * 7) % 480 + 1 AS BIGINT) AS height,
+               CAST(1 AS BIGINT) AS n_frames,
+               CAST($nBytes AS BIGINT) AS n_bytes
+        FROM documents ORDER BY doc_id"""
+
+  /** A w x h RGB gradient raster: (x + y, 2x + 3y, x + 2y) mod 256. */
+  private def gradientRgb(w: Int, h: Int): Array[Byte] = {
+    val rgb = new Array[Byte](w * h * 3)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val p = (y * w + x) * 3
+        rgb(p) = ((x + y) % 256).toByte
+        rgb(p + 1) = ((2 * x + 3 * y) % 256).toByte
+        rgb(p + 2) = ((x + 2 * y) % 256).toByte
+        x += 1
+      }
+      y += 1
+    }
+    rgb
+  }
+
+  /** DuckDB channel statistics of the [[gradientRgb]] rasters, w = doc_id
+    * % 48 + 8 and h = doc_id * 7 % 40 + 8, recomputed from the formula. */
+  private def gradientStatsSql: String = """
+        WITH dims AS (SELECT doc_id, doc_id % 48 + 8 AS w,
+                             (doc_id * 7) % 40 + 8 AS h
+                      FROM documents),
+        px AS (SELECT doc_id, w, h,
+                 (x.g + y.g) % 256 AS r, (2 * x.g + 3 * y.g) % 256 AS g,
+                 (x.g + 2 * y.g) % 256 AS b
+               FROM dims, generate_series(0, 54) x(g), generate_series(0, 46) y(g)
+               WHERE x.g < w AND y.g < h)
+        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+               CAST(SUM(r) AS BIGINT) AS sum_r, CAST(SUM(g) AS BIGINT) AS sum_g,
+               CAST(SUM(b) AS BIGINT) AS sum_b,
+               CAST(MAX((299 * r + 587 * g + 114 * b) // 1000) AS BIGINT) AS max_luma
+        FROM px GROUP BY doc_id, w, h ORDER BY doc_id"""
+
+  /** A w x h gray raster constant per 8x8 block: (base + 13 bx + 29 by)
+    * mod 256 (DC-exact under the flat Q=8 JPEG table). */
+  private def blockGray(w: Int, h: Int, base: Long): Array[Byte] = {
+    val gray = new Array[Byte](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        gray(y * w + x) = ((base + (x / 8) * 13 + (y / 8) * 29) % 256).toByte
+        x += 1
+      }
+      y += 1
+    }
+    gray
+  }
+
+  /** DuckDB channel statistics of the [[blockGray]] stills, w = (doc_id % 5
+    * + 1) * 8, h = (doc_id * 7 % 4 + 1) * 8, base = off + doc_id % 25 * 5. */
+  private def blockStatsSql(off: Int): String = s"""
+        WITH dims AS (SELECT doc_id, (doc_id % 5 + 1) * 8 AS w,
+                             ((doc_id * 7) % 4 + 1) * 8 AS h
+                      FROM documents),
+        px AS (SELECT doc_id, w, h,
+                 ($off + (x.g // 8) * 13 + (y.g // 8) * 29 + (doc_id % 25) * 5) % 256 AS v
+               FROM dims, generate_series(0, 39) x(g), generate_series(0, 31) y(g)
+               WHERE x.g < w AND y.g < h)
+        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+               CAST(SUM(v) AS BIGINT) AS sum_r, CAST(SUM(v) AS BIGINT) AS sum_g,
+               CAST(SUM(v) AS BIGINT) AS sum_b,
+               CAST(MAX(v) AS BIGINT) AS max_luma
+        FROM px GROUP BY doc_id, w, h ORDER BY doc_id"""
+
+  /** One video per 4th doc: n = id % 6 + 4 [[blockGray]] 16x16 JPEG frames,
+    * frame f at base off + 31 f + id % 25 * 5, muxed by `mux(w, h, frames)`. */
+  private def videoMedia(s: SparkSession, dir: String, off: Int)(
+      mux: (Int, Int, Seq[Array[Byte]]) => Array[Byte])
+      : Dataset[graft.multimodal.Multimodal.MediaRow] = {
+    import s.implicits._
+    t(s, dir, "documents").select(col("doc_id"))
+      .filter(col("doc_id") % 4 === 0).as[Long]
+      .map { id =>
+        val n = (id % 6 + 4).toInt
+        val w = 16; val h = 16
+        val frames = (0 until n).map { f =>
+          graft.multimodal.MediaCodecs.encodeJpegGray(w, h,
+            blockGray(w, h, off + f * 31 + id % 25 * 5), quant = 8)
+        }
+        graft.multimodal.Multimodal.MediaRow(id, mux(w, h, frames))
+      }
+  }
+
+  /** DuckDB statistics of the k=3 frames Multimodal samples from each
+    * [[videoMedia]] video, recomputed from its block formula. */
+  private def videoStatsSql(off: Int): String = s"""
+        WITH vids AS (SELECT doc_id, doc_id % 6 + 4 AS n FROM documents
+                      WHERE doc_id % 4 = 0),
+        samples AS (SELECT doc_id, n, j.g AS sample_idx, (j.g * n) // 3 AS fi
+                    FROM vids, generate_series(0, 2) j(g)),
+        px AS (SELECT doc_id, sample_idx, fi, n,
+                 ($off + fi * 31 + bx.g * 13 + by.g * 29 + (doc_id % 25) * 5) % 256 AS v
+               FROM samples, generate_series(0, 1) bx(g), generate_series(0, 1) by(g))
+        SELECT doc_id, CAST(sample_idx AS BIGINT) AS sample_idx,
+               CAST(fi AS BIGINT) AS frame_idx, CAST(n AS BIGINT) AS n_frames,
+               CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
+               CAST(SUM(v) * 64 AS BIGINT) AS sum_r,
+               CAST(SUM(v) * 64 AS BIGINT) AS sum_g,
+               CAST(SUM(v) * 64 AS BIGINT) AS sum_b,
+               CAST(MAX(v) AS BIGINT) AS max_luma
+        FROM px GROUP BY doc_id, sample_idx, fi, n
+        ORDER BY doc_id, sample_idx"""
+
+  /** DuckDB select list `m0`..`m7`: the MinHash minima of shingle hash `h`
+    * under TextFns.minhashPerms. */
+  private val minExprs: String =
+    TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
+      s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
+    }.mkString(",\n                 ")
+
+  /** DuckDB CTEs `hashed`, `sig` and `banded(cols, band0, band1)`: the
+    * 8-permutation MinHash signature of each doc of shingle CTE `shingles`,
+    * cut into two 4-row bands. */
+  private def bandedCtes(shingles: String, cols: String = "*"): String =
+    s"""hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM $shingles),
+          sig AS (SELECT doc_id,
+                 $minExprs
+               FROM hashed GROUP BY doc_id),
+          banded AS (SELECT $cols,
+               concat_ws('-', m0, m1, m2, m3) AS band0,
+               concat_ws('-', m4, m5, m6, m7) AS band1
+             FROM sig)"""
+
+  /** DuckDB SELECT of the `banded` pairs that collide in band `j`, with
+    * their estimated Jaccard (matching signature rows / 8). */
+  private def lshPairSel(j: Int): String = {
+    val matchSum = (0 until 8)
+      .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
+    s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                CAST($matchSum AS DOUBLE) / 8 AS est_jaccard
+              FROM banded a JOIN banded b
+                ON a.band$j = b.band$j AND a.doc_id < b.doc_id"""
+  }
+
   /** DuckDB CTE mirroring Dedup.shingles(_, "doc_id", "text", 4). */
-  private val shingleCte: String = """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-      FROM documents
-    ), sh0 AS (
-      SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-      FROM toks WHERE len(t) >= 4
-    ), sh AS (SELECT DISTINCT doc_id, sh FROM sh0)"""
+  private val shingleCte: String = s"""
+    WITH ${Fragments.shingleCtes}"""
+
+  /** DuckDB oracle of the incremental MinHash gate (build and serve rows):
+    * per source, the new half's docs and those whose band collides with
+    * no history doc. */
+  private val incrMinhashOracle: String = s"""$shingleCte,
+          ${bandedCtes("sh", "doc_id")},
+          mid AS (SELECT MAX(doc_id) // 2 AS m FROM documents),
+          hits AS (SELECT DISTINCT f.doc_id
+                   FROM banded f, banded o, mid
+                   WHERE f.doc_id >= m AND o.doc_id < m
+                     AND (o.band0 = f.band0 OR o.band1 = f.band1))
+          SELECT d.source, COUNT(*) AS n_new,
+                 COUNT(CASE WHEN h.doc_id IS NULL THEN 1 END) AS n_novel
+          FROM documents d CROSS JOIN mid
+          LEFT JOIN hits h ON d.doc_id = h.doc_id
+          WHERE d.doc_id >= m
+          GROUP BY d.source ORDER BY d.source"""
+
+  /** DuckDB oracle of the incremental repeated-substring gate (build and
+    * serve rows, dense and sparse index): per new-half doc, its >= 6-token
+    * spans shared with the history half and the longest one. `capped`
+    * drops history 4-grams seen more than 64 times (the dense anchor
+    * index's occurrence cap); the sparse index is uncapped. */
+  private def incrSpanOracle(capped: Boolean): String = {
+    val probe = if (capped) """keep AS (SELECT sh FROM idx GROUP BY sh HAVING COUNT(*) <= 64),
+        idxk AS (SELECT i.doc_id, i.i, i.sh FROM idx i JOIN keep USING (sh)),
+        pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
+                      n.i AS pa
+               FROM neww n JOIN idxk i ON n.sh = i.sh),"""
+      else """pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
+                      n.i AS pa
+               FROM neww n JOIN idx i ON n.sh = i.sh),"""
+    s"""
+        WITH toks AS (
+          SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+          FROM documents
+        ), p0 AS (
+          SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
+          FROM toks WHERE len(t) >= 4
+        ), pos AS (
+          SELECT doc_id, i,
+                 t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] AS sh
+          FROM p0
+        ), mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
+        idx AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id < m),
+        neww AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id >= m),
+        $probe
+        isl AS (SELECT a_id, b_id, diag, pa,
+                  pa - ROW_NUMBER() OVER (PARTITION BY a_id, b_id, diag
+                    ORDER BY pa) AS g
+                FROM pr),
+        sp AS (SELECT a_id, COUNT(*) + 3 AS len
+               FROM isl GROUP BY a_id, b_id, diag, g)
+        SELECT a_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
+               CAST(MAX(len) AS BIGINT) AS max_span_tokens
+        FROM sp WHERE len >= 6
+        GROUP BY a_id ORDER BY a_id"""
+  }
 
   /** DuckDB CTE chain for the repeated-span family: POSITIONAL (non-distinct)
     * word 4-grams with 1-based start offsets, the occurrence-capped shared
@@ -674,29 +888,7 @@ object TextQueries {
           // orderBy (one job less on a 5-job row)
           .repartition(1).sortWithinPartitions(col("source"))
       },
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        s"""$shingleCte,
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM sh),
-          sig AS (SELECT doc_id, $minExprs FROM hashed GROUP BY doc_id),
-          banded AS (SELECT doc_id,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
-          mid AS (SELECT MAX(doc_id) // 2 AS m FROM documents),
-          hits AS (SELECT DISTINCT f.doc_id
-                   FROM banded f, banded o, mid
-                   WHERE f.doc_id >= m AND o.doc_id < m
-                     AND (o.band0 = f.band0 OR o.band1 = f.band1))
-          SELECT d.source, COUNT(*) AS n_new,
-                 COUNT(CASE WHEN h.doc_id IS NULL THEN 1 END) AS n_novel
-          FROM documents d CROSS JOIN mid
-          LEFT JOIN hits h ON d.doc_id = h.doc_id
-          WHERE d.doc_id >= m
-          GROUP BY d.source ORDER BY d.source"""
-      }),
+      Some(incrMinhashOracle)),
 
     // ----- near-dup: word 4-gram Jaccard over shared-shingle pairs
     Q("q_dedup_ngram_jaccard",
@@ -731,30 +923,11 @@ object TextQueries {
       (s, dir) =>
         Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text", 4, 0.5)
           .orderBy(col("a_id"), col("b_id")),
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        val matchSum = (0 until 8)
-          .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
-        val pairSel = (j: Int) =>
-          s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST($matchSum AS DOUBLE) / 8 AS est_jaccard
-              FROM banded a JOIN banded b
-                ON a.band$j = b.band$j AND a.doc_id < b.doc_id"""
-        s"""$shingleCte,
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM sh),
-          sig AS (SELECT doc_id,
-                 $minExprs
-               FROM hashed GROUP BY doc_id),
-          banded AS (SELECT *,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
-          cand AS (${pairSel(0)} UNION ${pairSel(1)})
+      Some(s"""$shingleCte,
+          ${bandedCtes("sh")},
+          cand AS (${lshPairSel(0)} UNION ${lshPairSel(1)})
           SELECT a_id, b_id, est_jaccard FROM cand
-          WHERE est_jaccard >= 0.5 ORDER BY a_id, b_id"""
-      }),
+          WHERE est_jaccard >= 0.5 ORDER BY a_id, b_id""")),
 
     // ----- asymmetric containment pairs (Broder's containment vs
     // resemblance): |A∩B| / |A| per orientation — catches a short doc
@@ -1168,35 +1341,7 @@ object TextQueries {
           // window/rollup stage keeps its parallelism (ADVICE r20 medium)
           .repartition(1).sortWithinPartitions(col("doc_id"))
       },
-      Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents
-        ), p0 AS (
-          SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
-          FROM toks WHERE len(t) >= 4
-        ), pos AS (
-          SELECT doc_id, i,
-                 t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] AS sh
-          FROM p0
-        ), mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
-        idx AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id < m),
-        neww AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id >= m),
-        keep AS (SELECT sh FROM idx GROUP BY sh HAVING COUNT(*) <= 64),
-        idxk AS (SELECT i.doc_id, i.i, i.sh FROM idx i JOIN keep USING (sh)),
-        pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
-                      n.i AS pa
-               FROM neww n JOIN idxk i ON n.sh = i.sh),
-        isl AS (SELECT a_id, b_id, diag, pa,
-                  pa - ROW_NUMBER() OVER (PARTITION BY a_id, b_id, diag
-                    ORDER BY pa) AS g
-                FROM pr),
-        sp AS (SELECT a_id, COUNT(*) + 3 AS len
-               FROM isl GROUP BY a_id, b_id, diag, g)
-        SELECT a_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-               CAST(MAX(len) AS BIGINT) AS max_span_tokens
-        FROM sp WHERE len >= 6
-        GROUP BY a_id ORDER BY a_id""")),
+      Some(incrSpanOracle(capped = true))),
 
     // ----- incremental substring gate through the persisted SPARSE index
     // (the 100 TB index-size path made operational: history's global index
@@ -1222,33 +1367,7 @@ object TextQueries {
           // window/rollup stage keeps its parallelism (ADVICE r20 medium)
           .repartition(1).sortWithinPartitions(col("doc_id"))
       },
-      Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents
-        ), p0 AS (
-          SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
-          FROM toks WHERE len(t) >= 4
-        ), pos AS (
-          SELECT doc_id, i,
-                 t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] AS sh
-          FROM p0
-        ), mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
-        idx AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id < m),
-        neww AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id >= m),
-        pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
-                      n.i AS pa
-               FROM neww n JOIN idx i ON n.sh = i.sh),
-        isl AS (SELECT a_id, b_id, diag, pa,
-                  pa - ROW_NUMBER() OVER (PARTITION BY a_id, b_id, diag
-                    ORDER BY pa) AS g
-                FROM pr),
-        sp AS (SELECT a_id, COUNT(*) + 3 AS len
-               FROM isl GROUP BY a_id, b_id, diag, g)
-        SELECT a_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-               CAST(MAX(len) AS BIGINT) AS max_span_tokens
-        FROM sp WHERE len >= 6
-        GROUP BY a_id ORDER BY a_id""")),
+      Some(incrSpanOracle(capped = false))),
 
     // ----- SERVE-shaped incremental gates (VERDICT r15 #2): the inline
     // rows above price build+probe in one query; these three price the
@@ -1275,29 +1394,7 @@ object TextQueries {
             count(when(!coalesce(col("is_near_dup"), lit(false)), 1)).as("n_novel"))
           .orderBy(col("source"))
       },
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        s"""$shingleCte,
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM sh),
-          sig AS (SELECT doc_id, $minExprs FROM hashed GROUP BY doc_id),
-          banded AS (SELECT doc_id,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
-          mid AS (SELECT MAX(doc_id) // 2 AS m FROM documents),
-          hits AS (SELECT DISTINCT f.doc_id
-                   FROM banded f, banded o, mid
-                   WHERE f.doc_id >= m AND o.doc_id < m
-                     AND (o.band0 = f.band0 OR o.band1 = f.band1))
-          SELECT d.source, COUNT(*) AS n_new,
-                 COUNT(CASE WHEN h.doc_id IS NULL THEN 1 END) AS n_novel
-          FROM documents d CROSS JOIN mid
-          LEFT JOIN hits h ON d.doc_id = h.doc_id
-          WHERE d.doc_id >= m
-          GROUP BY d.source ORDER BY d.source"""
-      },
+      Some(incrMinhashOracle),
       prepare = Some((s, dir) => { bandIndexFixture(s, dir); () })),
 
     Q("q_dedup_incremental_substring_serve",
@@ -1310,35 +1407,7 @@ object TextQueries {
             "doc_id", "text", 4, minSpanTokens = 6)
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents
-        ), p0 AS (
-          SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
-          FROM toks WHERE len(t) >= 4
-        ), pos AS (
-          SELECT doc_id, i,
-                 t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] AS sh
-          FROM p0
-        ), mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
-        idx AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id < m),
-        neww AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id >= m),
-        keep AS (SELECT sh FROM idx GROUP BY sh HAVING COUNT(*) <= 64),
-        idxk AS (SELECT i.doc_id, i.i, i.sh FROM idx i JOIN keep USING (sh)),
-        pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
-                      n.i AS pa
-               FROM neww n JOIN idxk i ON n.sh = i.sh),
-        isl AS (SELECT a_id, b_id, diag, pa,
-                  pa - ROW_NUMBER() OVER (PARTITION BY a_id, b_id, diag
-                    ORDER BY pa) AS g
-                FROM pr),
-        sp AS (SELECT a_id, COUNT(*) + 3 AS len
-               FROM isl GROUP BY a_id, b_id, diag, g)
-        SELECT a_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-               CAST(MAX(len) AS BIGINT) AS max_span_tokens
-        FROM sp WHERE len >= 6
-        GROUP BY a_id ORDER BY a_id"""),
+      Some(incrSpanOracle(capped = true)),
       prepare = Some((s, dir) => { anchorIndexFixture(s, dir); () })),
 
     Q("q_dedup_incremental_sparse_serve",
@@ -1368,33 +1437,7 @@ object TextQueries {
           // window/rollup stage keeps its parallelism (ADVICE r20 medium)
           .repartition(1).sortWithinPartitions(col("doc_id"))
       },
-      Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-          FROM documents
-        ), p0 AS (
-          SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
-          FROM toks WHERE len(t) >= 4
-        ), pos AS (
-          SELECT doc_id, i,
-                 t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] AS sh
-          FROM p0
-        ), mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
-        idx AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id < m),
-        neww AS (SELECT p.doc_id, p.i, p.sh FROM pos p, mid WHERE p.doc_id >= m),
-        pr AS (SELECT n.doc_id AS a_id, i.doc_id AS b_id, n.i - i.i AS diag,
-                      n.i AS pa
-               FROM neww n JOIN idx i ON n.sh = i.sh),
-        isl AS (SELECT a_id, b_id, diag, pa,
-                  pa - ROW_NUMBER() OVER (PARTITION BY a_id, b_id, diag
-                    ORDER BY pa) AS g
-                FROM pr),
-        sp AS (SELECT a_id, COUNT(*) + 3 AS len
-               FROM isl GROUP BY a_id, b_id, diag, g)
-        SELECT a_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-               CAST(MAX(len) AS BIGINT) AS max_span_tokens
-        FROM sp WHERE len >= 6
-        GROUP BY a_id ORDER BY a_id"""),
+      Some(incrSpanOracle(capped = false)),
       prepare = Some((s, dir) => { anchorRowsFixture(s, dir); () })),
 
     // ----- sketch-recall evaluation: how much of the EXACT Jaccard pair
@@ -1414,18 +1457,7 @@ object TextQueries {
         // (6 pairs survive the both-members-even filter).
         Dedup.lshRecallEval(t(s, dir, "documents"), "doc_id", "text",
           k = 4, threshold = 0.85, sampleMod = 2L),
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        val matchSum = (0 until 8)
-          .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
-        val pairSel = (j: Int) =>
-          s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST($matchSum AS DOUBLE) / 8 AS est_jaccard
-              FROM banded a JOIN banded b
-                ON a.band$j = b.band$j AND a.doc_id < b.doc_id"""
-        s"""$shingleCte,
+      Some(s"""$shingleCte,
           shs AS (SELECT * FROM sh WHERE doc_id % 2 = 0),
           sizes AS (SELECT doc_id, COUNT(*) AS nsh FROM shs GROUP BY doc_id),
           xc AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
@@ -1436,15 +1468,8 @@ object TextQueries {
                     JOIN sizes sb ON b_id = sb.doc_id
                     WHERE CAST(n_common AS DOUBLE)
                           / (sa.nsh + sb.nsh - n_common) >= 0.85),
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM shs),
-          sig AS (SELECT doc_id,
-                 $minExprs
-               FROM hashed GROUP BY doc_id),
-          banded AS (SELECT *,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
-          cand AS (${pairSel(0)} UNION ${pairSel(1)}),
+          ${bandedCtes("shs")},
+          cand AS (${lshPairSel(0)} UNION ${lshPairSel(1)}),
           lsh AS (SELECT a_id, b_id, 1 AS l FROM cand WHERE est_jaccard >= 0.85),
           j AS (SELECT COALESCE(exact.a_id, lsh.a_id) AS a_id, e, l
                 FROM exact FULL JOIN lsh
@@ -1457,8 +1482,7 @@ object TextQueries {
                       ELSE 1000000 * COUNT(CASE WHEN e IS NOT NULL
                              AND l IS NOT NULL THEN 1 END) // COUNT(e)
                       END AS BIGINT) AS recall_ppm
-          FROM j"""
-      }),
+          FROM j""")),
 
     // ----- INCREMENTAL-PIPELINE CAPSTONE (the daily-batch production
     // loop, composing three oracle-gated incremental legs under ONE
@@ -1553,11 +1577,7 @@ object TextQueries {
           // accounting aggregate stage keeps its parallelism (ADVICE r20)
           .repartition(1).sortWithinPartitions(col("source"))
       },
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        s"""
+      Some(s"""
           WITH mid AS (SELECT COALESCE(MAX(doc_id) // 2, 0) AS m FROM documents),
           t0 AS (SELECT doc_id, source, text,
                    string_split_regex(lower(trim(text)), '\\s+') AS t
@@ -1576,14 +1596,7 @@ object TextQueries {
                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
                   FROM t0 WHERE len(t) >= 4),
           shd AS (SELECT DISTINCT doc_id, sh FROM sh0),
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM shd),
-          sig AS (SELECT doc_id,
-                 $minExprs
-               FROM hashed GROUP BY doc_id),
-          banded AS (SELECT doc_id,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
+          ${bandedCtes("shd", "doc_id")},
           hits AS (SELECT DISTINCT f.doc_id
                    FROM banded f JOIN novel n ON f.doc_id = n.doc_id,
                         banded o, mid
@@ -1619,8 +1632,7 @@ object TextQueries {
           LEFT JOIN ag ON w.source = ag.source
           LEFT JOIN an ON w.source = an.source
           LEFT JOIN aa ON w.source = aa.source
-          ORDER BY w.source"""
-      },
+          ORDER BY w.source"""),
       prepare = Some((s, dir) => { incrPipelineWh(s, dir); () })),
 
     // ----- FUZZY-DEDUP → RE-BALANCE CAPSTONE (the DataComp/FineWeb "dedup
@@ -1657,43 +1669,12 @@ object TextQueries {
             col("alloc_tokens"))
           .orderBy(col("source"))
       },
-      Some {
-        val minExprs = TextFns.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-          s"min((h * $a + $b) % ${TextFns.minhashP}) AS m$i"
-        }.mkString(",\n                 ")
-        val matchSum = (0 until 8)
-          .map(i => s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
-        val pairSel = (j: Int) =>
-          s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                CAST($matchSum AS DOUBLE) / 8 AS est_jaccard
-              FROM banded a JOIN banded b
-                ON a.band$j = b.band$j AND a.doc_id < b.doc_id"""
-        s"""
-          WITH RECURSIVE toks AS (
-            SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-            FROM documents),
-          sh0 AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-                  FROM toks WHERE len(t) >= 4),
-          sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-          hashed AS (SELECT doc_id, ${TextFns.polyHashSql("sh")} AS h FROM sh),
-          sig AS (SELECT doc_id,
-                 $minExprs
-               FROM hashed GROUP BY doc_id),
-          banded AS (SELECT *,
-               concat_ws('-', m0, m1, m2, m3) AS band0,
-               concat_ws('-', m4, m5, m6, m7) AS band1
-             FROM sig),
-          cand AS (${pairSel(0)} UNION ${pairSel(1)}),
+      Some(s"""
+          WITH RECURSIVE ${Fragments.shingleCtes},
+          ${bandedCtes("sh")},
+          cand AS (${lshPairSel(0)} UNION ${lshPairSel(1)}),
           prs AS (SELECT a_id, b_id FROM cand WHERE est_jaccard >= 0.5),
-          edges AS (SELECT a_id AS src, b_id AS dst FROM prs
-                    UNION SELECT b_id, a_id FROM prs),
-          reach(node, r) AS (
-            SELECT src, dst FROM edges
-            UNION
-            SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-          comp AS (SELECT node, LEAST(node, MIN(r)) AS component_id
-                   FROM reach GROUP BY node),
+          ${Fragments.closureCtes("prs")},
           pt AS (SELECT d.doc_id, d.source, CAST(len(t) AS BIGINT) AS ntok
                  FROM documents d JOIN toks ON d.doc_id = toks.doc_id),
           keepers AS (SELECT * FROM pt
@@ -1707,8 +1688,7 @@ object TextQueries {
           tot AS (SELECT CAST(SUM(weight) AS BIGINT) AS total_w FROM w)
           SELECT source, n_docs, tokens, weight,
                  CAST((1000000 * weight) // total_w AS BIGINT) AS alloc_tokens
-          FROM w, tot ORDER BY source"""
-      }),
+          FROM w, tot ORDER BY source""")),
 
     // ----- near-dup: 16-bit SimHash over token hashes
     Q("q_dedup_simhash",
@@ -1783,36 +1763,16 @@ object TextQueries {
     // in this container; MultimodalSpec pins the non-image fallback path.)
     Q("q_mm_decode_png",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val w = (id % 640 + 1).toInt
-            val h = (id * 7 % 480 + 1).toInt
-            val bytes = (id % 3) match {
-              case 0 => graft.multimodal.MediaCodecs.encodePng(w, h)
-              case 1 => graft.multimodal.MediaCodecs.encodeBmp(w, h)
-              case _ => graft.multimodal.MediaCodecs.encodeGif(w, h)
-            }
-            graft.multimodal.Multimodal.MediaRow(id, bytes)
+        decodedHeaders(s, dir) { (id, w, h) =>
+          (id % 3) match {
+            case 0 => graft.multimodal.MediaCodecs.encodePng(w, h)
+            case 1 => graft.multimodal.MediaCodecs.encodeBmp(w, h)
+            case _ => graft.multimodal.MediaCodecs.encodeGif(w, h)
           }
-        graft.multimodal.Multimodal.decode(media)
-          .select(
-            col("doc_id"),
-            col("meta.codec").as("codec"),
-            col("meta.width").cast(LongType).as("width"),
-            col("meta.height").cast(LongType).as("height"),
-            col("meta.n_frames").cast(LongType).as("n_frames"),
-            col("n_bytes"))
-          .orderBy(col("doc_id"))
+        }
       },
-      Some("""
-        SELECT doc_id,
-               CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp' ELSE 'gif' END AS codec,
-               CAST(doc_id % 640 + 1 AS BIGINT) AS width,
-               CAST((doc_id * 7) % 480 + 1 AS BIGINT) AS height,
-               CAST(1 AS BIGINT) AS n_frames,
-               CAST(CASE doc_id % 3 WHEN 0 THEN 33 WHEN 1 THEN 54 ELSE 13 END AS BIGINT) AS n_bytes
-        FROM documents ORDER BY doc_id""")),
+      Some(headerSql("CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp' ELSE 'gif' END",
+        "CASE doc_id % 3 WHEN 0 THEN 33 WHEN 1 THEN 54 ELSE 13 END"))),
 
     // ----- multimodal: REAL JPEG marker-walk decode — the dominant
     // real-world image format. Each doc gets a spec-conformant JPEG header
@@ -1825,32 +1785,11 @@ object TextQueries {
     // the h-before-w field order hash-mismatches immediately.
     Q("q_mm_decode_jpeg",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val w = (id % 640 + 1).toInt
-            val h = (id * 7 % 480 + 1).toInt
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeJpeg(w, h, progressive = id % 2 == 1))
-          }
-        graft.multimodal.Multimodal.decode(media)
-          .select(
-            col("doc_id"),
-            col("meta.codec").as("codec"),
-            col("meta.width").cast(LongType).as("width"),
-            col("meta.height").cast(LongType).as("height"),
-            col("meta.n_frames").cast(LongType).as("n_frames"),
-            col("n_bytes"))
-          .orderBy(col("doc_id"))
+        decodedHeaders(s, dir) { (id, w, h) =>
+          graft.multimodal.MediaCodecs.encodeJpeg(w, h, progressive = id % 2 == 1)
+        }
       },
-      Some("""
-        SELECT doc_id,
-               'jpeg' AS codec,
-               CAST(doc_id % 640 + 1 AS BIGINT) AS width,
-               CAST((doc_id * 7) % 480 + 1 AS BIGINT) AS height,
-               CAST(1 AS BIGINT) AS n_frames,
-               CAST(118 AS BIGINT) AS n_bytes
-        FROM documents ORDER BY doc_id""")),
+      Some(headerSql("'jpeg'", "118"))),
 
     // ----- multimodal: REAL WebP RIFF-walk decode — the web's third image
     // format after JPEG/PNG. Docs rotate through all three container
@@ -1860,37 +1799,16 @@ object TextQueries {
     // dimension encoding exactly as DuckDB computes it arithmetically.
     Q("q_mm_decode_webp",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val w = (id % 640 + 1).toInt
-            val h = (id * 7 % 480 + 1).toInt
-            val bytes = (id % 3) match {
-              case 0 => graft.multimodal.MediaCodecs.encodeWebpLossy(w, h)
-              case 1 => graft.multimodal.MediaCodecs.encodeWebpLossless(w, h)
-              case _ => graft.multimodal.MediaCodecs.encodeWebpExtended(w, h)
-            }
-            graft.multimodal.Multimodal.MediaRow(id, bytes)
+        decodedHeaders(s, dir) { (id, w, h) =>
+          (id % 3) match {
+            case 0 => graft.multimodal.MediaCodecs.encodeWebpLossy(w, h)
+            case 1 => graft.multimodal.MediaCodecs.encodeWebpLossless(w, h)
+            case _ => graft.multimodal.MediaCodecs.encodeWebpExtended(w, h)
           }
-        graft.multimodal.Multimodal.decode(media)
-          .select(
-            col("doc_id"),
-            col("meta.codec").as("codec"),
-            col("meta.width").cast(LongType).as("width"),
-            col("meta.height").cast(LongType).as("height"),
-            col("meta.n_frames").cast(LongType).as("n_frames"),
-            col("n_bytes"))
-          .orderBy(col("doc_id"))
+        }
       },
-      Some("""
-        SELECT doc_id,
-               'webp' AS codec,
-               CAST(doc_id % 640 + 1 AS BIGINT) AS width,
-               CAST((doc_id * 7) % 480 + 1 AS BIGINT) AS height,
-               CAST(1 AS BIGINT) AS n_frames,
-               CAST(CASE doc_id % 3 WHEN 0 THEN 30 WHEN 1 THEN 26 ELSE 30 END
-                    AS BIGINT) AS n_bytes
-        FROM documents ORDER BY doc_id""")),
+      Some(headerSql("'webp'",
+        "CASE doc_id % 3 WHEN 0 THEN 30 WHEN 1 THEN 26 ELSE 30 END"))),
 
     // ----- multimodal: REAL TIFF IFD-walk decode in BOTH byte orders —
     // the container under EXIF and most scanned-document corpora. Even ids
@@ -1900,32 +1818,11 @@ object TextQueries {
     // and the hash gate catches it.
     Q("q_mm_decode_tiff",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val w = (id % 640 + 1).toInt
-            val h = (id * 7 % 480 + 1).toInt
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeTiff(w, h, bigEndian = id % 2 == 1))
-          }
-        graft.multimodal.Multimodal.decode(media)
-          .select(
-            col("doc_id"),
-            col("meta.codec").as("codec"),
-            col("meta.width").cast(LongType).as("width"),
-            col("meta.height").cast(LongType).as("height"),
-            col("meta.n_frames").cast(LongType).as("n_frames"),
-            col("n_bytes"))
-          .orderBy(col("doc_id"))
+        decodedHeaders(s, dir) { (id, w, h) =>
+          graft.multimodal.MediaCodecs.encodeTiff(w, h, bigEndian = id % 2 == 1)
+        }
       },
-      Some("""
-        SELECT doc_id,
-               'tiff' AS codec,
-               CAST(doc_id % 640 + 1 AS BIGINT) AS width,
-               CAST((doc_id * 7) % 480 + 1 AS BIGINT) AS height,
-               CAST(1 AS BIGINT) AS n_frames,
-               CAST(50 AS BIGINT) AS n_bytes
-        FROM documents ORDER BY doc_id""")),
+      Some(headerSql("'tiff'", "50"))),
 
     // ----- EXIF privacy audit: orientation + GPS-presence over TIFF
     // containers — the image-location-PII gate (phone photos carry GPS
@@ -2085,39 +1982,14 @@ object TextQueries {
           .map { id =>
             val w = (id % 48 + 8).toInt
             val h = (id * 7 % 40 + 8).toInt
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((x + y) % 256).toByte
-                rgb(p + 1) = ((2 * x + 3 * y) % 256).toByte
-                rgb(p + 2) = ((x + 2 * y) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val rgb = gradientRgb(w, h)
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodeBmpRgb(w, h, rgb))
           }
         graft.multimodal.Multimodal.imageStats(media)
           .toDF().orderBy(col("doc_id"))
       },
-      Some("""
-        WITH dims AS (SELECT doc_id, doc_id % 48 + 8 AS w,
-                             (doc_id * 7) % 40 + 8 AS h
-                      FROM documents),
-        px AS (SELECT doc_id, w, h,
-                 (x.g + y.g) % 256 AS r, (2 * x.g + 3 * y.g) % 256 AS g,
-                 (x.g + 2 * y.g) % 256 AS b
-               FROM dims, generate_series(0, 54) x(g), generate_series(0, 46) y(g)
-               WHERE x.g < w AND y.g < h)
-        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-               CAST(SUM(r) AS BIGINT) AS sum_r, CAST(SUM(g) AS BIGINT) AS sum_g,
-               CAST(SUM(b) AS BIGINT) AS sum_b,
-               CAST(MAX((299 * r + 587 * g + 114 * b) // 1000) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, w, h ORDER BY doc_id""")),
+      Some(gradientStatsSql)),
 
     // ----- perceptual-hash image dedup (dHash): byte-distinct images
     // collapse into one perceptual group when only exposure differs. Each
@@ -2131,29 +2003,7 @@ object TextQueries {
     // only on the Spark side and must land on the same integers.
     Q("q_mm_phash_dedup",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val c = (id % 25).toInt
-            val w = c % 12 + 9
-            val h = (c * 3) % 10 + 8
-            val bright = ((id / 25) % 3).toInt * 10
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((x * (c % 9 + 2) * 13 + y * 3) % 150 + bright).toByte
-                rgb(p + 1) = ((2 * x + y * (c % 5 + 3) * 11) % 150 + bright).toByte
-                rgb(p + 2) = ((3 * x + y) % 150 + bright).toByte
-                x += 1
-              }
-              y += 1
-            }
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeBmpRgb(w, h, rgb))
-          }
+        val media = Fragments.phashMedia(s, dir)
         val ph = graft.multimodal.Multimodal.dHash(media).toDF()
         media.toDF()
           .join(ph.select(col("doc_id"), col("dhash")), "doc_id")
@@ -2163,36 +2013,8 @@ object TextQueries {
             min(col("doc_id")).as("survivor"))
           .orderBy(col("survivor"))
       },
-      Some("""
-        WITH dims AS (
-          SELECT doc_id, (doc_id % 25) % 12 + 9 AS w,
-                 ((doc_id % 25) * 3) % 10 + 8 AS h
-          FROM documents),
-        grid AS (
-          SELECT doc_id, x.g AS x, y.g AS y,
-                 (x.g * w) // 9 AS sx, (y.g * h) // 8 AS sy
-          FROM dims, generate_series(0, 8) x(g), generate_series(0, 7) y(g)),
-        luma AS (
-          SELECT doc_id, x, y,
-                 (299 * ((sx * ((doc_id % 25) % 9 + 2) * 13 + sy * 3) % 150)
-                  + 587 * ((2 * sx + sy * ((doc_id % 25) % 5 + 3) * 11) % 150)
-                  + 114 * ((3 * sx + sy) % 150)) // 1000 AS l
-          FROM grid),
-        bits AS (
-          SELECT a.doc_id,
-                 -- bit 63 as the signed minimum: DuckDB raises on 1 << 63,
-                 -- Spark's 1L << 63 wraps to -2^63; summing the signed
-                 -- value reproduces the two's-complement hash exactly
-                 SUM(CASE WHEN b.l > a.l
-                          THEN CASE WHEN a.y * 8 + a.x = 63
-                                    THEN -9223372036854775807 - 1
-                                    ELSE CAST(1 AS BIGINT) << (a.y * 8 + a.x)
-                               END
-                          ELSE 0 END) AS dhash
-          FROM luma a JOIN luma b
-            ON a.doc_id = b.doc_id AND a.y = b.y AND b.x = a.x + 1
-          WHERE a.x < 8
-          GROUP BY a.doc_id)
+      Some(s"""
+        WITH ${Fragments.dhashCtes("")}
         SELECT CAST(dhash AS BIGINT) AS dhash,
                CAST(COUNT(*) AS BIGINT) AS n_images,
                CAST(COUNT(DISTINCT (doc_id % 25) * 10 + (doc_id // 25) % 3)
@@ -2221,39 +2043,14 @@ object TextQueries {
           .map { id =>
             val w = (id % 48 + 8).toInt
             val h = (id * 7 % 40 + 8).toInt
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((x + y) % 256).toByte
-                rgb(p + 1) = ((2 * x + 3 * y) % 256).toByte
-                rgb(p + 2) = ((x + 2 * y) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val rgb = gradientRgb(w, h)
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodePngRgb(w, h, rgb))
           }
         graft.multimodal.Multimodal.imageStats(media)
           .toDF().orderBy(col("doc_id"))
       },
-      Some("""
-        WITH dims AS (SELECT doc_id, doc_id % 48 + 8 AS w,
-                             (doc_id * 7) % 40 + 8 AS h
-                      FROM documents),
-        px AS (SELECT doc_id, w, h,
-                 (x.g + y.g) % 256 AS r, (2 * x.g + 3 * y.g) % 256 AS g,
-                 (x.g + 2 * y.g) % 256 AS b
-               FROM dims, generate_series(0, 54) x(g), generate_series(0, 46) y(g)
-               WHERE x.g < w AND y.g < h)
-        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-               CAST(SUM(r) AS BIGINT) AS sum_r, CAST(SUM(g) AS BIGINT) AS sum_g,
-               CAST(SUM(b) AS BIGINT) AS sum_b,
-               CAST(MAX((299 * r + 587 * g + 114 * b) // 1000) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, w, h ORDER BY doc_id""")),
+      Some(gradientStatsSql)),
 
     // ----- the SAME raster statistics through the JPEG path — the web's
     // dominant image format, decoded by the full baseline pipeline
@@ -2273,17 +2070,7 @@ object TextQueries {
           .map { id =>
             val w = (id % 5 + 1).toInt * 8
             val h = (id * 7 % 4 + 1).toInt * 8
-            val gray = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                gray(y * w + x) =
-                  (((x / 8) * 13 + (y / 8) * 29 + id % 25 * 5) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val gray = blockGray(w, h, id % 25 * 5)
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodeJpegGray(w, h, gray,
                 quant = 8, restartInterval = 3))
@@ -2291,19 +2078,7 @@ object TextQueries {
         graft.multimodal.Multimodal.imageStats(media)
           .toDF().orderBy(col("doc_id"))
       },
-      Some("""
-        WITH dims AS (SELECT doc_id, (doc_id % 5 + 1) * 8 AS w,
-                             ((doc_id * 7) % 4 + 1) * 8 AS h
-                      FROM documents),
-        px AS (SELECT doc_id, w, h,
-                 ((x.g // 8) * 13 + (y.g // 8) * 29 + (doc_id % 25) * 5) % 256 AS v
-               FROM dims, generate_series(0, 39) x(g), generate_series(0, 31) y(g)
-               WHERE x.g < w AND y.g < h)
-        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-               CAST(SUM(v) AS BIGINT) AS sum_r, CAST(SUM(v) AS BIGINT) AS sum_g,
-               CAST(SUM(v) AS BIGINT) AS sum_b,
-               CAST(MAX(v) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, w, h ORDER BY doc_id""")),
+      Some(blockStatsSql(0))),
 
     // ----- the SAME raster statistics through the PROGRESSIVE (SOF2) JPEG
     // path: spectral-selection + successive-approximation scans (the
@@ -2320,17 +2095,7 @@ object TextQueries {
           .map { id =>
             val w = (id % 5 + 1).toInt * 8
             val h = (id * 7 % 4 + 1).toInt * 8
-            val gray = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                gray(y * w + x) =
-                  ((23 + (x / 8) * 13 + (y / 8) * 29 + id % 25 * 5) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val gray = blockGray(w, h, 23 + id % 25 * 5)
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodeJpegGrayProgressive(w, h, gray,
                 quant = 8))
@@ -2338,19 +2103,7 @@ object TextQueries {
         graft.multimodal.Multimodal.imageStats(media)
           .toDF().orderBy(col("doc_id"))
       },
-      Some("""
-        WITH dims AS (SELECT doc_id, (doc_id % 5 + 1) * 8 AS w,
-                             ((doc_id * 7) % 4 + 1) * 8 AS h
-                      FROM documents),
-        px AS (SELECT doc_id, w, h,
-                 (23 + (x.g // 8) * 13 + (y.g // 8) * 29 + (doc_id % 25) * 5) % 256 AS v
-               FROM dims, generate_series(0, 39) x(g), generate_series(0, 31) y(g)
-               WHERE x.g < w AND y.g < h)
-        SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-               CAST(SUM(v) AS BIGINT) AS sum_r, CAST(SUM(v) AS BIGINT) AS sum_g,
-               CAST(SUM(v) AS BIGINT) AS sum_b,
-               CAST(MAX(v) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, w, h ORDER BY doc_id""")),
+      Some(blockStatsSql(23))),
 
     // ----- REAL video frame extraction: each doc becomes an AVI/MJPG of
     // n = id%6+4 frames (each frame a 16x16 block-constant gray JPEG —
@@ -2363,53 +2116,17 @@ object TextQueries {
     // MP4 scheduling half) with decoded bytes.
     Q("q_mm_video_frames",
       (s, dir) => {
-        import s.implicits._
         // quarter-sample: the timed cost of this row is dominated by
         // FIXTURE SYNTHESIS (n frames x encodeJpegGray + the AVI wrap per
         // doc) that the closed-form oracle never pays; 1250 videos keep
         // every code path and binding while the synth stays proportionate
-        val media = t(s, dir, "documents").select(col("doc_id"))
-          .filter(col("doc_id") % 4 === 0).as[Long]
-          .map { id =>
-            val n = (id % 6 + 4).toInt
-            val w = 16; val h = 16
-            val frames = (0 until n).map { f =>
-              val gray = new Array[Byte](w * h)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  gray(y * w + x) =
-                    ((f * 31 + (x / 8) * 13 + (y / 8) * 29 + id % 25 * 5) % 256).toByte
-                  x += 1
-                }
-                y += 1
-              }
-              graft.multimodal.MediaCodecs.encodeJpegGray(w, h, gray, quant = 8)
-            }
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeAviMjpeg(w, h, 25, frames))
-          }
+        val media = videoMedia(s, dir, 0) { (w, h, frames) =>
+          graft.multimodal.MediaCodecs.encodeAviMjpeg(w, h, 25, frames)
+        }
         graft.multimodal.Multimodal.sampleFrameStats(media, 3)
           .toDF().orderBy(col("doc_id"), col("sample_idx"))
       },
-      Some("""
-        WITH vids AS (SELECT doc_id, doc_id % 6 + 4 AS n FROM documents
-                      WHERE doc_id % 4 = 0),
-        samples AS (SELECT doc_id, n, j.g AS sample_idx, (j.g * n) // 3 AS fi
-                    FROM vids, generate_series(0, 2) j(g)),
-        px AS (SELECT doc_id, sample_idx, fi, n,
-                 (fi * 31 + bx.g * 13 + by.g * 29 + (doc_id % 25) * 5) % 256 AS v
-               FROM samples, generate_series(0, 1) bx(g), generate_series(0, 1) by(g))
-        SELECT doc_id, CAST(sample_idx AS BIGINT) AS sample_idx,
-               CAST(fi AS BIGINT) AS frame_idx, CAST(n AS BIGINT) AS n_frames,
-               CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_r,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_g,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_b,
-               CAST(MAX(v) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, sample_idx, fi, n
-        ORDER BY doc_id, sample_idx""")),
+      Some(videoStatsSql(0))),
 
     // ----- the SAME sampled frame extraction through the MP4 container —
     // the format real crawls are dominated by: each doc becomes an
@@ -2422,52 +2139,16 @@ object TextQueries {
     // path cannot pass both rows. Same closed-form oracle family.
     Q("q_mm_mp4_samples",
       (s, dir) => {
-        import s.implicits._
         // quarter-sample, as q_mm_video_frames: fixture synthesis (n JPEG
         // encodes + the MP4 mux per doc) dominates, not the walk under test
-        val media = t(s, dir, "documents").select(col("doc_id"))
-          .filter(col("doc_id") % 4 === 0).as[Long]
-          .map { id =>
-            val n = (id % 6 + 4).toInt
-            val w = 16; val h = 16
-            val frames = (0 until n).map { f =>
-              val gray = new Array[Byte](w * h)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  gray(y * w + x) =
-                    ((17 + f * 31 + (x / 8) * 13 + (y / 8) * 29 + id % 25 * 5) % 256).toByte
-                  x += 1
-                }
-                y += 1
-              }
-              graft.multimodal.MediaCodecs.encodeJpegGray(w, h, gray, quant = 8)
-            }
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeMp4Mjpeg(w, h,
-                timescale = 1000, sampleDelta = 40, frames, samplesPerChunk = 3))
-          }
+        val media = videoMedia(s, dir, 17) { (w, h, frames) =>
+          graft.multimodal.MediaCodecs.encodeMp4Mjpeg(w, h,
+            timescale = 1000, sampleDelta = 40, frames, samplesPerChunk = 3)
+        }
         graft.multimodal.Multimodal.sampleFrameStatsMp4(media, 3)
           .toDF().orderBy(col("doc_id"), col("sample_idx"))
       },
-      Some("""
-        WITH vids AS (SELECT doc_id, doc_id % 6 + 4 AS n FROM documents
-                      WHERE doc_id % 4 = 0),
-        samples AS (SELECT doc_id, n, j.g AS sample_idx, (j.g * n) // 3 AS fi
-                    FROM vids, generate_series(0, 2) j(g)),
-        px AS (SELECT doc_id, sample_idx, fi, n,
-                 (17 + fi * 31 + bx.g * 13 + by.g * 29 + (doc_id % 25) * 5) % 256 AS v
-               FROM samples, generate_series(0, 1) bx(g), generate_series(0, 1) by(g))
-        SELECT doc_id, CAST(sample_idx AS BIGINT) AS sample_idx,
-               CAST(fi AS BIGINT) AS frame_idx, CAST(n AS BIGINT) AS n_frames,
-               CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_r,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_g,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_b,
-               CAST(MAX(v) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, sample_idx, fi, n
-        ORDER BY doc_id, sample_idx""")),
+      Some(videoStatsSql(17))),
 
     // ----- the SAME sampled frame extraction through FRAGMENTED MP4 (the
     // DASH/HLS streaming layout — the other half of real-world MP4): each
@@ -2479,51 +2160,14 @@ object TextQueries {
     // other video rows so a cross-wired walk cannot pass any two of them.
     Q("q_mm_mp4_frag_samples",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id"))
-          .filter(col("doc_id") % 4 === 0).as[Long]
-          .map { id =>
-            val n = (id % 6 + 4).toInt
-            val w = 16; val h = 16
-            val frames = (0 until n).map { f =>
-              val gray = new Array[Byte](w * h)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  gray(y * w + x) =
-                    ((41 + f * 31 + (x / 8) * 13 + (y / 8) * 29 + id % 25 * 5) % 256).toByte
-                  x += 1
-                }
-                y += 1
-              }
-              graft.multimodal.MediaCodecs.encodeJpegGray(w, h, gray, quant = 8)
-            }
-            val frags = frames.grouped(3).toSeq
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeMp4FragMjpeg(w, h,
-                timescale = 1000, sampleDelta = 40, frags))
-          }
+        val media = videoMedia(s, dir, 41) { (w, h, frames) =>
+          graft.multimodal.MediaCodecs.encodeMp4FragMjpeg(w, h,
+            timescale = 1000, sampleDelta = 40, frames.grouped(3).toSeq)
+        }
         graft.multimodal.Multimodal.sampleFrameStatsMp4Frag(media, 3)
           .toDF().orderBy(col("doc_id"), col("sample_idx"))
       },
-      Some("""
-        WITH vids AS (SELECT doc_id, doc_id % 6 + 4 AS n FROM documents
-                      WHERE doc_id % 4 = 0),
-        samples AS (SELECT doc_id, n, j.g AS sample_idx, (j.g * n) // 3 AS fi
-                    FROM vids, generate_series(0, 2) j(g)),
-        px AS (SELECT doc_id, sample_idx, fi, n,
-                 (41 + fi * 31 + bx.g * 13 + by.g * 29 + (doc_id % 25) * 5) % 256 AS v
-               FROM samples, generate_series(0, 1) bx(g), generate_series(0, 1) by(g))
-        SELECT doc_id, CAST(sample_idx AS BIGINT) AS sample_idx,
-               CAST(fi AS BIGINT) AS frame_idx, CAST(n AS BIGINT) AS n_frames,
-               CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_r,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_g,
-               CAST(SUM(v) * 64 AS BIGINT) AS sum_b,
-               CAST(MAX(v) AS BIGINT) AS max_luma
-        FROM px GROUP BY doc_id, sample_idx, fi, n
-        ORDER BY doc_id, sample_idx""")),
+      Some(videoStatsSql(41))),
 
     // ----- the SAME raster statistics through the GIF path: palette-
     // bounded gradients (≤ 200 distinct colors — GIF is indexed) encoded as
@@ -2627,22 +2271,7 @@ object TextQueries {
     // cancels).
     Q("q_mm_audio_fingerprint",
       (s, dir) => {
-        import s.implicits._
-        val media = t(s, dir, "documents").select(col("doc_id")).as[Long]
-          .map { id =>
-            val c = (id % 20).toInt
-            val n = c * 40 + 640
-            val gain = ((id / 20) % 3).toInt + 1
-            val samples = new Array[Short](n)
-            var i = 0
-            while (i < n) {
-              samples(i) = ((((c * 31 + i.toLong * 40503) % 10000) - 5000)
-                * gain).toShort
-              i += 1
-            }
-            graft.multimodal.Multimodal.MediaRow(id,
-              graft.multimodal.MediaCodecs.encodeWavPcm16(16000, samples))
-          }
+        val media = Fragments.audioMedia(s, dir)
         val fps = graft.multimodal.Multimodal.audioFingerprint(media).toDF()
         media.toDF()
           .join(fps.select(col("doc_id"), col("fp")), "doc_id")
@@ -2652,28 +2281,8 @@ object TextQueries {
             min(col("doc_id")).as("survivor"))
           .orderBy(col("survivor"))
       },
-      Some("""
-        WITH n AS (
-          SELECT doc_id, doc_id % 20 AS c, (doc_id % 20) * 40 + 640 AS ns
-          FROM documents),
-        s AS (
-          SELECT doc_id, ns, i.g AS i,
-                 ((c * 31 + i.g * 40503) % 10000) - 5000 AS v
-          FROM n, generate_series(0, 1399) i(g)
-          WHERE i.g < (ns // 32) * 32),
-        e AS (
-          SELECT doc_id, i // (ns // 32) AS k, SUM(v * v) AS e
-          FROM s GROUP BY doc_id, k),
-        b AS (
-          SELECT doc_id, k, e,
-                 lead(e) OVER (PARTITION BY doc_id ORDER BY k) AS ne
-          FROM e),
-        fp AS (
-          SELECT doc_id,
-                 CAST(SUM(CASE WHEN ne > e
-                               THEN CAST(1 AS BIGINT) << k ELSE 0 END)
-                      AS BIGINT) AS fp
-          FROM b WHERE k < 31 GROUP BY doc_id)
+      Some(s"""
+        WITH ${Fragments.audioFpCtes("")}
         SELECT fp, CAST(COUNT(*) AS BIGINT) AS n_clips,
                CAST(COUNT(DISTINCT (doc_id % 20) * 10 + (doc_id // 20) % 3)
                     AS BIGINT) AS n_exact_variants,
@@ -2762,19 +2371,7 @@ object TextQueries {
           .map { id =>
             val w = (id % 48 + 8).toInt
             val h = (id * 7 % 40 + 8).toInt
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = (y * w + x) * 3
-                rgb(p) = ((x + y) % 256).toByte
-                rgb(p + 1) = ((2 * x + 3 * y) % 256).toByte
-                rgb(p + 2) = ((x + 2 * y) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
+            val rgb = gradientRgb(w, h)
             graft.multimodal.Multimodal.MediaRow(id,
               graft.multimodal.MediaCodecs.encodeBmpRgb(w, h, rgb))
           }

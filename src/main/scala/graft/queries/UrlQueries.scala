@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Q._
 import graft.functions.UrlFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -17,9 +18,6 @@ import org.apache.spark.sql.types._
   * itself is what the hash-compare checks.
   */
 object UrlQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** The synthesized per-row URL. Kept adjacent to [[synthUrlSql]] so the
     * two engines cannot drift.
@@ -86,6 +84,53 @@ object UrlQueries {
     (col("doc_id") % 20).as("src"),
     expr("((doc_id DIV 20) % (1 + (doc_id % 20) % 5) + 3 * (doc_id % 20)) % 20")
       .as("dst"))
+
+  /** DuckDB rendering of [[synthFrontier]]'s `domain`, `path` and
+    * `robots` columns. */
+  private val frontierSql: String =
+    """'site' || CAST(doc_id % 20 AS VARCHAR) || '.com' AS domain,
+                 CASE CAST(doc_id % 5 AS INT)
+                   WHEN 0 THEN '/private/data' || doc_id
+                   WHEN 1 THEN '/public/page' || doc_id
+                   WHEN 2 THEN '/tmp/x'
+                   WHEN 3 THEN '/private/ok/page'
+                   ELSE '/' END AS path,
+                 CASE CAST((doc_id % 20) % 3 AS INT)
+                   WHEN 0 THEN 'User-agent: *' || chr(10) || 'Disallow: /private'
+                        || chr(10) || 'Allow: /private/ok' || chr(10) || 'Disallow: /tmp'
+                   WHEN 1 THEN 'User-agent: *' || chr(10) || 'Disallow: /'
+                        || chr(10) || 'Allow: /public'
+                   ELSE 'User-agent: *' || chr(10) || 'Disallow:' END AS robots"""
+
+  /** DuckDB CTE `e0(src, dst)`: [[synthEdges]] without self-loops, distinct. */
+  private val edgesSql: String = """e0 AS (
+          SELECT DISTINCT doc_id % 20 AS src,
+                 ((doc_id // 20) % (1 + (doc_id % 20) % 5)
+                  + 3 * (doc_id % 20)) % 20 AS dst
+          FROM documents
+          WHERE doc_id % 20 <>
+                ((doc_id // 20) % (1 + (doc_id % 20) % 5)
+                 + 3 * (doc_id % 20)) % 20)"""
+
+  /** DuckDB CTEs `deg`, `nodes`, `cnt`, `r0` and `it1`..`it3`: three
+    * iterations of LinkGraph.pageRank's integer-ppm PageRank over `e0`,
+    * ranks in `it3(node, r)`. */
+  private val pageRankCtes: String = s"""deg AS (SELECT src, COUNT(*) AS deg FROM e0 GROUP BY src),
+        nodes AS (SELECT DISTINCT node
+                  FROM (SELECT src AS node FROM e0 UNION SELECT dst FROM e0)),
+        cnt AS (SELECT COUNT(*) AS n FROM nodes),
+        r0 AS (SELECT node, CAST(1000000 // n AS BIGINT) AS r
+               FROM nodes CROSS JOIN cnt),
+        ${(1 to 3).map { i =>
+          val prev = if (i == 1) "r0" else s"it${i - 1}"
+          s"""it$i AS (
+          SELECT nd.node,
+                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
+          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
+            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
+            FROM e0 e JOIN deg d ON e.src = d.src JOIN $prev r ON e.src = r.node
+            GROUP BY e.dst) s ON nd.node = s.node)"""
+        }.mkString(",\n        ")}"""
 
   val qs: Seq[Q] = Seq(
 
@@ -172,19 +217,7 @@ object UrlQueries {
       Some(s"""
         WITH d AS (
           SELECT doc_id,
-                 'site' || CAST(doc_id % 20 AS VARCHAR) || '.com' AS domain,
-                 CASE CAST(doc_id % 5 AS INT)
-                   WHEN 0 THEN '/private/data' || doc_id
-                   WHEN 1 THEN '/public/page' || doc_id
-                   WHEN 2 THEN '/tmp/x'
-                   WHEN 3 THEN '/private/ok/page'
-                   ELSE '/' END AS path,
-                 CASE CAST((doc_id % 20) % 3 AS INT)
-                   WHEN 0 THEN 'User-agent: *' || chr(10) || 'Disallow: /private'
-                        || chr(10) || 'Allow: /private/ok' || chr(10) || 'Disallow: /tmp'
-                   WHEN 1 THEN 'User-agent: *' || chr(10) || 'Disallow: /'
-                        || chr(10) || 'Allow: /public'
-                   ELSE 'User-agent: *' || chr(10) || 'Disallow:' END AS robots
+                 $frontierSql
           FROM documents),
         p AS (
           SELECT doc_id, domain, path,
@@ -215,42 +248,9 @@ object UrlQueries {
           synthEdges(t(s, dir, "documents")), "src", "dst", iters = 3)
           .orderBy(col("node"))
       },
-      Some("""
-        WITH e0 AS (
-          SELECT DISTINCT doc_id % 20 AS src,
-                 ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                  + 3 * (doc_id % 20)) % 20 AS dst
-          FROM documents
-          WHERE doc_id % 20 <>
-                ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                 + 3 * (doc_id % 20)) % 20),
-        deg AS (SELECT src, COUNT(*) AS deg FROM e0 GROUP BY src),
-        nodes AS (SELECT DISTINCT node
-                  FROM (SELECT src AS node FROM e0 UNION SELECT dst FROM e0)),
-        cnt AS (SELECT COUNT(*) AS n FROM nodes),
-        r0 AS (SELECT node, CAST(1000000 // n AS BIGINT) AS r
-               FROM nodes CROSS JOIN cnt),
-        it1 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN r0 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node),
-        it2 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN it1 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node),
-        it3 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN it2 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node)
+      Some(s"""
+        WITH $edgesSql,
+        $pageRankCtes
         SELECT node, r AS rank_ppm FROM it3 ORDER BY node""")),
 
     // ----- multi-source BFS hop distance over the same link graph: how
@@ -270,15 +270,8 @@ object UrlQueries {
             synthEdges(docs), "src", "dst", seeds, "node", maxHops = 3)
           .orderBy(col("node"))
       },
-      Some("""
-        WITH e0 AS (
-          SELECT DISTINCT doc_id % 20 AS src,
-                 ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                  + 3 * (doc_id % 20)) % 20 AS dst
-          FROM documents
-          WHERE doc_id % 20 <>
-                ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                 + 3 * (doc_id % 20)) % 20),
+      Some(s"""
+        WITH $edgesSql,
         d0 AS (SELECT DISTINCT doc_id % 20 AS node, 0 AS hops
                FROM documents WHERE (doc_id % 20) % 7 = 0),
         f1 AS (SELECT DISTINCT e.dst AS node
@@ -339,56 +332,11 @@ object UrlQueries {
           .orderBy(col("rank_ppm").desc, col("domain"), col("rank"))
       },
       Some(s"""
-        WITH e0 AS (
-          SELECT DISTINCT doc_id % 20 AS src,
-                 ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                  + 3 * (doc_id % 20)) % 20 AS dst
-          FROM documents
-          WHERE doc_id % 20 <>
-                ((doc_id // 20) % (1 + (doc_id % 20) % 5)
-                 + 3 * (doc_id % 20)) % 20),
-        deg AS (SELECT src, COUNT(*) AS deg FROM e0 GROUP BY src),
-        nodes AS (SELECT DISTINCT node
-                  FROM (SELECT src AS node FROM e0 UNION SELECT dst FROM e0)),
-        cnt AS (SELECT COUNT(*) AS n FROM nodes),
-        r0 AS (SELECT node, CAST(1000000 // n AS BIGINT) AS r
-               FROM nodes CROSS JOIN cnt),
-        it1 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN r0 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node),
-        it2 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN it1 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node),
-        it3 AS (
-          SELECT nd.node,
-                 CAST(150000 // n + 850 * COALESCE(s.c, 0) // 1000 AS BIGINT) AS r
-          FROM nodes nd CROSS JOIN cnt LEFT JOIN (
-            SELECT e.dst AS node, SUM(r.r // d.deg) AS c
-            FROM e0 e JOIN deg d ON e.src = d.src JOIN it2 r ON e.src = r.node
-            GROUP BY e.dst) s ON nd.node = s.node),
+        WITH $edgesSql,
+        $pageRankCtes,
         u AS (
           SELECT doc_id, doc_id % 20 AS n,
-                 'site' || CAST(doc_id % 20 AS VARCHAR) || '.com' AS domain,
-                 CASE CAST(doc_id % 5 AS INT)
-                   WHEN 0 THEN '/private/data' || doc_id
-                   WHEN 1 THEN '/public/page' || doc_id
-                   WHEN 2 THEN '/tmp/x'
-                   WHEN 3 THEN '/private/ok/page'
-                   ELSE '/' END AS path,
-                 CASE CAST((doc_id % 20) % 3 AS INT)
-                   WHEN 0 THEN 'User-agent: *' || chr(10) || 'Disallow: /private'
-                        || chr(10) || 'Allow: /private/ok' || chr(10) || 'Disallow: /tmp'
-                   WHEN 1 THEN 'User-agent: *' || chr(10) || 'Disallow: /'
-                        || chr(10) || 'Allow: /public'
-                   ELSE 'User-agent: *' || chr(10) || 'Disallow:' END AS robots
+                 $frontierSql
           FROM documents),
         p AS (
           SELECT doc_id, n, domain, path,

@@ -18,6 +18,20 @@ class RegistrySmokeSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("every row has a non-blank oracle and no oracle leaves a fragment uninterpolated") {
+    // `${frag}` or `$frag` surviving into an oracle means a shared fragment
+    // was pasted into a plain """ string that lacks the s prefix; SQL's own
+    // dollars (`'$.k'`, `'^[a-z]+$'`) are never followed by `{` or a letter
+    val leftover = """\$(\{|[A-Za-z_])""".r
+    SparkEntry.registry.foreach { q =>
+      val sql = q.oracle.getOrElse(fail(s"${q.name} has no oracle"))
+      assert(sql.trim.nonEmpty, s"${q.name} has a blank oracle")
+      leftover.findFirstIn(sql).foreach { hit =>
+        fail(s"${q.name}: oracle contains uninterpolated '$hit'")
+      }
+    }
+  }
+
   test("q_ab_chi2 returns a NULL statistic when a contingency margin is zero") {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
