@@ -438,10 +438,6 @@ object MediaCodecs {
     buf.array()
   }
 
-  /** BITMAPFILEHEADER + BITMAPINFOHEADER for an uncompressed BMP with no
-    * pixel payload (header-only fixture; the file size and data offset
-    * fields are filled in as the spec defines them).
-    */
   /** Parse video metadata from an ISO BMFF (MP4) prefix: walks the top-level
     * box list to `moov`, then its children to `mvhd` (movie header), and
     * reads timescale + duration (version 0: 32-bit fields; version 1:
@@ -614,6 +610,10 @@ object MediaCodecs {
     None
   }
 
+  /** BITMAPFILEHEADER + BITMAPINFOHEADER for an uncompressed BMP with no
+    * pixel payload (header-only fixture; the file size and data offset
+    * fields are filled in as the spec defines them).
+    */
   def encodeBmp(width: Int, height: Int, bitsPerPixel: Int = 24): Array[Byte] = {
     require(width > 0 && height > 0, s"dims must be positive ($width x $height)")
     val buf = ByteBuffer.allocate(BmpHeaderLen).order(ByteOrder.LITTLE_ENDIAN)
@@ -2675,9 +2675,6 @@ object MediaCodecs {
   private def mp4Tag(b: Array[Byte], i: Int): String =
     if (i + 4 > b.length) "" else new String(b, i, 4, "US-ASCII")
 
-  /** Find the first child box of [from, to) named `tpe`; returns
-    * (start, end) of its BODY. None on a malformed size or no match.
-    */
   /** One box's (contentStart, end) at `i`, honoring the ISO-BMFF 64-bit
     * `largesize` form (size == 1 → the real size is a u64 after the tag —
     * the shape every > 4 GiB mdat ships in; our slices are int-bounded, so
@@ -2696,6 +2693,9 @@ object MediaCodecs {
     else Some((i + 8, i + size32))
   }
 
+  /** Find the first child box of [from, to) named `tpe`; returns
+    * (start, end) of its BODY. None on a malformed size or no match.
+    */
   private def mp4Child(b: Array[Byte], buf: ByteBuffer, from: Int, to: Int,
                        tpe: String): Option[(Int, Int)] = {
     var i = from

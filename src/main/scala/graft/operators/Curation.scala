@@ -453,19 +453,6 @@ object Curation {
         expr("CAST(SUM(inv) DIV COUNT(1) AS BIGINT)").as("rarity"))
   }
 
-  /** Linear quality classifier over engine-exact integer features — the
-    * fasttext-style quality gate of a pretraining pipeline, reduced to
-    * arithmetic both engines reproduce bit-for-bit: ratios are ppm-scaled
-    * integer divisions (DIV), the score is an integer dot product, and the
-    * keep decision is a threshold on that score. Features:
-    *   - length credit: min(ntok, 200) — longer is better, capped;
-    *   - lexical diversity: distinct-token ppm of ntok;
-    *   - stopword pressure: stopword ppm of ntok (penalized).
-    * score = 1000·min(ntok,200) + (500·distinct_ppm) DIV 1000
-    *       − (300·stop_ppm) DIV 1000.
-    * Returns (input columns…, score: long, keep: boolean). Purely map-side:
-    * no shuffle, no UDF — one projection the optimizer can push around.
-    */
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, the standard
     * pre-training repetition filters; also RefinedWeb/Dolma): documents
     * dominated by repeated content — boilerplate loops, scraped templates,
@@ -623,6 +610,19 @@ object Curation {
         !col("has_brace") && col("n_kept_lines") >= 1L)
       .drop("__lines")
 
+  /** Linear quality classifier over engine-exact integer features — the
+    * fasttext-style quality gate of a pretraining pipeline, reduced to
+    * arithmetic both engines reproduce bit-for-bit: ratios are ppm-scaled
+    * integer divisions (DIV), the score is an integer dot product, and the
+    * keep decision is a threshold on that score. Features:
+    *   - length credit: min(ntok, 200) — longer is better, capped;
+    *   - lexical diversity: distinct-token ppm of ntok;
+    *   - stopword pressure: stopword ppm of ntok (penalized).
+    * score = 1000·min(ntok,200) + (500·distinct_ppm) DIV 1000
+    *       − (300·stop_ppm) DIV 1000.
+    * Returns (input columns…, score: long, keep: boolean). Purely map-side:
+    * no shuffle, no UDF — one projection the optimizer can push around.
+    */
   def qualityScore(df: DataFrame, textCol: String, stopwords: Seq[String],
                    keepThreshold: Long): DataFrame = {
     require(stopwords.nonEmpty && stopwords.forall(_.matches("[a-z]+")),
@@ -1425,34 +1425,6 @@ object Curation {
       .select(col("shard"), col("n_docs"), col("tokens"), col("tokens_ppm"))
   }
 
-  /** In-engine classifier distillation: train an integer batch perceptron
-    * over hashed unigram-presence features to imitate a TEACHER rule (here
-    * the [[qualityScore]] threshold gate) — the standard production move of
-    * distilling an expensive heuristic ruleset into one fast linear model
-    * the ingest path can apply map-side. Everything is exact integer
-    * arithmetic with deterministic, engine-portable hashing, so the learned
-    * weights and the final agreement are oracle-replayable bit-for-bit
-    * (no floats, no RNG, no transcendental loss — the perceptron's
-    * all-misclassified batch update is `w += Σ y·x`).
-    *
-    * Features: presence of polyHash(token) mod nBuckets; a constant bias
-    * bucket (= nBuckets); 8 document-LENGTH buckets (n DIV 50, capped) at
-    * nBuckets+1…+8; and 8 lexical-DIVERSITY buckets (distinct-token ppm
-    * DIV 125000, capped) at nBuckets+9…+16 — without the structural
-    * buckets a bag-of-hashed-words perceptron cannot express a
-    * length/diversity teacher and collapses to the majority class
-    * (measured: 63.0% agreement = exactly the base rate; with them it
-    * learns genuinely). Epochs run the FULL-BATCH perceptron rule: docs
-    * with `y·margin <= 0` contribute `y` to every feature bucket they
-    * touch. Returns (bucket, weight, acc_ppm): one row per bucket with the
-    * final weights and the teacher-agreement ppm of the trained model
-    * riding every row (one extra 1-row aggregate).
-    *
-    * Scale: the feature frame is (doc, bucket) DISTINCT — checkpointed
-    * once, reused across epochs; each epoch is two bucket/doc-keyed
-    * aggregates plus a ≤ nBuckets+1-row driver collect (the DSIR
-    * precedent: the MODEL is driver-sized, the data never is).
-    */
   /** The distillation feature frame — (idCol, bucket, y), checkpointed:
     * hashed unigram-presence buckets [0, nBuckets), the bias bucket, 8
     * length buckets, 8 diversity buckets, with the teacher label riding
@@ -1487,6 +1459,34 @@ object Curation {
         .join(labeled, Seq(idCol)))
   }
 
+  /** In-engine classifier distillation: train an integer batch perceptron
+    * over hashed unigram-presence features to imitate a TEACHER rule (here
+    * the [[qualityScore]] threshold gate) — the standard production move of
+    * distilling an expensive heuristic ruleset into one fast linear model
+    * the ingest path can apply map-side. Everything is exact integer
+    * arithmetic with deterministic, engine-portable hashing, so the learned
+    * weights and the final agreement are oracle-replayable bit-for-bit
+    * (no floats, no RNG, no transcendental loss — the perceptron's
+    * all-misclassified batch update is `w += Σ y·x`).
+    *
+    * Features: presence of polyHash(token) mod nBuckets; a constant bias
+    * bucket (= nBuckets); 8 document-LENGTH buckets (n DIV 50, capped) at
+    * nBuckets+1…+8; and 8 lexical-DIVERSITY buckets (distinct-token ppm
+    * DIV 125000, capped) at nBuckets+9…+16 — without the structural
+    * buckets a bag-of-hashed-words perceptron cannot express a
+    * length/diversity teacher and collapses to the majority class
+    * (measured: 63.0% agreement = exactly the base rate; with them it
+    * learns genuinely). Epochs run the FULL-BATCH perceptron rule: docs
+    * with `y·margin <= 0` contribute `y` to every feature bucket they
+    * touch. Returns (bucket, weight, acc_ppm): one row per bucket with the
+    * final weights and the teacher-agreement ppm of the trained model
+    * riding every row (one extra 1-row aggregate).
+    *
+    * Scale: the feature frame is (doc, bucket) DISTINCT — checkpointed
+    * once, reused across epochs; each epoch is two bucket/doc-keyed
+    * aggregates plus a ≤ nBuckets+1-row driver collect (the DSIR
+    * precedent: the MODEL is driver-sized, the data never is).
+    */
   def distillPerceptron(df: DataFrame, idCol: String, textCol: String,
                         stopwords: Seq[String], teacherThreshold: Long,
                         nBuckets: Int, epochs: Int): DataFrame =

@@ -265,21 +265,6 @@ object Dedup {
       .select(col(idCol) +: (0 until nPerms).map(i => col("sig")(i).as(s"m$i")): _*)
   }
 
-  /** LSH candidate pairs (`bands` bands × nPerms/bands rows each) with
-    * estimated Jaccard (signature agreement fraction) >= threshold.
-    *
-    * Plan shape: signatures are computed ONCE and exploded to one
-    * (band_idx, band_key) row per band, then a single self-equi-join on the
-    * composite band key finds candidates across all bands. The naive
-    * per-band self-join + union re-evaluates the whole shingle→hash→groupBy
-    * signature pipeline once per join input (4× for 2 bands); the exploded
-    * form has identical-modulo-alias join inputs, so at fact scale (both
-    * sides shuffle on the band key) the canonicalized exchanges are equal and
-    * ReusedExchange computes signatures ONCE. When one side is
-    * broadcast-small the pipeline runs twice (bounded, and cheaper than the
-    * broadcast is worth), and band count is a parameter instead of
-    * hard-coded column names.
-    */
   /** Signatures exploded to one (band_idx, band_key) row per band — the
     * shared candidate-generation layout of [[minhashLshPairs]] (self-join)
     * and [[tagNearDupAgainstIndex]] (new-batch vs index join).
@@ -300,6 +285,21 @@ object Dedup {
               col("b.band_idx").as("band_idx") :+ col("b.band_key").as("band_key"): _*)
   }
 
+  /** LSH candidate pairs (`bands` bands × nPerms/bands rows each) with
+    * estimated Jaccard (signature agreement fraction) >= threshold.
+    *
+    * Plan shape: signatures are computed ONCE and exploded to one
+    * (band_idx, band_key) row per band, then a single self-equi-join on the
+    * composite band key finds candidates across all bands. The naive
+    * per-band self-join + union re-evaluates the whole shingle→hash→groupBy
+    * signature pipeline once per join input (4× for 2 bands); the exploded
+    * form has identical-modulo-alias join inputs, so at fact scale (both
+    * sides shuffle on the band key) the canonicalized exchanges are equal and
+    * ReusedExchange computes signatures ONCE. When one side is
+    * broadcast-small the pipeline runs twice (bounded, and cheaper than the
+    * broadcast is worth), and band count is a parameter instead of
+    * hard-coded column names.
+    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int, threshold: Double, bands: Int = 2): DataFrame = {
     val nPerms = TextFns.minhashPerms.size
@@ -1131,31 +1131,6 @@ object Dedup {
     }
   }
 
-  /** [[tagSpansAgainstIndexSparse]] for the INLINE build+probe rows, over
-    * ONE shared kernel pass: [[anchorRowsFrame]] runs once for the WHOLE
-    * corpus (spread off the unsplittable scan, checkpointed) and every leg
-    * — history's sparse index, the batch's probe anchors, and both
-    * candidate dense-verify sides — is a filter of that checkpoint, so the
-    * tokenize+hash kernel runs once where the compositional form ran it
-    * four times (FixedCostProbe r19: four serial ~150 ms tokenize stages
-    * were most of that row's stage time). `histPred` splits history from
-    * batch by row and MUST reference only `idCol` — it is evaluated on
-    * the anchor checkpoint, which carries (idCol, pos, sh, sparse) and
-    * nothing else; a predicate over any other input column fails analysis
-    * loudly (use the compositional form for those). Output identical to
-    * `tagSpansAgainstIndexSparse(df.filter(!histPred),
-    * sparseAnchors(df.filter(histPred), …), df.filter(histPred), …)` —
-    * the sparse rows of the checkpoint are bit-identical to
-    * [[sparseAnchors]] and its full set to the positional-anchor stage.
-    *
-    * Scale: same contract as the compositional form — the probe broadcasts
-    * the batch's winnowed anchors over the history slice of the
-    * checkpoint, candidates collect under the limit(n+1) tripwire, dense
-    * verify is candidate-bounded (distributed tier kept for pathological
-    * batches). At 100 TB the checkpoint is the per-batch artifact and
-    * history's side reads the PERSISTED index instead — the `_serve` row's
-    * shape; this form exists for the build+probe-in-one-query pricing.
-    */
   /** The one-corpus split shape of the DENSE incremental substring gate —
     * [[anchorIndex]] + [[tagSpansAgainstIndex]] when history and batch are
     * two halves of one frame (the inline fixture rows' shape; production
@@ -1191,6 +1166,31 @@ object Dedup {
       .select(col("a_id").as(idCol), col("n_spans"), col("max_span_tokens"))
   }
 
+  /** [[tagSpansAgainstIndexSparse]] for the INLINE build+probe rows, over
+    * ONE shared kernel pass: [[anchorRowsFrame]] runs once for the WHOLE
+    * corpus (spread off the unsplittable scan, checkpointed) and every leg
+    * — history's sparse index, the batch's probe anchors, and both
+    * candidate dense-verify sides — is a filter of that checkpoint, so the
+    * tokenize+hash kernel runs once where the compositional form ran it
+    * four times (FixedCostProbe r19: four serial ~150 ms tokenize stages
+    * were most of that row's stage time). `histPred` splits history from
+    * batch by row and MUST reference only `idCol` — it is evaluated on
+    * the anchor checkpoint, which carries (idCol, pos, sh, sparse) and
+    * nothing else; a predicate over any other input column fails analysis
+    * loudly (use the compositional form for those). Output identical to
+    * `tagSpansAgainstIndexSparse(df.filter(!histPred),
+    * sparseAnchors(df.filter(histPred), …), df.filter(histPred), …)` —
+    * the sparse rows of the checkpoint are bit-identical to
+    * [[sparseAnchors]] and its full set to the positional-anchor stage.
+    *
+    * Scale: same contract as the compositional form — the probe broadcasts
+    * the batch's winnowed anchors over the history slice of the
+    * checkpoint, candidates collect under the limit(n+1) tripwire, dense
+    * verify is candidate-bounded (distributed tier kept for pathological
+    * batches). At 100 TB the checkpoint is the per-batch artifact and
+    * history's side reads the PERSISTED index instead — the `_serve` row's
+    * shape; this form exists for the build+probe-in-one-query pricing.
+    */
   def tagSpansSplitSparse(df: DataFrame, histPred: Column, idCol: String,
       textCol: String, k: Int, minSpanTokens: Int, w: Int,
       maxDriverCand: Int = 1 << 20): DataFrame = {

@@ -1,19 +1,23 @@
 package graft.operators
 
 import graft.functions.VectorFns
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (array<float>): brute-force cosine top-k as the exact baseline, and a
-  * sign-random-projection LSH variant as the scale path.
+/** Nearest-neighbor search over an embedding column (array<float>), one
+  * implementation per operator: exact cosine top-k ([[cosineTopK]]) and
+  * LSH top-k ([[lshTopK]]) on the quantized vectors; float IVF
+  * ([[ivfTopK]]); fixed-point PQ and IVF-PQ ([[pqTopKUnits]],
+  * [[ivfpqTopKUnits]]) with their persisted codebook frames; the k-NN
+  * graph family (build, incremental merge, beam-search and PQ-scored
+  * serving); matryoshka prefix serving; contrastive triplet mining.
   *
-  * The hot-path arithmetic here is plain double `aggregate`/`zip_with`
-  * (codegen'd, no decimal lattice) — fast, and fine when results are consumed
-  * as rankings. The oracle-checked queries use VectorFns' exact-decimal
-  * variant instead; both shapes share the same plans.
+  * The top-k operators, the graph family and every shortlist cut score
+  * quantized ([[VectorFns.quantize]]) vectors in exact long arithmetic, so
+  * the DuckDB oracles rank the same values; float IVF and the exact re-rank
+  * legs use the double DotFloat kernel ([[dotFast]]).
   *
   * Scale design: the query side is broadcast (top-k against a fixed probe set
   * never shuffles the 100 TB candidate side); the LSH variant turns O(Q·N)
@@ -32,14 +36,6 @@ object Similarity {
       org.apache.spark.sql.GraftColumnBridge.expression(col(a)),
       org.apache.spark.sql.GraftColumnBridge.expression(col(b))))
 
-  /** Per-pair cosine recomputing both norms — O(3d) per pair. Fine for a
-    * handful of pairs; JOIN paths must use [[withNorm]] + [[cosinePre]]
-    * instead (norms once per ROW, not once per pair — 3× less work on the
-    * dominant term).
-    */
-  def cosine(a: String, b: String): Column =
-    dotFast(a, b) / (sqrt(dotFast(a, a)) * sqrt(dotFast(b, b)))
-
   /** Adds the L2 norm of `embCol` as `normCol` (computed once per row). */
   def withNorm(df: DataFrame, embCol: String, normCol: String): DataFrame =
     df.withColumn(normCol, sqrt(dotFast(embCol, embCol)))
@@ -55,17 +51,45 @@ object Similarity {
   def lshBucket(embCol: String, nBits: Int): Column =
     VectorFns.lshBucketQ(VectorFns.quantize(col(embCol)), nBits)
 
-  /** Exact brute-force cosine top-k.
+  /** Exact brute-force cosine top-k on the quantized vectors, each quantized
+    * and normed once per row; self-pairs excluded; ranked per query by
+    * (round(cos, 9) DESC, c_id), the order the DuckDB oracles replay.
     * @param queries    (q_id, qe) probe set — must be broadcast-small
     * @param candidates (c_id, ce) corpus
     * @return (q_id, c_id, similarity, rank), rank 1..k per query
     */
-  def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    withNorm(candidates, "ce", "cn")
-      .crossJoin(broadcast(withNorm(queries, "qe", "qn")))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
+  def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    rankQuantized(quantizedSide(candidates, "c_id", "ce", "__cu", "__cn")
+      .crossJoin(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn"))), k)
+
+  /** LSH-bucketed ANN top-k: each side's quantized vector gets its
+    * `nBits`-bit sign-projection bucket ([[VectorFns.lshBucketQ]]), and
+    * candidates are scored and ranked as in [[cosineTopK]] only inside the
+    * query's bucket. Recall < 1 by construction; nBits trades recall for
+    * speed.
+    */
+  def lshTopK(queries: DataFrame, candidates: DataFrame, nBits: Int, k: Int): DataFrame = {
+    def bucketed(df: DataFrame, id: String, emb: String, u: String, n: String) =
+      quantizedSide(df, id, emb, u, n).withColumn("bucket", VectorFns.lshBucketQ(col(u), nBits))
+    rankQuantized(bucketed(candidates, "c_id", "ce", "__cu", "__cn")
+      .join(broadcast(bucketed(queries, "q_id", "qe", "__qu", "__qn")), Seq("bucket")), k)
+  }
+
+  /** `df`'s `id` with its vector `emb` quantized as `u` and that vector's
+    * norm as `n` — one quantize and one self-dot per row. */
+  private def quantizedSide(df: DataFrame, id: String, emb: String, u: String,
+                            n: String): DataFrame =
+    df.select(col(id), VectorFns.quantize(col(emb)).as(u))
+      .withColumn(n, sqrt(VectorFns.dotQDouble(col(u), col(u))))
+
+  /** The scoring tail of [[cosineTopK]], [[lshTopK]] and the matryoshka
+    * re-rank, over (q_id, __qu, __qn) × (c_id, __cu, __cn) pairs. */
+  private def rankQuantized(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(round(col("similarity"), 9).desc, col("c_id"))
+    pairs.filter(col("q_id") =!= col("c_id"))
+      .withColumn("similarity",
+        VectorFns.dotQDouble(col("__qu"), col("__cu")) / (col("__qn") * col("__cn")))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
@@ -137,53 +161,10 @@ object Similarity {
     array_position(dists, array_min(dists)).cast("long") - 1
   }
 
-  /** The trained IVF coarse quantizer as a (list, pos, c, n_lists, dim)
-    * frame for warehouse persistence; [[ivfCentroidsFromDf]] inverts it.
-    * The declared shape rides IN the data: deriving it from max()+1 cannot
-    * see the loss of an entire trailing list or dimension (the same
-    * contract as `KMeans.centroidsToDf` and `Curation.weightsToDf`).
-    */
-  def ivfCentroidsToDf(spark: org.apache.spark.sql.SparkSession,
-                       cents: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    val (nl, dim) = (cents.length.toLong, cents.head.length.toLong)
-    cents.zipWithIndex.flatMap { case (cu, j) =>
-      cu.zipWithIndex.map { case (c, p) => (j.toLong, p.toLong, c, nl, dim) }
-    }.toSeq.toDF("list", "pos", "c", "n_lists", "dim")
-  }
-
-  /** Inverse of [[ivfCentroidsToDf]] — bounded collect (nLists·dim
-    * doubles), failing loudly on ANY hole including trailing ones.
-    */
-  def ivfCentroidsFromDf(df: DataFrame, expectedLists: Int = -1,
-                         expectedDim: Int = -1): Array[Array[Double]] = {
-    // the shape columns ride the ONE bounded collect (FitFrames contract)
-    val hasShape = df.columns.contains("n_lists") && df.columns.contains("dim")
-    val base = Seq(col("list").cast(LongType), col("pos").cast(LongType),
-      col("c").cast("double"))
-    val sel = if (hasShape)
-      base ++ Seq(col("n_lists").cast(LongType), col("dim").cast(LongType)) else base
-    val collected = df.select(sel: _*).collect()
-    require(collected.nonEmpty, "empty IVF centroid frame")
-    val rows = collected.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    FitFrames.requireNoDuplicates("IVF centroid frame", collected.length, rows.size)
-    val nl = FitFrames.declared("n_lists", expectedLists,
-      if (hasShape) Some(collected.map(_.getLong(3))) else None,
-      rows.keys.map(_._1).max.toInt + 1)
-    val dim = FitFrames.declared("dim", expectedDim,
-      if (hasShape) Some(collected.map(_.getLong(4))) else None,
-      rows.keys.map(_._2).max.toInt + 1)
-    require(rows.keys.map(_._1).max.toInt + 1 == nl &&
-        rows.keys.map(_._2).max.toInt + 1 == dim && rows.size == nl * dim,
-      s"IVF centroid frame holes: ${rows.size} rows, expected ${nl}x$dim")
-    Array.tabulate(nl, dim)((j, p) => rows((j.toLong, p.toLong)))
-  }
-
   /** IVF ANN top-k: probes score only candidates in their `nProbe` nearest
     * cells. Trains the coarse quantizer inline — the one-shot form; the
-    * operational daily-batch shape trains once ([[ivfIndex]]), persists
-    * ([[ivfCentroidsToDf]] through any warehouse table), and serves every
-    * query batch via [[ivfTopKWith]] with zero training jobs.
+    * operational daily-batch shape trains once ([[ivfIndex]]) and serves
+    * every query batch via [[ivfTopKWith]] with zero training jobs.
     */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, nLists: Int,
               nProbe: Int, k: Int): DataFrame =
@@ -217,205 +198,6 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
   }
 
-  /** Product-quantization codebooks: `m` contiguous subspaces, `kCent`
-    * centroids each, trained by the same deterministic sampled k-means as
-    * [[ivfIndex]]. Returned as [subspace][centroid][subdim].
-    *
-    * PQ is the MEMORY side of the ANN scale story (IVF bounds compute):
-    * a candidate vector becomes `m` small codes (+1 stored norm) instead of
-    * `dim` floats — 128-d float32 → 8 bytes at m=8, a 64× compression — so
-    * a billion-vector index fits executor memory where raw vectors cannot.
-    */
-  def pqTrain(candidates: DataFrame, embCol: String, m: Int, kCent: Int,
-              sampleSize: Int = 2000, iters: Int = 5): Array[Array[Array[Double]]] = {
-    val sample = candidates.select(col(embCol))
-      .orderBy(xxhash64(col(embCol)), col(embCol).getItem(0))
-      .limit(sampleSize)
-      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(sample.nonEmpty, "empty training sample")
-    val dim = sample(0).length
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
-    (0 until m).toArray.map { j =>
-      val slice = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      require(slice.length >= kCent, s"need >= $kCent vectors to train subspace $j")
-      var cents = slice.take(kCent).map(_.clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(kCent)(new Array[Double](sub))
-        val counts = new Array[Long](kCent)
-        slice.foreach { v =>
-          val c = nearestCentroid(v, cents)
-          counts(c) += 1
-          var i = 0; while (i < sub) { sums(c)(i) += v(i); i += 1 }
-        }
-        cents = cents.indices.map { c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))
-        }.toArray
-      }
-      cents
-    }
-  }
-
-  /** PQ code assignment: array<long> of per-subspace nearest-centroid ids —
-    * a pure map-side projection (slice + CellDists argmin per subspace).
-    */
-  def pqEncode(embCol: String, codebooks: Array[Array[Array[Double]]]): Column = {
-    val m = codebooks.length
-    val sub = codebooks(0)(0).length
-    array((0 until m).map { j =>
-      val dists = org.apache.spark.sql.GraftColumnBridge.column(graft.plans.CellDists(
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          slice(col(embCol), j * sub + 1, sub)),
-        codebooks(j).toIndexedSeq.map(_.toIndexedSeq)))
-      (array_position(dists, array_min(dists)) - 1).cast(LongType)
-    }: _*)
-  }
-
-  /** The PQ index frame for a candidate set: (c_id, codes, cn) — the
-    * production index layout (bytes per vector, not floats). PERSIST THIS
-    * (with [[pqCodebooksDf]]) via `Warehouse.write`: the index is built
-    * once and served to every query session; re-encoding the corpus per
-    * query would defeat PQ's purpose.
-    */
-  def pqIndex(candidates: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame =
-    withNorm(candidates, "ce", "cn")
-      .select(col("c_id"), pqEncode("ce", codebooks).as("codes"), col("cn"))
-
-  /** Codebooks as a persistable frame: (subspace, centroid, dim, value) —
-    * m·kCent·subdim rows, KBs. The inverse of [[pqCodebooksFromDf]].
-    */
-  def pqCodebooksDf(spark: org.apache.spark.sql.SparkSession,
-                    codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    import spark.implicits._
-    // declared shape rides IN the data (m, k_cent, subdim): a frame that
-    // lost its trailing subspace/centroid/dim rows is otherwise
-    // indistinguishable from a smaller complete codebook (the round-12
-    // persisted-state contract, same as the k-means/DSIR/IVF frames)
-    val (m, kc, sd) = (codebooks.length, codebooks.head.length,
-      codebooks.head.head.length)
-    codebooks.indices.flatMap { j =>
-      codebooks(j).indices.flatMap { c =>
-        codebooks(j)(c).indices.map { d =>
-          (j, c, d, codebooks(j)(c)(d), m, kc, sd)
-        }
-      }
-    }.toDF("subspace", "centroid", "dim", "value", "m", "k_cent", "subdim")
-  }
-
-  /** Rebuild driver-side codebooks from a persisted [[pqCodebooksDf]] frame.
-    * Bounded collect by construction: the frame is m·kCent·subdim doubles.
-    * Holes — INCLUDING trailing ones — fail loudly against the frame's
-    * declared (m, k_cent, subdim) shape (or the explicit parameters for a
-    * legacy frame without those columns, which otherwise only rejects
-    * interior holes).
-    */
-  def pqCodebooksFromDf(df: DataFrame, expectedM: Int = -1,
-                        expectedKCent: Int = -1,
-                        expectedSubdim: Int = -1): Array[Array[Array[Double]]] =
-    codebooksFromDf(df, col("value"), _.getDouble(3),
-      expectedM, expectedKCent, expectedSubdim)
-
-  /** The one codebook-frame reader behind [[pqCodebooksFromDf]] and
-    * [[pqCodebooksUnitsFromDf]]: `value` selects the value column and `get`
-    * reads it from column 3 of a collected row. */
-  private def codebooksFromDf[V: scala.reflect.ClassTag](df: DataFrame,
-      value: Column, get: Row => V, expectedM: Int, expectedKCent: Int,
-      expectedSubdim: Int): Array[Array[Array[V]]] = {
-    // the shape columns ride the ONE bounded collect (FitFrames contract)
-    val hasShape = df.columns.contains("m") && df.columns.contains("k_cent") &&
-      df.columns.contains("subdim")
-    val base = Seq(col("subspace"), col("centroid"), col("dim"), value)
-    val sel = if (hasShape)
-      base ++ Seq(col("m").cast(LongType), col("k_cent").cast(LongType),
-        col("subdim").cast(LongType)) else base
-    val collected = df.select(sel: _*).collect()
-    require(collected.nonEmpty, "empty PQ codebook frame")
-    val rows = collected.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), get(r)))
-    val m = FitFrames.declared("m", expectedM,
-      if (hasShape) Some(collected.map(_.getLong(4))) else None,
-      rows.map(_._1).max + 1)
-    val kc = FitFrames.declared("k_cent", expectedKCent,
-      if (hasShape) Some(collected.map(_.getLong(5))) else None,
-      rows.map(_._2).max + 1)
-    val sd = FitFrames.declared("subdim", expectedSubdim,
-      if (hasShape) Some(collected.map(_.getLong(6))) else None,
-      rows.map(_._3).max + 1)
-    require(rows.map(_._1).max + 1 == m && rows.map(_._2).max + 1 == kc &&
-        rows.map(_._3).max + 1 == sd && rows.length == m * kc * sd &&
-        rows.map(t => (t._1, t._2, t._3)).distinct.length == rows.length,
-      s"PQ codebook frame holes: ${rows.length} rows, expected ${m}x${kc}x$sd")
-    rows.groupBy(_._1).toArray.sortBy(_._1).map { case (_, bySub) =>
-      bySub.groupBy(_._2).toArray.sortBy(_._1).map { case (_, byCent) =>
-        byCent.sortBy(_._3).map(_._4)
-      }
-    }
-  }
-
-  /** [[pqTopK]] against a pre-built (typically warehouse-persisted) index
-    * frame — the serving path: the scan side touches codes + norm only;
-    * true embeddings are fetched for the shortlist re-rank alone.
-    */
-  def pqTopKWithIndex(queries: DataFrame, index: DataFrame, candidates: DataFrame,
-                      codebooks: Array[Array[Array[Double]]], k: Int,
-                      rerank: Int): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks(0)(0).length
-    val cIdx = index.select(col("c_id"), col("codes"), col("cn"))
-    // query side: ADC tables as one flat array — lut[j*kCent + code]
-    val lutCol = array(codebooks.indices.flatMap { j =>
-      codebooks(j).indices.map { c =>
-        val cent = codebooks(j)(c)
-        val centLit = array(cent.map(lit): _*)
-        org.apache.spark.sql.GraftColumnBridge.column(graft.plans.DotFloat(
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            slice(col("qe"), j * sub + 1, sub).cast(ArrayType(FloatType))),
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            centLit.cast(ArrayType(FloatType)))))
-      }
-    }: _*)
-    val kCent = codebooks(0).length
-    val q = withNorm(queries, "qe", "qn").withColumn("lut", lutCol)
-    val adcTerms = (0 until m).map(j =>
-      element_at(col("lut"), (col("codes").getItem(j) + lit(j.toLong * kCent) + 1L).cast(IntegerType)))
-    val approx = cIdx.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("approx_sim", adcTerms.reduce(_ + _) / (col("qn") * col("cn")))
-      .select(col("q_id"), col("c_id"), col("approx_sim"))
-    val shortlist = graft.plans.TopKPerGroup.topK(approx, Seq("q_id"),
-      Seq(("approx_sim", true), ("c_id", false)), rerank)
-    // exact re-rank of the shortlist only
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    shortlist
-      .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
-      .join(broadcast(withNorm(queries, "qe", "qn")), Seq("q_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
-  }
-
-  /** PQ + ADC ANN top-k with exact re-rank (index built inline).
-    *
-    * Candidates carry only (id, codes, norm); each query builds its
-    * asymmetric-distance lookup tables (dot of the query sub-vector with
-    * every centroid — m·kCent doubles, map-side from the broadcast
-    * codebooks), approximates dot(q,c) as the sum of table lookups at the
-    * candidate's codes, heap-selects `rerank` candidates per query on the
-    * approximate cosine, and re-scores ONLY those against true embeddings
-    * for the final exact top-k ranking.
-    *
-    * Scale: the scan side touches codes+norm (bytes, not vectors); true
-    * embeddings are fetched by an equi-join on the ~queries·rerank
-    * surviving ids. Recall is a parameter (rerank/kCent trade): spec-bounded
-    * rather than oracle-gated, because ADC is lossy by construction. In
-    * production, build the index once ([[pqIndex]] + [[pqCodebooksDf]]
-    * through the warehouse) and serve via [[pqTopKWithIndex]].
-    */
-  def pqTopK(queries: DataFrame, candidates: DataFrame,
-             codebooks: Array[Array[Array[Double]]], k: Int, rerank: Int): DataFrame =
-    pqTopKWithIndex(queries, pqIndex(candidates, codebooks), candidates,
-      codebooks, k, rerank)
-
   /** FIXED-POINT PQ training — the k-means discipline applied to codebook
     * fitting so a DuckDB oracle replays every centroid bit-for-bit:
     * vectors quantize to 1e-6-unit longs, the training sample is the
@@ -427,13 +209,26 @@ object Similarity {
     * an empty centroid keeps its previous value). Codebooks are unit-long
     * counts (values × 1e6).
     *
-    * Float [[pqTrain]] remains the throughput path (float accumulation,
-    * hashed sampling); THIS is the auditable one — same scale shape (one
-    * bounded driver sample, KB-sized codebooks).
+    * Same scale shape as every trainer here: one bounded driver sample,
+    * KB-sized codebooks.
     */
   def pqTrainUnits(candidates: DataFrame, idCol: String, embCol: String,
                    m: Int, kCent: Int, sampleSize: Int = 256,
                    iters: Int = 2): Array[Array[Array[Long]]] = {
+    val sample = unitsSample(candidates, idCol, embCol, m, sampleSize)
+    val sub = sample(0).length / m
+    (0 until m).toArray.map { j =>
+      val slice = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
+      require(slice.length >= kCent, s"need >= $kCent vectors to train subspace $j")
+      lloydUnits(slice, kCent, iters)
+    }
+  }
+
+  /** The fixed-point trainers' bounded driver sample: the `sampleSize`
+    * lowest-id vectors of `candidates`, quantized, whose dimension `m`
+    * subspaces must divide. */
+  private def unitsSample(candidates: DataFrame, idCol: String, embCol: String,
+                          m: Int, sampleSize: Int): Array[Array[Long]] = {
     val sample: Array[Array[Long]] = candidates
       .select(col(idCol), VectorFns.quantize(col(embCol)).as("__u"))
       .orderBy(col(idCol)).limit(sampleSize)
@@ -441,35 +236,7 @@ object Similarity {
     require(sample.nonEmpty, "empty training sample")
     val dim = sample(0).length
     require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val sub = dim / m
-    (0 until m).toArray.map { j =>
-      val slice = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      require(slice.length >= kCent, s"need >= $kCent vectors to train subspace $j")
-      var cents: Array[Array[Long]] = slice.take(kCent).map(_.clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(kCent)(new Array[Long](sub))
-        val counts = new Array[Long](kCent)
-        slice.foreach { v =>
-          var best = 0; var bestD = Long.MaxValue
-          var c = 0
-          while (c < kCent) {
-            var d = 0L; var i = 0
-            while (i < sub) { val x = v(i) - cents(c)(i); d += x * x; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          counts(best) += 1
-          var i = 0; while (i < sub) { sums(best)(i) += v(i); i += 1 }
-        }
-        cents = cents.indices.map { c =>
-          if (counts(c) == 0) cents(c)
-          // Long division truncates toward zero — the oracle renders it as
-          // CASE WHEN s >= 0 THEN s // n ELSE -((-s) // n) (DuckDB // floors)
-          else sums(c).map(_ / counts(c))
-        }.toArray
-      }
-      cents
-    }
+    sample
   }
 
   /** PQ code assignment against unit-long codebooks: per subspace, argmin
@@ -498,36 +265,51 @@ object Similarity {
     * broadcast codebooks) — ordered (dot DESC, c_id ASC). Integer scores
     * mean the shortlist cut is bit-deterministic, so the WHOLE pipeline
     * (train → encode → ADC → shortlist → exact re-rank) replays in a
-    * DuckDB oracle; the float path's shortlist ([[pqTopK]]) is
-    * approximate-cosine and only spec-bounded. Same scale shape: the scan
-    * side carries codes only; true embeddings join back for the ~q·rerank
-    * shortlist rows alone.
+    * DuckDB oracle. Scale: the scan side carries codes only; true
+    * embeddings join back for the ~q·rerank shortlist rows alone.
     */
   def pqTopKUnits(queries: DataFrame, candidates: DataFrame,
                   codebooks: Array[Array[Array[Long]]], k: Int,
                   rerank: Int): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks(0)(0).length
-    val kCent = codebooks(0).length
     val cIdx = candidates
       .select(col("c_id"), pqEncodeUnits(VectorFns.quantize(col("ce")), codebooks).as("codes"))
-    // query side: per-subspace integer ADC tables concatenated into one
-    // flat lut — lut[j*kCent + code]
-    val lutCol = concat((0 until m).map { j =>
-      org.apache.spark.sql.GraftColumnBridge.column(graft.plans.CellDotsQ(
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),
-        codebooks(j).toIndexedSeq.map(_.toIndexedSeq)))
-    }: _*)
-    val q = queries.select(col("q_id"), col("qe")).withColumn("lut", lutCol)
-    val adcTerms = (0 until m).map(j =>
-      element_at(col("lut"), (col("codes").getItem(j) + lit(j.toLong * kCent) + 1L).cast(IntegerType)))
-    val approx = cIdx.crossJoin(broadcast(q.select(col("q_id"), col("lut"))))
+    val approx = cIdx.crossJoin(broadcast(queries.select(col("q_id"), adcLut(codebooks).as("lut"))))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("approx_dot", adcTerms.reduce(_ + _))
+      .withColumn("approx_dot", adcDot(codebooks))
       .select(col("q_id"), col("c_id"), col("approx_dot"))
     val shortlist = graft.plans.TopKPerGroup.topK(approx, Seq("q_id"),
       Seq(("approx_dot", true), ("c_id", false)), rerank)
+    rerankShortlist(shortlist, queries, candidates, k)
+  }
+
+  /** The query side's integer ADC tables against `books`: per subspace the
+    * CellDotsQ dots of the quantized `qe` slice with every centroid,
+    * concatenated into one flat lut — lut[j·kCent + code]. */
+  private def adcLut(books: Array[Array[Array[Long]]]): Column = {
+    val sub = books(0)(0).length
+    concat(books.indices.map { j =>
+      kernelCol(graft.plans.CellDotsQ(
+        kernelExpr(slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),
+        books(j).toIndexedSeq.map(_.toIndexedSeq)))
+    }: _*)
+  }
+
+  /** The approximate inner product Σ_j lut[j·kCent + codes[j]] of a query's
+    * `lut` ([[adcLut]]) with a candidate's PQ `codes`. */
+  private def adcDot(books: Array[Array[Array[Long]]]): Column = {
+    val kCent = books(0).length
+    books.indices.map(j => element_at(col("lut"),
+        (col("codes").getItem(j) + lit(j.toLong * kCent) + 1L).cast(IntegerType)))
+      .reduce(_ + _)
+  }
+
+  /** Exact cosine re-rank of a (q_id, c_id) shortlist — the shared tail of
+    * [[pqTopKUnits]] and [[ivfpqTopKWithIndex]]: true embeddings join in
+    * for the shortlist rows alone, ranked per query by (similarity DESC,
+    * c_id). Returns (q_id, c_id, similarity, rank), rank 1..k.
+    */
+  private def rerankShortlist(shortlist: DataFrame, queries: DataFrame,
+                              candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
     shortlist
       .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
@@ -546,12 +328,11 @@ object Similarity {
     org.apache.spark.sql.GraftColumnBridge.expression(c)
 
   /** One integer Lloyd run over a driver-side sample — the shared trainer
-    * of the fixed-point IVF-PQ path: seeds are the first `k` vectors,
-    * assignment is exact integer squared distance with ties to the lowest
-    * centroid, the update is the truncated-toward-zero integer mean, and an
-    * empty centroid keeps its previous value (the pqTrainUnits discipline,
-    * factored so the coarse quantizer and the residual codebooks train
-    * identically).
+    * of the fixed-point PQ and IVF-PQ paths: seeds are the first `k`
+    * vectors, assignment is exact integer squared distance with ties to the
+    * lowest centroid, the update is the truncated-toward-zero integer mean,
+    * and an empty centroid keeps its previous value — so the PQ codebooks,
+    * the coarse quantizer and the residual codebooks train identically.
     */
   private def lloydUnits(vs: Array[Array[Long]], k: Int,
                          iters: Int): Array[Array[Long]] = {
@@ -602,13 +383,8 @@ object Similarity {
   def ivfpqTrainUnits(candidates: DataFrame, idCol: String, embCol: String,
                       nLists: Int, m: Int, kCent: Int, sampleSize: Int = 256,
                       iters: Int = 2): (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val sample: Array[Array[Long]] = candidates
-      .select(col(idCol), VectorFns.quantize(col(embCol)).as("__u"))
-      .orderBy(col(idCol)).limit(sampleSize)
-      .collect().map(_.getSeq[Long](1).toArray)
-    require(sample.nonEmpty, "empty training sample")
+    val sample = unitsSample(candidates, idCol, embCol, m, sampleSize)
     val dim = sample(0).length
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
     val coarse = lloydUnits(sample, nLists, iters)
     val residuals = sample.map { v =>
@@ -628,7 +404,7 @@ object Similarity {
     * quantizer (exact integer argmin, ties to the lowest cell), codes from
     * the RESIDUAL against that cell's centroid (SubVecQ kernel, then the
     * shared pqEncodeUnits argmin per subspace). Entirely map-side; persist
-    * it through the warehouse like the flat-PQ index (bytes per vector).
+    * it through the warehouse (bytes per vector).
     */
   def ivfpqIndex(candidates: DataFrame, coarse: Array[Array[Long]],
                  books: Array[Array[Array[Long]]]): DataFrame = {
@@ -645,9 +421,10 @@ object Similarity {
       .select(col("c_id"), col("cell"), pqEncodeUnits(col("__r"), books).as("codes"))
   }
 
-  /** Unit-long codebooks as a persistable frame — the fixed-point twin of
-    * [[pqCodebooksDf]] (same layout and declared-shape contract, BIGINT
-    * values): (subspace, centroid, dim, value, m, k_cent, subdim).
+  /** Unit-long codebooks as a persistable frame (subspace, centroid, dim,
+    * value, m, k_cent, subdim): the declared shape rides IN the data, so a
+    * frame that lost its trailing subspace/centroid/dim rows cannot pass as
+    * a smaller complete codebook. Inverse: [[pqCodebooksUnitsFromDf]].
     */
   def pqCodebooksUnitsDf(spark: org.apache.spark.sql.SparkSession,
                          books: Array[Array[Array[Long]]]): DataFrame = {
@@ -660,14 +437,45 @@ object Similarity {
     }.toDF("subspace", "centroid", "dim", "value", "m", "k_cent", "subdim")
   }
 
-  /** Inverse of [[pqCodebooksUnitsDf]]; the [[pqCodebooksFromDf]] hole
-    * contract (declared shape beats max()+1 tail blind spot).
+  /** Rebuild driver-side codebooks from a [[pqCodebooksUnitsDf]] frame — a
+    * bounded collect (m·kCent·subdim longs). Holes, trailing ones included,
+    * fail loudly against the declared shape (or the explicit parameters for
+    * a legacy frame without those columns, which otherwise only rejects
+    * interior holes).
     */
   def pqCodebooksUnitsFromDf(df: DataFrame, expectedM: Int = -1,
                              expectedKCent: Int = -1,
-                             expectedSubdim: Int = -1): Array[Array[Array[Long]]] =
-    codebooksFromDf(df, col("value").cast(LongType), _.getLong(3),
-      expectedM, expectedKCent, expectedSubdim)
+                             expectedSubdim: Int = -1): Array[Array[Array[Long]]] = {
+    // the shape columns ride the ONE bounded collect (FitFrames contract)
+    val hasShape = df.columns.contains("m") && df.columns.contains("k_cent") &&
+      df.columns.contains("subdim")
+    val base = Seq(col("subspace"), col("centroid"), col("dim"),
+      col("value").cast(LongType))
+    val sel = if (hasShape)
+      base ++ Seq(col("m").cast(LongType), col("k_cent").cast(LongType),
+        col("subdim").cast(LongType)) else base
+    val collected = df.select(sel: _*).collect()
+    require(collected.nonEmpty, "empty PQ codebook frame")
+    val rows = collected.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+    val m = FitFrames.declared("m", expectedM,
+      if (hasShape) Some(collected.map(_.getLong(4))) else None,
+      rows.map(_._1).max + 1)
+    val kc = FitFrames.declared("k_cent", expectedKCent,
+      if (hasShape) Some(collected.map(_.getLong(5))) else None,
+      rows.map(_._2).max + 1)
+    val sd = FitFrames.declared("subdim", expectedSubdim,
+      if (hasShape) Some(collected.map(_.getLong(6))) else None,
+      rows.map(_._3).max + 1)
+    require(rows.map(_._1).max + 1 == m && rows.map(_._2).max + 1 == kc &&
+        rows.map(_._3).max + 1 == sd && rows.length == m * kc * sd &&
+        rows.map(t => (t._1, t._2, t._3)).distinct.length == rows.length,
+      s"PQ codebook frame holes: ${rows.length} rows, expected ${m}x${kc}x$sd")
+    rows.groupBy(_._1).toArray.sortBy(_._1).map { case (_, bySub) =>
+      bySub.groupBy(_._2).toArray.sortBy(_._1).map { case (_, byCent) =>
+        byCent.sortBy(_._3).map(_._4)
+      }
+    }
+  }
 
   /** Oracle-replayable IVF-PQ ANN top-k — the production billion-vector
     * index shape: the coarse quantizer bounds COMPUTE (each query scores
@@ -704,15 +512,7 @@ object Similarity {
                          coarse: Array[Array[Long]],
                          books: Array[Array[Array[Long]]],
                          nProbe: Int, k: Int, rerank: Int): DataFrame = {
-    val m = books.length
-    val kCent = books(0).length
-    val sub = books(0)(0).length
     val cIdx = index.select(col("c_id"), col("cell"), col("codes"))
-    val lutCol = concat((0 until m).map { j =>
-      kernelCol(graft.plans.CellDotsQ(
-        kernelExpr(slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),
-        books(j).toIndexedSeq.map(_.toIndexedSeq)))
-    }: _*)
     // probe list: the nProbe nearest cells by exact integer distance, ties
     // to the lowest cell — the BottomKIndices kernel (round 22; identical
     // to the struct sort's lexicographic (d, i) order, which this replaced)
@@ -722,28 +522,18 @@ object Similarity {
         kernelExpr(col("__qu")), coarse.toIndexedSeq.map(_.toIndexedSeq))))
       .withColumn("__qcd", kernelCol(graft.plans.CellDotsQ(
         kernelExpr(col("__qu")), coarse.toIndexedSeq.map(_.toIndexedSeq))))
-      .withColumn("lut", lutCol)
+      .withColumn("lut", adcLut(books))
       .withColumn("cell", explode(VectorFns.bottomKIndices(col("__qd"), nProbe)))
       .withColumn("coarse_dot",
         element_at(col("__qcd"), (col("cell") + 1).cast(IntegerType)))
       .select(col("q_id"), col("cell"), col("coarse_dot"), col("lut"))
-    val adcTerms = (0 until m).map(j =>
-      element_at(col("lut"),
-        (col("codes").getItem(j) + lit(j.toLong * kCent) + 1L).cast(IntegerType)))
     val approx = cIdx.join(broadcast(q0), Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("approx_dot", adcTerms.reduce(_ + _) + col("coarse_dot"))
+      .withColumn("approx_dot", adcDot(books) + col("coarse_dot"))
       .select(col("q_id"), col("c_id"), col("approx_dot"))
     val shortlist = graft.plans.TopKPerGroup.topK(approx, Seq("q_id"),
       Seq(("approx_dot", true), ("c_id", false)), rerank)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    shortlist
-      .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
-      .join(broadcast(withNorm(queries, "qe", "qn")), Seq("q_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
+    rerankShortlist(shortlist, queries, candidates, k)
   }
 
   /** Contrastive triplet mining — training data FOR embedding models
@@ -1084,26 +874,13 @@ object Similarity {
     * equality contract restricted to touched partitions, which is what
     * makes PARTIAL partition swaps crash-safe: a replay re-merges only
     * the cells whose partitions still carry an older batch stamp.
-    */
-  def mergeKnnGraphTouchedCells(oldTouchedCells: DataFrame, histDf: DataFrame,
-      batchDf: DataFrame, idCol: String, embCol: String,
-      cents: Array[Array[Long]], degree: Int,
-      requireCapped: Boolean = false): DataFrame = {
-    def assigned(d: DataFrame) = KMeans.assignWith(d, idCol, embCol, cents)
-      .select(col(idCol), col("cluster"), col("__u"))
-    mergeKnnGraphTouchedCellsAssigned(oldTouchedCells, assigned(histDf),
-      assigned(batchDf), idCol, degree, requireCapped)
-  }
-
-  /** [[mergeKnnGraphTouchedCells]] over PRE-ASSIGNED (idCol, cluster, __u)
-    * frames — the gate's steady-state shape: the vector table stores each
-    * vector's quantized form and frozen-fit cell at ingest, so the merge
-    * never re-runs the k-means distance kernel over history (the r19 soak
-    * measured that O(corpus·k·dim) map pass as the corpus-batch gate's
-    * dominant residue). `histAssigned` may be a superset of the touched
-    * cells — the candidate stage re-filters through the batch-cells
-    * broadcast — but feeding it partition-pruned/cell-filtered keeps the
-    * scan O(touched).
+    *
+    * The inputs are PRE-ASSIGNED (idCol, cluster, __u) frames, as the gate
+    * stores each vector at ingest ([[KMeans.assignWith]]), so the merge never
+    * re-runs the k-means distance kernel over history. `histAssigned` may be
+    * a superset of the touched cells — the candidate stage re-filters
+    * through the batch-cells broadcast — but feeding it cell-filtered keeps
+    * the scan O(touched).
     */
   def mergeKnnGraphTouchedCellsAssigned(oldTouchedCells: DataFrame,
       histAssigned: DataFrame, batchAssigned: DataFrame, idCol: String,
@@ -1413,36 +1190,9 @@ object Similarity {
           VectorFns.dotQDouble(col("__qu"), col("tv")) / (col("__qn") * col("tn")), 9))
         .select(col("q_id"), col("c_id"), col("psim")),
       Seq("q_id"), Seq(("psim", true), ("c_id", false)), shortlist)
-    val cFull = candidates.select(col("c_id"),
-        VectorFns.quantize(col("ce")).as("__cu"))
-      .withColumn("__cn", sqrt(VectorFns.dotQDouble(col("__cu"), col("__cu"))))
-    val qFull = queries.select(col("q_id"),
-        VectorFns.quantize(col("qe")).as("__fu"))
-      .withColumn("__fn", sqrt(VectorFns.dotQDouble(col("__fu"), col("__fu"))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("similarity"), 9).desc, col("c_id"))
-    shortDf.select(col("q_id"), col("c_id"))
-      .join(cFull, Seq("c_id"))
-      .join(broadcast(qFull), Seq("q_id"))
-      .withColumn("similarity",
-        VectorFns.dotQDouble(col("__fu"), col("__cu")) / (col("__fn") * col("__cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
-  }
-
-  /** LSH-bucketed ANN top-k: candidates are scored only inside the query's
-    * bucket. Recall < 1 by construction; nBits trades recall for speed.
-    */
-  def lshTopK(queries: DataFrame, candidates: DataFrame, nBits: Int, k: Int): DataFrame = {
-    val q = withNorm(queries, "qe", "qn").withColumn("bucket", lshBucket("qe", nBits))
-    val c = withNorm(candidates, "ce", "cn").withColumn("bucket", lshBucket("ce", nBits))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
+    // full-vector exact re-rank of the shortlist: cosineTopK's scoring
+    rankQuantized(shortDf.select(col("q_id"), col("c_id"))
+      .join(quantizedSide(candidates, "c_id", "ce", "__cu", "__cn"), Seq("c_id"))
+      .join(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn")), Seq("q_id")), k)
   }
 }

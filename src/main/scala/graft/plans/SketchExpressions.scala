@@ -264,18 +264,6 @@ object SketchKernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Winnowing fingerprint selection (Schleimer et al. 2003) in ONE pass:
-    * k-gram shingle hashes ([[shingleHash]] — identical arithmetic to
-    * polyHash over the concat_ws-joined shingle string, so values
-    * cross-check against the DuckDB oracle) then the distinct window
-    * minima over `w` consecutive hashes in first-occurrence order.
-    * Replaces a three-stage interpreted HOF lattice (shingleExpr →
-    * polyHashEach, whose per-CHARACTER split allocates an array element
-    * per character → winnowExpr's transform of array_min slices) with one
-    * codegen kernel call. Empty below k tokens; a document shorter than
-    * one full window contributes its global minimum (the paper's
-    * short-document rule, matching TextFns.winnowExpr's CASE).
-    */
   /** POSITIONAL robust-winnowing anchors: (0-based start, 64-bit hash) of
     * the rightmost window-minimum k-gram in every window of `w` consecutive
     * k-gram positions, consecutive re-selections collapsed — the sparse
@@ -365,6 +353,18 @@ object SketchKernels {
     new GenericArrayData(out)
   }
 
+  /** Winnowing fingerprint selection (Schleimer et al. 2003) in ONE pass:
+    * k-gram shingle hashes ([[shingleHash]] — identical arithmetic to
+    * polyHash over the concat_ws-joined shingle string, so values
+    * cross-check against the DuckDB oracle) then the distinct window
+    * minima over `w` consecutive hashes in first-occurrence order.
+    * Replaces a three-stage interpreted HOF lattice (shingleExpr →
+    * polyHashEach, whose per-CHARACTER split allocates an array element
+    * per character → winnowExpr's transform of array_min slices) with one
+    * codegen kernel call. Empty below k tokens; a document shorter than
+    * one full window contributes its global minimum (the paper's
+    * short-document rule, matching TextFns.winnowExpr's CASE).
+    */
   def winnowFingerprints(tokens: ArrayData, k: Int, w: Int): ArrayData = {
     val n = tokens.numElements()
     if (n < k) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
@@ -517,7 +517,6 @@ private[plans] trait TokenArrayInput { self: UnaryExpression =>
   }
 }
 
-/** array<string> tokens → array<string> distinct k-gram shingles. */
 /** array<string> tokens → array<long> strided chunk hashes (internal join
   * keys; see SketchKernels.chunkHashes).
   */
@@ -624,9 +623,6 @@ case class PolyHashEach(child: Expression)
     copy(child = newChild)
 }
 
-/** array<string> tokens → array<long> winnowing fingerprints (oracle-
-  * portable polyHash values; see SketchKernels.winnowFingerprints).
-  */
 /** array<string> tokens → array<struct<pos:long, h:long>> positional
   * robust-winnowing anchors (see SketchKernels.winnowAnchors).
   */
@@ -678,6 +674,9 @@ case class AnchorRows(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
+/** array<string> tokens → array<long> winnowing fingerprints (oracle-
+  * portable polyHash values; see SketchKernels.winnowFingerprints).
+  */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression with TokenArrayInput {
   require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
@@ -715,6 +714,7 @@ case class ShingleHashes(child: Expression, k: Int)
     copy(child = newChild)
 }
 
+/** array<string> tokens → array<string> distinct k-gram shingles. */
 case class ShinglesDistinct(child: Expression, k: Int)
     extends UnaryExpression with TokenArrayInput {
   require(k >= 1, s"k must be >= 1, got $k")

@@ -8,9 +8,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Similarity search over the `embeddings` fixture (array<float>, dim 64):
-  * brute-force cosine top-k as the exact baseline, and a deterministic
-  * sign-random-projection LSH bucketing as the scale path.
+/** Rows over the `embeddings` fixture (array<float>, dim 64). The search
+  * rows call the one implementation of each operator in
+  * [[graft.operators.Similarity]]: exact cosine top-k (the baseline), LSH,
+  * float IVF, fixed-point PQ and IVF-PQ, the k-NN graph family and
+  * matryoshka prefix serving, and the recall rows that measure them
+  * against the exact top-k. Beside them: random projection, norm and
+  * centroid stats, k-means and cluster caps, embedding and semantic dedup,
+  * contrastive triplets, diverse sampling, drift and the streaming
+  * kNN/semdedup batches.
   *
   * Numeric parity strategy: dot products are computed in exact DECIMAL
   * arithmetic (float → double → DECIMAL(12,6) per element, exact products and
@@ -85,20 +91,6 @@ object VectorQueries {
           FROM p)
         SELECT q_id, c_id, rnk FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"""
 
-  /** Exact top-5 `(q_id, c_id)` per query by rounded quantized cosine, of
-    * queries `qq(q_id, qe2, qn)` over candidates `cc(c_id, ce2, cn)`. */
-  private def exactTop5(qq: DataFrame, cc: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("cos"), 9).desc, col("c_id"))
-    cc.crossJoin(broadcast(qq))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        VectorFns.dotQDouble(col("qe2"), col("ce2")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("c_id"))
-  }
-
   /** recall@5 per query: the hits of `approx(a_q, a_c)` among
     * `exact(q_id, c_id)` and their ppm. */
   private def recallPpm(exact: DataFrame, approx: DataFrame): DataFrame =
@@ -113,13 +105,9 @@ object VectorQueries {
   /** recall@5 of `approx(a_q, a_c)` against the exact quantized-cosine
     * top-5 of query side `qq(q_id, qe)` over candidates `cc(c_id, ce)`. */
   private def recallAt5(qq: DataFrame, cc: DataFrame,
-      approx: DataFrame): DataFrame = {
-    val qq2 = qq.select(col("q_id"), VectorFns.quantize(col("qe")).as("qe2"))
-      .withColumn("qn", sqrt(VectorFns.dotQDouble(col("qe2"), col("qe2"))))
-    val cc2 = cc.select(col("c_id"), VectorFns.quantize(col("ce")).as("ce2"))
-      .withColumn("cn", sqrt(VectorFns.dotQDouble(col("ce2"), col("ce2"))))
-    recallPpm(exactTop5(qq2, cc2), approx)
-  }
+      approx: DataFrame): DataFrame =
+    recallPpm(graft.operators.Similarity.cosineTopK(qq, cc, 5)
+      .select(col("q_id"), col("c_id")), approx)
 
   /** Embedding frame `e` with its quantized vector `qv`, its `bits`-bit
     * LSH `bucket` and the quantized `norm`. */
@@ -360,22 +348,10 @@ object VectorQueries {
     // exact, so cos is bit-identical whenever it's computed.
     Q("q_sim_cosine_topk",
       (s, dir) => {
-        // Quantize ONCE per row (the only BigDecimal work); every pair dot is
-        // then primitive long arithmetic inside whole-stage codegen.
-        val e = t(s, dir, "embeddings")
-          .withColumn("qv", VectorFns.quantize(col("embedding")))
-          .withColumn("norm", sqrt(VectorFns.dotQDouble(col("qv"), col("qv"))))
-        val q = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qv").as("qe"), col("norm").as("qn"))
-        val c = e.select(col("vec_id").as("c_id"), col("qv").as("ce"), col("norm").as("cn"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(round(col("cos"), 9).desc, col("c_id"))
-        c.crossJoin(broadcast(q))
-          .filter(col("q_id") =!= col("c_id"))
-          .withColumn("cos", VectorFns.dotQDouble(col("qe"), col("ce")) / (col("qn") * col("cn")))
-          .withColumn("rank", row_number().over(w).cast(LongType))
-          .filter(col("rank") <= 5)
-          .select(col("q_id"), col("c_id"), round(col("cos"), 6).as("similarity"), col("rank"))
+        val (q, c) = querySides(t(s, dir, "embeddings"))
+        graft.operators.Similarity.cosineTopK(q, c, 5)
+          .select(col("q_id"), col("c_id"), round(col("similarity"), 6).as("similarity"),
+            col("rank"))
           .orderBy(col("q_id"), col("rank"))
       },
       Some(s"""
@@ -399,20 +375,10 @@ object VectorQueries {
     // then rerank exactly — the scale path (bucket equi-join, no cross join)
     Q("q_ann_lsh_topk",
       (s, dir) => {
-        val e = withBucket(t(s, dir, "embeddings"), 4)
-        val q = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qv").as("qe"),
-                  col("norm").as("qn"), col("bucket"))
-        val c = e.select(col("vec_id").as("c_id"), col("qv").as("ce"),
-                  col("norm").as("cn"), col("bucket"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(round(col("cos"), 9).desc, col("c_id"))
-        c.join(broadcast(q), Seq("bucket"))
-          .filter(col("q_id") =!= col("c_id"))
-          .withColumn("cos", VectorFns.dotQDouble(col("qe"), col("ce")) / (col("qn") * col("cn")))
-          .withColumn("rank", row_number().over(w).cast(LongType))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("c_id"), round(col("cos"), 6).as("similarity"), col("rank"))
+        val (q, c) = querySides(t(s, dir, "embeddings"))
+        graft.operators.Similarity.lshTopK(q, c, nBits = 4, k = 3)
+          .select(col("q_id"), col("c_id"), round(col("similarity"), 6).as("similarity"),
+            col("rank"))
           .orderBy(col("q_id"), col("rank"))
       },
       Some(s"""
@@ -795,9 +761,8 @@ object VectorQueries {
     // distances, truncated integer means), codes are integer argmins, and
     // the rerank shortlist is cut on the exact integer ADC DOT — so DuckDB
     // replays train → encode → ADC → shortlist → exact cosine re-rank
-    // bit-for-bit. The float pqTrain/pqTopK path stays as the
-    // recall/throughput variant, spec-bounded (OperatorsSpec); this row is
-    // the auditable one. rerank=50 binds at every fixture SF (corpus ≥ 100).
+    // bit-for-bit. rerank=50 binds at every fixture SF (corpus ≥ 100);
+    // q_ann_pq_exact runs the same path at full rerank.
     Q("q_ann_pq_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -888,10 +853,10 @@ object VectorQueries {
     // trick): with rerank = corpus size the ADC shortlist keeps EVERY
     // candidate regardless of its lossy approximate score, so the exact
     // re-rank IS brute-force cosine top-k — the same windowed-decimal
-    // oracle as q_sim_cosine_topk/q_ann_ivf_topk. This pins the whole PQ
-    // plumbing (encode → ADC lookup tables → shortlist heap → re-rank
-    // join) against DuckDB; the lossy rerank=200 row above stays
-    // rows-only and its recall floor stays spec-bounded (OperatorsSpec).
+    // oracle as q_sim_cosine_topk/q_ann_ivf_topk. This pins the fixed-point
+    // PQ plumbing (encode → ADC lookup tables → shortlist heap → re-rank
+    // join) against brute force; q_ann_pq_topk above gates the lossy
+    // rerank=50 cut against its own replay.
     Q("q_ann_pq_exact",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -899,9 +864,10 @@ object VectorQueries {
         // bounded driver-side scalar (parquet metadata count), like the
         // IVF/PQ training samples — never the vectors themselves
         val n = c.count().toInt
-        val books = graft.operators.Similarity.pqTrain(
-          c.select(col("ce").as("embedding")), "embedding", m = 8, kCent = 16)
-        graft.operators.Similarity.pqTopK(q, c, books, k = 5, rerank = n)
+        val books = graft.operators.Similarity.pqTrainUnits(
+          c.select(col("c_id"), col("ce").as("embedding")), "c_id", "embedding",
+          m = 8, kCent = 16, sampleSize = 256, iters = 2)
+        graft.operators.Similarity.pqTopKUnits(q, c, books, k = 5, rerank = n)
           .transform(rankedTop)
       },
       Some(bruteTop5Sql),
@@ -961,15 +927,7 @@ object VectorQueries {
         val approx = graft.operators.Similarity.ivfpqTopKUnits(q, c, coarse,
             books, nProbe = 2, k = 5, rerank = 40)
           .select(col("q_id").as("a_q"), col("c_id").as("a_c"))
-        // exact side: quantized cosine + round(9) window, the q_ann_recall
-        // idiom (both engines rank the same rounded value)
-        val eq = e.withColumn("qv", VectorFns.quantize(col("embedding")))
-          .withColumn("norm", sqrt(VectorFns.dotQDouble(col("qv"), col("qv"))))
-        val qq = eq.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("qv").as("qe2"), col("norm").as("qn"))
-        val cc = eq.select(col("vec_id").as("c_id"), col("qv").as("ce2"),
-          col("norm").as("cn"))
-        recallPpm(exactTop5(qq, cc), approx)
+        recallAt5(q, c, approx)
       },
       Some(s"""
         WITH $ivfpqCtes,
@@ -1890,20 +1848,6 @@ object VectorQueries {
         FROM h, tt ORDER BY cluster"""))
   )
 
-  /** DuckDB replay of the fixed-point two-pass Lloyd iteration (k=4,
-    * dim 64) over `src` (any CTE/table exposing vec_id + embedding):
-    * quantize to 1e-6-unit BIGINTs, seed with the 4 lowest ids, assign
-    * (exact integer distances, ties to the lowest cluster), update
-    * (truncated integer means), assign again. `a2` is the final
-    * (vec_id, j, dist) assignment every k-means oracle selects from.
-    */
-  /** Shared oracle CTE chain for the graph-ANN family: replays the
-    * fixed-point Lloyd cells (kmeansCtes), the cell-bounded degree-capped
-    * neighbor graph, and `hops` unrolled beam-search rounds (entry set =
-    * `entryK` lowest ids; per round: beam ∪ beam's graph neighbors,
-    * rescored, top-`beam` per query by (sim DESC, c_id)). Exposes `gn`
-    * (vectors + norms) and `b$$hops` (the final beam) to the outer query.
-    */
   private def graphCos(a: String, b: String): String =
     s"round(${VectorFns.dotSql(s"$a.embedding", s"$b.embedding")} / ($a.norm * $b.norm), 6)"
 
@@ -1928,6 +1872,13 @@ object VectorQueries {
           if (entryMod > 0) s"SELECT vec_id AS c_id FROM gn WHERE vec_id % $entryMod = 0"
           else s"SELECT vec_id AS c_id FROM gn ORDER BY vec_id LIMIT $entryK"})"""
 
+  /** Shared oracle CTE chain for the graph-ANN family: replays the
+    * fixed-point Lloyd cells (kmeansCtes), the cell-bounded degree-capped
+    * neighbor graph, and `hops` unrolled beam-search rounds (entry set =
+    * `entryK` lowest ids; per round: beam ∪ beam's graph neighbors,
+    * rescored, top-`beam` per query by (sim DESC, c_id)). Exposes `gn`
+    * (vectors + norms) and `b$$hops` (the final beam) to the outer query.
+    */
   private def graphCtes(degree: Int, entryK: Int, beam: Int, hops: Int,
                         entryMod: Long = 0L): String = {
     val topBeam = (src: String, out: String) => s"""
@@ -2044,11 +1995,6 @@ object VectorQueries {
                   FROM gn qe, ent WHERE qe.vec_id < 5),${adc("cand0", "s0")},${topBeam("s0", "b0")},$hopCtes"""
   }
 
-  /** Shared plan parts of the matryoshka-serve pair: queries, candidates,
-    * the persisted prefix index (quantized 16-dim prefixes + k-means cell,
-    * PARTITIONED BY CELL so the probe partition-prunes), and the persisted
-    * prefix-k-means fit (the train/persist/serve split).
-    */
   /** The fixture embeddings with their TAIL dims (17..64) scaled by 2⁻⁴ —
     * a PREFIX-INFORMATIVE variant shaped like an MRL-trained embedder's
     * output (leading dims carry ~99% of the energy: 16/(16 + 48/256)),
@@ -2071,6 +2017,11 @@ object VectorQueries {
          list_transform(embedding[17:64], x -> CAST(x * 0.0625 AS FLOAT))) AS embedding
        FROM embeddings)"""
 
+  /** Shared plan parts of the matryoshka-serve pair: queries, candidates,
+    * the persisted prefix index (quantized 16-dim prefixes + k-means cell,
+    * PARTITIONED BY CELL so the probe partition-prunes), and the persisted
+    * prefix-k-means fit (the train/persist/serve split).
+    */
   private def matryoshkaServeParts(s: org.apache.spark.sql.SparkSession,
       dir: String, mrl: Boolean = false): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
@@ -2132,6 +2083,13 @@ object VectorQueries {
                   ORDER BY round(cos, 9) DESC, c_id) AS BIGINT) AS rnk
                 FROM yfn)"""
 
+  /** DuckDB replay of the fixed-point two-pass Lloyd iteration (k=4,
+    * dim 64) over `src` (any CTE/table exposing vec_id + embedding):
+    * quantize to 1e-6-unit BIGINTs, seed with the 4 lowest ids, assign
+    * (exact integer distances, ties to the lowest cluster), update
+    * (truncated integer means), assign again. `a2` is the final
+    * (vec_id, j, dist) assignment every k-means oracle selects from.
+    */
   private def kmeansCtes(src: String = "embeddings", nDim: Int = 64): String = s"""
         q AS (SELECT vec_id,
                      list_transform(embedding,

@@ -86,29 +86,36 @@ class MaterializeSpec extends AnyFunSuite {
     assert(persistedSince(before) == 0, "graphTopK's checkpoints outlived the scope")
   }
 
+  /** Every `.scala` file under `src/main/scala` as (path relative to it,
+    * its lines). */
+  private def mainSources: Seq[(String, List[String])] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try (rel, src.getLines().toList) finally src.close()
+    }
+  }
+
   /** `file:line: code` of every code line (comments skipped) in
     * `src/main/scala` that `banned` matches and `exempt(relPath, line)`
     * does not excuse.
     */
   private def mainSourceHits(banned: scala.util.matching.Regex,
-      exempt: (String, String) => Boolean): Seq[String] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
-      val rel = root.toPath.relativize(f.toPath).toString
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().zipWithIndex.toList.flatMap { case (line, i) =>
+      exempt: (String, String) => Boolean): Seq[String] =
+    mainSources.flatMap { case (rel, lines) =>
+      lines.zipWithIndex.flatMap { case (line, i) =>
         val code = line.trim
         val stripped = if (code.startsWith("//") || code.startsWith("*") ||
           code.startsWith("/*")) "" else line.replaceAll("//.*$", "")
         if (banned.findFirstIn(stripped).isDefined && !exempt(rel, stripped))
           Some(s"$rel:${i + 1}: $code")
         else None
-      } finally src.close()
+      }
     }
-  }
 
   test("lint: no materialization outside Materialize.scala") {
     // Every localCheckpoint / persist / unpersist / checkpoint in main code
@@ -129,5 +136,17 @@ class MaterializeSpec extends AnyFunSuite {
     // conf key that no workload sets.
     val hits = mainSourceHits(""""spark\.graft\.""".r, (_, _) => false)
     assert(hits.isEmpty, hits.mkString("spark.graft.* conf key in main code:\n", "\n", ""))
+  }
+
+  test("lint: no scaladoc block stacked directly on another in main code") {
+    // Scaladoc attaches only the block nearest a def: a block right above
+    // another one documents nothing, and its def goes undocumented.
+    val hits = mainSources.flatMap { case (rel, lines) =>
+      lines.zip(lines.drop(1)).zipWithIndex.collect {
+        case ((a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"$rel:${i + 1}: ${a.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("stranded scaladoc block ends at:\n", "\n", ""))
   }
 }

@@ -624,59 +624,14 @@ class OperatorsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall > 0.3, s"recall=$recall")
-  }
-
-  test("IVF coarse quantizer persists through a frame; served top-k equals inline") {
-    val e = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val q = e.filter($"vec_id" < 5).select($"vec_id".as("q_id"), $"embedding".as("qe"))
-    val c = e.select($"vec_id".as("c_id"), $"embedding".as("ce"))
+    // the serving path over an already-trained matrix returns exactly the
+    // inline result
     val cents = Similarity.ivfIndex(c.select($"ce".as("embedding")), "embedding", 8)
-    // persist → reload: bit-identical matrix
-    val back = Similarity.ivfCentroidsFromDf(Similarity.ivfCentroidsToDf(spark, cents))
-    assert(back.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
-    // the serving path (persisted fit) returns exactly the inline result
     val inline = Similarity.ivfTopK(q, c, 8, 3, 5)
       .collect().map(_.toSeq).toSeq
-    val served = Similarity.ivfTopKWith(q, c, back, 3, 5)
+    val served = Similarity.ivfTopKWith(q, c, cents, 3, 5)
       .collect().map(_.toSeq).toSeq
     assert(served == inline)
-    // trailing-list loss is invisible to max()+1 derivation; the declared
-    // (n_lists, dim) columns catch it
-    val tailLost = Similarity.ivfCentroidsToDf(spark, cents)
-      .filter($"list" =!= (cents.length - 1).toLong)
-    intercept[IllegalArgumentException](Similarity.ivfCentroidsFromDf(tailLost))
-    // explicit shape parameters catch it on a legacy frame without them
-    intercept[IllegalArgumentException](Similarity.ivfCentroidsFromDf(
-      tailLost.drop("n_lists", "dim"),
-      expectedLists = cents.length, expectedDim = cents.head.length))
-  }
-
-  test("PQ ANN: codes bounded, full-rerank equals brute force, recall sane") {
-    val e = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val q = e.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"))
-    val c = e.select($"vec_id".as("c_id"), $"embedding".as("ce"))
-    val n = c.count().toInt
-    val books = Similarity.pqTrain(c.select($"ce".as("embedding")), "embedding", 8, 16)
-    // codes are m per vector, each within [0, kCent)
-    val codes = c.select(Similarity.pqEncode("ce", books).as("codes"))
-      .collect().map(_.getSeq[Long](0))
-    assert(codes.forall(cs => cs.length == 8 && cs.forall(x => x >= 0 && x < 16)))
-    // deterministic training: same inputs, same codebooks
-    val books2 = Similarity.pqTrain(c.select($"ce".as("embedding")), "embedding", 8, 16)
-    assert(books.flatten.flatten.toSeq == books2.flatten.flatten.toSeq)
-    val exact = Similarity.cosineTopK(q, c, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // a full-width shortlist makes the exact re-rank total: ADC cannot drop
-    // a candidate, so the result must equal brute force EXACTLY
-    val full = Similarity.pqTopK(q, c, books, 5, rerank = n)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(full == exact)
-    // tight shortlist: lossy but useful (iid vectors are PQ's worst case)
-    val approx = Similarity.pqTopK(q, c, books, 5, rerank = math.max(20, n / 10))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & approx).size.toDouble / exact.size
-    assert(recall > 0.3, s"recall=$recall")
   }
 
   test("PQ units path: codes bounded, deterministic, full-rerank equals brute force") {
@@ -779,6 +734,10 @@ class OperatorsSpec extends AnyFunSuite {
     // subspace (or trailing coarse cluster) fails loudly, not silently
     intercept[IllegalArgumentException](Similarity.pqCodebooksUnitsFromDf(
       wh.read("ivfpq_books").filter($"subspace" =!= 7)))
+    // explicit shape parameters catch it on a legacy frame without them
+    intercept[IllegalArgumentException](Similarity.pqCodebooksUnitsFromDf(
+      wh.read("ivfpq_books").filter($"subspace" =!= 7).drop("m", "k_cent", "subdim"),
+      expectedM = 8, expectedKCent = 16, expectedSubdim = 8))
     intercept[IllegalArgumentException](graft.operators.KMeans.centroidsFromDf(
       wh.read("ivfpq_coarse").filter($"cluster" =!= 7)))
   }
@@ -864,36 +823,6 @@ class OperatorsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.operators.QualityChecks.run(df, Seq("a" -> lit(true), "a" -> lit(false)))
     }
-  }
-
-  test("PQ index persists through the warehouse and serves identically") {
-    val e = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val q = e.filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".as("qe"))
-    val c = e.select($"vec_id".as("c_id"), $"embedding".as("ce"))
-    val books = Similarity.pqTrain(c.select($"ce".as("embedding")), "embedding", 8, 16)
-    // build once, persist codes + codebooks as warehouse tables
-    val wh = graft.airbnb.Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("wh-pqidx").toString)
-    wh.write("pq_codes", Similarity.pqIndex(c, books))
-    wh.write("pq_codebooks", Similarity.pqCodebooksDf(spark, books))
-    // reload cold: codebooks roundtrip exactly, serving equals inline build
-    val books2 = Similarity.pqCodebooksFromDf(wh.read("pq_codebooks"))
-    assert(books.flatten.flatten.toSeq == books2.flatten.flatten.toSeq)
-    def res(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    val inline = res(Similarity.pqTopK(q, c, books, 5, rerank = 50))
-    val served = res(Similarity.pqTopKWithIndex(q, wh.read("pq_codes"), c,
-      books2, 5, rerank = 50))
-    assert(served == inline)
-    // a codebook frame that lost its entire trailing subspace would
-    // silently rebuild as a 7-subspace codebook under max()+1 derivation;
-    // the declared (m, k_cent, subdim) columns catch it
-    val tailLost = wh.read("pq_codebooks").filter($"subspace" =!= 7)
-    intercept[IllegalArgumentException](Similarity.pqCodebooksFromDf(tailLost))
-    intercept[IllegalArgumentException](Similarity.pqCodebooksFromDf(
-      tailLost.drop("m", "k_cent", "subdim"),
-      expectedM = 8, expectedKCent = 16, expectedSubdim = 8))
   }
 
   test("incremental near-dup gate: persisted band index equals recompute path") {
@@ -1260,9 +1189,11 @@ class OperatorsSpec extends AnyFunSuite {
     val g0c = graft.operators.KMeans.assignWith(hist, "vec_id", "embedding",
         cents).select($"vec_id".as("node"), $"cluster".as("cell"))
       .join(g0, Seq("node"))
-    val touchedContent = graft.operators.Similarity.mergeKnnGraphTouchedCells(
-      g0c.filter($"cell".isin(bCells.toSeq: _*)), hist, batch,
-      "vec_id", "embedding", cents, degree = 2)
+    def assigned(d: org.apache.spark.sql.DataFrame) = graft.operators.KMeans
+      .assignWith(d, "vec_id", "embedding", cents).select("vec_id", "cluster", "__u")
+    val touchedContent = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
+      g0c.filter($"cell".isin(bCells.toSeq: _*)), assigned(hist), assigned(batch),
+      "vec_id", degree = 2)
     assert(touchedContent.select("cell").distinct().collect()
       .map(_.getLong(0)).toSet == bCells,
       "touched-cell content must cover exactly the batch's cells")
