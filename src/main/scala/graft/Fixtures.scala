@@ -135,9 +135,11 @@ object Fixtures {
     * the first's staged index.
     */
   def scratchFor(sfDir: String, name: String): String =
-    jvmScratch(s"${pathDigest(sfDir)}/$name")
+    jvmScratch(s"${datasetKey(sfDir)}/$name")
 
-  private def pathDigest(sfDir: String): String = {
+  /** A short digest of the dataset dir's absolute path: a path segment
+    * that keeps fixture files of different dataset dirs apart. */
+  def datasetKey(sfDir: String): String = {
     val abs = new java.io.File(sfDir).getAbsolutePath
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(abs.getBytes("UTF-8"))
@@ -205,7 +207,7 @@ object Fixtures {
     // lazily above). The digest is the full SHA-256 of the absolute path
     // (ADVICE r17: a 32-bit hashCode allowed two distinct dataset paths
     // to collide within one JVM), truncated to 16 hex chars.
-    val dirKey = s"${pathDigest(sfDir)}-${java.lang.ProcessHandle.current().pid()}"
+    val dirKey = s"${datasetKey(sfDir)}-${java.lang.ProcessHandle.current().pid()}"
     val dir = s"$root/$dirKey/${new java.io.File(sfDir).getName}/$name"
     if (!built.contains(dir)) lockFor(dir).synchronized {
       if (!built.contains(dir)) {

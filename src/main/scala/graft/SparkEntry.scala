@@ -36,8 +36,12 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the tables of `sfDir`. Omitted for non-SQL-expressible ops. An oracle
+    * that reads files its query wrote gets their dir for `sfDir`.
     */
-  def oracleSql: Map[String, String] =
-    ListMap(registry.flatMap(q => q.oracle.map(o => q.name -> o.trim)): _*)
+  def oracleSql(sfDir: String): Map[String, String] = {
+    val key = Fixtures.datasetKey(sfDir)
+    ListMap(registry.flatMap(q => q.oracle.map(o =>
+      q.name -> o.trim.replace(graft.queries.CoreQueries.DatasetKeyToken, key))): _*)
+  }
 }

@@ -134,12 +134,14 @@ final case class Warehouse(spark: SparkSession, root: String) {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmpStr)
     val dest = new Path(path(name))
     swapIn(fs(dest), new Path(tmpStr), dest, new Path(path(name) + "__old"), name)
-    invalidateListings(name)
-    cacheWrittenSchema(name, df.schema, partitionBy)
+    refreshWritten(name, df.schema, partitionBy)
   }
 
-  /** Write-time schema capture: the files hold exactly `written`'s data
-    * columns, so the first read-back skips its footer job. A partitioned
+  /** After a write, drop Spark's cached file listing of the table: a
+    * DataFrame planned against the PREVIOUS listing would otherwise fail
+    * mid-query with FAILED_READ_FILE on renamed files. Then capture the
+    * written schema: the files just written hold exactly `written`'s data
+    * columns, so the next read-back skips its footer job. A partitioned
     * table caches its data columns only: [[read]] passes them as the read
     * schema and Spark still infers the partition columns from the directory
     * names, so partition-value inference types (e.g. boolean partition
@@ -149,10 +151,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * all-nullable fields, so caching the writer's nullability would present
     * the same table with two schemas depending on which session reads it.
     */
-  private def cacheWrittenSchema(name: String, written: StructType,
-                                 partitionBy: Seq[String]): Unit =
+  private def refreshWritten(name: String, written: StructType,
+                             partitionBy: Seq[String]): Unit = {
+    spark.catalog.refreshByPath(path(name))
     Warehouse.schemaCache.put(path(name), Warehouse.allNullable(
       StructType(written.filterNot(c => partitionBy.contains(c.name))))): Unit
+  }
 
   /** Crash-safe APPEND for grow-only tables (fact_reviews, each row with
     * its `review_lang` tag, and the id map): only `df`'s rows are written,
@@ -181,15 +185,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
     requireLayout(f, base, name, partitionBy.headOption, "append")
     val existed = hasData(name)
     if (existed) {
-      // names and types, in order; not nullability (footer inference reads
-      // every column back nullable)
       val table = read(name).schema
-      def dataCols(s: StructType) = s.fields.toSeq.filterNot(c => partitionBy.contains(c.name))
-        .map(c => c.name -> Warehouse.nullableType(c.dataType))
-      require(dataCols(table) == dataCols(df.schema) &&
+      require(sameDataColumns(table, df.schema, partitionBy) &&
           partitionBy.forall(table.fieldNames.contains),
-        s"append($name): schema ${df.schema.simpleString} differs from the " +
-        s"table's ${table.simpleString}")
+        differs("append", name, df.schema, table))
     }
     val staging = new Path(path(name) + "__atmp")
     val w = df.write.mode(SaveMode.Overwrite)
@@ -199,11 +198,20 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // an existing table's cached schema was just checked: only its file
     // listing goes stale. A new table caches df's schema as write() does.
     if (existed) spark.catalog.refreshByPath(path(name))
-    else {
-      invalidateListings(name)
-      cacheWrittenSchema(name, df.schema, partitionBy)
-    }
+    else refreshWritten(name, df.schema, partitionBy)
   }
+
+  /** Whether `a` and `b` have the same data columns (those not in
+    * `partitionBy`): names and types, in order; not nullability (footer
+    * inference reads every column back nullable). */
+  private def sameDataColumns(a: StructType, b: StructType, partitionBy: Seq[String]): Boolean = {
+    def dataCols(s: StructType) = s.fields.toSeq.filterNot(c => partitionBy.contains(c.name))
+      .map(c => c.name -> Warehouse.nullableType(c.dataType))
+    dataCols(a) == dataCols(b)
+  }
+
+  private def differs(op: String, name: String, written: StructType, table: StructType): String =
+    s"$op($name): schema ${written.simpleString} differs from the table's ${table.simpleString}"
 
   /** Move every data file of a complete [[append]] staging dir to the same
     * relative path under the table, then drop the staging dir. Files
@@ -228,26 +236,15 @@ final case class Warehouse(spark: SparkSession, root: String) {
     f.delete(staging, true)
   }
 
-  /** Drop Spark's cached file listings/footers for a table path after a
-    * swap: a DataFrame planned against the PREVIOUS version's listing
-    * would otherwise fail mid-query with FAILED_READ_FILE on the renamed
-    * files. Every swap path (whole-table, single-partition,
-    * multi-partition) calls this; it is a driver-local cache clear.
-    */
-  private def invalidateListings(name: String): Unit = {
-    spark.catalog.refreshByPath(path(name))
-    Warehouse.schemaCache.remove(path(name)): Unit
-  }
-
   def read(name: String): DataFrame = {
     recover(name)
     // schema cached per PATH across Warehouse instances (instances are
     // cheap per-invocation objects): an uncached spark.read.parquet
     // re-infers from footers — one extra job per read of an immutable
-    // index table. Every schema-changing path (write/writePartition(s) →
-    // invalidateListings, dropTable) clears the entry; a recreate after
-    // drop goes through write(), so the cache can never serve a stale
-    // schema.
+    // index table. A write, a first append or a partition write into a
+    // table of no other partitions sets the entry to the data columns it
+    // wrote; a later append or partition write must match it; dropTable
+    // clears it. So the cache can never serve a stale schema.
     val p = path(name)
     val cached = Warehouse.schemaCache.get(p)
     if (cached != null) spark.read.schema(cached).parquet(p)
@@ -296,6 +293,27 @@ final case class Warehouse(spark: SparkSession, root: String) {
       }
     }
 
+  /** Whether the table holds partitions besides the `parts` dirs. If it
+    * does and its schema is cached, `written`'s data columns must match
+    * that schema, as [[append]] requires, so no partition write changes
+    * how the table reads; refused before any partition moves. A table of
+    * only `parts` caches `written`'s columns afterwards, as [[write]]
+    * does; other partitions with no cached schema leave none, and the next
+    * [[read]] infers it from a footer.
+    */
+  private def requirePartitionColumns(name: String, f: FileSystem, base: Path,
+      partCol: String, parts: Set[String], written: StructType): Boolean = {
+    val others = f.listStatus(base).exists { st =>
+      val n = st.getPath.getName
+      st.isDirectory && n.startsWith(partCol + "=") && !parts.contains(n)
+    }
+    val table = Warehouse.schemaCache.get(path(name))
+    if (others && table != null)
+      require(sameDataColumns(table, written, Seq(partCol)),
+        differs("writePartition", name, written, table))
+    others
+  }
+
   /** The per-partition writers' setup: heal, refuse a mixed layout, mkdirs. */
   private def partitionedRoot(name: String, partCol: String): (FileSystem, Path) = {
     recover(name)
@@ -315,7 +333,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * the same `partValue` overwrites the same partition, so the
     * foreachBatch replay contract holds without any groupBy-dedupe pass.
     * Readers go through [[read]] as usual: partition discovery re-attaches
-    * `partCol` from the directory names.
+    * `partCol` from the directory names. The table's schema stays cached
+    * ([[requirePartitionColumns]]), so the next read plans with no footer
+    * job.
     */
   def writePartition(name: String, partCol: String, partValue: Long,
                      df: DataFrame): Unit = {
@@ -326,11 +346,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // DISCOVERY regardless of an underscore prefix (a parked
     // `__old_batch_id=2` raised CONFLICTING_PARTITION_COLUMN_NAMES, and a
     // mid-write temp would race readers the same way)
+    val others = requirePartitionColumns(name, f, base, partCol, Set(part), df.schema)
     val tmp = new Path(path(name) + s"__ptmp_$part")
     df.drop(partCol).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     swapIn(f, tmp, new Path(base, part), new Path(path(name) + s"__pold_$part"),
       s"$name/$part")
-    invalidateListings(name)
+    if (others) spark.catalog.refreshByPath(path(name))
+    else refreshWritten(name, df.schema, Seq(partCol))
   }
 
   /** Idempotent MULTI-partition write: lands every `partCol` partition
@@ -345,7 +367,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * each INDIVIDUAL partition either fully old or fully new, never mixed,
     * so a caller that stamps rows with the writing batch can detect and
     * skip already-committed partitions on replay (per-partition
-    * idempotence). Returns the partition directory names written.
+    * idempotence). The schema is checked and cached as [[writePartition]]
+    * does it. Returns the partition directory names written.
     */
   def writePartitions(name: String, partCol: String, df: DataFrame): Seq[String] = {
     val (f, base) = partitionedRoot(name, partCol)
@@ -354,12 +377,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmpRoot.toString)
     val parts = f.listStatus(tmpRoot).map(_.getPath.getName)
       .filter(_.startsWith(partCol + "=")).toSeq
+    val others =
+      try requirePartitionColumns(name, f, base, partCol, parts.toSet, df.schema)
+      catch { case e: IllegalArgumentException => f.delete(tmpRoot, true); throw e }
     parts.foreach { part =>
       swapIn(f, new Path(tmpRoot, part), new Path(base, part),
         new Path(path(name) + s"__pold_$part"), s"$name/$part")
     }
     f.delete(tmpRoot, true)
-    invalidateListings(name)
+    if (others) spark.catalog.refreshByPath(path(name))
+    else refreshWritten(name, df.schema, Seq(partCol))
     parts
   }
 
@@ -597,8 +624,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
 object Warehouse {
   /** Footer-schema cache keyed by table PATH (Warehouse instances are
     * per-invocation value objects, so the cache lives here): one schema
-    * inference job per table per JVM instead of per read. Cleared by
-    * invalidateListings (every swap path) and dropTable.
+    * inference job per table per JVM instead of per read. Set by
+    * refreshWritten, cleared by dropTable.
     */
   private[graft] val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()

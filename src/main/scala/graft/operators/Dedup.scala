@@ -592,16 +592,39 @@ object Dedup {
     * instead of re-deduping everything. Tags each new row `is_novel`; the
     * caller appends novel rows and their fingerprints to the index.
     *
-    * Scale: the index side is a (bucketed) single-column fingerprint table —
-    * the join shuffles fingerprints only, never corpus text; with a small
-    * daily batch the NEW side broadcasts instead.
+    * Output: `fp`, then `newDf`'s columns, then `is_novel` — exactly one row
+    * per new row, whatever the index holds: the batch's DISTINCT
+    * fingerprints go through [[novelAgainstIndex]]'s anti join (which never
+    * multiplies rows, so an fp the index holds twice still counts once) and
+    * the novel ones are left-joined back.
+    *
+    * Scale: the index side is a single-column fingerprint table, read once
+    * and never deduplicated or aggregated — the one distinct runs over the
+    * batch's fingerprints; the index is broadcast while it fits
+    * `spark.sql.autoBroadcastJoinThreshold`, else shuffled once for the
+    * anti join. Corpus text never moves. A gate that keeps only the novel
+    * rows needs no flag: [[novelAgainstIndex]] is the anti join alone.
     */
-  def tagAgainstIndex(newDf: DataFrame, indexFps: DataFrame, textCol: String): DataFrame =
-    newDf.withColumn("fp", md5(col(textCol)))
-      .join(indexFps.select(col("fp")).distinct().withColumn("__known", lit(1)),
-        Seq("fp"), "left")
-      .withColumn("is_novel", col("__known").isNull)
-      .drop("__known")
+  def tagAgainstIndex(newDf: DataFrame, indexFps: DataFrame, textCol: String): DataFrame = {
+    val probed = newDf.withColumn("fp", md5(col(textCol)))
+    val novel = unindexed(probed.select(col("fp")).distinct(), col("fp"), indexFps)
+      .withColumn("__novel", lit(true))
+    probed.join(novel, Seq("fp"), "left")
+      // a NULL fp (NULL text) is in no index, but joins back to nothing
+      .withColumn("is_novel", col("__novel").isNotNull || col("fp").isNull)
+      .drop("__novel")
+  }
+
+  /** The rows of `newDf` whose text fingerprint is not in `indexFps` — the
+    * rows [[tagAgainstIndex]] flags `is_novel`, with `newDf`'s columns
+    * only — as one anti join, which needs no distinct on either side.
+    */
+  def novelAgainstIndex(newDf: DataFrame, indexFps: DataFrame, textCol: String): DataFrame =
+    unindexed(newDf, md5(col(textCol)), indexFps)
+
+  /** `df`'s rows whose `fp` is not in the index: the one fingerprint probe. */
+  private def unindexed(df: DataFrame, fp: Column, indexFps: DataFrame): DataFrame =
+    df.join(indexFps.select(col("fp").as("__index_fp")), fp === col("__index_fp"), "left_anti")
 
   /** Incremental NEAR-dup gate: tag a new batch against an existing corpus's
     * MinHash band index — the daily-crawl shape where yesterday's corpus is
@@ -611,11 +634,9 @@ object Dedup {
     *
     * Returns (idCol, is_near_dup) for every new doc that HAS a signature
     * (>= k tokens); shorter docs have no sketch — callers left-join and
-    * treat absent as novel. Scale shape: both sides shuffle (band_idx,
-    * band_key) rows only; the index is DISTINCT on band key, so the left
-    * join fans out to at most `bands` rows per new doc; the corpus text
-    * never moves. In production the index side is a persisted sketch table
-    * — recomputing it here stands in for that read.
+    * treat absent as novel. Scale shape: see [[tagAgainstBandIndex]]. In
+    * production the index side is a persisted sketch table — recomputing
+    * it here stands in for that read.
     */
   def tagNearDupAgainstIndex(newDf: DataFrame, indexDf: DataFrame, idCol: String,
                              textCol: String, k: Int, bands: Int = 2): DataFrame =
@@ -649,19 +670,39 @@ object Dedup {
 
   /** [[tagNearDupAgainstIndex]] against a pre-built (typically persisted)
     * [[bandIndex]] frame — the index side pays no sketch cost at all.
+    *
+    * Exactly one row per signed new doc, whatever the index holds: the
+    * signed ids left-joined to the distinct ids of [[bandIndexHits]]. Scale
+    * shape: as [[bandIndexHits]], plus two batch-side distincts over ids;
+    * the batch is sketched once per branch. A gate that keeps only the
+    * novel docs needs no flag: it anti-joins [[bandIndexHits]] on `idCol`.
     */
   def tagAgainstBandIndex(newDf: DataFrame, index: DataFrame, idCol: String,
                           textCol: String, k: Int, bands: Int = 2): DataFrame = {
-    val newB = bandedSignatures(newDf, idCol, textCol, k, bands)
-      .select(col(idCol), col("band_idx"), col("band_key"))
-    // re-distinct is a cheap no-op on a clean persisted index and protects
-    // the bounded-fan-out guarantee against hand-built inputs
-    val idxB = index.select(col("band_idx"), col("band_key")).distinct()
-      .withColumn("__hit", lit(1))
-    newB.join(idxB, Seq("band_idx", "band_key"), "left")
-      .groupBy(col(idCol))
-      .agg((count(col("__hit")) > 0).as("is_near_dup"))
+    val banded = bandedSignatures(newDf, idCol, textCol, k, bands)
+    banded.select(col(idCol)).distinct()
+      .join(hitIds(banded, index, idCol).distinct().withColumn("is_near_dup", lit(true)),
+        Seq(idCol), "left")
+      .na.fill(false, Seq("is_near_dup"))
   }
+
+  /** The ids of `newDf`'s docs that have at least one band key in `index` —
+    * the docs [[tagAgainstBandIndex]] flags `is_near_dup`, one row per
+    * hitting band, so an id can repeat. A semi or anti join on `idCol`
+    * consumes it in one pass. Scale shape: the batch's (band_idx, band_key)
+    * rows semi-join the index, which never multiplies rows, so the index is
+    * never deduplicated; it is broadcast while it fits
+    * `spark.sql.autoBroadcastJoinThreshold`, else shuffled once; corpus
+    * text never moves.
+    */
+  def bandIndexHits(newDf: DataFrame, index: DataFrame, idCol: String,
+                    textCol: String, k: Int, bands: Int = 2): DataFrame =
+    hitIds(bandedSignatures(newDf, idCol, textCol, k, bands), index, idCol)
+
+  private def hitIds(banded: DataFrame, index: DataFrame, idCol: String): DataFrame =
+    banded.join(index.select(col("band_idx"), col("band_key")),
+        Seq("band_idx", "band_key"), "left_semi")
+      .select(col(idCol))
 
   /** Cross-source duplication matrix: for every pair of sources, how many
     * DISTINCT normalized-content fingerprints they share — the diagnostic a

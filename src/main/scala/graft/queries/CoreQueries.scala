@@ -21,6 +21,10 @@ import org.apache.spark.sql.types._
   */
 object CoreQueries {
 
+  /** Stands in an oracle for the `Fixtures.datasetKey` of the dataset dir
+    * it runs over; `SparkEntry.oracleSql` binds it. */
+  private[graft] val DatasetKeyToken = "SF_DATASET_KEY"
+
   /** Each click as-of joined to the user's purchases by `join(clicks,
     * purchases)`, an AsOfJoin.asof carrying the purchase value and ts. */
   private def clickAsOf(s: SparkSession, dir: String)(
@@ -283,10 +287,11 @@ object CoreQueries {
     // Spark writes documents as gzip'd newline-delimited JSON; Spark reads
     // it back schema-pinned while DuckDB reads the SAME files — any
     // escaping/encoding divergence between writer and either reader
-    // hash-mismatches.
+    // hash-mismatches. The files are scoped to the dataset dir, so the
+    // oracle never reads the rows of another scale's run.
     Q("q_jsonl_roundtrip",
       (s, dir) => {
-        val fixture = "/tmp/graft_fixtures/jsonl_documents"
+        val fixture = s"/tmp/graft_fixtures/jsonl_documents/${graft.Fixtures.datasetKey(dir)}"
         val docs = t(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("lang"), col("source"))
         graft.airbnb.Sources.writeJsonl(docs, fixture)
@@ -295,10 +300,10 @@ object CoreQueries {
             length(col("text")).cast(LongType).as("n_chars"))
           .orderBy(col("doc_id"))
       },
-      Some("""
+      Some(s"""
         SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, source,
                CAST(length(text) AS BIGINT) AS n_chars
-        FROM read_json('/tmp/graft_fixtures/jsonl_documents/*.json.gz',
+        FROM read_json('/tmp/graft_fixtures/jsonl_documents/$DatasetKeyToken/*.json.gz',
                        format='newline_delimited')
         ORDER BY doc_id""")),
 

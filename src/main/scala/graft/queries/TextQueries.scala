@@ -877,13 +877,14 @@ object TextQueries {
         val wh = graft.airbnb.Warehouse(s, graft.Fixtures.jvmScratch("wh_band_index"))
         wh.write("band_index", Dedup.bandIndex(
           docs.filter(col("doc_id") < mid), "doc_id", "text", 4))
-        val tags = Dedup.tagAgainstBandIndex(
-          fresh, wh.read("band_index"), "doc_id", "text", 4)
+        val nd = Dedup.bandIndexHits(
+            fresh, wh.read("band_index"), "doc_id", "text", 4)
+          .distinct().withColumn("__nd", lit(true))
         fresh.select(col("doc_id"), col("source"))
-          .join(tags, Seq("doc_id"), "left")
+          .join(nd, Seq("doc_id"), "left")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_new"),
-            count(when(!coalesce(col("is_near_dup"), lit(false)), 1)).as("n_novel"))
+            count(when(col("__nd").isNull, 1)).as("n_novel"))
           // bounded per-source rows: in-place sort, not a range-sampled
           // orderBy (one job less on a 5-job row)
           .repartition(1).sortWithinPartitions(col("source"))
@@ -1385,13 +1386,13 @@ object TextQueries {
         val mid = docMid(s, dir)
         val idx = bandIndexFixture(s, dir)
         val fresh = docs.filter(col("doc_id") >= mid)
-        val tags = Dedup.tagAgainstBandIndex(
-          fresh, idx, "doc_id", "text", 4)
+        val nd = Dedup.bandIndexHits(fresh, idx, "doc_id", "text", 4)
+          .distinct().withColumn("__nd", lit(true))
         fresh.select(col("doc_id"), col("source"))
-          .join(tags, Seq("doc_id"), "left")
+          .join(nd, Seq("doc_id"), "left")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_new"),
-            count(when(!coalesce(col("is_near_dup"), lit(false)), 1)).as("n_novel"))
+            count(when(col("__nd").isNull, 1)).as("n_novel"))
           .orderBy(col("source"))
       },
       Some(incrMinhashOracle),
@@ -1533,10 +1534,10 @@ object TextQueries {
         // near-dup ids among novel rows: a LAZY subplan consumed twice
         // (anti-join + accounting join) through canonically identical
         // broadcast exchanges, so AQE materializes it once per action
-        val nd = broadcast(Dedup.tagAgainstBandIndex(
+        val nd = broadcast(Dedup.bandIndexHits(
             tagged.filter(col("__novel")), wh.read("band_index"),
             "doc_id", "text", 4)
-          .filter(col("is_near_dup"))
+          .distinct()
           // the marker column rides INSIDE the shared subplan so the
           // anti-join and the accounting join broadcast the IDENTICAL
           // plan (reused exchange), not two one-column variants

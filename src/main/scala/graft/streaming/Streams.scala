@@ -108,12 +108,12 @@ object Streams {
 
   // ---------------------------------------------------------------------
   // Streaming near-dup gate: the daily-crawl dedup loop as a continuous
-  // pipeline. Each micro-batch is tagged against the PERSISTED MinHash band
-  // index (Dedup.tagAgainstBandIndex — the batch twin's production shape),
-  // survivors land in the idempotent parquet sink, and the survivors' bands
-  // are merged back into the index. foreachBatch because the loop is
-  // read-index → tag → append-index — a self-referential update no
-  // declarative streaming operator expresses.
+  // pipeline. Each micro-batch is probed against the PERSISTED MinHash band
+  // index (Dedup.bandIndexHits, the semi-join form of the batch twin
+  // Dedup.tagAgainstBandIndex), survivors land in the idempotent parquet
+  // sink, and the survivors' bands are merged back into the index.
+  // foreachBatch because the loop is read-index → probe → append-index —
+  // a self-referential update no declarative streaming operator expresses.
   //
   // Exactly-once despite at-least-once replay, WITHOUT a transaction across
   // the index table and the sink: index rows carry the batch_id that first
@@ -131,7 +131,7 @@ object Streams {
   // Dedup.tagNearDupAgainstIndex; compose minhashLshPairs per batch if
   // intra-batch dedup is also required.
   //
-  // Scale: the tag join moves (band_idx, band_key) rows only; the index
+  // Scale: the probe moves (band_idx, band_key) rows only; the index
   // rewrite is the fixture-size shape — at 100 TB the index table is
   // partitioned by batch_id range and the merge appends a partition instead
   // of rewriting (Warehouse.write(partitionBy) + compactSmallFiles), with
@@ -150,15 +150,14 @@ object Streams {
       indexTable: String, outDir: String, batchId: Long, idCol: String,
       textCol: String, k: Int, bands: Int = 2): Boolean =
     commitOnce(batch.sparkSession, outDir, batchId) {
-      val tags = graft.operators.Dedup.tagAgainstBandIndex(batch,
-        priorIndex(wh, indexTable, bandIndexSchema, batchId), idCol, textCol, k, bands)
+      // one anti join on the ids whose band keys hit the index
+      val kept = batch.join(graft.operators.Dedup.bandIndexHits(batch,
+          priorIndex(wh, indexTable, bandIndexSchema, batchId), idCol, textCol, k, bands),
+        Seq(idCol), "left_anti")
       // materialize survivors BEFORE the index swap: their lazy plan reads
       // the index table, whose files the swap below replaces — a post-swap
       // action on the un-checkpointed frame would FILE_NOT_EXIST.
       // Micro-batch-sized, so the checkpoint is small.
-      val kept = batch.join(tags, Seq(idCol), "left")
-        .filter(!coalesce(col("is_near_dup"), lit(false)))
-        .drop("is_near_dup")
       val survivors = Materialize.eager(kept)
       // survivors' bands join the index under min-batch-id semantics; the
       // groupBy also re-distincts, so replays cannot grow the table
@@ -1003,17 +1002,16 @@ object Streams {
       val survivorsIntra = gated.join(
         graft.operators.Dedup.exact(gated, idCol, Seq(textCol)).select(col(idCol)),
         Seq(idCol), "left_semi")
-      // 4. cross-batch exact dedup against the fingerprint index
-      val afterExact = graft.operators.Dedup.tagAgainstIndex(survivorsIntra,
-          priorIndex(wh, "fp_index", fpIndexSchema, batchId), textCol)
-        .filter(col("is_novel")).drop("is_novel", "fp")
-      // 5. cross-batch near-dup gate against the band index
-      val tags = graft.operators.Dedup.tagAgainstBandIndex(afterExact,
-        priorIndex(wh, "band_index", bandIndexSchema, batchId), idCol, textCol,
-        shingleK, bands)
-      val novel = afterExact.join(tags, Seq(idCol), "left")
-        .filter(!coalesce(col("is_near_dup"), lit(false)))
-        .drop("is_near_dup")
+      // 4-5. cross-batch dedup in one pass: an anti join against the fp
+      // index, then an anti join on the ids whose band keys hit the band
+      // index; neither multiplies rows, so neither index is deduplicated.
+      // Both index reads plan from the schema their last writePartition
+      // cached, with no footer job (jobs per batch: ROADMAP item 2).
+      val afterExact = graft.operators.Dedup.novelAgainstIndex(survivorsIntra,
+        priorIndex(wh, "fp_index", fpIndexSchema, batchId), textCol)
+      val novel = afterExact.join(graft.operators.Dedup.bandIndexHits(afterExact,
+          priorIndex(wh, "band_index", bandIndexSchema, batchId), idCol, textCol,
+          shingleK, bands), Seq(idCol), "left_anti")
       val accepted = Materialize.eager(novel) // feeds both index appends and the sink
       // both indexes grow by the batch's SURVIVOR contribution only,
       // landed as idempotent batch_id partitions (r18 — the r17 shape
@@ -1021,7 +1019,7 @@ object Streams {
       // batch). Cross-partition duplicates cannot arise by the gates' own
       // acceptance rules: an fp matching history is rejected by the exact
       // gate, and an accepted doc shares NO band key with history (a
-      // shared band key is exactly what is_near_dup flags); within-batch
+      // shared band key is exactly what bandIndexHits returns); within-batch
       // duplicates are deduped here (fp distinct; bandIndex is distinct by
       // construction). Replays overwrite their own partitions.
       wh.writePartition("fp_index", "batch_id", batchId,

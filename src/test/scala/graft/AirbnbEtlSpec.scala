@@ -277,13 +277,13 @@ class AirbnbEtlSpec extends AnyFunSuite {
 
   test("validate runs in at most 4 jobs and stats in 1 on the fixture warehouse") {
     result
-    val (audits, validateJobs) = TestSpark.jobsDuring(AirbnbEtl.validate(result.wh))
+    val (audits, validateJobs) = TestSpark.jobSitesDuring(AirbnbEtl.validate(result.wh))
     assert(audits.size == 7 && audits.values.forall(_ == 0L), audits.toString)
-    assert(validateJobs <= 4, s"validate ran $validateJobs jobs")
-    val (stats, statsJobs) = TestSpark.jobsDuring(result.wh.stats())
+    assert(validateJobs.size <= 4, s"validate ran ${TestSpark.bySite(validateJobs)}")
+    val (stats, statsJobs) = TestSpark.jobSitesDuring(result.wh.stats())
     assert(stats.keySet == Set("dim_listings", "dim_listing_id_map", "dim_hosts",
       "dim_dates", "fact_calendar", "fact_reviews"), stats.toString)
-    assert(statsJobs == 1, s"stats ran $statsJobs jobs")
+    assert(statsJobs.size == 1, s"stats ran ${TestSpark.bySite(statsJobs)}")
   }
 
   test("appendIdMap numbers fresh raw ids in sorted order from the map's max") {
@@ -300,8 +300,9 @@ class AirbnbEtlSpec extends AnyFunSuite {
     assert(abc.isNullAt(abc.fieldIndex("listing_id")) && abc.getAs[String]("part1") == "abc-77")
     // building the rows (before their write) runs at most the range sample
     // and the one job that counts the ranges and takes the existing max
-    val (second, buildJobs) = TestSpark.jobsDuring(Loaders.appendIdMap(staging, first))
-    assert(buildJobs <= 2, s"appendIdMap ran $buildJobs jobs before its write")
+    val (second, buildJobs) = TestSpark.jobSitesDuring(Loaders.appendIdMap(staging, first))
+    assert(buildJobs.size <= 2,
+      s"appendIdMap ran ${TestSpark.bySite(buildJobs)} before its write")
     assert(ids(second) == Seq("101" -> 5L, "102" -> 6L, "103" -> 7L, "abc-77" -> 8L))
     // several partitions, repeated and NULL raw ids, numeric and not
     val raw = (0 until 3000).map(i =>

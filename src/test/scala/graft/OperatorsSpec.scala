@@ -854,6 +854,34 @@ class OperatorsSpec extends AnyFunSuite {
     assert(merged.toSeq == full.toSeq)
   }
 
+  test("index tags: one row per new doc over a duplicated index, one novel of two") {
+    val seen = "alpha beta gamma delta epsilon zeta eta theta"
+    // a union: a batch gathered from two sources
+    val fresh = Seq(1L -> seen).toDF("doc_id", "text")
+      .unionByName(Seq(2L -> "one two three four five six seven eight").toDF("doc_id", "text"))
+    // hand-built indexes that hold every entry twice
+    val fps = Seq(seen).toDF("text").select(md5($"text").as("fp"))
+    val tagged = Dedup.tagAgainstIndex(fresh, fps.unionByName(fps), "text")
+      .select($"doc_id", $"is_novel").collect()
+    assert(tagged.map(r => r.getLong(0) -> r.getBoolean(1)).sortBy(_._1).toSeq ==
+      Seq(1L -> false, 2L -> true))
+    assert(Dedup.novelAgainstIndex(fresh, fps.unionByName(fps), "text")
+      .select($"doc_id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // a NULL text has a NULL fingerprint, which no index holds
+    val noText = Seq(3L -> Option.empty[String]).toDF("doc_id", "text")
+    assert(Dedup.tagAgainstIndex(noText, fps, "text").select($"is_novel")
+      .collect().map(_.getBoolean(0)).toSeq == Seq(true))
+    val bands = Dedup.bandIndex(fresh.filter($"doc_id" === 1L), "doc_id", "text", 4)
+    val index = bands.unionByName(bands)
+    val nearDup = Dedup.tagAgainstBandIndex(fresh, index, "doc_id", "text", 4)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1))
+    assert(nearDup.sortBy(_._1).toSeq == Seq(1L -> true, 2L -> false))
+    val novel = fresh.join(Dedup.bandIndexHits(fresh, index, "doc_id", "text", 4),
+        Seq("doc_id"), "left_anti")
+      .select($"doc_id").collect().map(_.getLong(0))
+    assert(novel.toSeq == Seq(2L))
+  }
+
   test("wide (124-bit) simhash hamming pairs find planted dups, and only them") {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
       .select($"doc_id", $"text").filter($"doc_id" < 40)

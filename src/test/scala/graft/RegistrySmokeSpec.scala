@@ -15,7 +15,7 @@ class RegistrySmokeSpec extends AnyFunSuite {
   test("registry names are unique and oracles exist for the declared set") {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size)
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql(TestSpark.sfDir).keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
   test("every row has a non-blank oracle and no oracle leaves a fragment uninterpolated") {

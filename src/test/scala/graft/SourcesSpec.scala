@@ -70,8 +70,8 @@ class SourcesSpec extends AnyFunSuite {
         line("other", "names", "in", "this", "file", "too") +
         line("2", "z", "c", "d", "e", "f"))
       val glob = s"$d/*.csv.gz"
-      val (df, jobs) = TestSpark.jobsDuring(read(spark, glob))
-      assert(jobs == 0, s"sep '$sep': planning fired $jobs jobs")
+      val (df, jobs) = TestSpark.jobSitesDuring(read(spark, glob))
+      assert(jobs.isEmpty, s"sep '$sep': planning fired ${TestSpark.bySite(jobs)}")
       val spark0 = inferred(glob, sep)
       assert(df.schema == spark0.schema)
       assert(df.columns.toSeq == Seq("id", "name, full", "dup2", "DUP3", "_c4", "note"))
@@ -81,8 +81,9 @@ class SourcesSpec extends AnyFunSuite {
     // a directory of part files (the S7 sink's layout)
     val sink = new java.io.File(root, "sink").toString
     Sources.writePipeCsv(Seq(("1", "a"), ("2", "b")).toDF("id", "t"), sink)
-    val (df, jobs) = TestSpark.jobsDuring(Sources.readPipeCsv(spark, sink))
-    assert(jobs == 0 && df.schema == inferred(sink, "|").schema, s"$jobs jobs, ${df.schema}")
+    val (df, jobs) = TestSpark.jobSitesDuring(Sources.readPipeCsv(spark, sink))
+    assert(jobs.isEmpty && df.schema == inferred(sink, "|").schema,
+      s"${TestSpark.bySite(jobs)}, ${df.schema}")
     // no match: Spark's own error
     intercept[org.apache.spark.sql.AnalysisException](
       Sources.readRawCsv(spark, s"$root/none/*.csv.gz"))

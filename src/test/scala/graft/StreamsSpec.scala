@@ -181,6 +181,35 @@ class StreamsSpec extends AnyFunSuite {
     assert(!Streams.corpusIngestBatch(b2, wh, out, 2L, "doc_id", "text", 5, 4))
   }
 
+  test("corpus ingest: a batch over non-empty indexes runs at most 12 jobs, index reads none") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ingest-jobs").toString
+    val wh = graft.airbnb.Warehouse(spark, s"$root/wh")
+    // every token names its doc, so no two texts share a shingle
+    def docs(ids: Range, salt: String) = ids.map { i =>
+      i.toLong -> (1 to 8).map(j => s"$salt${i}w$j").mkString(" ")
+    }.toDF("doc_id", "text")
+    assert(Streams.corpusIngestBatch(docs(1 to 40, "first"), wh, s"$root/out", 0L,
+      "doc_id", "text", 5, 4))
+    // batch 1 repeats five batch-0 texts verbatim and brings new ones
+    val b1 = docs(1 to 5, "first").withColumn("doc_id", $"doc_id" + 100L)
+      .unionByName(docs(41 to 80, "second"))
+    val (wrote, sites) = TestSpark.jobSitesDuring(Streams.corpusIngestBatch(b1, wh,
+      s"$root/out", 1L, "doc_id", "text", 5, 4))
+    assert(wrote)
+    assert(sites.size <= 12, TestSpark.bySite(sites))
+    val accepted = Streams.readCommitted(spark, s"$root/out")
+      .filter($"doc_id" > 40L).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(accepted == (41L to 80L).toSet)
+    // the index writes left their schema cached: reads plan with no job and
+    // the schema footer inference gives, batch_id typed from the dir names
+    Seq("fp_index", "band_index").foreach { t =>
+      val (cached, readJobs) = TestSpark.jobSitesDuring(wh.read(t).schema)
+      assert(readJobs.isEmpty, s"$t: ${TestSpark.bySite(readJobs)}")
+      graft.airbnb.Warehouse.schemaCache.remove(s"$root/wh/$t")
+      assert(cached == wh.read(t).schema, t)
+    }
+  }
+
   test("streaming substring gate drops span-sharing docs and survives crash-replay") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val src = java.nio.file.Files.createTempDirectory("graft-sgate-src")

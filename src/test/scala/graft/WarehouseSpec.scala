@@ -1,7 +1,7 @@
 package graft
 
 import graft.airbnb.Warehouse
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 class WarehouseSpec extends AnyFunSuite {
@@ -375,8 +375,8 @@ class WarehouseSpec extends AnyFunSuite {
     wh.write("by_flag", df, partitionBy = Seq("flag"))
     wh.append("appended", df, partitionBy = Seq("year"))
     Seq("by_year", "by_flag", "appended").foreach { t =>
-      val (cached, jobs) = TestSpark.jobsDuring(wh.read(t).schema)
-      assert(jobs == 0, s"$t: reading fired $jobs jobs")
+      val (cached, jobs) = TestSpark.jobSitesDuring(wh.read(t).schema)
+      assert(jobs.isEmpty, s"$t: reading fired ${TestSpark.bySite(jobs)}")
       val rows = wh.read(t).orderBy("id").collect().toSeq
       Warehouse.schemaCache.remove(s"$root/$t")
       val fresh = wh.read(t)
@@ -386,6 +386,36 @@ class WarehouseSpec extends AnyFunSuite {
     // partition-value inference stays the read contract: a boolean
     // partition column reads back as string
     assert(wh.read("by_flag").schema("flag").dataType == org.apache.spark.sql.types.StringType)
+  }
+
+  test("a partition write whose data columns differ from the table's is refused") {
+    val root = java.nio.file.Files.createTempDirectory("wh-pcols").toString
+    val wh = Warehouse(spark, root)
+    wh.writePartition("t", "batch_id", 0L, Seq((1L, "a")).toDF("id", "v"))
+    val table = wh.read("t").schema
+    val other = Seq((2L, 3)).toDF("id", "w")
+    val ex = intercept[IllegalArgumentException] {
+      wh.writePartition("t", "batch_id", 1L, other)
+    }
+    assert(ex.getMessage.contains("differs from the table's"), ex.getMessage)
+    val ex2 = intercept[IllegalArgumentException] {
+      wh.writePartitions("t", "batch_id", other.withColumn("batch_id", lit(1L)))
+    }
+    assert(ex2.getMessage.contains("differs from the table's"), ex2.getMessage)
+    assert(Seq("t/batch_id=1", "t__ptmp_batch_id=1", "t__ptmp_multi")
+      .forall(d => !new java.io.File(s"$root/$d").exists()))
+    assert(wh.read("t").schema == table)
+    // rewriting the table's only partition may change its columns
+    wh.writePartition("t", "batch_id", 0L, other)
+    assert(wh.read("t").columns.toSeq == Seq("id", "w", "batch_id"))
+    // a schema inferred from the footers holds later writes the same way
+    Warehouse.schemaCache.remove(s"$root/t")
+    assert(wh.read("t").columns.toSeq == Seq("id", "w", "batch_id"))
+    intercept[IllegalArgumentException] {
+      wh.writePartition("t", "batch_id", 1L, Seq((4L, "x")).toDF("id", "v"))
+    }
+    wh.writePartition("t", "batch_id", 1L, Seq((4L, 5)).toDF("id", "w"))
+    assert(wh.read("t").count() == 2)
   }
 
   test("J9 catalog introspection replaces sys.tables/sys.columns queries") {
