@@ -771,55 +771,25 @@ object Dedup {
     */
   def semDedup(df: DataFrame, idCol: String, embCol: String, k: Int,
                passes: Int, threshold: Double): DataFrame = {
-    import graft.functions.VectorFns
     // assignmentsQ keeps the quantized vector: everything up to the pair
     // join is map-side off one scan — no id-keyed re-join of the corpus.
-    // The assigned frame feeds THREE consumers (a-side, b-side, the final
-    // anti-join), each of which otherwise re-runs the scan + quantize +
+    // The assigned frame feeds THREE consumers (both pair-join sides, the
+    // final anti-join), each of which otherwise re-runs the scan + quantize +
     // CellDistsQ assign as its own serial map stage (round 22 probe: three
     // ~230 ms 1-task stages per run at sf0.1 — the fixture scan is one row
     // group). Checkpoint it once — the method-matrix shared-base idiom; at
     // scale this is the SemDeDup assignment table every implementation
     // materializes (it is the index), and the eager form is required: AQE
-    // submits the a/b exchange jobs concurrently, so a lazy cache races
-    // its own fill (the r21 containment A/B, commit 6eca6de).
-    val m = graft.Materialize.eager(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u")))))
-    val a = m.select(col(idCol).as("a_id"), col("cluster"),
-      col("dist").as("a_dist"), col("__u").as("ae"), col("__n").as("an"))
-    val b = m.select(col(idCol).as("b_id"), col("cluster"),
-      col("dist").as("b_dist"), col("__u").as("be"), col("__n").as("bn"))
-    // Salt the cell self-join: with k below the core count (toy fixtures,
-    // coarse clusterings) a bare cluster key parks each cell's O(|cell|²)
-    // cosine work on ONE task. The b side shards by id, the a side
-    // replicates per shard — same pairs, `pairSalt`× the (tiny) a-side
-    // rows, parallelism k·pairSalt. At production k (paper-scale: tens of
-    // thousands of cells) the salt is a harmless constant. The shard key
-    // hashes the id (not a raw modulus): hash() is total over any id type,
-    // where pmod(id, n) on a string/UUID id would fail the implicit cast
-    // under ANSI or null out and silently drop every b-side row.
-    val pairSalt = 8
-    // Explicit-width pin on the salted pair join (round 22 — the
-    // contrastiveTriplets/knnGraphWith r21 fix applied to the operator it
-    // was copied from): without it the streamed side inherits the
-    // unsplittable scan's partitioning and ONE task computes every cell's
-    // |cell|² cosines (FixedCostProbe: a 908 ms 1-task stage inside
-    // q_dedup_semantic's 1.5 s execute). Hash-partitioning on exactly the
-    // join keys is free at scale (it IS the join's required distribution);
-    // the explicit count survives AQE's bytes-based coalescer, which would
-    // otherwise collapse the tiny-on-the-wire quantized vectors back to
-    // one task.
-    val aS = a.withColumn("__salt", explode(lit((0 until pairSalt).toArray)))
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("cluster"), col("__salt"))
-    val bS = b.withColumn("__salt", pmod(hash(col("b_id")), lit(pairSalt)))
-    val dropped = aS.join(bS, Seq("cluster", "__salt")).filter(col("a_id") < col("b_id"))
-      .withColumn("cos",
-        VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")))
-      .filter(round(col("cos"), 6) >= threshold)
-      .select(when(col("a_dist") < col("b_dist") ||
-          (col("a_dist") === col("b_dist") && col("a_id") > col("b_id")),
-          col("a_id")).otherwise(col("b_id")).as("__drop_id"))
+    // submits the two sides' exchange jobs concurrently, so a lazy cache
+    // races its own fill (the r21 containment A/B, commit 6eca6de).
+    val m = graft.Materialize.eager(Similarity.withQNorm(
+      KMeans.assignmentsQ(df, idCol, embCol, k, passes)))
+    // `dist` rides the pair join as l_dist / r_dist: the drop-rule key
+    val dropped = Similarity.cellPairs(m, idCol)
+      .filter(col("l") < col("r") && col("cos") >= threshold)
+      .select(when(col("l_dist") < col("r_dist") ||
+          (col("l_dist") === col("r_dist") && col("l") > col("r")),
+          col("l")).otherwise(col("r")).as("__drop_id"))
       .distinct()
     m.join(dropped, col(idCol) === col("__drop_id"), "left_anti")
       .select(col(idCol), col("cluster"), col("dist"))

@@ -19,6 +19,13 @@ import org.apache.spark.sql.types._
   * the DuckDB oracles rank the same values; float IVF and the exact re-rank
   * legs use the double DotFloat kernel ([[dotFast]]).
   *
+  * Each building block has one implementation: one within-cell self-pair
+  * join ([[cellPairs]]) under SemDeDup, the curve row, contrastive mining
+  * and the k-NN graph build; one top-k tail ([[rankTopK]]) under every
+  * ranked answer, ranking by (round(similarity, 9) DESC, c_id) as the
+  * oracles do; one quantized side ([[quantizedSide]]) and one ADC table
+  * and sum ([[adcLut]], [[adcDot]]).
+  *
   * Scale design: the query side is broadcast (top-k against a fixed probe set
   * never shuffles the 100 TB candidate side); the LSH variant turns O(Q·N)
   * scoring into a bucket-equi-join, and the bucket id doubles as a write
@@ -59,8 +66,9 @@ object Similarity {
     * @return (q_id, c_id, similarity, rank), rank 1..k per query
     */
   def cosineTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
-    rankQuantized(quantizedSide(candidates, "c_id", "ce", "__cu", "__cn")
-      .crossJoin(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn"))), k)
+    rankTopK(quantizedSide(candidates, "c_id", "ce", "__cu", "__cn")
+      .crossJoin(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn"))),
+      qcos("__qu", "__qn", "__cu", "__cn"), k)
 
   /** LSH-bucketed ANN top-k: each side's quantized vector gets its
     * `nBits`-bit sign-projection bucket ([[VectorFns.lshBucketQ]]), and
@@ -71,28 +79,92 @@ object Similarity {
   def lshTopK(queries: DataFrame, candidates: DataFrame, nBits: Int, k: Int): DataFrame = {
     def bucketed(df: DataFrame, id: String, emb: String, u: String, n: String) =
       quantizedSide(df, id, emb, u, n).withColumn("bucket", VectorFns.lshBucketQ(col(u), nBits))
-    rankQuantized(bucketed(candidates, "c_id", "ce", "__cu", "__cn")
-      .join(broadcast(bucketed(queries, "q_id", "qe", "__qu", "__qn")), Seq("bucket")), k)
+    rankTopK(bucketed(candidates, "c_id", "ce", "__cu", "__cn")
+      .join(broadcast(bucketed(queries, "q_id", "qe", "__qu", "__qn")), Seq("bucket")),
+      qcos("__qu", "__qn", "__cu", "__cn"), k)
   }
+
+  /** The norm of a [[VectorFns.quantize]]d vector column. */
+  private def qnorm(u: String): Column = sqrt(VectorFns.dotQDouble(col(u), col(u)))
+
+  /** The unrounded cosine of two quantized vectors `a`, `b` over their
+    * norm columns `an`, `bn`. */
+  private def qcos(a: String, an: String, b: String, bn: String): Column =
+    VectorFns.dotQDouble(col(a), col(b)) / (col(an) * col(bn))
 
   /** `df`'s `id` with its vector `emb` quantized as `u` and that vector's
     * norm as `n` — one quantize and one self-dot per row. */
   private def quantizedSide(df: DataFrame, id: String, emb: String, u: String,
                             n: String): DataFrame =
-    df.select(col(id), VectorFns.quantize(col(emb)).as(u))
-      .withColumn(n, sqrt(VectorFns.dotQDouble(col(u), col(u))))
+    df.select(col(id), VectorFns.quantize(col(emb)).as(u)).withColumn(n, qnorm(u))
 
-  /** The scoring tail of [[cosineTopK]], [[lshTopK]] and the matryoshka
-    * re-rank, over (q_id, __qu, __qn) × (c_id, __cu, __cn) pairs. */
-  private def rankQuantized(pairs: DataFrame, k: Int): DataFrame = {
+  /** An assigned frame (quantized `__u`, e.g. from [[KMeans.assignWith]])
+    * with that vector's norm as `__n`: the input [[cellPairs]] takes. */
+  private[graft] def withQNorm(assigned: DataFrame): DataFrame =
+    assigned.withColumn("__n", qnorm("__u"))
+
+  /** The one top-k tail of the search operators, over (q_id, c_id, …)
+    * pairs: self pairs dropped, `similarity` computed, and per q_id the
+    * first `k` by (round(similarity, 9) DESC, c_id) — the order every
+    * DuckDB oracle replays. Ranking the unrounded double instead could flip
+    * two candidates whose cosines differ only past 1e-9. Returns (q_id,
+    * c_id, similarity, rank), rank 1..k.
+    */
+  private def rankTopK(pairs: DataFrame, similarity: Column, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(round(col("similarity"), 9).desc, col("c_id"))
     pairs.filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity",
-        VectorFns.dotQDouble(col("__qu"), col("__cu")) / (col("__qn") * col("__cn")))
+      .withColumn("similarity", similarity)
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
+  }
+
+  /** How many shards the right side of a cell pair join splits into. */
+  private val PairSalt = 8
+
+  /** Every directed pair `l ≠ r` of an assigned frame's rows that share a
+    * `cluster`, with `cos` = round(quantized cosine, 6) — the within-cell
+    * search under SemDeDup, the threshold curve, contrastive mining and
+    * the k-NN graph build. `m` holds (idCol, cluster, __u, __n) — see
+    * [[withQNorm]] — and any other column rides through as `l_<col>` and
+    * `r_<col>`. Returns (l, r, cluster, cos, l_…, r_…); undirected callers
+    * keep `l < r` themselves.
+    *
+    * Salting: with fewer cells than cores a bare cluster key parks each
+    * cell's O(|cell|²) cosines on one task. The right side shards by
+    * pmod(hash(id), 8) — hash() is total over any id type, where a raw
+    * pmod(id, 8) on a string or UUID id would fail the cast under ANSI or
+    * null out and drop every right row — and the left side is replicated
+    * over the 8 salts: the same pairs, 8× the left rows, k·8 parallelism.
+    * At production k (tens of thousands of cells) the salt is a harmless
+    * constant.
+    *
+    * Width pin (round 22): the replicated side is hash-repartitioned on
+    * exactly the join keys at the session's shuffle width. Without it the
+    * streamed side inherits the unsplittable scan's partitioning and one
+    * task computes every cell's |cell|² cosines (FixedCostProbe: a 908 ms
+    * 1-task stage inside q_dedup_semantic's 1.5 s execute). The explicit
+    * count survives AQE's bytes-based coalescer, which would otherwise
+    * collapse the tiny-on-the-wire quantized vectors back to a few tasks
+    * while each joined row pays a full-dimension dot product. Under a
+    * shuffle join at scale this exchange is the join's required
+    * distribution, so it costs no extra hop. PlanLintSpec pins the pin.
+    */
+  private[graft] def cellPairs(m: DataFrame, idCol: String): DataFrame = {
+    val riders = m.columns.filterNot(Set(idCol, "cluster", "__u", "__n"))
+    def side(s: String) = m.select(Seq(col(idCol).as(s), col("cluster"),
+      col("__u").as(s"__${s}u"), col("__n").as(s"__${s}n")) ++
+      riders.map(c => col(c).as(s"${s}_$c")): _*)
+    val l = side("l").withColumn("__salt", explode(lit((0 until PairSalt).toArray)))
+      .repartition(m.sparkSession.sessionState.conf.numShufflePartitions,
+        col("cluster"), col("__salt"))
+    val r = side("r").withColumn("__salt", pmod(hash(col("r")), lit(PairSalt)))
+    l.join(r, Seq("cluster", "__salt"))
+      .filter(col("l") =!= col("r"))
+      .withColumn("cos", round(qcos("__lu", "__ln", "__ru", "__rn"), 6))
+      .select(Seq(col("l"), col("r"), col("cluster"), col("cos")) ++
+        riders.flatMap(c => Seq(col(s"l_$c"), col(s"r_$c"))): _*)
   }
 
   /** IVF (inverted-file) ANN: a deterministic coarse quantizer — centroids
@@ -189,13 +261,8 @@ object Similarity {
       .withColumn("cell", explode(
         graft.functions.VectorFns.bottomKIndices(col("qd"), nProbe)))
       .drop("qd")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    withNorm(c, "ce", "cn").join(broadcast(withNorm(qq, "qe", "qn")), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
+    rankTopK(withNorm(c, "ce", "cn").join(broadcast(withNorm(qq, "qe", "qn")), Seq("cell")),
+      cosinePre("qe", "ce", col("qn"), col("cn")), k)
   }
 
   /** FIXED-POINT PQ training — the k-means discipline applied to codebook
@@ -304,21 +371,16 @@ object Similarity {
   }
 
   /** Exact cosine re-rank of a (q_id, c_id) shortlist — the shared tail of
-    * [[pqTopKUnits]] and [[ivfpqTopKWithIndex]]: true embeddings join in
-    * for the shortlist rows alone, ranked per query by (similarity DESC,
-    * c_id). Returns (q_id, c_id, similarity, rank), rank 1..k.
+    * [[pqTopKUnits]], [[ivfpqTopKWithIndex]] and [[graphTopKPQWithIndex]]:
+    * true embeddings join in for the shortlist rows alone, ranked by
+    * [[rankTopK]]. Returns (q_id, c_id, similarity, rank), rank 1..k.
     */
   private def rerankShortlist(shortlist: DataFrame, queries: DataFrame,
-                              candidates: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("similarity").desc, col("c_id"))
-    shortlist
-      .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
-      .join(broadcast(withNorm(queries, "qe", "qn")), Seq("q_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
-  }
+                              candidates: DataFrame, k: Int): DataFrame =
+    rankTopK(shortlist.select(col("q_id"), col("c_id"))
+        .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
+        .join(broadcast(withNorm(queries, "qe", "qn")), Seq("q_id")),
+      cosinePre("qe", "ce", col("qn"), col("cn")), k)
 
   // ---------------------------------------------------------------- IVF-PQ
 
@@ -545,49 +607,22 @@ object Similarity {
     * complete (anchor, pos, neg) triplet.
     *
     * Same scale spine as [[graft.operators.Dedup.semDedup]]: the k-means
-    * cell bounds the pair search, the pair join is salted, the cosine is
-    * the exact decimal quantized dot rounded to 6 (cross-engine-total
-    * ordering with id tie-breaks), and both top-1 selections run on the
-    * bounded-heap TopKPerGroup operator over ONE shared directed-pair
-    * subplan — no all-pairs anywhere.
+    * cell bounds the pair search ([[cellPairs]]: salted, cosine rounded to
+    * 6 for cross-engine-total ordering with id tie-breaks), and both top-1
+    * selections ride ONE pass over the directed pairs — no all-pairs
+    * anywhere.
     */
   def contrastiveTriplets(df: DataFrame, idCol: String, embCol: String,
                           k: Int, passes: Int, posThreshold: Double,
                           negLo: Double, negHi: Double): DataFrame = {
     require(negLo < negHi && negHi <= posThreshold,
       s"need negLo < negHi <= posThreshold: $negLo, $negHi, $posThreshold")
-    import graft.functions.VectorFns
     // assigned frame checkpointed once for its two pair-join consumers —
     // the semDedup round-22 fix: each side's exchange map otherwise re-runs
     // the scan + quantize + assign kernel as its own serial stage (the
     // fixture scan is one row group); at scale this is the materialized
     // assignment table the pair search indexes anyway.
-    val m = graft.Materialize.eager(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u")))))
-    val a = m.select(col(idCol).as("anchor"), col("cluster"),
-      col("__u").as("ae"), col("__n").as("an"))
-    val b = m.select(col(idCol).as("other"), col("cluster"),
-      col("__u").as("be"), col("__n").as("bn"))
-    // Shard key hashes the id (not a raw modulus): total over any id
-    // type, where pmod(id, n) on a string/UUID id would fail the cast
-    // under ANSI or null out, silently dropping every b-side row.
-    val pairSalt = 8
-    // The streamed side's partitioning otherwise inherits the upstream
-    // scan's (one small parquet file → ONE task computing every cell's
-    // |cell|² cosines — measured 1.34 s of a 2.4 s wall). Hash-partition
-    // on exactly the join keys: under a broadcast join it spreads the
-    // pair compute across the (cluster × salt) keys; under a shuffle join
-    // at scale it IS the join's required distribution (no extra hop).
-    // EXPLICIT partition count: a column-only repartition lets AQE's
-    // bytes-based coalescer collapse the exchange (quantized vectors are
-    // tiny on the wire but each joined row pays a full-dimension dot
-    // product — measured 3 tasks carrying ~1M cosines); an explicit count
-    // is preserved by AQE, so the pair compute keeps the session's
-    // configured width.
-    val aS = a.withColumn("__salt", explode(lit((0 until pairSalt).toArray)))
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("cluster"), col("__salt"))
-    val bS = b.withColumn("__salt", pmod(hash(col("other")), lit(pairSalt)))
+    val m = graft.Materialize.eager(withQNorm(KMeans.assignmentsQ(df, idCol, embCol, k, passes)))
     // The pair subplan (scan → quantize → salted cell join → cosine) used
     // to feed two TopKPerGroup legs — executing the shuffle-heavy join
     // TWICE (no ReusedExchange spans the differing filters). A round-16
@@ -600,11 +635,8 @@ object Similarity {
     // straight into a partially-aggregating shuffle (≤ 2 small structs
     // per anchor per partition on the wire) and no pair row is ever
     // stored or recomputed.
-    val pairs = aS.join(bS, Seq("cluster", "__salt"))
-      .filter(col("anchor") =!= col("other"))
-      .withColumn("cos",
-        round(VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")), 6))
-      .select(col("anchor"), col("other"), col("cos"))
+    val pairs = cellPairs(m, idCol)
+      .select(col("l").as("anchor"), col("r").as("other"), col("cos"))
     val best = pairs.groupBy(col("anchor"))
       .agg(
         min(when(col("cos") >= posThreshold,
@@ -627,12 +659,11 @@ object Similarity {
     * replays every edge.
     *
     * Scale spine = [[graft.operators.Dedup.semDedup]]: the cell bounds the
-    * pair search, the pair join is salted with an explicit partition
-    * count, and per-node selection is the bounded-heap TopKPerGroup — the
-    * graph build never goes all-pairs. Cell-bounding trades boundary
-    * recall for build cost exactly like IVF's nProbe=1; the beam search
-    * ([[graphTopK]]) re-opens cross-cell reach by walking edges
-    * transitively.
+    * pair search ([[cellPairs]]), and per-node selection is the
+    * bounded-heap TopKPerGroup — the graph build never goes all-pairs.
+    * Cell-bounding trades boundary recall for build cost exactly like
+    * IVF's nProbe=1; the beam search ([[graphTopK]]) re-opens cross-cell
+    * reach by walking edges transitively.
     */
   def knnGraph(df: DataFrame, idCol: String, embCol: String, k: Int,
                passes: Int, degree: Int): DataFrame =
@@ -646,28 +677,13 @@ object Similarity {
   def knnGraphWith(df: DataFrame, idCol: String, embCol: String,
                    cents: Array[Array[Long]], degree: Int): DataFrame = {
     require(degree >= 1, s"degree must be >= 1: $degree")
-    import graft.functions.VectorFns
     // NOT checkpointed (round-22 A/B, rejected): unlike semDedup (three
     // consumers) this assigned frame has two, and the back-to-back probe
     // read job count +1 with wall flat-to-worse on q_ann_graph_topk/merge
     // — the extra materialization action costs what the saved serial
     // assign pass returns.
-    val m = KMeans.assignWith(df, idCol, embCol, cents)
-      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-    val a = m.select(col(idCol).as("node"), col("cluster"),
-      col("__u").as("ae"), col("__n").as("an"))
-    val b = m.select(col(idCol).as("nbr"), col("cluster"),
-      col("__u").as("be"), col("__n").as("bn"))
-    val pairSalt = 8
-    val aS = a.withColumn("__salt", explode(lit((0 until pairSalt).toArray)))
-      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("cluster"), col("__salt"))
-    val bS = b.withColumn("__salt", pmod(hash(col("nbr")), lit(pairSalt)))
-    val pairs = aS.join(bS, Seq("cluster", "__salt"))
-      .filter(col("node") =!= col("nbr"))
-      .withColumn("sim",
-        round(VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")), 6))
-      .select(col("node"), col("nbr"), col("sim"))
+    val pairs = cellPairs(withQNorm(KMeans.assignWith(df, idCol, embCol, cents)), idCol)
+      .select(col("l").as("node"), col("r").as("nbr"), col("cos").as("sim"))
     graft.plans.TopKPerGroup.topK(pairs, Seq("node"),
       Seq(("sim", true), ("nbr", false)), degree)
       .select(col("node"), col("nbr"), col("sim"))
@@ -758,7 +774,8 @@ object Similarity {
       idCol: String, embCol: String, cents: Array[Array[Long]]): DataFrame = {
     def assigned(d: DataFrame) = KMeans.assignWith(d, idCol, embCol, cents)
       .select(col(idCol), col("cluster"), col("__u"))
-    newCandidateEdgesAssigned(assigned(histDf), assigned(batchDf), idCol)
+    newCandidateEdgesAssigned(assigned(histDf), assigned(batchDf), idCol,
+      batchMaterialized = false, touchedCellsHint = None)
   }
 
   /** [[newCandidateEdges]] over PRE-ASSIGNED frames — (idCol, cluster,
@@ -767,13 +784,15 @@ object Similarity {
     * never re-runs the k-means distance kernel (O(corpus·k·dim) map work
     * the r19 soak measured as the gate's dominant residue) — only the
     * batch side assigns, once, at ingest.
+    *
+    * The pair join here is not [[cellPairs]]: it joins two frames (batch
+    * nodes × touched-cell mates, not a frame with itself) and pins the
+    * width of both sides, so sharing the self-pair helper would need a
+    * branch on which caller it serves.
     */
   private def newCandidateEdgesAssigned(histA: DataFrame, batchA: DataFrame,
-      idCol: String, batchMaterialized: Boolean = false,
-      touchedCellsHint: Option[Seq[Long]] = None): DataFrame = {
-    import graft.functions.VectorFns
-    def withNorms(d: DataFrame) =
-      d.withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
+      idCol: String, batchMaterialized: Boolean,
+      touchedCellsHint: Option[Seq[Long]]): DataFrame = {
     // the assigned batch feeds FOUR consumers (touched cells, the mates
     // union, the a-side, and the broadcast's own subplan) — checkpointed
     // once; it is batch-sized, never the corpus.
@@ -782,15 +801,15 @@ object Similarity {
     // a cheap projection over the existing blocks, and a second
     // localCheckpoint would re-materialize the whole batch per merge.
     val bAssign =
-      if (batchMaterialized) withNorms(batchA)
-      else graft.Materialize.eager(withNorms(batchA))
+      if (batchMaterialized) withQNorm(batchA)
+      else graft.Materialize.eager(withQNorm(batchA))
     // history vectors in touched cells only; norms compute AFTER the cell
     // filter, for survivors only. A caller that already knows the batch's
     // cells driver-side (the gate collected them for the partition-pruned
     // read) passes them as an isin LITERAL — no distinct exchange, no
     // broadcast materialization job; otherwise the cells come from a
     // broadcast of the batch's distinct clusters (<= k rows)
-    val hTouched = withNorms(touchedCellsHint match {
+    val hTouched = withQNorm(touchedCellsHint match {
       case Some(cells) => histA.filter(col("cluster").isin(cells: _*))
       case None => histA.join(
         broadcast(bAssign.select(col("cluster")).distinct()), Seq("cluster"))
@@ -800,25 +819,21 @@ object Similarity {
       col("__u").as("ae"), col("__n").as("an"))
     val x = mates.select(col(idCol).as("nbr"), col("cluster"),
       col("__u").as("be"), col("__n").as("bn"))
-    val pairSalt = 8
     val nPart = batchA.sparkSession.sessionState.conf.numShufflePartitions
-    // BOTH join inputs pin the session's partition width on exactly the
-    // join keys (round-22 probe): the planner broadcasts whichever side it
-    // estimates smaller, and the dot-product compute then runs at the
-    // STREAMED side's parallelism — with only bS pinned, the executed plan
-    // read BroadcastHashJoin BuildLeft(bS) streaming the mates union at
-    // scan width (a 390 ms 4-task stage at 32 cores). Under a shuffle join
-    // at scale the (cluster, __salt) exchange is the join's required
-    // distribution, so the pins add no extra hop; the explicit count keeps
-    // AQE's bytes-based coalescer from narrowing the compute-heavy reader.
-    val bS = b.withColumn("__salt", explode(lit((0 until pairSalt).toArray)))
+    // cellPairs' salting, with BOTH join inputs pinned at the session's
+    // width on exactly the join keys (round-22 probe): the planner
+    // broadcasts whichever side it estimates smaller, and the dot-product
+    // compute then runs at the STREAMED side's parallelism — with only bS
+    // pinned, the executed plan read BroadcastHashJoin BuildLeft(bS)
+    // streaming the mates union at scan width (a 390 ms 4-task stage at 32
+    // cores).
+    val bS = b.withColumn("__salt", explode(lit((0 until PairSalt).toArray)))
       .repartition(nPart, col("cluster"), col("__salt"))
-    val xS = x.withColumn("__salt", pmod(hash(col("nbr")), lit(pairSalt)))
+    val xS = x.withColumn("__salt", pmod(hash(col("nbr")), lit(PairSalt)))
       .repartition(nPart, col("cluster"), col("__salt"))
     val batchEdges = bS.join(xS, Seq("cluster", "__salt"))
       .filter(col("node") =!= col("nbr"))
-      .withColumn("sim",
-        round(VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")), 6))
+      .withColumn("sim", round(qcos("ae", "an", "be", "bn"), 6))
       .select(col("node"), col("nbr"), col("sim"), col("cluster"))
     // Both edge directions from ONE pass over the pair join: the previous
     // self-unionByName duplicated the whole batchEdges subtree — the map-
@@ -879,14 +894,17 @@ object Similarity {
     * stores each vector at ingest ([[KMeans.assignWith]]), so the merge never
     * re-runs the k-means distance kernel over history. `histAssigned` may be
     * a superset of the touched cells — the candidate stage re-filters
-    * through the batch-cells broadcast — but feeding it cell-filtered keeps
-    * the scan O(touched).
+    * through the batch cells — but feeding it cell-filtered keeps the scan
+    * O(touched). `batchMaterialized` says `batchAssigned` is already a
+    * checkpoint (no second one is taken); `touchedCellsHint` carries the
+    * batch's cells when the caller holds them driver-side (an isin literal
+    * instead of a broadcast of the batch's distinct cells).
     */
   def mergeKnnGraphTouchedCellsAssigned(oldTouchedCells: DataFrame,
       histAssigned: DataFrame, batchAssigned: DataFrame, idCol: String,
       degree: Int, requireCapped: Boolean = false,
-      batchMaterialized: Boolean = false,
-      touchedCellsHint: Option[Seq[Long]] = None): DataFrame = {
+      batchMaterialized: Boolean,
+      touchedCellsHint: Option[Seq[Long]]): DataFrame = {
     require(degree >= 1, s"degree must be >= 1: $degree")
     val newEdges = newCandidateEdgesAssigned(histAssigned, batchAssigned,
         idCol, batchMaterialized, touchedCellsHint)
@@ -916,10 +934,13 @@ object Similarity {
   def graphTopK(queries: DataFrame, candidates: DataFrame, graph: DataFrame,
                 entryK: Int, beam: Int, hops: Int, k: Int): DataFrame = {
     require(entryK >= 1, s"entryK must be >= 1: $entryK")
-    graphTopKFrom(queries, candidates, graph,
-      c => c.select(col("c_id")).orderBy(col("c_id")).limit(entryK),
-      beam, hops, k)
+    graphTopKFrom(queries, candidates, graph, lowestIds(entryK), beam, hops, k)
   }
+
+  /** The entry convention of [[graphTopK]] and [[graphTopKPQ]]: the
+    * `entryK` lowest `c_id`s of a candidate-side frame. */
+  private def lowestIds(entryK: Int)(c: DataFrame): DataFrame =
+    c.select(col("c_id")).orderBy(col("c_id")).limit(entryK)
 
   /** [[graphTopK]] with a COARSE ENTRY LAYER instead of the lowest-id
     * entry convention — the HNSW-upper-layer / IVF-entry serving shape:
@@ -950,13 +971,8 @@ object Similarity {
                             entrySet: DataFrame => DataFrame,
                             beam: Int, hops: Int, k: Int): DataFrame = {
     require(beam >= 1 && hops >= 0 && k >= 1, s"bad beam=$beam hops=$hops k=$k")
-    import graft.functions.VectorFns
-    val c = candidates.select(col("c_id"),
-        VectorFns.quantize(col("ce")).as("__u"))
-      .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-    val q = queries.select(col("q_id"),
-        VectorFns.quantize(col("qe")).as("__qu"))
-      .withColumn("__qn", sqrt(VectorFns.dotQDouble(col("__qu"), col("__qu"))))
+    val c = quantizedSide(candidates, "c_id", "ce", "__u", "__n")
+    val q = quantizedSide(queries, "q_id", "qe", "__qu", "__qn")
     // (q_id, c_id) -> + exact quantized cosine; queries broadcast, the
     // candidate-vector join shuffles ids only. Self-exclusion (q_id <>
     // c_id) is the in-corpus serving contract every sibling keeps
@@ -966,8 +982,7 @@ object Similarity {
     def score(cand: DataFrame): DataFrame =
       cand.filter(col("q_id") =!= col("c_id"))
         .join(c, "c_id").join(broadcast(q), "q_id")
-        .withColumn("similarity",
-          round(VectorFns.dotQDouble(col("__qu"), col("__u")) / (col("__qn") * col("__n")), 6))
+        .withColumn("similarity", round(qcos("__qu", "__qn", "__u", "__n"), 6))
         .select(col("q_id"), col("c_id"), col("similarity"))
     val beamDf = beamSearch(q.select(col("q_id")), graph, entrySet(c),
       score, beam, hops)
@@ -1028,9 +1043,10 @@ object Similarity {
       if (h == 0 && hops > 0)
         graft.Materialize.eager(df)
       else df
-    var beamDf = ckptIfMoreHops(graft.plans.TopKPerGroup.topK(
-        score(qKeys.crossJoin(broadcast(entries))),
-        Seq("q_id"), Seq(("similarity", true), ("c_id", false)), beam), 0)
+    // the best `beam` scored candidates per query, on the bounded heap
+    def keepBeam(cand: DataFrame): DataFrame = graft.plans.TopKPerGroup.topK(
+      score(cand), Seq("q_id"), Seq(("similarity", true), ("c_id", false)), beam)
+    var beamDf = ckptIfMoreHops(keepBeam(qKeys.crossJoin(broadcast(entries))), 0)
     // awaited unconditionally (hops = 0 included) so the checkpointed graph
     // is always owned by the caller's scope before this call returns
     val g = graft.Materialize.own(scala.concurrent.Await.result(gFut,
@@ -1060,9 +1076,7 @@ object Similarity {
         .repartition(qKeys.sparkSession.sessionState.conf.numShufflePartitions,
           col("q_id"))
         .distinct()
-      beamDf = ckptIfMoreHops(
-        graft.plans.TopKPerGroup.topK(score(cand),
-            Seq("q_id"), Seq(("similarity", true), ("c_id", false)), beam), h + 1)
+      beamDf = ckptIfMoreHops(keepBeam(cand), h + 1)
       h += 1
     }
     beamDf
@@ -1085,13 +1099,11 @@ object Similarity {
     */
   def graphTopKPQ(queries: DataFrame, candidates: DataFrame, graph: DataFrame,
                   books: Array[Array[Array[Long]]], entryK: Int, beam: Int,
-                  hops: Int, k: Int): DataFrame = {
-    import graft.functions.VectorFns
+                  hops: Int, k: Int): DataFrame =
     graphTopKPQWithIndex(queries, candidates, graph,
       candidates.select(col("c_id"),
         pqEncodeUnits(VectorFns.quantize(col("ce")), books).as("codes")),
       books, entryK, beam, hops, k)
-  }
 
   /** [[graphTopKPQ]] against a pre-built (typically warehouse- or
     * fixture-persisted) (c_id, codes) table — the serving split: the walk
@@ -1105,46 +1117,19 @@ object Similarity {
                            beam: Int, hops: Int, k: Int): DataFrame = {
     require(entryK >= 1 && beam >= 1 && hops >= 0 && k >= 1,
       s"bad entryK=$entryK beam=$beam hops=$hops k=$k")
-    import graft.functions.VectorFns
-    val m = books.length
-    val kCent = books(0).length
-    val sub = books(0)(0).length
     // the PQ-coded candidate table feeds every hop — materialized once
     // (a ~free checkpoint when the caller passes a persisted-index read)
     val cIdx = graft.Materialize.eager(codesIdx.select(col("c_id"), col("codes")))
-    val lutCol = concat((0 until m).map { j =>
-      kernelCol(graft.plans.CellDotsQ(
-        kernelExpr(slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),
-        books(j).toIndexedSeq.map(_.toIndexedSeq)))
-    }: _*)
-    val q = queries.select(col("q_id"), col("qe")).withColumn("lut", lutCol)
-      .select(col("q_id"), col("lut"))
-    val adcTerms = (0 until m).map(j =>
-      element_at(col("lut"),
-        (col("codes").getItem(j) + lit(j.toLong * kCent) + 1L).cast(IntegerType)))
+    val q = queries.select(col("q_id"), adcLut(books).as("lut"))
     def score(cand: DataFrame): DataFrame =
       cand.filter(col("q_id") =!= col("c_id"))
         .join(cIdx, "c_id").join(broadcast(q), "q_id")
-        .withColumn("similarity", adcTerms.reduce(_ + _))
+        .withColumn("similarity", adcDot(books))
         .select(col("q_id"), col("c_id"), col("similarity"))
-    val entries = cIdx.select(col("c_id")).orderBy(col("c_id")).limit(entryK)
-    val beamDf = beamSearch(queries.select(col("q_id")), graph, entries,
+    val beamDf = beamSearch(queries.select(col("q_id")), graph, lowestIds(entryK)(cIdx),
       score, beam, hops)
-    // exact cosine re-rank of the final beam only — the DiskANN
-    // discipline. Rank on the cosine ROUNDED to 9 decimals with the c_id
-    // tie-break (the round-6 cross-engine discipline graphTopK already
-    // follows): the SQL oracles rank by round(cos, 9) DESC, and an
-    // unrounded float order could rank-flip candidates whose cosines
-    // differ only past 1e-9 (ADVICE r17).
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("similarity"), 9).desc, col("c_id"))
-    beamDf.select(col("q_id"), col("c_id"))
-      .join(withNorm(candidates, "ce", "cn"), Seq("c_id"))
-      .join(broadcast(withNorm(queries, "qe", "qn")), Seq("q_id"))
-      .withColumn("similarity", cosinePre("qe", "ce", col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("similarity"), col("rank"))
+    // exact cosine re-rank of the final beam only — the DiskANN discipline
+    rerankShortlist(beamDf, queries, candidates, k)
   }
 
   /** MATRYOSHKA (MRL) serving: a PREFIX-dimension IVF shortlist followed
@@ -1173,7 +1158,6 @@ object Similarity {
                           nProbe: Int = 1): DataFrame = {
     require(prefixDim >= 1 && shortlist >= 1 && k >= 1,
       s"bad prefixDim=$prefixDim shortlist=$shortlist k=$k")
-    import graft.functions.VectorFns
     // multi-probe entry: each query probes its nProbe nearest cells (ties
     // to the lowest index — replayable as the kmeans distance CTE's
     // row_number); a candidate lives in exactly one cell, so probe lists
@@ -1181,18 +1165,17 @@ object Similarity {
     val qAssign = KMeans.assignProbes(
         queries.select(col("q_id"), slice(col("qe"), 1, prefixDim).as("__pe")),
         "q_id", "__pe", cents, nProbe)
-      .withColumn("__qn", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-      .select(col("q_id"), col("cluster"), col("__u").as("__qu"), col("__qn"))
+      .select(col("q_id"), col("cluster"), col("__u").as("__qu"), qnorm("__u").as("__qn"))
     val shortDf = graft.plans.TopKPerGroup.topK(
       prefixIdx.join(broadcast(qAssign), Seq("cluster"))
         .filter(col("q_id") =!= col("c_id"))
-        .withColumn("psim", round(
-          VectorFns.dotQDouble(col("__qu"), col("tv")) / (col("__qn") * col("tn")), 9))
+        .withColumn("psim", round(qcos("__qu", "__qn", "tv", "tn"), 9))
         .select(col("q_id"), col("c_id"), col("psim")),
       Seq("q_id"), Seq(("psim", true), ("c_id", false)), shortlist)
     // full-vector exact re-rank of the shortlist: cosineTopK's scoring
-    rankQuantized(shortDf.select(col("q_id"), col("c_id"))
+    rankTopK(shortDf.select(col("q_id"), col("c_id"))
       .join(quantizedSide(candidates, "c_id", "ce", "__cu", "__cn"), Seq("c_id"))
-      .join(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn")), Seq("q_id")), k)
+      .join(broadcast(quantizedSide(queries, "q_id", "qe", "__qu", "__qn")), Seq("q_id")),
+      qcos("__qu", "__qn", "__cu", "__cn"), k)
   }
 }

@@ -1473,29 +1473,16 @@ object VectorQueries {
     // cell pair join as the dedup itself; identical rounded doubles on
     // both engines make the banding engine-exact.
     Q("q_dedup_semantic_curve",
-      (s, dir) => {
-        val m = graft.operators.KMeans.assignmentsQ(
-            t(s, dir, "embeddings"), "vec_id", "embedding", k = 4, passes = 2)
-          .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-        val a = m.select(col("vec_id").as("a_id"), col("cluster"),
-          col("__u").as("ae"), col("__n").as("an"))
-        val b = m.select(col("vec_id").as("b_id"), col("cluster"),
-          col("__u").as("be"), col("__n").as("bn"))
-        // same explicit-width pin as Dedup.semDedup's pair join (round 22):
-        // without it one task computes every cell's |cell|² cosines
-        val aS = a.withColumn("__salt", explode(lit((0 until 8).toArray)))
-          .repartition(s.sessionState.conf.numShufflePartitions,
-            col("cluster"), col("__salt"))
-        val bS = b.withColumn("__salt", pmod(hash(col("b_id")), lit(8)))
-        aS.join(bS, Seq("cluster", "__salt")).filter(col("a_id") < col("b_id"))
-          .withColumn("cos",
-            round(VectorFns.dotQDouble(col("ae"), col("be")) / (col("an") * col("bn")), 6))
-          .filter(col("cos") >= 0.0)
+      (s, dir) =>
+        graft.operators.Similarity.cellPairs(graft.operators.Similarity.withQNorm(
+            graft.operators.KMeans.assignmentsQ(
+              t(s, dir, "embeddings"), "vec_id", "embedding", k = 4, passes = 2)),
+            "vec_id")
+          .filter(col("l") < col("r") && col("cos") >= 0.0)
           .withColumn("band", floor(col("cos") * 20).cast(LongType))
           .groupBy(col("band"))
           .agg(count(lit(1)).cast(LongType).as("n_pairs"))
-          .orderBy(col("band"))
-      },
+          .orderBy(col("band")),
       Some(s"""
         WITH ${kmeansCtes()},
         qn AS (SELECT vec_id, embedding,

@@ -138,6 +138,28 @@ class MaterializeSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("spark.graft.* conf key in main code:\n", "\n", ""))
   }
 
+  test("lint: salt-replicated pair joins only in Similarity.cellPairs and the kNN merge") {
+    // The within-cell self-pair join has one implementation; the kNN
+    // merge's batch × mates join (newCandidateEdgesAssigned) is the one
+    // other salted join. A new copy of the salt replication goes through
+    // cellPairs instead.
+    val allowed = Set("cellPairs", "newCandidateEdgesAssigned")
+    val memberDef = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val hits = mainSources.flatMap { case (rel, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if line.replaceAll("//.*$", "").contains("explode(lit((0 until") &&
+            !line.trim.startsWith("*") =>
+          val owner = lines.take(i + 1).reverseIterator
+            .flatMap(l => memberDef.findFirstMatchIn(l).map(_.group(1))).nextOption()
+          (rel, i, owner)
+      }.collect {
+        case (rel, i, owner) if !(rel == "graft/operators/Similarity.scala" &&
+            owner.exists(allowed)) => s"$rel:${i + 1} in ${owner.getOrElse("?")}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("salted pair join outside cellPairs:\n", "\n", ""))
+  }
+
   test("lint: no scaladoc block stacked directly on another in main code") {
     // Scaladoc attaches only the block nearest a def: a block right above
     // another one documents nothing, and its def goes undocumented.

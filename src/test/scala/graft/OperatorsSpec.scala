@@ -666,6 +666,38 @@ class OperatorsSpec extends AnyFunSuite {
     assert(recall > 0.3, s"recall=$recall")
   }
 
+  test("IVF and PQ re-ranks order near-tied cosines by round(cos, 9), then c_id") {
+    // Two candidates whose double cosines to the query agree to 9 decimals
+    // but differ in the last bits (one float ulp on one component). The
+    // oracles rank by (round(cos, 9) DESC, c_id), so the lower c_id comes
+    // first although the higher c_id holds the higher unrounded cosine.
+    val rnd = new scala.util.Random(11)
+    val trials = (0 until 64).map { t =>
+      val q = Array.fill(8)(rnd.nextGaussian().toFloat)
+      val a = Array.fill(8)(rnd.nextGaussian().toFloat)
+      (t, q, a, a.updated(0, Math.nextUp(a(0))))
+    }.toDF("t", "q", "a", "b")
+    val tie = Seq("q", "a", "b").foldLeft(trials)((d, v) => Similarity.withNorm(d, v, s"${v}n"))
+      .withColumn("ca", Similarity.cosinePre("q", "a", $"qn", $"an"))
+      .withColumn("cb", Similarity.cosinePre("q", "b", $"qn", $"bn"))
+      .filter(round($"ca", 9) === round($"cb", 9) && $"ca" =!= $"cb")
+      .orderBy("t").select("q", "a", "b", "ca", "cb").head()
+    val (lower, higher) =
+      if (tie.getDouble(3) < tie.getDouble(4)) (tie.getSeq[Float](1), tie.getSeq[Float](2))
+      else (tie.getSeq[Float](2), tie.getSeq[Float](1))
+    val q = Seq((0L, tie.getSeq[Float](0))).toDF("q_id", "qe")
+    val c = Seq((1L, lower), (2L, higher)).toDF("c_id", "ce")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("rank").collect().map(_.getLong(1)).toSeq
+    // full probe: one centroid holds both candidates
+    assert(ranked(Similarity.ivfTopKWith(q, c, Array(Array.fill(8)(0.0)), 1, 2)) ==
+      Seq(1L, 2L))
+    // full re-rank: the shortlist keeps the whole corpus
+    val books = Similarity.pqTrainUnits(c.select($"c_id", $"ce".as("embedding")),
+      "c_id", "embedding", m = 2, kCent = 2, iters = 1)
+    assert(ranked(Similarity.pqTopKUnits(q, c, books, 2, rerank = 2)) == Seq(1L, 2L))
+  }
+
   test("IVF-PQ units: shapes, determinism, full-probe full-rerank equals brute force") {
     val e = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val q = e.filter($"vec_id" < 5)
@@ -1001,6 +1033,13 @@ class OperatorsSpec extends AnyFunSuite {
         k = 2, passes = 1, threshold = 1.1)
       .count()
     assert(all == 5L)
+    // the same vectors under string ids "v0".."v4": the pair join's
+    // hash(id) salt is total over any id type, so the survivors match
+    val byName = graft.operators.Dedup.semDedup(
+        df.select(concat(lit("v"), $"vec_id").as("vec_id"), $"embedding"),
+        "vec_id", "embedding", k = 2, passes = 1, threshold = 0.9)
+      .orderBy("vec_id").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(byName.toSeq == Seq(("v3", 1L), ("v4", 0L)))
   }
 
   test("contrastive triplets pick best positive and hardest in-band negative per anchor") {
@@ -1022,6 +1061,14 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(got.map(t => (t._1, t._2, t._4)).toSeq == Seq((0L, 4L, 2L), (4L, 0L, 2L)))
     assert(got.forall(_._3 == 1.0)) // the collinear positive scores exactly 1
+    // string ids pick the same triplets
+    val byName = graft.operators.Similarity.contrastiveTriplets(
+        df.select(concat(lit("v"), $"vec_id").as("vec_id"), $"embedding"),
+        "vec_id", "embedding", k = 2, passes = 1,
+        posThreshold = 0.999, negLo = 0.9, negHi = 0.999)
+      .orderBy("anchor").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(3)))
+    assert(byName.toSeq == Seq(("v0", "v4", "v2"), ("v4", "v0", "v2")))
   }
 
   test("k-means centroids roundtrip through a frame; assignWith matches assignments") {
@@ -1219,9 +1266,12 @@ class OperatorsSpec extends AnyFunSuite {
       .join(g0, Seq("node"))
     def assigned(d: org.apache.spark.sql.DataFrame) = graft.operators.KMeans
       .assignWith(d, "vec_id", "embedding", cents).select("vec_id", "cluster", "__u")
+    // as Streams.knnGraphGateBatch calls it: the batch already
+    // checkpointed, its cells known driver-side
     val touchedContent = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
-      g0c.filter($"cell".isin(bCells.toSeq: _*)), assigned(hist), assigned(batch),
-      "vec_id", degree = 2)
+      g0c.filter($"cell".isin(bCells.toSeq: _*)), assigned(hist),
+      graft.Materialize.eager(assigned(batch)), "vec_id", degree = 2,
+      batchMaterialized = true, touchedCellsHint = Some(bCells.toSeq))
     assert(touchedContent.select("cell").distinct().collect()
       .map(_.getLong(0)).toSet == bCells,
       "touched-cell content must cover exactly the batch's cells")

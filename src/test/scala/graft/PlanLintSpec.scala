@@ -290,6 +290,56 @@ class PlanLintSpec extends AnyFunSuite {
     assert(joins <= 1, s"expected a single pair join, planned $joins")
   }
 
+  /** The physical plan (before AQE) of every SQL execution `f` runs,
+    * eager materializations included. */
+  private def executionPlans(f: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.sparkPlan): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { f; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("each cell pair join runs once, its salted side exchanged at the session width") {
+    // Similarity.cellPairs replicates its left side over the salts and
+    // repartitions it at spark.sql.shuffle.partitions on (cluster, __salt).
+    // Without that explicit width the streamed side keeps the scan's one
+    // partition (or AQE coalesces it) and one task computes every cell's
+    // |cell|² cosines. q_ann_graph_topk builds its graph inside an eager
+    // materialization, so every execution of a row is checked, not only
+    // the plan of its result.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val width = spark.sessionState.conf.numShufflePartitions
+    Seq("q_dedup_semantic", "q_dedup_semantic_curve", "q_vec_contrastive",
+        "q_ann_graph_topk").foreach { name =>
+      val q = SparkEntry.registry.find(_.name == name).get
+      val pairJoins = executionPlans(q.run(spark, TestSpark.sfDir).collect(): Unit)
+        .flatMap(_.collect {
+          case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "__salt")) => j
+        })
+      assert(pairJoins.size == 1, s"$name runs ${pairJoins.size} cell pair joins")
+      val salted = pairJoins.head.children.filter(_.exists(_.isInstanceOf[GenerateExec]))
+      assert(salted.size == 1, s"$name: no single salt-replicated join side")
+      val pin = salted.head.collectFirst { case e: ShuffleExchangeExec => e }
+      assert(pin.exists(e => e.shuffleOrigin == REPARTITION_BY_NUM && (e.outputPartitioning match {
+        case h: HashPartitioning => h.numPartitions == width &&
+          h.expressions.flatMap(_.references.map(_.name)).toSet == Set("cluster", "__salt")
+        case _ => false
+      })), s"$name: the salted side is not repartitioned at width $width:\n${pairJoins.head}")
+    }
+  }
+
   test("matryoshka serve partition-prunes the prefix index and re-ranks without a shuffle join") {
     val q = SparkEntry.registry.find(_.name == "q_ann_matryoshka_serve").get
     // formatted explain reaches inside AQE's unfinalized stages, where a
